@@ -12,16 +12,21 @@ Exactly-once contract
 ---------------------
 * The watermark (last ingested commit label) is read from the ``commit_log``
   table, which is written **last** in each epoch.
-* Epoch write order: relations MERGE + metrics APPEND (both replay-safe:
-  the same edges re-upsert; metrics rows re-append under a higher ``attempt``
-  and the read path keeps only each epoch's latest attempt), then
-  the **segments** MERGE, then the commit-log append.  The fold's resume
-  state comes from segments alone, so a crash anywhere before the segments
-  merge replays the fold over unchanged input and converges; a crash between
-  the segments merge and the commit-log append is caught by the epoch guard
-  (segments' snapshot summary already carries this epoch's ``end_commit``)
-  and the replay skips straight to the bookkeeping — re-folding there would
-  wrongly intersect the edition with its own descendants.
+* Epoch write path (one for every epoch): the fold output is written ONCE,
+  dynamic-partitioned by ``(kind, _bucket)``, into a scratch directory
+  (segments and relations share one bucket layout: ingest re-converges a
+  diverged pair before its first epoch); the touched buckets' kept rows
+  are rewritten beside it; then each table adopts its files by hard link.
+  Commit order: relations + metrics (both replay-safe: the same edges
+  re-upsert; metrics rows re-append under a higher ``attempt`` and the read
+  path keeps only each epoch's latest attempt), then **segments**, then the
+  commit-log append.  The fold's resume state comes from segments alone, so
+  a crash anywhere before the segments commit replays the fold over
+  unchanged input and converges; a crash between the segments commit and
+  the commit-log append is caught by the epoch guard (segments' snapshot
+  summary already carries this epoch's ``end_commit``) and the replay skips
+  straight to the bookkeeping — re-folding there would wrongly intersect
+  the edition with its own descendants.
 * Duplicate / reordered events inside an epoch are collapsed by a
   deterministic last-writer-wins rule per ``(repo, path, commit)`` inside the
   fold (window-dedup semantics without the extra shuffle).
@@ -48,21 +53,15 @@ from .util import balanced_part_col
 
 EVENT_CORE_COLS = ("repo", "path", "commit", "content")
 
-# Names a WAL extra column can NEVER take: they collide with the fold's
-# event/state frame or its output schema on EVERY path — fail fast with a
-# contract error instead of a duplicate-column plan corruption.
+# Names a WAL extra column can never take: they collide with the fold's
+# event/state frame, its output schema or the epoch write's partition
+# column — fail fast with a contract error instead of a duplicate-column
+# plan corruption.
 _EXTRAS_FORBIDDEN = frozenset(
     {"commit", "content", "_is_event", "kind", "_pid", "parent_gid",
      "child_gid", "_wall_ms", "_n_keys", "_n_segments", "_n_relations",
      "gid", "name", "seq", "commit_created", "wkt", "content_sha256",
-     "editions", "is_leaf", "retired"}
-)
-# Names reserved only by the FAST combined write's metrics/partition
-# columns: a collision just disables the fast path for the epoch (the
-# per-table merge fallback has no such columns).
-_FAST_RESERVED = frozenset(
-    {"epoch", "partition_id", "n_keys", "n_segments", "n_relations",
-     "n_events", "wall_ms", "attempt", "_bucket"}
+     "editions", "is_leaf", "retired", "_bucket"}
 )
 
 # Target rows (events + resume-state leaves) per fold task for the adaptive
@@ -401,8 +400,7 @@ def _dead_changes_row(seg_cols, extra_cols, pid, repo, path, d) -> dict:
 
 def _dead_letter_select(df: DataFrame, epoch: int, attempt: int) -> DataFrame:
     """Decode kind='dead' change rows into dead_letter's schema — the single
-    inverse of :func:`_dead_changes_row`, shared by the slow and fast write
-    paths."""
+    inverse of :func:`_dead_changes_row`."""
     return df.select(
         F.lit(epoch).cast("long").alias("epoch"),
         "repo", "path",
@@ -430,16 +428,6 @@ def _append_fold_cols(cols: dict, res, pid: int, extra_cols: list[str]) -> None:
     byte-identical to the dict path — pinned-digest suites prove it."""
     nodes = res.nodes
     rels = res.relations
-    if nodes is None:  # dict-shaped fallback (never hit by fold_key output)
-        for seg in res.segments:
-            row = dict(seg)
-            row.update(kind="segment", _pid=pid, parent_gid=None, child_gid=None)
-            _append_row(cols, row)
-        for r in rels:
-            row = dict(r)
-            row.update(kind="relation", _pid=pid)
-            _append_row(cols, row)
-        return
     n, m = len(nodes), len(rels)
     nones_n = [None] * n
     cols["kind"].extend(["segment"] * n)
@@ -721,10 +709,6 @@ class CdcEngine:
         # test hook: raise after the named step to exercise crash-replay
         # windows ("relations_merge", "segments_merge")
         self._crash_after: str | None = None
-        # observability: per-engine count of epochs that took the combined
-        # single-pass fast path vs the per-table merge fallback (tests
-        # assert the fast path survives rebucketing)
-        self.path_counts = {"fast": 0, "fallback": 0}
         # Zipf-head advisory carry: the known hot-key set, grown from the
         # fold's own kind='hot' markers (see _make_fold_fn) so steady-state
         # epochs route salting with ZERO detection scans.  None = unknown
@@ -902,10 +886,10 @@ class CdcEngine:
     def _absorb_hot_markers(self, scratch: str) -> None:
         """Fold-emitted ``kind='hot'`` advisory rows → the carry.  Fast
         path: read the scratch partition driver-side with pyarrow (the
-        ``met_fast`` pattern) — zero Spark jobs.  A non-local warehouse
-        (URI scheme) is invisible to the driver-side read, so it falls
-        back to ONE Spark job over the hot partition rather than silently
-        never salting keys that turn hot after bucket validation."""
+        ``met_from_timing`` pattern) — zero Spark jobs.  A non-local
+        warehouse (URI scheme) is invisible to the driver-side read, so it
+        falls back to ONE Spark job over the hot partition rather than
+        silently never salting keys that turn hot after bucket validation."""
         if self._hot_carry is None:
             return
         if scratch.startswith("file:"):
@@ -1014,7 +998,14 @@ class CdcEngine:
         change set — semantically the same MERGE the table is about to
         apply, so the fold input is bit-identical to the serial schedule
         (the epoch-size-invariance and kill/resume digest tests pin this).
+
+        Every epoch writes through ONE combined ``partitionBy(kind,
+        _bucket)`` job, which needs segments and relations to share a bucket
+        layout; a pair diverged by an external rebucket is re-converged
+        here, before the first epoch (a snapshot comparison when they
+        already match).
         """
+        self._share_layout()
         if self.on_error == "quarantine":
             # warehouses created before the dead-letter table existed get it
             # lazily (metadata-only, idempotent)
@@ -1082,36 +1073,15 @@ class CdcEngine:
         ]
         if max_epochs is not None:
             chunks = chunks[:max_epochs]
-        live: list[dict] = []  # in-flight epochs to release on any exit
-
-        def release(p: dict) -> None:
-            # join the write pool FIRST: on the crash path a caller that
-            # catches and immediately retries ingest must never race a
-            # zombie merge/kept-write job against the retry's scratch rmtree
-            pool = p.get("pool")
-            if pool is not None:
-                try:
-                    pool.shutdown(wait=True, cancel_futures=True)
-                except Exception:
-                    pass
-            try:
-                p["release"]()
-            except Exception:
-                pass
-            live[:] = [d for d in live if d is not p]
-
-        prev: dict | None = None
+        prev: dict | None = None  # the epoch whose writes are in flight
         try:
             for j, chunk in enumerate(chunks):
                 prep = self._prepare_epoch(
                     epoch0 + j, change_log, chunk[0], chunk[-1],
                     patch_changes=None if prev is None else prev["patch_df"],
                 )
-                if not prep.get("skip"):
-                    live.append(prep)
                 if prev is not None:
                     stats.epochs.append(self._commit_epoch(prev))
-                    release(prev)
                     prev = None
                 if prep.get("skip"):
                     stats.epochs.append(
@@ -1121,15 +1091,18 @@ class CdcEngine:
                         )
                     )
                 else:
-                    self._start_writes(prep)
                     prev = prep
+                    self._start_writes(prep)
             if prev is not None:
                 stats.epochs.append(self._commit_epoch(prev))
-                release(prev)
                 prev = None
         finally:
-            for p in list(live):  # crash path: release in-flight epochs
-                release(p)
+            # crash path: join the in-flight write pool, so a caller that
+            # catches and immediately retries ingest never races a zombie
+            # kept-write job against the retry's scratch rmtree
+            pool = prev and prev.get("pool")
+            if pool is not None:
+                pool.shutdown(wait=True, cancel_futures=True)
         self.maintain()
         return stats
 
@@ -1206,19 +1179,15 @@ class CdcEngine:
         amortized once per ingest call, not per epoch.
 
         **Shared layout policy**: segments and relations move TOGETHER to
-        the max of their individually-desired counts.  The combined
-        single-pass epoch write (the fast path) requires both tables to
-        share one bucket layout; letting each table double by its own mean
-        size diverged them exactly when the table grew — disabling the
-        flagship optimization at the scale that needs it most.  The cost of
-        over-bucketing the smaller table (relations) is only file count;
-        the cost of divergence is three write jobs instead of one on every
-        later epoch.  This also re-converges layouts diverged by an
-        external rewrite, restoring the fast path on the next call."""
+        the max of their individually-desired counts, because the combined
+        epoch write partitions both tables' rows by one ``_bucket`` column.
+        Letting each table double by its own mean size would diverge them
+        exactly when the table grows, and every later ingest would then pay
+        a rebucket to re-converge them.  The cost of over-bucketing the
+        smaller table (relations) is only file count."""
         target = target_bucket_bytes or self.target_bucket_bytes
-        tables = (self.segments, self.relations)
         shared = 0
-        for tbl in tables:
+        for tbl in (self.segments, self.relations):
             stats = tbl.bucket_stats()
             n = tbl.snapshot()["n_buckets"]
             new_n = n
@@ -1228,8 +1197,19 @@ class CdcEngine:
                     new_n *= 2
                     mean /= 2
             shared = max(shared, new_n)
-        for tbl in tables:
-            if tbl.snapshot()["n_buckets"] != shared:
+        self._share_layout(shared)
+
+    def _share_layout(self, n_buckets: int | None = None) -> None:
+        """Move segments and relations onto one bucket count: ``n_buckets``,
+        or by default the larger of their current counts (counts only ever
+        grow, so the larger one is what a size trigger asked for).  A
+        layout-only ``rebucket`` of each table not already there; when both
+        match, this is two snapshot-JSON reads and no Spark work."""
+        tables = (self.segments, self.relations)
+        counts = [t.snapshot()["n_buckets"] for t in tables]
+        shared = n_buckets or max(counts)
+        for tbl, n in zip(tables, counts):
+            if n != shared:
                 tbl.rebucket(shared, summary={"reason": "shared layout policy"})
 
     def _prepare_epoch(
@@ -1241,10 +1221,12 @@ class CdcEngine:
         patch_changes: DataFrame | None = None,
     ) -> dict:
         """PREPARE phase: batch stats, resume-state read (optionally patched
-        with the previous in-flight epoch's changes), fold, and cache
-        materialization.  Returns the epoch context for :meth:`_start_writes`
-        / :meth:`_commit_epoch`, or ``{"skip": True, ...}`` when the
-        exactly-once guard says this epoch's state already landed."""
+        with the previous in-flight epoch's changes), fold, and the epoch's
+        one combined write of its change files into a scratch directory
+        (adopted by the tables at commit).  Returns the epoch context for
+        :meth:`_start_writes` / :meth:`_commit_epoch`, or ``{"skip": True,
+        ...}`` when the exactly-once guard says this epoch's state already
+        landed."""
         trace = os.environ.get("LMS_TRACE_INGEST") == "1"
         marks: list[tuple[str, float]] = []
 
@@ -1277,16 +1259,14 @@ class CdcEngine:
         # shuffle-partition-wide dedup stage per epoch, and the fold's own
         # per-task accounting rows already count each folded key exactly
         # once — n_keys is summed from them at commit time for free.
+        # (segments and relations share one layout — see _share_layout — so
+        # this bucket set serves both tables)
         stats = batch.agg(
             F.count(F.lit(1)).alias("n"),
             F.collect_set(self.segments.bucket_expr(batch)).alias("bks"),
-            # relations may have a different bucket count after rebucketing —
-            # its touched set is computed separately in the same job
-            F.collect_set(self.relations.bucket_expr(batch)).alias("rbks"),
         ).collect()[0]
         n_events = stats["n"]
         buckets = sorted(stats["bks"])
-        rel_buckets = sorted(stats["rbks"])
         mark("stats")
 
         # Exactly-once replay guard: the segments merge is the LAST state
@@ -1324,8 +1304,9 @@ class CdcEngine:
         # append-only keys), lets the resume-state subtree be skipped
         # outright: no bucket scan, no batch-keys distinct + broadcast
         # semi-join, a leaner union/codegen unit for the fold stage.
+        seg_snap = self.segments.snapshot()
         state_rows: int | None = 0
-        for f in self.segments.snapshot()["files"]:
+        for f in seg_snap["files"]:
             if f["bucket"] in keep:
                 if f.get("rows") is None:
                     state_rows = None
@@ -1400,25 +1381,21 @@ class CdcEngine:
             n_events,
             state_rows,
         )
-        # Fold partition key REFINES both tables' bucket hashes: the fold
+        # Fold partition key REFINES the tables' shared bucket hash: the fold
         # shuffles on fold_part = pmod(xxhash64(repo,path), k·n_buckets), so
-        # the bucketed COW writes can skip their own exchange
-        # (write_shuffle=False below) — one shuffle of the epoch's changes
-        # instead of three.  A Spark partition is NOT bucket-pure (it may
-        # hold several fold_part values); correctness never depends on that
-        # (the dynamic-partition writer splits by _bucket regardless).  File
-        # count stays bounded because each fold_part VALUE lands wholly in
-        # one partition and maps to exactly one bucket (n_buckets | modulus):
-        # a merge writes ≤ #distinct-fold_part-values ≈ min(modulus, n_keys)
-        # files, not partitions × buckets.  Both tables' bucket counts start
-        # equal and only ever double (rebucket), so the larger divides the
-        # modulus.  The shuffle routes through balanced_part_col (NOT raw
-        # repartition(n, fold_part)): hash-of-hash birthday collisions on a
-        # modulus-sized value set left ~1/e of the stage's slots idle.
-        nb = max(
-            self.segments.snapshot()["n_buckets"],
-            self.relations.snapshot()["n_buckets"],
-        )
+        # the combined write below needs no exchange of its own — one
+        # shuffle of the epoch's changes.  A Spark partition is NOT
+        # bucket-pure (it may hold several fold_part values); correctness
+        # never depends on that (the dynamic-partition writer splits by
+        # _bucket regardless).  File count stays bounded because each
+        # fold_part VALUE lands wholly in one partition and maps to exactly
+        # one bucket (n_buckets | modulus): an epoch writes ≤
+        # #distinct-fold_part-values ≈ min(modulus, n_keys) files per kind,
+        # not partitions × buckets.  The shuffle routes through
+        # balanced_part_col (NOT raw repartition(n, fold_part)):
+        # hash-of-hash birthday collisions on a modulus-sized value set left
+        # ~1/e of the stage's slots idle.
+        nb = seg_snap["n_buckets"]
         modulus = nb * max(1, round(n_parts / nb))
         fold_part = F.pmod(F.xxhash64("repo", "path"), F.lit(modulus))
         spread = balanced_part_col(fold_part, modulus, n_parts)
@@ -1437,13 +1414,12 @@ class CdcEngine:
         # saltfold.py), everything else through the plain partition fold.
         hot: list[tuple[str, str]] = []
         if hot_threshold:
-            seg_snap_hot = self.segments.snapshot()
-            if self._validated_n_buckets != seg_snap_hot["n_buckets"]:
+            if self._validated_n_buckets != seg_snap["n_buckets"]:
                 # a rebucket renumbered the buckets; re-validate lazily
                 # (rare, size-triggered — the carry itself stays valid,
                 # hotness is a per-key property)
                 self._validated_buckets = set()
-                self._validated_n_buckets = seg_snap_hot["n_buckets"]
+                self._validated_n_buckets = seg_snap["n_buckets"]
             if self._hot_carry is None:
                 self._hot_carry = set()
             # One-time ground truth per bucket: a key's leaves all hash into
@@ -1462,7 +1438,7 @@ class CdcEngine:
                 fresh_set = set(fresh)
                 bucket_rows: dict[int, int] = {}
                 unknown_rows = False
-                for f in seg_snap_hot["files"]:
+                for f in seg_snap["files"]:
                     if f["bucket"] in fresh_set:
                         if f.get("rows") is None:
                             unknown_rows = True
@@ -1515,153 +1491,67 @@ class CdcEngine:
             hot_changes = self._salted_fold(hotr, extras, out_schema)
             folded = cold_changes.unionByName(hot_changes)
         seg_cols_x = [c for c, _ in SEGMENT_BASE_COLUMNS] + [c for c, _ in extras]
-        # ``attempt`` = a metrics snapshot version ≥ the one this append will
-        # commit as — monotonic across replays, so read_metrics can keep only
-        # the latest attempt.
-        attempt = self.metrics.version() + 1
-        prep = {
-            "epoch": epoch, "start_commit": start_commit, "end_commit": end_commit,
-            # n_keys is filled in by the metrics assembly (met_fast/met_slow
-            # sum the fold's per-task key counts) before _finish_epoch reads
-            # it — no dedicated countDistinct job on the epoch critical path
-            "n_events": n_events, "t0": t0,
-            "buckets": buckets, "rel_buckets": rel_buckets,
-            "trace": trace, "marks": marks, "attempt": attempt,
-        }
-        seg_snap = self.segments.snapshot()
-        rel_snap = self.relations.snapshot()
-        fast = (
-            seg_snap["n_buckets"] == rel_snap["n_buckets"]
-            and seg_snap.get("bucket_cols") == rel_snap.get("bucket_cols")
-            # a WAL extra shadowing a metrics/partition column name would
-            # produce duplicate output columns in the combined write; the
-            # per-table fallback has no such columns, so just take it
-            and not (set(extras_map) & _FAST_RESERVED)
-        )
-        self.path_counts["fast" if fast else "fallback"] += 1
-        if fast:
-            # COMBINED SINGLE-PASS WRITE: the fold output is written ONCE,
-            # dynamic-partitioned by (kind, bucket), straight off the fold's
-            # bucket-refining partitioning — this job IS the fold
-            # materialization (replacing the checkpoint scan) AND the data
-            # write of every table (replacing three per-table write jobs).
-            # The commit phase adopts the files into each table's manifest
-            # by hard link (lakehouse.adopt_merge) — zero extra data
-            # movement.  Requires both tables to share a bucket layout
-            # (true from create_tables until rebucket diverges them; the
-            # checkpoint + per-table-merge path below remains the fallback).
-            bcols = seg_snap.get("bucket_cols") or ["repo", "path"]
-            bucket_col = (
-                F.when(F.col("kind") == "timing", F.lit(0))
-                .otherwise(
-                    F.pmod(
-                        F.xxhash64(*[F.col(c) for c in bcols]),
-                        F.lit(seg_snap["n_buckets"]),
-                    )
-                )
-                .cast("int")
-            )
-            def m(col):
-                # metrics columns ride ONLY on timing rows; segment/relation
-                # rows keep them NULL so the adopted data files stay clean
-                # (null columns RLE-compress to ~nothing instead of stamping
-                # epoch/attempt into every table row forever)
-                return F.when(F.col("kind") == "timing", col)
 
-            # epoch / attempt / n_events are NOT written into the files:
-            # they are per-epoch constants the driver already knows, and the
-            # metrics assembly (met_fast) stamps them when it reads the
-            # timing rows back.  Keeping per-epoch literals out of this
-            # projection makes the whole post-shuffle stage's generated code
-            # byte-identical across epochs and engines, so whole-stage
-            # codegen compiles once per session instead of once per epoch.
-            combined = folded.select(
-                "kind",
-                *seg_cols_x,
-                "parent_gid", "child_gid",
-                m(F.col("_pid")).alias("partition_id"),
-                m(F.col("_n_keys")).alias("n_keys"),
-                m(F.col("_n_segments")).alias("n_segments"),
-                m(F.col("_n_relations")).alias("n_relations"),
-                m(F.col("_wall_ms")).alias("wall_ms"),
-                bucket_col.alias("_bucket"),
-            )
-            scratch = os.path.join(self.warehouse, "_stage", f"e{epoch}")
-            if os.path.exists(scratch):  # crashed attempt: deterministic redo
-                shutil.rmtree(scratch)
-            combined.write.partitionBy("kind", "_bucket").parquet(scratch)
-            mark("fold")
-            self._absorb_hot_markers(scratch)
-            seg_dir = os.path.join(scratch, "kind=segment")
-            prep.update(
-                fast=True,
-                scratch=scratch,
-                patch_df=(
-                    self.spark.read.parquet(seg_dir).select(*seg_cols_x)
-                    if os.path.isdir(seg_dir) else None
-                ),
-                seg_schema=self.spark.createDataFrame([], ", ".join(
-                    f"`{c}` {t}" for c, t in SEGMENT_BASE_COLUMNS + extras
-                )).schema,
-                release=lambda: None,
-            )
-        else:
-            # Eager localCheckpoint (not .cache()+count): materializes the
-            # fold ONCE before the merge writes fan out AND truncates the
-            # logical plan to a LogicalRDD.  The pipelined patch embeds this
-            # epoch's changes into the NEXT epoch's fold plan; without
-            # truncation the plan nests one epoch deeper every epoch and
-            # Catalyst analysis time blows up (measured: minutes of driver
-            # time by epoch ~10).  Block cleanup is the ContextCleaner's job
-            # once the epoch's references drop.
-            changes = folded.localCheckpoint(eager=True)
-            mark("fold")
-            if hot_threshold and self._hot_carry is not None:
-                self._hot_carry.update(
-                    (r["repo"], r["path"])
-                    for r in changes.filter(F.col("kind") == "hot")
-                    .select("repo", "path").collect()
-                )
-            seg_changes = changes.filter(F.col("kind") == "segment").select(*seg_cols_x)
-            rel_changes = changes.filter(F.col("kind") == "relation").select(
-                *[c for c, _ in RELATION_COLUMNS]
-            )
-            # per-partition metrics off the fold's own 'timing' rows — no
-            # groupBy shuffle over the epoch's full change set; several
-            # salted-coordinator key groups can share a task pid, so
-            # collapse to one accounting row per pid (≈one row per task)
-            mrows = (
-                changes.filter(F.col("kind") == "timing")
-                .groupBy("_pid")
-                .agg(
-                    F.sum("_n_keys").alias("n_keys"),
-                    F.sum("_n_segments").alias("n_segments"),
-                    F.sum("_n_relations").alias("n_relations"),
-                    F.max("_wall_ms").alias("wall_ms"),
-                )
-                .select(
-                    F.lit(epoch).alias("epoch"),
-                    F.col("_pid").alias("partition_id"),
-                    "n_keys",
-                    "n_segments",
-                    "n_relations",
-                    F.lit(None).cast("long").alias("n_events"),
-                    "wall_ms",
-                    F.lit(attempt).alias("attempt"),
-                )
-            )
-            prep.update(
-                fast=False,
-                changes=changes,
-                seg_changes=seg_changes,
-                rel_changes=rel_changes,
-                mrows=mrows,
-                patch_df=changes.filter(F.col("kind") == "segment").select(*seg_cols_x),
-                release=lambda: changes.unpersist(),
-            )
+        def m(col):
+            # accounting columns ride ONLY on timing rows; segment/relation
+            # rows keep them NULL so the adopted data files stay clean (null
+            # columns RLE-compress to ~nothing).  They keep the fold's own
+            # reserved names (_EXTRAS_FORBIDDEN), so no WAL extra can
+            # shadow them; met_from_timing maps them onto METRICS_SCHEMA.
+            return F.when(F.col("kind") == "timing", F.col(col)).alias(col)
+
+        # THE EPOCH WRITE: the fold output is written ONCE, dynamic-
+        # partitioned by (kind, bucket), straight off the fold's
+        # bucket-refining partitioning — this job IS the fold
+        # materialization AND the data write of every table.  The commit
+        # phase adopts the files into each table's manifest by hard link
+        # (lakehouse.adopt_merge) — zero extra data movement.  Timing rows
+        # all land in bucket 0.  epoch / attempt / n_events are NOT written
+        # into the files: they are per-epoch constants the driver already
+        # knows, and met_from_timing stamps them when it reads the timing
+        # rows back.  Keeping per-epoch literals out of this projection
+        # makes the whole post-shuffle stage's generated code byte-identical
+        # across epochs and engines, so whole-stage codegen compiles once
+        # per session instead of once per epoch.
+        combined = folded.select(
+            "kind",
+            *seg_cols_x,
+            "parent_gid", "child_gid",
+            *[m(c) for c in ("_pid", "_n_keys", "_n_segments", "_n_relations",
+                             "_wall_ms")],
+            F.when(F.col("kind") == "timing", F.lit(0))
+            .otherwise(self.segments.bucket_expr(folded))
+            .alias("_bucket"),
+        )
+        scratch = os.path.join(self.warehouse, "_stage", f"e{epoch}")
+        if os.path.exists(scratch):  # crashed attempt: deterministic redo
+            shutil.rmtree(scratch)
+        combined.write.partitionBy("kind", "_bucket").parquet(scratch)
+        mark("fold")
+        self._absorb_hot_markers(scratch)
         if own_cache:
             batch.unpersist()
-        return prep
+        seg_dir = os.path.join(scratch, "kind=segment")
+        return {
+            "epoch": epoch, "start_commit": start_commit, "end_commit": end_commit,
+            # n_keys is filled in by the metrics assembly (met_from_timing
+            # sums the fold's per-task key counts) before _finish_epoch reads
+            # it — no dedicated countDistinct job on the epoch critical path
+            "n_events": n_events, "t0": t0, "buckets": buckets,
+            "trace": trace, "marks": marks,
+            # ``attempt`` = a metrics snapshot version ≥ the one this append
+            # will commit as — monotonic across replays, so read_metrics can
+            # keep only the latest attempt
+            "attempt": self.metrics.version() + 1,
+            "scratch": scratch,
+            "patch_df": (
+                self.spark.read.parquet(seg_dir).select(*seg_cols_x)
+                if os.path.isdir(seg_dir) else None
+            ),
+            "seg_schema": self.spark.createDataFrame([], ", ".join(
+                f"`{c}` {t}" for c, t in SEGMENT_BASE_COLUMNS + extras
+            )).schema,
+        }
 
     #: metric column order (must track METRICS_SCHEMA)
     _MET_COLS = [
@@ -1708,10 +1598,14 @@ class CdcEngine:
         )
 
     def _start_writes(self, prep: dict) -> None:
-        """Submit the epoch's remaining WRITES (kept-row rewrites + metrics
-        append on the fast path; the three full merge writes on the
-        fallback) concurrently; commits stay deferred.  Must run after the
-        previous epoch's commits (kept rows read the then-current table)."""
+        """Submit the epoch's remaining WRITES concurrently; commits stay
+        deferred.  The change files already exist (the combined scratch
+        write in prepare), so the data jobs left are the per-table KEPT
+        rewrites (rows of touched buckets the epoch did not update — only
+        when those buckets hold files) plus the metrics append built from
+        the scratch timing files and the dead-letter append.  Must run after
+        the previous epoch's commits (kept rows read the then-current
+        table)."""
         from concurrent.futures import ThreadPoolExecutor
 
         durs: dict[str, float] = {}
@@ -1725,68 +1619,12 @@ class CdcEngine:
 
             return run
 
-        epoch, end_commit = prep["epoch"], prep["end_commit"]
+        scratch, epoch, buckets = prep["scratch"], prep["epoch"], prep["buckets"]
         pool = ThreadPoolExecutor(max_workers=3)
         prep["durs"] = durs
         prep["pool"] = pool
-        if prep["fast"]:
-            self._start_writes_fast(prep, pool, timed)
-            return
-        prep["f_rel"] = pool.submit(timed(
-            "rel", self.relations.merge_upsert,
-            prep["rel_changes"],
-            summary={"epoch": epoch, "end_commit": end_commit},
-            assume_unique=True,
-            defer_commit=True,
-            touched_buckets=prep["rel_buckets"],
-            write_shuffle=False,
-        ))
-        def met_slow(mrows=prep["mrows"], epoch=epoch):
-            # ONE Spark job (the tiny per-task agg collect); the file write
-            # and manifest land driver-side
-            rows = [r.asDict() for r in mrows.collect()]
-            prep["met_n_keys"] = sum(r["n_keys"] or 0 for r in rows)
-            return self._metrics_commit_from_rows(rows, epoch)
 
-        prep["f_met"] = pool.submit(timed("met", met_slow))
-        prep["f_seg"] = pool.submit(timed(
-            "seg", self.segments.merge_upsert,
-            prep["seg_changes"],
-            summary={"epoch": epoch, "end_commit": end_commit},
-            assume_unique=True,
-            defer_commit=True,
-            touched_buckets=prep["buckets"],
-            write_shuffle=False,
-        ))
-        if self.on_error == "quarantine":
-            drows = _dead_letter_select(
-                prep["changes"].filter(F.col("kind") == "dead"),
-                epoch, prep["attempt"],
-            )
-
-            def dead_append(drows=drows, epoch=epoch):
-                # clean epochs skip the append entirely — no empty data
-                # file, no snapshot for maintain() to compact later (the
-                # slow-path analog of the fast path's isdir guard); the
-                # emptiness probe is a limit-1 scan of the already-
-                # checkpointed change frame
-                if drows.isEmpty():
-                    return lambda: None
-                return self.dead_letter.append(
-                    drows, summary={"epoch": epoch}, defer_commit=True
-                )
-
-            prep["f_dead"] = pool.submit(timed("dead", dead_append))
-
-    def _start_writes_fast(self, prep: dict, pool, timed) -> None:
-        """Fast-path writes: the change files already exist (combined
-        scratch write in prepare).  Remaining data jobs: per-table KEPT
-        rewrites (rows of touched buckets not updated by the epoch — only
-        when those buckets hold files) and the metrics append built from
-        the scratch timing files."""
-        scratch, epoch = prep["scratch"], prep["epoch"]
-
-        def kept_write(table, src_dir, buckets, out_dir, key_cols, src_schema):
+        def kept_write(table, src_dir, out_dir, key_cols, src_schema):
             keep = set(buckets)
             if not any(f["bucket"] in keep for f in table.snapshot()["files"]):
                 return None  # nothing to keep: buckets had no files
@@ -1815,34 +1653,39 @@ class CdcEngine:
         rel_dir = os.path.join(scratch, "kind=relation")
         tim_dir = os.path.join(scratch, "kind=timing")
         prep["f_seg"] = pool.submit(timed(
-            "seg_kept", kept_write, self.segments, seg_dir, prep["buckets"],
+            "seg_kept", kept_write, self.segments, seg_dir,
             os.path.join(scratch, "kept_segments"), ["gid"], prep["seg_schema"],
         ))
         prep["f_rel"] = pool.submit(timed(
-            "rel_kept", kept_write, self.relations, rel_dir, prep["rel_buckets"],
+            "rel_kept", kept_write, self.relations, rel_dir,
             os.path.join(scratch, "kept_relations"),
             ["parent_gid", "child_gid"], rel_schema,
         ))
         if os.path.isdir(tim_dir):
 
-            def met_fast(tim_dir=tim_dir, epoch=epoch, attempt=prep["attempt"]):
+            def met_from_timing(tim_dir=tim_dir, epoch=epoch, attempt=prep["attempt"]):
                 # timing rows are one-per-fold-task: read them driver-side
                 # (pyarrow) and aggregate in plain python — no Spark job at
-                # all on this leg.  epoch/attempt/n_events are stamped HERE
-                # (per-epoch driver constants) so the combined write's
-                # projection carries no per-epoch literals — see the codegen
-                # note in _prepare_epoch.
+                # all on this leg.  The fold's reserved accounting columns
+                # map onto METRICS_SCHEMA here, and epoch/attempt/n_events
+                # are stamped here (per-epoch driver constants) so the
+                # combined write's projection carries no per-epoch literals
+                # — see the codegen note in _prepare_epoch.
                 import glob
 
                 import pyarrow.parquet as pq
 
-                cols = ["partition_id", "n_keys", "n_segments",
-                        "n_relations", "wall_ms"]
+                names = {"_pid": "partition_id", "_n_keys": "n_keys",
+                         "_n_segments": "n_segments",
+                         "_n_relations": "n_relations", "_wall_ms": "wall_ms"}
                 raw = []
                 for p in sorted(glob.glob(
                     os.path.join(tim_dir, "**", "*.parquet"), recursive=True
                 )):
-                    raw.extend(pq.read_table(p, columns=cols).to_pylist())
+                    raw.extend(
+                        pq.read_table(p, columns=list(names))
+                        .rename_columns(list(names.values())).to_pylist()
+                    )
                 agg: dict[int, dict] = {}
                 for r in raw:
                     k = r["partition_id"]
@@ -1867,7 +1710,7 @@ class CdcEngine:
                 prep["met_n_keys"] = sum(r["n_keys"] or 0 for r in rows)
                 return self._metrics_commit_from_rows(rows, epoch)
 
-            prep["f_met"] = pool.submit(timed("met", met_fast))
+            prep["f_met"] = pool.submit(timed("met", met_from_timing))
         else:
             prep["f_met"] = pool.submit(lambda: (lambda: None))
         dead_dir = os.path.join(scratch, "kind=dead")
@@ -1899,50 +1742,41 @@ class CdcEngine:
             if trace:
                 marks.append((label, time.monotonic()))
 
-        if prep["fast"]:
-            # wait for kept writes + metrics append, then ADOPT the combined
-            # scratch files + kept files into each table's manifest by hard
-            # link (no further data jobs)
-            prep["f_seg"].result()
-            prep["f_rel"].result()
-            commit_met = prep["f_met"].result()
-            commit_dead = prep["f_dead"].result() if "f_dead" in prep else (lambda: None)
-            prep["pool"].shutdown(wait=False)
-            scratch = prep["scratch"]
+        # wait for kept writes + metrics append, then ADOPT the combined
+        # scratch files + kept files into each table's manifest by hard link
+        # (no further data jobs)
+        prep["f_seg"].result()
+        prep["f_rel"].result()
+        commit_met = prep["f_met"].result()
+        commit_dead = prep["f_dead"].result() if "f_dead" in prep else (lambda: None)
+        prep["pool"].shutdown(wait=False)
+        scratch = prep["scratch"]
 
-            def scan(*dirs) -> list[tuple[str, int]]:
-                out = []
-                for d in dirs:
-                    if not os.path.isdir(d):
+        def scan(*dirs) -> list[tuple[str, int]]:
+            out = []
+            for d in dirs:
+                if not os.path.isdir(d):
+                    continue
+                for bdir in sorted(os.listdir(d)):
+                    if not bdir.startswith("_bucket="):
                         continue
-                    for bdir in sorted(os.listdir(d)):
-                        if not bdir.startswith("_bucket="):
-                            continue
-                        b = int(bdir.split("=", 1)[1])
-                        for p in sorted(os.listdir(os.path.join(d, bdir))):
-                            if p.endswith(".parquet"):
-                                out.append((os.path.join(d, bdir, p), b))
-                return out
+                    b = int(bdir.split("=", 1)[1])
+                    for p in sorted(os.listdir(os.path.join(d, bdir))):
+                        if p.endswith(".parquet"):
+                            out.append((os.path.join(d, bdir, p), b))
+            return out
 
-            summary = {"epoch": prep["epoch"], "end_commit": prep["end_commit"]}
-            commit_rel = self.relations.adopt_merge(
-                scan(os.path.join(scratch, "kind=relation"),
-                     os.path.join(scratch, "kept_relations")),
-                prep["rel_schema"],
-                prep["rel_buckets"], summary,
-            )
-            commit_seg = self.segments.adopt_merge(
-                scan(os.path.join(scratch, "kind=segment"),
-                     os.path.join(scratch, "kept_segments")),
-                prep["seg_schema"],
-                prep["buckets"], summary,
-            )
-        else:
-            commit_rel, commit_met, commit_seg = (
-                prep["f_rel"].result(), prep["f_met"].result(), prep["f_seg"].result()
-            )
-            commit_dead = prep["f_dead"].result() if "f_dead" in prep else (lambda: None)
-            prep["pool"].shutdown(wait=False)
+        summary = {"epoch": prep["epoch"], "end_commit": prep["end_commit"]}
+        commit_rel = self.relations.adopt_merge(
+            scan(os.path.join(scratch, "kind=relation"),
+                 os.path.join(scratch, "kept_relations")),
+            prep["rel_schema"], prep["buckets"], summary,
+        )
+        commit_seg = self.segments.adopt_merge(
+            scan(os.path.join(scratch, "kind=segment"),
+                 os.path.join(scratch, "kept_segments")),
+            prep["seg_schema"], prep["buckets"], summary,
+        )
         commit_rel()
         commit_met()
         # dead-letter commits with the replay-safe group (re-appends under a
@@ -1959,11 +1793,10 @@ class CdcEngine:
             prep["epoch"], prep["start_commit"], prep["end_commit"],
             prep["n_events"], prep.get("met_n_keys", 0), prep["t0"],
         )
-        if prep["fast"]:
-            # adopted files are hard links; the scratch names are no longer
-            # needed (the pipelined next epoch consumed its patch during
-            # ITS prepare, which completed before this commit ran)
-            shutil.rmtree(prep["scratch"], ignore_errors=True)
+        # adopted files are hard links; the scratch names are no longer
+        # needed (the pipelined next epoch consumed its patch during ITS
+        # prepare, which completed before this commit ran)
+        shutil.rmtree(scratch, ignore_errors=True)
         if trace:
             mark("log")
             prev = prep["t0"]

@@ -621,13 +621,11 @@ class LakeTable:
     ) -> list[dict]:
         """Write df bucketed by key hash under data/v{version}; return manifest.
 
-        ``write_shuffle=False`` skips the pre-write repartition: callers whose
-        source partitioning already refines the bucket hash (the ingest fold
-        shuffles by ``pmod(xxhash64(bucket_cols), k·n_buckets)``) write
-        straight from their layout — dropping a full exchange of the epoch's
-        changes per table.  Correctness never depends on the layout (the
-        dynamic-partition writer splits by ``_bucket`` regardless); only file
-        counts do."""
+        ``write_shuffle=False`` skips the pre-write repartition: callers that
+        already laid the rows out by bucket (:meth:`cluster_files`,
+        :meth:`compact_files`) write straight from their layout.
+        Correctness never depends on the layout (the dynamic-partition
+        writer splits by ``_bucket`` regardless); only file counts do."""
         snap = self.snapshot()
         out_dir = os.path.join(self.path, "data", f"v{version}")
         if os.path.exists(out_dir):  # crashed previous attempt for this version
@@ -741,10 +739,11 @@ class LakeTable:
     ):
         """Append df's rows as new data files (no key semantics).
 
-        ``defer_commit=True`` (as in :meth:`merge_upsert`) runs the data
-        write now and returns a zero-argument commit callable — the ingest
-        epoch uses it to sequence the metrics append inside the exactly-once
-        commit order while its write runs concurrently with the merges."""
+        ``defer_commit=True`` runs the data write now and returns a
+        zero-argument commit callable instead of committing — the ingest
+        epoch uses it to sequence its accounting appends inside the
+        exactly-once commit order while their writes run concurrently with
+        the epoch's other writes."""
         version = self.version() + 1
         schema, aligned = self._merged_schema(df)
         self._check_constraints(aligned)
@@ -827,9 +826,6 @@ class LakeTable:
         order_col: str | None = None,
         summary: dict[str, Any] | None = None,
         assume_unique: bool = False,
-        defer_commit: bool = False,
-        touched_buckets: list[int] | None = None,
-        write_shuffle: bool = True,
     ) -> int:
         """MERGE INTO … ON key_cols WHEN MATCHED UPDATE * WHEN NOT MATCHED INSERT *.
 
@@ -837,19 +833,6 @@ class LakeTable:
         keys are rewritten; untouched buckets' files carry over unchanged in
         the new manifest.  Idempotent: re-merging the same source is a no-op
         state-wise (same keys → same rows).
-
-        ``defer_commit=True`` splits the MERGE into its two phases and
-        returns a zero-argument commit callable instead of committing: the
-        expensive data write happens now, the atomic snapshot link later.
-        The ingest loop uses this to PREPARE all of an epoch's table merges
-        concurrently while still COMMITTING them in the exactly-once order
-        (relations, metrics, segments last).  Uncommitted prepared files are
-        overwritten by the replay's re-prepare of the same version.
-
-        ``touched_buckets``: callers that already know the buckets the source
-        covers (the ingest epoch computes them once from the batch keys) pass
-        them to skip the distinct+collect discovery job.  MUST be a superset
-        of the source rows' buckets — rows outside it would be written twice.
         """
         snap = self.snapshot()
         keys = snap["key_cols"]
@@ -873,24 +856,16 @@ class LakeTable:
 
         self._check_constraints(aligned)
         src = aligned.withColumn("_bucket", self.bucket_expr(aligned))
-        touched = (
-            list(touched_buckets)
-            if touched_buckets is not None
-            else [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
-        )
+        touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
         current = self._align_to(self.read(buckets=touched), schema)
         kept = current.join(src.select(*keys).distinct(), on=keys, how="left_anti")
         merged = kept.unionByName(src.drop("_bucket"))
 
-        new_files = self._write_data(merged, version, write_shuffle=write_shuffle)
+        new_files = self._write_data(merged, version)
         touched_set = set(touched)
         files = [f for f in snap["files"] if f["bucket"] not in touched_set] + new_files
-
-        def commit() -> int:
-            self._commit_snapshot(version, schema, files, "merge", summary)
-            return version
-
-        return commit if defer_commit else commit()
+        self._commit_snapshot(version, schema, files, "merge", summary)
+        return version
 
     def adopt_merge(
         self,
@@ -905,8 +880,8 @@ class LakeTable:
         the same filesystem — hold exactly the post-merge content of the
         touched buckets (upserted source ∪ kept rows).  Files are adopted by
         hard link (no data copy, no Spark job); old files of touched buckets
-        drop from the manifest; the commit callable returned is sequenced by
-        the caller exactly like :meth:`merge_upsert`'s.
+        drop from the manifest; the returned zero-argument commit callable
+        links the snapshot when the caller sequences it.
 
         This is how the ingest epoch writes ONE combined
         ``partitionBy(kind, bucket)`` job for all its tables instead of one

@@ -180,32 +180,37 @@ def test_stale_scratch_dir_overwritten_and_cleaned(spark, tmp_path, wal_pdf, ful
     assert not os.path.exists(os.path.join(part.warehouse, "_stage"))
 
 
-def test_diverged_bucket_layout_falls_back(spark, tmp_path, wal_pdf, full):
-    """The combined single-pass epoch write requires segments/relations to
-    share a bucket layout; after an EXTERNAL rebucket diverges them the
-    per-table merge fallback must take over mid-call and still converge to
-    identical digests — and post-ingest maintenance re-aligns the layouts
-    so the next call is back on the fast path."""
+def test_diverged_bucket_layout_reconverged_before_write(
+    spark, tmp_path, wal_pdf, full, monkeypatch
+):
+    """The combined epoch write partitions segments and relations by one
+    ``_bucket`` column, so they must share a bucket layout; after an
+    EXTERNAL rebucket diverges them, ingest re-converges the layouts before
+    its first epoch write and still reaches identical digests."""
     eng, _ = full
     part = _engine(spark, tmp_path, "diverge")
     sdf = to_spark(spark, wal_pdf)
-    part.ingest(sdf, commits_per_epoch=2, max_epochs=1)       # fast path
+    part.ingest(sdf, commits_per_epoch=2, max_epochs=1)
     part.segments.rebucket(8)  # diverge: segments 8 buckets, relations 4
-    before = dict(part.path_counts)
-    part.ingest(sdf, commits_per_epoch=2)                     # fallback path
-    assert part.path_counts["fallback"] > before["fallback"]
+    layouts = []
+    prepare = part._prepare_epoch
+
+    def spy(*a, **k):
+        layouts.append((part.segments.snapshot()["n_buckets"],
+                        part.relations.snapshot()["n_buckets"]))
+        return prepare(*a, **k)
+
+    monkeypatch.setattr(part, "_prepare_epoch", spy)
+    part.ingest(sdf, commits_per_epoch=2)
+    assert layouts and layouts[0] == (8, 8)
     assert _seg_digest(part) == _seg_digest(eng)
     assert table_digest(part.relations.read()) == table_digest(eng.relations.read())
-    # maintenance re-converged the layouts: the fast path is restored
-    assert (part.segments.snapshot()["n_buckets"]
-            == part.relations.snapshot()["n_buckets"])
 
 
-def test_fast_path_survives_size_triggered_rebucket(spark, tmp_path):
+def test_size_triggered_rebucket_keeps_shared_layout(spark, tmp_path):
     """Shared layout policy: a segments-only size trigger doubles BOTH
-    tables into one layout, so the next ingest still takes the combined
-    single-pass fast path — the flagship write optimization must not
-    self-disable exactly when the table grows (the steady state at scale)."""
+    tables into one layout, so the next ingest needs no re-converging
+    rebucket and writes digests identical to a never-rebucketed run."""
     wal = synth_change_log(n_keys=6, n_commits=4, seed=23)
     commits = sorted(set(wal["commit"]))
     first = wal[wal.commit <= commits[1]]
@@ -223,17 +228,61 @@ def test_fast_path_survives_size_triggered_rebucket(spark, tmp_path):
     assert n1 > n0
     assert eng.relations.snapshot()["n_buckets"] == n1  # co-rebucketed
 
-    before = dict(eng.path_counts)
     eng.ingest(to_spark(spark, wal), commits_per_epoch=2)
-    assert eng.path_counts["fallback"] == before["fallback"], \
-        "rebucketing must not knock the epoch write off the fast path"
-    assert eng.path_counts["fast"] > before["fast"]
 
     # digests identical to a never-rebucketed straight run
     ref = _engine(spark, tmp_path, "corebucket_ref")
     ref.ingest(to_spark(spark, wal), commits_per_epoch=2)
     assert _seg_digest(eng) == _seg_digest(ref)
     assert table_digest(eng.relations.read()) == table_digest(ref.relations.read())
+
+
+def _newest_job_id(spark) -> int:
+    """Id of the newest job in the driver's status store, read once the
+    listener bus has drained.  Job ids are dense and increasing, so the
+    difference of two readings counts the jobs between them even after
+    ``spark.ui.retainedJobs`` evicts old entries (the list's length stops
+    growing then)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+#: Spark jobs of the fixed 2-epoch ingest below (fold + combined write,
+#: kept rewrites, maintenance).  Spark jobs per epoch may only go down:
+#: lower this bound when a change removes one, never raise it.
+TWO_EPOCH_INGEST_JOBS = 25
+
+
+def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
+    """A fixed 2-epoch ingest into already-converged tables runs at most
+    ``TWO_EPOCH_INGEST_JOBS`` Spark jobs and makes no ``rebucket`` call."""
+    import threading
+
+    from linked_maps_spark.lakehouse import LakeTable
+
+    wal = to_spark(spark, synth_change_log(n_keys=4, n_commits=4, seed=29))
+    eng = _engine(spark, tmp_path, "jobcount")
+    # the once-per-session worker warm-up runs on a background thread; its
+    # job must not land inside the counted window
+    for t in threading.enumerate():
+        if t.name == "lms-prewarm":
+            t.join()
+    rebucketed = []
+    rebucket = LakeTable.rebucket
+
+    def spy(self, *a, **k):
+        rebucketed.append(self.path)
+        return rebucket(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "rebucket", spy)
+    before = _newest_job_id(spark)
+    stats = eng.ingest(wal, commits_per_epoch=2)
+    jobs = _newest_job_id(spark) - before
+    assert len(stats.epochs) == 2
+    assert rebucketed == []
+    assert jobs <= TWO_EPOCH_INGEST_JOBS, jobs
 
 
 def test_metrics_append_io_flat_in_epoch_count(spark, tmp_path, monkeypatch):
@@ -357,34 +406,44 @@ def test_read_metrics_keeps_legacy_null_attempt_rows(spark, tmp_path):
     assert m.filter(F.col("epoch") == 99).count() == 1
 
 
+#: metrics-table column names: the epoch write's accounting columns use
+#: the fold's reserved names instead, so a WAL extra may take any of these
+_METRICS_NAMES = ("epoch", "partition_id", "n_keys", "n_segments",
+                  "n_relations", "n_events", "wall_ms", "attempt")
+
+
 def test_wal_extra_column_collisions(spark, tmp_path):
-    """(a) an extra shadowing a fold/state column fails fast with a contract
-    error; (b) an extra shadowing only a fast-path metrics column falls back
-    to the per-table merge path and ingests correctly."""
+    """(a) an extra shadowing a fold/state column or the epoch write's
+    ``_bucket`` partition column fails fast with a contract error; (b)
+    extras named like metrics-table columns ingest correctly."""
     wal = synth_change_log(n_keys=3, n_commits=2, seed=7)
 
-    eng = _engine(spark, tmp_path, "badcol")
-    with pytest.raises(Exception, match="reserved fold/state"):
-        eng.ingest(to_spark(spark, wal).withColumnRenamed("lang", "gid"),
-                   commits_per_epoch=2)
+    for bad in ("gid", "_bucket"):
+        eng = _engine(spark, tmp_path, f"badcol{bad}")
+        with pytest.raises(Exception, match="reserved fold/state"):
+            eng.ingest(to_spark(spark, wal).withColumnRenamed("lang", bad),
+                       commits_per_epoch=2)
 
+    shadowed = to_spark(spark, wal).select(
+        "*", *[F.col("lang").alias(c) for c in _METRICS_NAMES]
+    )
     eng2 = _engine(spark, tmp_path, "shadowcol")
-    eng2.ingest(to_spark(spark, wal).withColumnRenamed("lang", "attempt"),
-                commits_per_epoch=2)
+    eng2.ingest(shadowed, commits_per_epoch=2)
     ref = _engine(spark, tmp_path, "shadowref")
     ref.ingest(to_spark(spark, wal), commits_per_epoch=2)
     assert table_digest(eng2.current_segments(), SEG_COLS) == \
         table_digest(ref.current_segments(), SEG_COLS)
     # the WAL's own values survived on the edition nodes (not the engine's)
-    vals = {r["attempt"] for r in eng2.current_segments()
-            .filter(F.col("attempt").isNotNull()).collect()}
-    assert vals and vals <= set(wal["lang"])
+    for c in _METRICS_NAMES:
+        vals = {r[c] for r in eng2.current_segments()
+                .filter(F.col(c).isNotNull()).collect()}
+        assert vals and vals <= set(wal["lang"]), c
 
 
 def test_adopted_data_files_carry_no_metrics_values(spark, full):
-    """Fast-path adopted segment files physically contain the combined
-    write's metrics columns, but they must be all-NULL on data rows — the
-    table stays clean (columns are invisible to schema-projected reads and
+    """Adopted segment files physically contain the combined write's
+    accounting columns, but they must be all-NULL on data rows — the table
+    stays clean (columns are invisible to schema-projected reads and
     RLE-compress to ~nothing)."""
     import os
 
@@ -395,11 +454,12 @@ def test_adopted_data_files_carry_no_metrics_values(spark, full):
     # no schema projection: see the files' real columns (kept-row files lack
     # the metrics columns entirely, so union the schemas)
     raw = spark.read.option("mergeSchema", "true").parquet(*paths)
-    for c in ("epoch", "partition_id", "wall_ms", "attempt"):
-        if c in raw.columns:
-            assert raw.filter(F.col(c).isNotNull()).count() == 0, c
+    acct = ("_pid", "_n_keys", "_n_segments", "_n_relations", "_wall_ms")
+    assert set(acct) <= set(raw.columns)
+    for c in acct:
+        assert raw.filter(F.col(c).isNotNull()).count() == 0, c
     # and the projected read never exposes them
-    assert "epoch" not in eng.current_segments().columns
+    assert not set(acct) & set(eng.current_segments().columns)
 
 
 def test_tombstone_retire_via_engine(spark, tmp_path):

@@ -310,7 +310,7 @@ def test_adopt_merge_links_external_files(spark, tbl, tmp_path):
     """adopt_merge: a MERGE commit whose data files were written by an
     external job (the ingest's combined epoch write) — files hard-link into
     the manifest, touched buckets' old files drop, untouched carry over,
-    and the commit sequences like merge_upsert's."""
+    and the returned commit callable links the snapshot."""
     import os
 
     from pyspark.sql import functions as F
