@@ -30,7 +30,7 @@ re-running the operator is idempotent (pure function of the text).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 DEFAULT_SIZE = 64
 DEFAULT_OVERLAP = 16
@@ -145,17 +145,3 @@ def chunk_stats_sql(
            CAST(SUM(n_words) AS BIGINT) AS n_words_total
     FROM chunks GROUP BY doc_id ORDER BY doc_id
     """
-
-
-# ------------------------------------------------------- driver entries
-
-def driver_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import relational
-
-    return chunk_windows(relational.load(spark, sf_dir, "documents"))
-
-
-def driver_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import relational
-
-    return chunk_stats(relational.load(spark, sf_dir, "documents"))

@@ -6,6 +6,15 @@ computes identically in Spark (``conv(substr(md5(s),1,8),16,10)``) and DuckDB
 (``('0x'||substr(md5(s),1,8))::UBIGINT``), so MinHash signatures — normally
 "not SQL-expressible" — get full value-level oracles.
 
+Each Spark expression the oracles pin has exactly ONE Spark definition, as
+Spark-SQL text: :func:`h32_expr`, :func:`tokens_expr` and
+:func:`word_shingles_expr` here, ``similarity._dot_expr`` and
+``similarity._as_double_expr`` for vectors.  Every Spark call site (dedup,
+textops, sampling, text_index, similarity, vec_index) hands that text to
+``F.expr``/``selectExpr``; where a helper sits inside a higher-order
+function the whole function, lambda included, is written as one string.
+The ``*_sql`` builders are the DuckDB oracle text and stay frozen.
+
 Scale notes (100 TB): every op is shuffle-on-key only; candidate generation
 is equi-join on shingle/band/bucket keys (never a cross join); shingle
 explosion is bounded by ``distinct`` before the join; banding keeps the join
@@ -14,7 +23,7 @@ fan-out at O(docs × bands).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 # MinHash parameters (shared constants between Spark impl and SQL oracle)
 MINHASH_PERMS = 8
@@ -27,63 +36,49 @@ SHINGLE_WORDS = 3
 MAX_KEY_DF = 1000
 
 
-def h32(col: Column, salt: str = "") -> Column:
-    """Portable 32-bit hash: first 8 hex digits of md5, as long."""
-    s = F.concat(F.lit(salt), F.lit(":"), col) if salt else col
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-
-
 def h32_sql(expr: str, salt: str = "") -> str:
     inner = f"concat('{salt}', ':', {expr})" if salt else expr
     return f"CAST(('0x' || substr(md5({inner}), 1, 8)) AS UBIGINT)::BIGINT"
 
 
 def h32_expr(expr: str, salt: str = "") -> str:
-    """Spark-SQL text of :func:`h32` — the SAME Catalyst expressions
-    (concat/md5/substring/conv/cast), but parsed JVM-side in ONE py4j round
-    trip instead of ~7.  ``salt`` must be quote-free (internal call sites
-    pass digits).  See the plan-construction note in OPTIMIZATION_r06.md:
-    per-call py4j latency on a contended host reaches ~20 ms, so hot query
-    constructors hand the JVM one SQL string per column."""
+    """The one Spark definition of the portable 32-bit hash (first 8 hex
+    digits of md5, as bigint), as Spark-SQL text over the SQL expression
+    ``expr``: every Spark call site hands it to ``F.expr``/``selectExpr``,
+    which parses it JVM-side in ONE py4j round trip.  ``salt`` must be
+    quote-free (call sites pass short fixed names or digits).  See the
+    plan-construction note in OPTIMIZATION_r06.md: per-call py4j latency on
+    a contended host reaches ~20 ms, so query constructors hand the JVM one
+    SQL string per column."""
     inner = f"concat('{salt}', ':', {expr})" if salt else expr
     return f"cast(conv(substring(md5({inner}), 1, 8), 16, 10) as bigint)"
 
 
-def tokens(col: Column) -> Column:
-    """Whitespace tokenization, identical to DuckDB's
-    ``string_split_regex(trim(lower(x)), '\\s+')``."""
-    return F.split(F.trim(F.lower(col)), r"\s+")
-
-
-def word_shingles(col: Column, k: int = SHINGLE_WORDS) -> Column:
-    """Distinct word k-grams of a text column (array<string>)."""
-    toks = tokens(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        )
-    )
+# Java's \s is exactly these six characters.  Spelled as literal characters
+# (no backslash) the SQL string literal parses to the same regex whatever
+# spark.sql.parser.escapedStringLiterals says.
+_WS_RUN = "[ \t\n\x0b\f\r]+"
 
 
 def tokens_expr(expr: str) -> str:
-    """Spark-SQL text of :func:`tokens` (identical analyzed expression)."""
-    return f"split(trim(lower({expr})), '\\\\s+')"
+    """Spark-SQL text of whitespace tokenization, identical to DuckDB's
+    ``string_split_regex(trim(lower(x)), '\\s+')``."""
+    return f"split(trim(lower({expr})), '{_WS_RUN}')"
 
 
 def word_shingles_expr(expr: str, k: int = SHINGLE_WORDS) -> str:
-    """Spark-SQL text of :func:`word_shingles` — same expression tree, one
-    py4j call.  The Column version materializes ~20 py4j round trips per
-    use; on a contended host that alone is 0.1–0.5 s of driver latency."""
+    """Spark-SQL text of the distinct word k-grams of a text expression
+    (array<string>).  The lambda variable is underscored so it cannot
+    shadow a column that ``expr`` names."""
     toks = tokens_expr(expr)
     return (
         f"array_distinct(transform(sequence(0, greatest(size({toks}) - {k}, 0)), "
-        f"i -> concat_ws(' ', slice({toks}, i + 1, {k}))))"
+        f"_i -> concat_ws(' ', slice({toks}, _i + 1, {k}))))"
     )
 
 
 def word_shingles_sql(expr: str, k: int = SHINGLE_WORDS) -> str:
-    """DuckDB equivalent of :func:`word_shingles` (1-based list slicing)."""
+    """DuckDB equivalent of :func:`word_shingles_expr` (1-based list slicing)."""
     toks = f"string_split_regex(trim(lower({expr})), '\\s+')"
     return (
         f"list_distinct(list_transform("
@@ -142,7 +137,7 @@ def dedup_ngram_jaccard(
     sh = _cached_plan(
         "shingles",
         spread(documents, "doc_id").select(
-            "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
+            "doc_id", F.expr(f"explode({word_shingles_expr('text')}) AS shingle")
         ),
     )
     rare = (
@@ -375,13 +370,9 @@ def decontaminate(
     covered (the decontamination decision variable)."""
     from .util import spread
 
-    corp = spread(documents, "doc_id").select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
-    ben = benchmark.select(
-        F.col("doc_id").alias("bench_id"),
-        F.explode(word_shingles(F.col("text"))).alias("shingle"),
-    )
+    shingle = F.expr(f"explode({word_shingles_expr('text')}) AS shingle")
+    corp = spread(documents, "doc_id").select("doc_id", shingle)
+    ben = benchmark.select(F.col("doc_id").alias("bench_id"), shingle)
     corp_rare = (
         corp.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -774,8 +765,8 @@ def simhash(documents: DataFrame, bits: int = 32) -> DataFrame:
     from .util import spread
 
     toks = spread(documents, "doc_id").select(
-        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok")
-    ).withColumn("h", h32(F.col("tok")))
+        "doc_id", F.expr(f"explode(array_distinct({tokens_expr('text')})) AS tok")
+    ).withColumn("h", F.expr(h32_expr("tok")))
     bit_sums = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -847,8 +838,9 @@ def dedup_jaccard_prefix(
     # legs — previously each leg recomputed it (5 passes in one action)
     sh = _cached_plan(
         "shingles",
-        spread(documents, "doc_id")
-        .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")),
+        spread(documents, "doc_id").select(
+            "doc_id", F.expr(f"explode({word_shingles_expr('text')}) AS shingle")
+        ),
     )
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ranked = sh.join(dfreq, "shingle").withColumn(
@@ -993,29 +985,24 @@ def dedup_substring(
 
     if emit not in ("md5", "text"):
         raise ValueError(f"emit must be 'md5' or 'text', got {emit!r}")
-    toks = tokens(F.col("text"))
+    toks = tokens_expr("text")
     pos_tbl = (
         spread(documents, "doc_id")
-        .select("doc_id", F.posexplode(toks).alias("pos0", "token"))
+        .selectExpr("doc_id", f"posexplode({toks}) AS (pos0, token)")
         .withColumn("pos", F.col("pos0") + 1)
         .drop("pos0")
     )
+    # docs shorter than k have NO grams: sequence(1, 0) in Spark counts
+    # DOWN, so gate on n ≥ k instead (posexplode of the empty array emits
+    # no rows — same as DuckDB's range(1, 1))
     grams = (
         spread(documents, "doc_id")
-        .select(
+        .selectExpr(
             "doc_id",
-            F.posexplode(
-                # docs shorter than k have NO grams: sequence(1, 0) in Spark
-                # counts DOWN, so gate on n ≥ k instead (posexplode of the
-                # empty array emits no rows — same as DuckDB's range(1, 1))
-                F.when(
-                    F.size(toks) >= k,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(toks) - k + 1),
-                        lambda p: F.concat_ws(" ", F.slice(toks, p, k)),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("pos0", "gram"),
+            f"posexplode(CASE WHEN size({toks}) >= {k} "
+            f"THEN transform(sequence(1, size({toks}) - {k} + 1), "
+            f"_p -> concat_ws(' ', slice({toks}, _p, {k}))) "
+            "ELSE cast(array() as array<string>) END) AS (pos0, gram)",
         )
         .withColumn("pos", F.col("pos0") + 1)
         .drop("pos0")

@@ -19,7 +19,7 @@ incremental queries from it:
   *exactly* the batch operator's pairs restricted to those touching a new
   document (tested, and value-oracled in DuckDB by the same restriction).
 
-Portable hashing throughout (`dedup.h32`), so the whole incremental pipeline
+Portable hashing throughout (`dedup.h32_expr`), so the whole incremental pipeline
 keeps a full value oracle.
 
 Reference analog: none (the reference dedups nothing); this is the

@@ -54,14 +54,14 @@ from .util import balanced_part_col
 EVENT_CORE_COLS = ("repo", "path", "commit", "content")
 
 # Names a WAL extra column can never take: they collide with the fold's
-# event/state frame, its output schema or the epoch write's partition
-# column — fail fast with a contract error instead of a duplicate-column
-# plan corruption.
+# event/state frame, its output schema, the salted fold's own columns or
+# the epoch write's partition column — fail fast with a contract error
+# instead of a duplicate-column plan corruption.
 _EXTRAS_FORBIDDEN = frozenset(
     {"commit", "content", "_is_event", "kind", "_pid", "parent_gid",
      "child_gid", "_wall_ms", "_n_keys", "_n_segments", "_n_relations",
      "gid", "name", "seq", "commit_created", "wkt", "content_sha256",
-     "editions", "is_leaf", "retired", "_bucket"}
+     "editions", "is_leaf", "retired", "_bucket", "payload", "_salt"}
 )
 
 # Target rows (events + resume-state leaves) per fold task for the adaptive
@@ -884,39 +884,11 @@ class CdcEngine:
         ]
 
     def _absorb_hot_markers(self, scratch: str) -> None:
-        """Fold-emitted ``kind='hot'`` advisory rows → the carry.  Fast
-        path: read the scratch partition driver-side with pyarrow (the
-        ``met_from_timing`` pattern) — zero Spark jobs.  A non-local
-        warehouse (URI scheme) is invisible to the driver-side read, so it
-        falls back to ONE Spark job over the hot partition rather than
-        silently never salting keys that turn hot after bucket validation."""
+        """Fold-emitted ``kind='hot'`` advisory rows → the carry, read
+        driver-side with pyarrow (the ``met_from_timing`` pattern) — zero
+        Spark jobs.  The scratch path is always a local directory: the
+        engine keeps ``os.path.abspath`` of its warehouse."""
         if self._hot_carry is None:
-            return
-        if scratch.startswith("file:"):
-            # file:-scheme warehouses ARE local — strip the scheme so the
-            # driver-side fast path below applies (file:///x → /x)
-            scratch = "/" + scratch[5:].lstrip("/")
-        elif "://" in scratch:
-            from pyspark.errors.exceptions.captured import AnalysisException
-
-            try:
-                rows = (
-                    self.spark.read.parquet(os.path.join(scratch, "kind=hot"))
-                    .select("repo", "path").collect()
-                )
-            except AnalysisException as exc:
-                # ONLY a missing kind=hot partition means "no hot keys this
-                # epoch"; AnalysisException also covers schema/column
-                # errors, which must propagate instead of silently
-                # disabling hot-key salting
-                cls = getattr(exc, "getErrorClass", lambda: None)() or ""
-                msg = str(exc)
-                if "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in msg or (
-                    "Path does not exist" in msg
-                ):
-                    return
-                raise
-            self._hot_carry.update((r["repo"], r["path"]) for r in rows)
             return
         hot_dir = os.path.join(scratch, "kind=hot")
         if not os.path.isdir(hot_dir):

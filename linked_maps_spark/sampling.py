@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import h32, h32_sql, tokens
+from .dedup import h32_expr, h32_sql, tokens_expr
 
 PPM = 1_000_000
 
@@ -37,7 +37,7 @@ SPLIT_BANDS = [("train", 980_000), ("heldout", 990_000), ("test", PPM)]
 
 def _ticket(salt: str):
     """Uniform ppm ticket from doc_id: portable md5 hash → [0, PPM)."""
-    return h32(F.col("doc_id").cast("string"), salt=salt) % PPM
+    return F.expr(f"{h32_expr('cast(doc_id as string)', salt)} % {PPM}")
 
 
 def _ticket_sql(salt: str) -> str:
@@ -106,7 +106,7 @@ def mixture_weights(documents: DataFrame, target_tokens: int = 500) -> DataFrame
         documents.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(tokens(F.col("text")))).cast("long").alias("n_tokens"),
+            F.expr(f"cast(sum(size({tokens_expr('text')})) as bigint) AS n_tokens"),
         )
         .withColumn(
             "keep_ppm",
@@ -291,10 +291,10 @@ def dsir_weights(
     ``doc_id`` for the final sum.  Documents with no tokens carry no
     evidence and drop out (weight undefined, not zero)."""
     toks = documents.select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
+        "doc_id", "lang", F.expr(f"explode({tokens_expr('text')}) AS tok")
     ).filter(F.col("tok") != "")
     b = toks.select(
-        "doc_id", "lang", (h32(F.col("tok"), salt="dsir") % buckets).alias("bucket")
+        "doc_id", "lang", F.expr(f"{h32_expr('tok', 'dsir')} % {buckets} AS bucket")
     )
     dist = b.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("raw_cnt"),
@@ -401,9 +401,7 @@ def dsir_resample(
     from pyspark.sql import Window
 
     w = dsir_weights(documents, target_lang, buckets)
-    u = (h32(F.col("doc_id").cast("string"), salt="dsir-g") + 1) / F.lit(
-        float(_U32_P1)
-    )
+    u = F.expr(f"({h32_expr('cast(doc_id as string)', 'dsir-g')} + 1) / {_U32_P1}.0D")
     keyed = w.select(
         "doc_id",
         "n_tokens",

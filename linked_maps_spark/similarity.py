@@ -19,38 +19,35 @@ from pyspark.sql import DataFrame, Window, functions as F
 from .dedup import MAX_KEY_DF
 
 
-def _dot(a, b):
-    """Sequential left-fold dot product in float64 — bit-compatible with
-    DuckDB's ``list_dot_product`` over ``DOUBLE[]``.  (A statically
-    unrolled 64-term variant was measured faster to EVALUATE but its
-    ~256 extra py4j Column calls per instantiation cost more to BUILD than
-    the evaluation saved — query functions rebuild their plan per call, so
-    construction is on the timed path.  The heavy multi-dot surfaces —
-    LSH planes, IVF centroid sims, PQ codes/LUTs — avoid per-row JVM dots
+def _dot_expr(a: str, b: str) -> str:
+    """The one Spark definition of the dot product, as Spark-SQL text over
+    two array<double> expressions: a sequential left fold in float64 —
+    bit-compatible with DuckDB's ``list_dot_product`` over ``DOUBLE[]`` —
+    parsed JVM-side in ONE py4j round trip.  Inside a lambda (``pq_mse``)
+    the enclosing higher-order function is written as text around it; the
+    underscored lambda variables cannot shadow a caller's column or
+    lambda.  (A statically unrolled 64-term variant was measured faster to
+    EVALUATE but cost more to BUILD than the evaluation saved — query
+    functions rebuild their plan per call, so construction is on the timed
+    path; see OPTIMIZATION_r06.md.  The heavy multi-dot surfaces — LSH
+    planes, IVF centroid sims, PQ codes/LUTs — avoid per-row JVM dots
     entirely via the vectorized Arrow kernels below.)"""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return (
+        f"aggregate(zip_with({a}, {b}, (_x, _y) -> _x * _y), 0.0D, "
+        "(_acc, _t) -> _acc + _t)"
     )
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot_expr(a: str, b: str) -> str:
-    """Spark-SQL text of :func:`_dot` — the identical zip_with/aggregate
-    fold, parsed JVM-side in ONE py4j round trip.  Used at call sites whose
-    operands are plain column names; lambda-context dots keep :func:`_dot`.
-    (Per-call py4j latency reaches ~20 ms on a contended host, and query
-    functions rebuild their plan per invocation — construction is on the
-    timed path; see OPTIMIZATION_r06.md.)"""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
+def _as_double_expr(vec: str) -> str:
+    """Spark-SQL text of the array column ``vec`` cast element-wise to
+    double.  ``vec`` is a column NAME, backtick-quoted here, so names that
+    are not plain identifiers resolve as written."""
+    quoted = vec.replace("`", "``")
+    return f"transform(`{quoted}`, _x -> cast(_x as double))"
 
 
 def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
-    return df.withColumn("_v", F.expr(f"transform({vec}, x -> cast(x as double))")).withColumn(
+    return df.withColumn("_v", F.expr(_as_double_expr(vec))).withColumn(
         "_norm", F.expr(f"sqrt({_dot_expr('_v', '_v')})")
     )
 
@@ -64,7 +61,7 @@ def _h32f(s: str) -> float:
 
 def _np_seq_dots(V, W):
     """(n, m) dot-product table with the SAME IEEE semantics as the
-    ``_dot`` left fold, vectorized across rows: the d-loop accumulates
+    ``_dot_expr`` left fold, vectorized across rows: the d-loop accumulates
     ``acc = acc + V[:,d]·W[:,d]`` so every (row, column) pair sees the
     identical ``((0 + t0) + t1) + …`` add sequence — numpy performs each
     elementwise op as a separate correctly-rounded IEEE operation (no FMA
@@ -195,7 +192,7 @@ def lsh_band_array(
     18 s) and an interpreted multi-thousand-node tree per row to evaluate
     (15 s for 2 000 rows).  Here the planes are the same md5-derived
     doubles computed driver-side and the per-plane dots run as one numpy
-    column-accumulation per batch — identical IEEE sequence to the ``_dot``
+    column-accumulation per batch — identical IEEE sequence to the ``_dot_expr``
     fold (see ``_np_seq_dots``), so every bit (and thus every band string)
     is unchanged.  Non-conforming rows (NULL / wrong width) produce all-'0'
     bits exactly as the JVM ``zip_with`` null-padding did."""
@@ -408,8 +405,7 @@ def _exact_rerank(cand: DataFrame, embeddings: DataFrame, n_queries: int, k: int
         cand.join(vecs, "vec_id")
         .join(F.broadcast(qv), "query_id")
         .withColumn(
-            "cosine",
-            F.round(_dot(F.col("_v"), F.col("_qv")) / (F.col("_norm") * F.col("_qn")), 6),
+            "cosine", F.expr(f"round({_dot_expr('_v', '_qv')} / (_norm * _qn), 6)")
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -588,8 +584,7 @@ def dedup_embedding_cosine(
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
         .withColumn(
-            "cosine",
-            F.round(_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6),
+            "cosine", F.expr(f"round({_dot_expr('_va', '_vb')} / (_na * _nb), 6)")
         )
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
@@ -708,8 +703,7 @@ def semantic_pairs(
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
         .withColumn(
-            "cosine",
-            F.round(_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6),
+            "cosine", F.expr(f"round({_dot_expr('_va', '_vb')} / (_na * _nb), 6)")
         )
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
@@ -942,7 +936,7 @@ def pq_codes(
     oracle covers the default."""
     # Vectorized Arrow kernel (guide §4.2; see lsh_band_array's note): per
     # subspace the ksub scores ``‖c‖² − 2⟨x_j,c⟩`` come from one numpy
-    # column-accumulation with the `_dot` fold's exact IEEE sequence;
+    # column-accumulation with the `_dot_expr` fold's exact IEEE sequence;
     # argmin takes the FIRST minimum (numpy argmin ≡ array_position of
     # array_min), codes stay 1-based.
     dsub = dim // m
@@ -1072,18 +1066,21 @@ def pq_mse(
     assigned centroid's score is ``‖c‖² − 2⟨x_j,c⟩``, so the error
     contribution is ``min(scores_j) + ‖x_j‖²`` (no decode needed)."""
     dsub = dim // m
-    base = embeddings.select(_as_double(F.col("embedding")).alias("_v"))
-    err = None
+    # the literal centroid tables are bound as columns so the per-subspace
+    # score fold can be one SQL string that names them
+    base = embeddings.select(
+        F.expr(f"{_as_double_expr('embedding')} AS _v"),
+        *[_pq_cnorms_j(j, dsub, ksub, codebooks).alias(f"_cn{j}") for j in range(m)],
+        *[_pq_cents_j(j, dsub, ksub, codebooks).alias(f"_ce{j}") for j in range(m)],
+    )
+    terms = []
     for j in range(m):
-        sub = F.slice("_v", j * dsub + 1, dsub)
-        scores = F.zip_with(
-            _pq_cnorms_j(j, dsub, ksub, codebooks),
-            _pq_cents_j(j, dsub, ksub, codebooks),
-            lambda n, cent: n - F.lit(2.0) * _dot(sub, cent),
+        sub = f"slice(_v, {j * dsub + 1}, {dsub})"
+        terms.append(
+            f"(array_min(zip_with(_cn{j}, _ce{j}, "
+            f"(_n, _c) -> _n - 2.0D * {_dot_expr(sub, '_c')})) + {_dot_expr(sub, sub)})"
         )
-        term = F.array_min(scores) + _dot(sub, sub)
-        err = term if err is None else err + term
-    return base.select(F.avg(err).alias("mse")).collect()[0]["mse"]
+    return base.selectExpr(f"avg({' + '.join(terms)}) AS mse").collect()[0]["mse"]
 
 
 def _adc_col(m: int):

@@ -141,7 +141,7 @@ def cms_sketch(df: DataFrame, value: F.Column) -> DataFrame:
     """Count-Min sketch table ``(r, bucket, cnt)`` (sparse; ≤ d·w rows).
 
     Row r's hash: first 8 hex of ``md5(r || ':' || value)`` mod w — the
-    same family as :func:`linked_maps_spark.dedup.h32`.  Merge of two
+    same family as :func:`linked_maps_spark.dedup.h32_expr`.  Merge of two
     sketches = union + ``groupBy(r, bucket).sum`` (tested in pytest).
 
     NULL keys are excluded: ``concat_ws`` silently SKIPS nulls (hashing a

@@ -171,13 +171,6 @@ def snap_wkt(
     return G.to_wkt(ids, geom_type)
 
 
-def unsnap_point(gx: float, gy: float, pitch: float = DEFAULT_PITCH,
-                 origin: tuple[float, float] = DEFAULT_ORIGIN) -> tuple[float, float]:
-    """Engine-grid WKT coordinate → true degrees (inverse of the fixed-point
-    scaling: engine values are grid_index × PITCH)."""
-    return (origin[0] + gx / G.PITCH * pitch, origin[1] + gy / G.PITCH * pitch)
-
-
 def snap_change_log(
     df,
     geom_type: str = G.LINE,

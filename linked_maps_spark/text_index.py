@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import tokens
+from .dedup import tokens_expr
 from .lakehouse import LakeTable
 from .textops import score_topk
 from .util import spread, scratch_root
@@ -48,11 +48,11 @@ TEXT_INDEX_SCHEMA = "term string, doc_id long, tf long"
 
 def term_postings(documents: DataFrame) -> DataFrame:
     """(term, doc_id, tf) postings of a document batch — one explode +
-    one partial-agg groupBy, the same tokenization (``dedup.tokens``) as
+    one partial-agg groupBy, the same tokenization (``dedup.tokens_expr``) as
     ``search_topk`` so indexed and recompute answers stay value-equal."""
     return (
         spread(documents, "doc_id")
-        .select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+        .select("doc_id", F.expr(f"explode({tokens_expr('text')}) AS term"))
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
     )

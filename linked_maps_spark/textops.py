@@ -8,7 +8,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .dedup import h32, h32_sql, tokens, word_shingles, word_shingles_sql
+from .dedup import h32_expr, h32_sql, tokens_expr, word_shingles_expr, word_shingles_sql
 
 # tiny deterministic stopword marker sets per language
 LANG_MARKERS = {
@@ -35,7 +35,7 @@ def token_stats(documents: DataFrame) -> DataFrame:
 
     quality = rounded linear combo; all ratios are int/int divisions done
     once in double — bit-identical to the SQL oracle."""
-    toks = tokens(F.col("text"))
+    toks = F.expr(tokens_expr("text"))
     n_tok = F.size(toks)
     n_chars = F.length("text")
     n_punct = n_chars - F.length(F.regexp_replace("text", PUNCT_CLASS, ""))
@@ -79,7 +79,7 @@ def lang_id(documents: DataFrame) -> DataFrame:
     """Marker-token language ID with deterministic argmax (score desc, code
     asc).  The n-gram-heuristic classifier of the task brief, kept exactly
     SQL-expressible."""
-    toks = tokens(F.col("text"))
+    toks = F.expr(tokens_expr("text"))
     scores = F.array(
         *[
             F.struct(
@@ -125,12 +125,12 @@ QC_SALT = "qc"
 QC_WEIGHT_SALT = "qcw"
 
 
-def _qc_weight(tok):
-    """Integer weight of one token under the hashing trick: the token hashes
-    into one of ``QC_FEATURES`` buckets, the bucket id hashes to a weight in
-    [-8, 8]."""
-    feat = F.pmod(h32(tok, QC_SALT), F.lit(QC_FEATURES))
-    return F.pmod(h32(feat.cast("string"), QC_WEIGHT_SALT), F.lit(17)) - F.lit(8)
+def _qc_weight(tok: str) -> str:
+    """Spark-SQL text of the integer weight of one token (the SQL expression
+    ``tok``) under the hashing trick: the token hashes into one of
+    ``QC_FEATURES`` buckets, the bucket id hashes to a weight in [-8, 8]."""
+    feat = f"pmod({h32_expr(tok, QC_SALT)}, {QC_FEATURES})"
+    return f"pmod({h32_expr(f'cast({feat} as string)', QC_WEIGHT_SALT)}, 17) - 8"
 
 
 def quality_classifier(documents: DataFrame) -> DataFrame:
@@ -146,11 +146,10 @@ def quality_classifier(documents: DataFrame) -> DataFrame:
     production pipeline would swap the md5-derived weights for trained ones
     (same plan, different literal table).  ``keep = margin > 0``.
     """
-    toks = tokens(F.col("text"))
     margin = _qc_margin_expr()
     return documents.select(
         "doc_id",
-        F.size(toks).alias("n_tokens"),
+        F.expr(f"size({tokens_expr('text')}) AS n_tokens"),
         margin.alias("margin"),
         (margin > 0).alias("keep"),
     ).orderBy("doc_id")
@@ -186,32 +185,32 @@ QC_TRAIN_PCT = 80
 _qc_weights_cache: dict[int, list[int]] = {}
 
 
-def _qc_t_feat(tok):
-    return F.pmod(h32(tok, QC_SALT), F.lit(QC_T_FEATURES))
+def _qc_t_feat(tok: str) -> str:
+    """Spark-SQL text of the trained classifier's feature id of ``tok``."""
+    return f"pmod({h32_expr(tok, QC_SALT)}, {QC_T_FEATURES})"
 
 
-def _qc_gold_weight(tok):
-    """The hidden deterministic 'teacher': same hashed feature space,
-    DIFFERENT weight salt.  Labels derived from it are a realizable linear
-    concept — what a real pipeline gets from human/LLM quality labels —
-    while staying engine-independent (portable md5 arithmetic)."""
+def _qc_gold_weight(tok: str) -> str:
+    """The hidden deterministic 'teacher' (Spark-SQL text): same hashed
+    feature space, DIFFERENT weight salt.  Labels derived from it are a
+    realizable linear concept — what a real pipeline gets from human/LLM
+    quality labels — while staying engine-independent (portable md5
+    arithmetic)."""
     feat = _qc_t_feat(tok)
-    return F.pmod(h32(feat.cast("string"), QC_GOLD_SALT), F.lit(17)) - F.lit(8)
+    return f"pmod({h32_expr(f'cast({feat} as string)', QC_GOLD_SALT)}, 17) - 8"
 
 
 def _qc_label_col():
-    gold = F.aggregate(
-        tokens(F.col("text")), F.lit(0).cast("long"),
-        lambda acc, t: acc + _qc_gold_weight(t),
+    return F.expr(
+        f"CASE WHEN aggregate({tokens_expr('text')}, cast(0 as bigint), "
+        f"(_acc, _t) -> _acc + ({_qc_gold_weight('_t')})) > 0 THEN 1 ELSE -1 END"
     )
-    return F.when(gold > 0, F.lit(1)).otherwise(F.lit(-1))
 
 
-def _qc_is_train_col():
-    return (
-        F.pmod(h32(F.col("doc_id").cast("string"), QC_SPLIT_SALT), F.lit(100))
-        < QC_TRAIN_PCT
-    )
+# Spark-SQL text of the deterministic train/heldout split
+_QC_IS_TRAIN = (
+    f"pmod({h32_expr('cast(doc_id as string)', QC_SPLIT_SALT)}, 100) < {QC_TRAIN_PCT}"
+)
 
 
 # auto-dispatch ceiling for driver-side training (the BPE pattern): the
@@ -251,10 +250,10 @@ def _train_weights_rows(
 def _qc_count_table(documents: DataFrame) -> DataFrame:
     return (
         documents
-        .filter(_qc_is_train_col())
+        .filter(_QC_IS_TRAIN)
         .withColumn("y", _qc_label_col())
-        .select("doc_id", "y", F.explode(tokens(F.col("text"))).alias("t"))
-        .select("doc_id", "y", _qc_t_feat(F.col("t")).alias("feat"))
+        .selectExpr("doc_id", "y", f"explode({tokens_expr('text')}) AS t")
+        .selectExpr("doc_id", "y", f"{_qc_t_feat('t')} AS feat")
         .groupBy("doc_id", "y", "feat")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -333,14 +332,14 @@ def quality_trained(documents: DataFrame) -> DataFrame:
         w = train_quality_weights(documents)
         if key is not None:
             _qc_weights_cache[key] = w
-    warr = F.array(*[F.lit(int(x)) for x in w])
-    margin = F.aggregate(
-        tokens(F.col("text")), F.lit(0).cast("long"),
-        lambda acc, t: acc + F.element_at(warr, (_qc_t_feat(t) + 1).cast("int")).cast("long"),
+    warr = "array(" + ", ".join(str(int(x)) for x in w) + ")"
+    margin = F.expr(
+        f"aggregate({tokens_expr('text')}, cast(0 as bigint), (_acc, _t) -> _acc + "
+        f"cast(element_at({warr}, cast({_qc_t_feat('_t')} + 1 as int)) as bigint))"
     )
     return documents.select(
         "doc_id",
-        F.when(_qc_is_train_col(), F.lit("train")).otherwise(F.lit("heldout")).alias("split"),
+        F.expr(f"CASE WHEN {_QC_IS_TRAIN} THEN 'train' ELSE 'heldout' END AS split"),
         margin.alias("margin"),
         (margin > 0).alias("keep"),
     ).orderBy("doc_id")
@@ -409,11 +408,10 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
     break lexicographically, making the result deterministic and
     oracle-exact; every ratio is a single int/int division in double.
     """
-    toks = tokens(F.col("text"))
     base = documents.select(
         "doc_id",
         F.length("text").alias("n_chars"),
-        toks.alias("ts"),
+        F.expr(f"{tokens_expr('text')} AS ts"),
         F.split("text", "\n", -1).alias("lines"),
     )
     wc = (
@@ -574,7 +572,7 @@ def pack_sequences(documents: DataFrame, seq_len: int = 256) -> DataFrame:
     ``Window.orderBy`` would collapse to one task at scale; per-stream
     packing is both the realistic sharding and the scalable plan.  All
     outputs are integer window arithmetic → oracle-exact."""
-    n_tok = F.size(tokens(F.col("text")))
+    n_tok = F.expr(f"size({tokens_expr('text')})")
     win = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -657,7 +655,7 @@ def curation_columns() -> dict:
     ``streaming.stream_curate`` (stream ≡ batch by construction)."""
     return {
         "content_md5": F.md5("text"),
-        "n_tokens": F.size(tokens(F.col("text"))).cast("long"),
+        "n_tokens": F.expr(f"cast(size({tokens_expr('text')}) as bigint)"),
         "n_pii": pii_exprs()["n_pii"],
         # classifier margin + URL density ride along so downstream keep/drop
         # thresholds need no second scan; the exprs are the SAME definitions
@@ -720,9 +718,9 @@ def _qc_margin_expr():
     """The classifier margin over a ``text`` column — ONE definition shared
     by :func:`quality_classifier` and :func:`curation_columns` so the curate
     scan can never drift from the oracle-verified operator."""
-    return F.aggregate(
-        tokens(F.col("text")), F.lit(0).cast("long"),
-        lambda acc, t: acc + _qc_weight(t),
+    return F.expr(
+        f"aggregate({tokens_expr('text')}, cast(0 as bigint), "
+        f"(_acc, _t) -> _acc + ({_qc_weight('_t')}))"
     )
 
 
@@ -792,9 +790,8 @@ def top_words(documents: DataFrame, k: int = 20) -> DataFrame:
     vocabulary/stop-word analysis pass.  One explode + map-side-combined
     groupBy; the final top-k is a single-partition sort of the (distinct
     words)-sized aggregate, never of the corpus."""
-    toks = tokens(F.col("text"))
     return (
-        documents.select(F.explode(toks).alias("word"))
+        documents.select(F.expr(f"explode({tokens_expr('text')}) AS word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("word"))
@@ -819,11 +816,11 @@ def doc_fingerprint(documents: DataFrame) -> DataFrame:
     """Document fingerprint: min portable hash over word shingles (the
     winnowing 'rolling hash → min' scheme, oracle-exact)."""
     sh = documents.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
+        "doc_id", F.expr(f"explode({word_shingles_expr('text')}) AS shingle")
     )
     return (
         sh.groupBy("doc_id")
-        .agg(F.min(h32(F.col("shingle"))).alias("fingerprint"))
+        .agg(F.expr(f"min({h32_expr('shingle')}) AS fingerprint"))
         .orderBy("doc_id")
     )
 
@@ -865,7 +862,7 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     the token→vocab scoring join shuffles on the token key (AQE broadcasts
     the vocab side when it fits); final per-doc agg partial-combines.  No
     UDFs, no collect."""
-    toks = documents.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+    toks = documents.select("doc_id", F.expr(f"explode({tokens_expr('text')}) AS tok"))
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
     lp = vocab.crossJoin(F.broadcast(total)).select(
@@ -947,7 +944,7 @@ def search_topk(documents: DataFrame, terms: list[str], k: int = 10) -> DataFram
 
     tf = (
         spread(documents, "doc_id")
-        .select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+        .select("doc_id", F.expr(f"explode({tokens_expr('text')}) AS term"))
         .filter(F.col("term").isin(terms))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))

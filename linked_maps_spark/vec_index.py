@@ -113,14 +113,14 @@ def train_pq_codebooks(
     One Spark job per round: codes for all m subspaces at once, then one
     posexplode + groupBy over the subvector components (``m·ksub·dsub``
     doubles to the driver — tiny)."""
-    from .similarity import _as_double, _pq_book_vals, pq_codes
+    from .similarity import _as_double_expr, _pq_book_vals, pq_codes
 
     dsub = dim // m
     books = [
         [_pq_book_vals(j, c, dsub) for c in range(ksub)] for j in range(m)
     ]
     base = embeddings.select(
-        "vec_id", _as_double(F.col("embedding")).alias("_v")
+        "vec_id", F.expr(f"{_as_double_expr('embedding')} AS _v")
     )
     for _ in range(iters):
         codes = pq_codes(embeddings, m, ksub, dim, codebooks=books)

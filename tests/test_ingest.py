@@ -413,12 +413,13 @@ _METRICS_NAMES = ("epoch", "partition_id", "n_keys", "n_segments",
 
 
 def test_wal_extra_column_collisions(spark, tmp_path):
-    """(a) an extra shadowing a fold/state column or the epoch write's
-    ``_bucket`` partition column fails fast with a contract error; (b)
-    extras named like metrics-table columns ingest correctly."""
+    """(a) an extra shadowing a fold/state column, the salted fold's
+    ``payload``/``_salt`` columns or the epoch write's ``_bucket``
+    partition column fails fast with a contract error; (b) extras named
+    like metrics-table columns ingest correctly."""
     wal = synth_change_log(n_keys=3, n_commits=2, seed=7)
 
-    for bad in ("gid", "_bucket"):
+    for bad in ("gid", "_bucket", "payload", "_salt"):
         eng = _engine(spark, tmp_path, f"badcol{bad}")
         with pytest.raises(Exception, match="reserved fold/state"):
             eng.ingest(to_spark(spark, wal).withColumnRenamed("lang", bad),

@@ -398,6 +398,50 @@ def test_token_stats_and_langid(docs):
     assert langs[1] == "en" and langs[4] == "de"
 
 
+def test_tokenizer_independent_of_escaped_string_literals(spark, docs):
+    """``spark.sql.parser.escapedStringLiterals`` changes how a backslash
+    in a SQL string literal parses.  The one tokenizer text must split the
+    same under both values (and exactly like Java's ``\\s+``), or the
+    MinHash signature would silently stop matching its oracle."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    ws = spark.createDataFrame([("A \t\n\x0b\f\r b\u00a0c  d ",)], "text string")
+
+    def run():
+        tok = ws.select(
+            F.expr(dedup.tokens_expr("text")).alias("got"),
+            F.split(F.trim(F.lower("text")), r"\s+").alias("java_ws"),
+        ).first()
+        return (
+            sorted(map(tuple, dedup.minhash_signature(docs).collect())),
+            sorted(map(tuple, textops.token_stats(docs).collect())),
+            (tok["got"], tok["java_ws"]),
+        )
+
+    default = run()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        legacy = run()
+    finally:
+        spark.conf.set(key, old)
+    assert legacy[0] == default[0]
+    assert legacy[1] == default[1]
+    split = ["a", "b\u00a0c", "d"]
+    assert default[2] == legacy[2] == (split, split)
+
+
+def test_with_norm_quotes_column_name(vecs):
+    """``with_norm`` is where the cosine family reads the embedding column
+    by name: a name that is not a plain identifier (a dot, a space, a
+    backtick, a reserved word) must resolve as written and give the same
+    vectors and norms as the default column."""
+    want = similarity.with_norm(vecs).select("vec_id", "_v", "_norm").collect()
+    for name in ("emb.v 1", "select", "a`b"):
+        renamed = vecs.withColumnRenamed("embedding", name)
+        got = similarity.with_norm(renamed, name).select("vec_id", "_v", "_norm")
+        assert got.collect() == want, name
+
+
 def test_grouped_topk_plans_window_group_limit(spark):
     """Per-group top-N must push the rank limit below the exchange
     (WindowGroupLimit): map tasks keep only their local top-3 per group, so
@@ -1189,7 +1233,7 @@ def test_quality_trained_beats_md5_baseline(spark):
     gold = docs.select(
         "doc_id",
         textops._qc_label_col().alias("y"),
-        textops._qc_is_train_col().alias("is_train"),
+        F.expr(textops._QC_IS_TRAIN).alias("is_train"),
     )
     trained = textops.quality_trained(docs).select(
         "doc_id", F.col("keep").alias("keep_t")
