@@ -93,7 +93,10 @@ def word_types(documents: DataFrame) -> DataFrame:
 
 
 def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """SQL text of ``s`` under either ``escapedStringLiterals`` value: a
+    quote or backslash enters as ``chr()``, never inside a literal."""
+    quoted = s.replace("'", "', chr(39), '").replace("\\", "', chr(92), '")
+    return f"concat('{quoted}')"
 
 
 def _apply_merge(syms: Column | str, lhs: str, rhs: str) -> Column:

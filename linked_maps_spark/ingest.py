@@ -856,21 +856,6 @@ class CdcEngine:
         # (or none is a leaf) is skipped at the manifest, not the scan
         return self.segments.read_where(self._LEAF_PREDS)
 
-    def _pruned_leaves(self, batch_keys: DataFrame) -> tuple[DataFrame, list[int]]:
-        """Leaf state for exactly the batch's ``(repo, path)`` keys, reading
-        only the manifest buckets those keys hash into.
-
-        At 100 TB this is the load-bearing pruning: an epoch touching 0.1% of
-        keys opens ~0.1% of the segments files instead of scanning the whole
-        table (round 1 read the entire table every epoch)."""
-        segs = self.segments
-        buckets = segs.buckets_for(batch_keys)
-        leaves = (
-            segs.read_where(self._LEAF_PREDS, buckets=buckets)
-            .join(batch_keys, on=["repo", "path"], how="left_semi")
-        )
-        return leaves, buckets
-
     def _hot_keys(self, leaves: DataFrame) -> list[tuple[str, str]]:
         """Exact Zipf-head count: keys whose accumulated leaf lattice crosses
         ``salt_leaf_threshold`` (routed through the salted fold).  One Spark
@@ -915,7 +900,8 @@ class CdcEngine:
         optionally patched with the in-flight previous epoch's change set
         (pipelined ingest).  The patch applies exactly the MERGE the table
         is about to commit — anti-join out updated gids, union the new rows,
-        re-filter leaves — so downstream sees post-merge state."""
+        re-filter leaves — so downstream sees post-merge state.  Opens only
+        the buckets of the keys, which may repeat (semi joins ignore that)."""
         base = (
             self.segments.read_where(self._LEAF_PREDS, buckets=buckets)
             .join(batch_keys, on=["repo", "path"], how="left_semi")
@@ -1267,15 +1253,16 @@ class CdcEngine:
         # batch, read from only the buckets those keys hash into.  With the
         # pipeline in flight the table read sees the PRE-previous-epoch
         # snapshot; the previous epoch's uncommitted changes patch in via
-        # the same anti-join ∪ override the MERGE itself will apply.
-        batch_keys = batch.select("repo", "path").distinct()
+        # the same anti-join ∪ override the MERGE itself will apply.  Keys
+        # repeat per event; the semi-joins they feed ignore that.
+        batch_keys = batch.select("repo", "path")
         keep = set(buckets)
         # manifest row-count upper bound for the touched buckets (driver-side
         # arithmetic, no job) — sizes the fold shuffle below AND, when it
         # proves the touched buckets hold ZERO state rows (fresh table,
         # append-only keys), lets the resume-state subtree be skipped
-        # outright: no bucket scan, no batch-keys distinct + broadcast
-        # semi-join, a leaner union/codegen unit for the fold stage.
+        # outright: no bucket scan, no broadcast semi-join, a leaner
+        # union/codegen unit for the fold stage.
         seg_snap = self.segments.snapshot()
         state_rows: int | None = 0
         for f in seg_snap["files"]:
@@ -1434,12 +1421,12 @@ class CdcEngine:
                 hot_df0 = self.spark.createDataFrame(
                     sorted(self._hot_carry), "repo string, path string"
                 )
-                hot = sorted(
+                hot = sorted({
                     (r["repo"], r["path"])
                     for r in batch_keys.join(
                         F.broadcast(hot_df0), ["repo", "path"], "left_semi"
                     ).collect()
-                )
+                })
         mark("hot_detect")
         if not hot:
             folded = (
@@ -1504,6 +1491,9 @@ class CdcEngine:
         if own_cache:
             batch.unpersist()
         seg_dir = os.path.join(scratch, "kind=segment")
+        seg_schema = self.spark.createDataFrame([], ", ".join(
+            f"`{c}` {t}" for c, t in SEGMENT_BASE_COLUMNS + extras
+        )).schema
         return {
             "epoch": epoch, "start_commit": start_commit, "end_commit": end_commit,
             # n_keys is filled in by the metrics assembly (met_from_timing
@@ -1516,13 +1506,13 @@ class CdcEngine:
             # keep only the latest attempt
             "attempt": self.metrics.version() + 1,
             "scratch": scratch,
+            # a known schema skips the footer-inference job
             "patch_df": (
-                self.spark.read.parquet(seg_dir).select(*seg_cols_x)
+                self.spark.read.schema(seg_schema).parquet(seg_dir)
+                .select(*seg_cols_x)
                 if os.path.isdir(seg_dir) else None
             ),
-            "seg_schema": self.spark.createDataFrame([], ", ".join(
-                f"`{c}` {t}" for c, t in SEGMENT_BASE_COLUMNS + extras
-            )).schema,
+            "seg_schema": seg_schema,
         }
 
     #: metric column order (must track METRICS_SCHEMA)
@@ -1602,13 +1592,12 @@ class CdcEngine:
                 return None  # nothing to keep: buckets had no files
             # align kept rows to table-schema ∪ source-schema (the same
             # evolution the adopting commit records)
-            merged, _ = table._merged_schema(
-                self.spark.createDataFrame([], src_schema)
-            )
+            merged = table._merged_with(src_schema)
             cur = table._align_to(table.read(buckets=buckets), merged)
             if os.path.isdir(src_dir):
                 src_keys = (
-                    self.spark.read.parquet(src_dir).select(*key_cols).distinct()
+                    self.spark.read.schema(src_schema).parquet(src_dir)
+                    .select(*key_cols)
                 )
                 cur = cur.join(src_keys, on=key_cols, how="left_anti")
             (
@@ -1688,7 +1677,8 @@ class CdcEngine:
         dead_dir = os.path.join(scratch, "kind=dead")
         if os.path.isdir(dead_dir):
             drows = _dead_letter_select(
-                self.spark.read.parquet(dead_dir), epoch, prep["attempt"]
+                self.spark.read.schema(prep["seg_schema"]).parquet(dead_dir),
+                epoch, prep["attempt"],
             )
             prep["f_dead"] = pool.submit(timed(
                 "dead", self.dead_letter.append, drows,

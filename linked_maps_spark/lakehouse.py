@@ -605,15 +605,14 @@ class LakeTable:
             ]
         )
 
-    def _merged_schema(self, df: DataFrame) -> tuple[StructType, DataFrame]:
-        """Union-merge table schema with df's columns (schema evolution)."""
-        current = self.schema()
-        names = {f.name for f in current.fields}
-        merged = StructType(list(current.fields))
-        for f in df.schema.fields:
+    def _merged_with(self, schema: StructType) -> StructType:
+        """Table schema ∪ ``schema``'s new columns (schema evolution)."""
+        merged = StructType(list(self.schema().fields))
+        names = {f.name for f in merged.fields}
+        for f in schema.fields:
             if f.name not in names:
                 merged = merged.add(f)
-        return merged, self._align_to(df, merged)
+        return merged
 
     def _write_data(
         self, df: DataFrame, version: int, salt_n: int = 4,
@@ -745,7 +744,8 @@ class LakeTable:
         exactly-once commit order while their writes run concurrently with
         the epoch's other writes."""
         version = self.version() + 1
-        schema, aligned = self._merged_schema(df)
+        schema = self._merged_with(df.schema)
+        aligned = self._align_to(df, schema)
         self._check_constraints(aligned)
         new_files = self._write_data(aligned, version)
         files = self.snapshot()["files"] + new_files
@@ -814,7 +814,8 @@ class LakeTable:
 
     def overwrite(self, df: DataFrame, summary: dict[str, Any] | None = None) -> int:
         version = self.version() + 1
-        schema, aligned = self._merged_schema(df)
+        schema = self._merged_with(df.schema)
+        aligned = self._align_to(df, schema)
         self._check_constraints(aligned)
         files = self._write_data(aligned, version)
         self._commit_snapshot(version, schema, files, "overwrite", summary)
@@ -839,7 +840,8 @@ class LakeTable:
         if not keys:
             raise ValueError("merge_upsert requires key_cols")
         version = self.version() + 1
-        schema, aligned = self._merged_schema(source)
+        schema = self._merged_with(source.schema)
+        aligned = self._align_to(source, schema)
 
         if order_col is not None:
             from pyspark.sql import Window
@@ -858,7 +860,7 @@ class LakeTable:
         src = aligned.withColumn("_bucket", self.bucket_expr(aligned))
         touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
         current = self._align_to(self.read(buckets=touched), schema)
-        kept = current.join(src.select(*keys).distinct(), on=keys, how="left_anti")
+        kept = current.join(src.select(*keys), on=keys, how="left_anti")
         merged = kept.unionByName(src.drop("_bucket"))
 
         new_files = self._write_data(merged, version)
@@ -910,11 +912,7 @@ class LakeTable:
                 "adopt_merge bypasses CHECK validation; constrained tables "
                 "must use merge_upsert"
             )
-        merged = StructType(list(self.schema().fields))
-        names = {f.name for f in merged.fields}
-        for f in schema.fields:
-            if f.name not in names:
-                merged = merged.add(f)
+        merged = self._merged_with(schema)
         version = self.version() + 1
         dest = os.path.join(self.path, "data", f"v{version}")
         if os.path.exists(dest):  # crashed previous attempt for this version

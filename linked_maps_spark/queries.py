@@ -8,7 +8,9 @@ from the transitively propagated ``editions`` column (or equivalently from
 ``triples.propagate_editions_fixpoint``).
 
 Q1–Q4 are the CDC classification queries: features present in an edition /
-unique to it / persisted across two editions / retired between them.
+unique to it / persisted across two editions / retired between them, each
+one scan of the leaves with a row predicate on ``editions`` (``gid`` is the
+segments merge key, so no aggregate or second join is needed).
 """
 
 from __future__ import annotations
@@ -19,10 +21,13 @@ from pyspark.sql import DataFrame, functions as F
 def leaf_features(segments: DataFrame, relations: DataFrame) -> DataFrame:
     """Leaves via anti-join (NOT EXISTS sfContains), the UI-query way.
 
+    Repeated parents are not deduplicated: the anti join ignores them.  At
+    scale a relations side too big to broadcast shuffles raw (~2x the rows).
+
     The engine also maintains an ``is_leaf`` flag incrementally (SURVEY.md
     §4.1 caching row); tests assert the two agree.
     """
-    parents = relations.select(F.col("parent_gid").alias("gid")).distinct()
+    parents = relations.select(F.col("parent_gid").alias("gid"))
     return segments.join(parents, on="gid", how="left_anti")
 
 
@@ -37,17 +42,16 @@ def q1_edition(segments: DataFrame, relations: DataFrame, year: str) -> DataFram
 
 def q2_edition_unique(segments: DataFrame, relations: DataFrame, year: str) -> DataFrame:
     """'1 edition - unique' (ui/main.py:34-45): leaf features whose ONLY
-    date is ``year`` — COUNT(DISTINCT date) = 1 via explode + having."""
-    leaves = leaf_features(segments, relations).filter(
-        F.array_contains("editions", year)
+    date is ``year``: COUNT(DISTINCT date) = 1 as "every non-NULL edition
+    is ``year``"."""
+    return (
+        leaf_features(segments, relations)
+        .filter(
+            F.array_contains("editions", year)
+            & F.forall("editions", lambda d: d.isNull() | (d == year))
+        )
+        .select("gid", "wkt")
     )
-    counted = (
-        leaves.select("gid", "wkt", F.explode("editions").alias("d"))
-        .groupBy("gid", "wkt")
-        .agg(F.countDistinct("d").alias("n_dates"))
-        .filter(F.col("n_dates") == 1)
-    )
-    return counted.select("gid", "wkt")
 
 
 def q3_persisted(
@@ -65,12 +69,16 @@ def q4_retired(
     segments: DataFrame, relations: DataFrame, year1: str, year2: str
 ) -> DataFrame:
     """'2 editions - difference' (ui/main.py:56-65): dated year1, MINUS
-    dated year2 — the MINUS is a left-anti join (SURVEY.md §2.3 J6)."""
-    base = leaf_features(segments, relations).filter(
-        F.array_contains("editions", year1)
+    dated year2 (SURVEY.md §2.3 J6) as a row predicate; ``coalesce`` keeps
+    a row with a NULL edition element and no year2, as the MINUS does."""
+    return (
+        leaf_features(segments, relations)
+        .filter(
+            F.array_contains("editions", year1)
+            & ~F.coalesce(F.array_contains("editions", year2), F.lit(False))
+        )
+        .select("gid", "wkt")
     )
-    minus = base.filter(F.array_contains("editions", year2)).select("gid")
-    return base.join(minus, on="gid", how="left_anti").select("gid", "wkt")
 
 
 def q5_persisted_with_osm(

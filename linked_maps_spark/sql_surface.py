@@ -9,7 +9,8 @@ the textual twin of the DataFrame plan in ``queries.py``; tests assert the
 two produce identical rows.
 
 The leaf test ``FILTER NOT EXISTS { ?f geo:sfContains _ }`` maps to SQL
-``NOT EXISTS`` (Catalyst plans it as the same left-anti join, J5/P8)."""
+``NOT EXISTS`` (Catalyst plans it as the same left-anti join, J5/P8); Q2
+and Q4 are the same single-scan row predicates as the DataFrame forms."""
 
 from __future__ import annotations
 
@@ -52,15 +53,12 @@ def sql_q1_edition(spark: SparkSession, year: str) -> DataFrame:
 
 
 def sql_q2_edition_unique(spark: SparkSession, year: str) -> DataFrame:
-    """'1 edition - unique' (ui/main.py:34-45): HAVING COUNT(DISTINCT date)=1."""
+    """'1 edition - unique' (ui/main.py:34-45): COUNT(DISTINCT date) = 1."""
     return spark.sql(
         """
-        SELECT gid, wkt
-        FROM (SELECT gid, wkt, explode(editions) AS d
-              FROM leaf_features
-              WHERE array_contains(editions, :year))
-        GROUP BY gid, wkt
-        HAVING COUNT(DISTINCT d) = 1
+        SELECT gid, wkt FROM leaf_features
+        WHERE array_contains(editions, :year)
+          AND forall(editions, d -> d IS NULL OR d = :year)
         """,
         args={"year": year},
     )
@@ -84,7 +82,7 @@ def sql_q4_retired(spark: SparkSession, year1: str, year2: str) -> DataFrame:
         """
         SELECT gid, wkt FROM leaf_features
         WHERE array_contains(editions, :year1)
-          AND NOT array_contains(editions, :year2)
+          AND NOT coalesce(array_contains(editions, :year2), false)
         """,
         args={"year1": year1, "year2": year2},
     )

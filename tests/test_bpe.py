@@ -112,6 +112,40 @@ def test_spark_merge_apply_matches_closed_form(spark):
         assert list(got) == imperative_merge(syms, l, r), (syms, l, r, got)
 
 
+def test_spark_merge_symbols_independent_of_escaped_string_literals(spark):
+    """A symbol holding a quote or a backslash must merge under both values
+    of ``spark.sql.parser.escapedStringLiterals``, which changes how those
+    two characters parse inside a SQL string literal."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    cases = [
+        (["it's", "x", "it's", "x"], "it's", "x"),
+        (["a\\b", "a\\b", "a\\b"], "a\\b", "a\\b"),
+        (["'", "\\", "''"], "'", "\\"),
+    ]
+    df = spark.createDataFrame(
+        [(i, syms) for i, (syms, _, _) in enumerate(cases)], "id int, syms array<string>"
+    )
+
+    def run():
+        return [
+            list(
+                df.filter(F.col("id") == i)
+                .select(bpe._apply_merge("syms", l, r).alias("m"))
+                .collect()[0]["m"]
+            )
+            for i, (_, l, r) in enumerate(cases)
+        ]
+
+    want = [imperative_merge(syms, l, r) for syms, l, r in cases]
+    old = spark.conf.get(key)
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            assert run() == want, value
+    finally:
+        spark.conf.set(key, old)
+
+
 # ---------------------------------------------------------------------------
 # end-to-end three-way agreement on the corpus
 

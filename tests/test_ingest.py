@@ -138,7 +138,8 @@ def test_epoch_leaf_read_is_bucket_pruned(spark, tmp_path, wal_pdf, full):
     unpruned full-scan semi-join."""
     eng, _ = full
     one_key = eng.current_segments().select("repo", "path").distinct().limit(1)
-    leaves, buckets = eng._pruned_leaves(one_key)
+    buckets = eng.segments.buckets_for(one_key)
+    leaves = eng._leaves_for(one_key, buckets, None)
     n_buckets = eng.segments.snapshot()["n_buckets"]
     assert 0 < len(buckets) < n_buckets
     # manifest files outside the touched buckets are not opened
@@ -252,7 +253,7 @@ def _newest_job_id(spark) -> int:
 #: Spark jobs of the fixed 2-epoch ingest below (fold + combined write,
 #: kept rewrites, maintenance).  Spark jobs per epoch may only go down:
 #: lower this bound when a change removes one, never raise it.
-TWO_EPOCH_INGEST_JOBS = 25
+TWO_EPOCH_INGEST_JOBS = 18
 
 
 def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
@@ -866,19 +867,30 @@ def test_fold_width_adaptive():
     assert _fold_width(4, 4, 490, 0) == 4
 
 
-def test_plan_warm_micro_ingest(spark, tmp_path, wal_pdf, full):
+def test_plan_warm_micro_ingest(spark, tmp_path, wal_pdf, full, monkeypatch):
     """The prewarm plan-compile path (a micro ingest into a throwaway
     warehouse) must leave no state behind and must not perturb a real
     ingest's results: digest equality against the shared fixture run."""
-    import glob
     import os
+    import tempfile
 
     from linked_maps_spark.ingest import _plan_warm
-    from linked_maps_spark.util import scratch_root
 
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*a, **k):
+        made.append(mkdtemp(*a, **k))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
     _plan_warm(spark)  # blocking call of the background warm body
-    # throwaway warehouse cleaned up (same scratch policy as the warm)
-    assert not glob.glob(os.path.join(scratch_root(), "lms_planwarm_*"))
+    monkeypatch.undo()
+    # this call's throwaway warehouse is cleaned up (another process's
+    # warm may have left its own behind; that one is not ours to judge)
+    warm = [d for d in made if os.path.basename(d).startswith("lms_planwarm_")]
+    assert len(warm) == 1, made
+    assert not os.path.exists(warm[0])
     # a real ingest after the warm is bit-identical to the fixture run
     eng_ref, _ = full
     eng = _engine(spark, tmp_path, "after_warm")

@@ -409,9 +409,9 @@ def test_maybe_rebucket_policy(spark, tmp_path):
     assert eng.segments.snapshot()["n_buckets"] > 2
     assert table_digest(eng.current_segments(), ["gid", "wkt", "seq"]) == d1
     # epoch pruning still works against the new layout
-    leaves, buckets = eng._pruned_leaves(
-        eng.current_segments().select("repo", "path").distinct().limit(1)
-    )
+    one_key = eng.current_segments().select("repo", "path").distinct().limit(1)
+    buckets = eng.segments.buckets_for(one_key)
+    leaves = eng._leaves_for(one_key, buckets, None)
     assert leaves.count() > 0 and buckets
 
 

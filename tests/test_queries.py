@@ -76,6 +76,41 @@ def test_classify_changes_partitions_leaves(tables):
     assert "unchanged" in kinds and "added" in kinds
 
 
+def test_leaf_features_plans_no_aggregate(eng):
+    """The leaf anti-join takes relations' parent column raw: no dedup
+    aggregate (one more shuffle-map job under AQE) sits under the join."""
+    leaves = leaf_features(eng.current_segments(), eng.relations.read())
+    plan = leaves._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
+    assert "HashAggregate" not in plan, plan
+
+
+#: Spark jobs of ``count()`` over each CDC read on this module's warehouse,
+#: read fresh from the tables.  Spark jobs per read may only go down: lower
+#: this bound when a change removes a job, never raise it.
+READ_JOBS = 3
+
+
+def test_cdc_read_spark_jobs_pinned(spark, eng):
+    from tests.test_ingest import _newest_job_id
+
+    y1, y2 = commit_label(0)[:4], commit_label(N_COMMITS - 1)[:4]
+    reads = {
+        "q1": lambda s, r: q1_edition(s, r, y1),
+        "q2": lambda s, r: q2_edition_unique(s, r, y2),
+        "q3": lambda s, r: q3_persisted(s, r, y1, y2),
+        "q4": lambda s, r: q4_retired(s, r, y1, y2),
+        "classify": lambda s, r: classify_changes(s, r, y1, y2),
+    }
+    jobs = {}
+    for name, build in reads.items():
+        df = build(eng.current_segments(), eng.relations.read())
+        before = _newest_job_id(spark)
+        df.count()
+        jobs[name] = _newest_job_id(spark) - before
+    assert max(jobs.values()) <= READ_JOBS, jobs
+
+
 def test_editions_fixpoint_matches_fold_propagation(tables):
     """J3 iterative join == fold's creation-time propagation."""
     seg, rel = tables
