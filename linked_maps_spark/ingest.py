@@ -38,6 +38,7 @@ in Spark state stores — SURVEY.md §7.3.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import threading
 import time
@@ -45,11 +46,12 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
 from . import geometry as G
 from .fold import RELATION_COLUMNS, SEGMENT_BASE_COLUMNS, fold_key
 from .lakehouse import LakeTable
-from .util import balanced_part_col
+from .util import balanced_part_col, quote_ident
 
 EVENT_CORE_COLS = ("repo", "path", "commit", "content")
 
@@ -63,6 +65,24 @@ _EXTRAS_FORBIDDEN = frozenset(
      "gid", "name", "seq", "commit_created", "wkt", "content_sha256",
      "editions", "is_leaf", "retired", "_bucket", "payload", "_salt"}
 )
+#: the epoch's projections are Spark-SQL text, so a WAL extra must also be a
+#: plain identifier (a dotted, spaced or backticked name would be parsed)
+_EXTRA_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _check_extras(columns: list[str]) -> None:
+    """Contract check on a WAL's extra column names, before any Spark job."""
+    bad = sorted(
+        c for c in columns
+        if c not in EVENT_CORE_COLS
+        and (c in _EXTRAS_FORBIDDEN or not _EXTRA_NAME.fullmatch(c))
+    )
+    if bad:
+        raise ValueError(
+            f"WAL extra column(s) {bad} collide with reserved fold/state "
+            "column names or are not plain identifiers "
+            "([A-Za-z_][A-Za-z0-9_]*) — rename them upstream of ingest"
+        )
 
 # Target rows (events + resume-state leaves) per fold task for the adaptive
 # shuffle width: ~2k rows ≈ 0.5–1 s of fold kernel at measured speeds —
@@ -168,8 +188,8 @@ def _collect_commits(df: DataFrame) -> list[str]:
     SILENTLY drop a malformed row's events from every epoch — so NULL
     commits are counted in the same job and fail loudly instead."""
     row = df.agg(
-        F.collect_set("commit").alias("cs"),
-        F.count(F.when(F.col("commit").isNull(), 1)).alias("nn"),
+        F.expr("collect_set(commit) AS cs"),
+        F.expr("count(CASE WHEN commit IS NULL THEN 1 END) AS nn"),
     ).collect()[0]
     if row["nn"]:
         raise ValueError(
@@ -210,7 +230,7 @@ DEAD_LETTER_SCHEMA = (
 def _fold_output_schema(extras: list[tuple[str, str]]) -> str:
     base = ", ".join(f"{c} {t}" for c, t in SEGMENT_BASE_COLUMNS)
     rel = "parent_gid string, child_gid string"
-    extra = "".join(f", {c} {t}" for c, t in extras)
+    extra = "".join(f", {quote_ident(c)} {t}" for c, t in extras)
     # _n_* ride on the per-task 'timing' row: the fold task already knows its
     # own key/segment/relation counts, so the metrics append reads them
     # straight off the changes cache — no groupBy shuffle over the epoch's
@@ -912,7 +932,7 @@ class CdcEngine:
         kept = base.join(delta.select("gid"), on="gid", how="left_anti")
         return (
             kept.unionByName(delta, allowMissingColumns=True)
-            .filter(F.col("is_leaf") & ~F.col("retired"))
+            .filter("is_leaf AND NOT retired")
         )
 
     # ---------------------------------------------------------------- ingest
@@ -963,6 +983,7 @@ class CdcEngine:
         here, before the first epoch (a snapshot comparison when they
         already match).
         """
+        _check_extras(change_log.columns)
         self._share_layout()
         if self.on_error == "quarantine":
             # warehouses created before the dead-letter table existed get it
@@ -1220,8 +1241,8 @@ class CdcEngine:
         # (segments and relations share one layout — see _share_layout — so
         # this bucket set serves both tables)
         stats = batch.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(self.segments.bucket_expr(batch)).alias("bks"),
+            F.expr("count(1) AS n"),
+            F.expr(f"collect_set({self.segments.bucket_sql()}) AS bks"),
         ).collect()[0]
         n_events = stats["n"]
         buckets = sorted(stats["bks"])
@@ -1272,10 +1293,10 @@ class CdcEngine:
                     break
                 state_rows += f["rows"]
         if state_rows == 0 and patch_changes is None:
-            # provably-empty resume state: an empty local relation with the
-            # table's current schema keeps the evolution columns visible to
-            # the extras merge while Catalyst folds the union side away
-            leaves = self.spark.createDataFrame([], self.segments.schema())
+            # provably-empty resume state: the table's empty relation (its
+            # current schema) keeps the evolution columns visible to the
+            # extras merge without a scan
+            leaves = self.segments.empty()
         else:
             leaves = self._leaves_for(batch_keys, buckets, patch_changes)
         # schema evolution: extra columns from either side, deduped by NAME
@@ -1291,33 +1312,26 @@ class CdcEngine:
             if f.name not in seg_base_names:
                 extras_map[f.name] = f.dataType.simpleString()
         extras = sorted(extras_map.items())
-        bad = sorted(set(extras_map) & _EXTRAS_FORBIDDEN)
-        if bad:
-            raise ValueError(
-                f"WAL extra column(s) {bad} collide with reserved fold/state "
-                "column names — rename them upstream of ingest"
-            )
-
-        def _null(t):
-            return F.lit(None).cast(t)
-
-        ev_side = batch.select(
+        ev_cols, st_cols = set(batch.columns), set(leaves.columns)
+        q = quote_ident
+        ev_side = batch.selectExpr(
             "repo", "path", "commit", "content",
             *[
-                (F.col(c).cast(t) if c in batch.columns else _null(t)).alias(c)
+                f"CAST({q(c) if c in ev_cols else 'NULL'} AS {t}) AS {q(c)}"
                 for c, t in extras
             ],
-            *[_null(t).alias(c) for c, t in _STATE_TYPES],
-            F.lit(True).alias("_is_event"),
+            *[f"CAST(NULL AS {t}) AS {c}" for c, t in _STATE_TYPES],
+            "true AS _is_event",
         )
-        st_side = leaves.select(
-            "repo", "path", _null("string").alias("commit"), _null("string").alias("content"),
+        st_side = leaves.selectExpr(
+            "repo", "path", "CAST(NULL AS string) AS commit",
+            "CAST(NULL AS string) AS content",
             *[
-                (F.col(c) if c in leaves.columns else _null(t)).alias(c)
+                q(c) if c in st_cols else f"CAST(NULL AS {t}) AS {q(c)}"
                 for c, t in extras
             ],
-            *[F.col(c).cast(t).alias(c) for c, t in _STATE_TYPES],
-            F.lit(False).alias("_is_event"),
+            *[f"CAST({c} AS {t}) AS {c}" for c, t in _STATE_TYPES],
+            "false AS _is_event",
         )
         n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         # Adaptive fold width: a small epoch fanned into the full configured
@@ -1356,8 +1370,9 @@ class CdcEngine:
         # ~1/e of the stage's slots idle.
         nb = seg_snap["n_buckets"]
         modulus = nb * max(1, round(n_parts / nb))
-        fold_part = F.pmod(F.xxhash64("repo", "path"), F.lit(modulus))
-        spread = balanced_part_col(fold_part, modulus, n_parts)
+        spread = balanced_part_col(
+            f"pmod(xxhash64(repo, path), {modulus})", modulus, n_parts
+        )
         shaped = ev_side.unionByName(st_side)
         hot_threshold = (
             self.salt_leaf_threshold
@@ -1449,15 +1464,9 @@ class CdcEngine:
             )
             hot_changes = self._salted_fold(hotr, extras, out_schema)
             folded = cold_changes.unionByName(hot_changes)
-        seg_cols_x = [c for c, _ in SEGMENT_BASE_COLUMNS] + [c for c, _ in extras]
-
-        def m(col):
-            # accounting columns ride ONLY on timing rows; segment/relation
-            # rows keep them NULL so the adopted data files stay clean (null
-            # columns RLE-compress to ~nothing).  They keep the fold's own
-            # reserved names (_EXTRAS_FORBIDDEN), so no WAL extra can
-            # shadow them; met_from_timing maps them onto METRICS_SCHEMA.
-            return F.when(F.col("kind") == "timing", F.col(col)).alias(col)
+        seg_cols_x = [
+            quote_ident(c) for c, _ in SEGMENT_BASE_COLUMNS + extras
+        ]
 
         # THE EPOCH WRITE: the fold output is written ONCE, dynamic-
         # partitioned by (kind, bucket), straight off the fold's
@@ -1471,16 +1480,21 @@ class CdcEngine:
         # rows back.  Keeping per-epoch literals out of this projection
         # makes the whole post-shuffle stage's generated code byte-identical
         # across epochs and engines, so whole-stage codegen compiles once
-        # per session instead of once per epoch.
-        combined = folded.select(
+        # per session instead of once per epoch.  The accounting columns
+        # ride ONLY on timing rows; segment/relation rows keep them NULL so
+        # the adopted data files stay clean (null columns RLE-compress to
+        # ~nothing).  They keep the fold's own reserved names
+        # (_EXTRAS_FORBIDDEN), so no WAL extra can shadow them;
+        # met_from_timing maps them onto METRICS_SCHEMA.
+        combined = folded.selectExpr(
             "kind",
             *seg_cols_x,
             "parent_gid", "child_gid",
-            *[m(c) for c in ("_pid", "_n_keys", "_n_segments", "_n_relations",
-                             "_wall_ms")],
-            F.when(F.col("kind") == "timing", F.lit(0))
-            .otherwise(self.segments.bucket_expr(folded))
-            .alias("_bucket"),
+            *[f"CASE WHEN kind = 'timing' THEN {c} END AS {c}"
+              for c in ("_pid", "_n_keys", "_n_segments", "_n_relations",
+                        "_wall_ms")],
+            f"CASE WHEN kind = 'timing' THEN 0 "
+            f"ELSE {self.segments.bucket_sql()} END AS _bucket",
         )
         scratch = os.path.join(self.warehouse, "_stage", f"e{epoch}")
         if os.path.exists(scratch):  # crashed attempt: deterministic redo
@@ -1491,9 +1505,9 @@ class CdcEngine:
         if own_cache:
             batch.unpersist()
         seg_dir = os.path.join(scratch, "kind=segment")
-        seg_schema = self.spark.createDataFrame([], ", ".join(
-            f"`{c}` {t}" for c, t in SEGMENT_BASE_COLUMNS + extras
-        )).schema
+        seg_schema = DataType.fromDDL(", ".join(
+            f"{quote_ident(c)} {t}" for c, t in SEGMENT_BASE_COLUMNS + extras
+        ))
         return {
             "epoch": epoch, "start_commit": start_commit, "end_commit": end_commit,
             # n_keys is filled in by the metrics assembly (met_from_timing
@@ -1509,7 +1523,7 @@ class CdcEngine:
             # a known schema skips the footer-inference job
             "patch_df": (
                 self.spark.read.schema(seg_schema).parquet(seg_dir)
-                .select(*seg_cols_x)
+                .selectExpr(*seg_cols_x)
                 if os.path.isdir(seg_dir) else None
             ),
             "seg_schema": seg_schema,
@@ -1606,9 +1620,9 @@ class CdcEngine:
             )
             return out_dir
 
-        rel_schema = self.spark.createDataFrame(
-            [], ", ".join(f"{c} {t}" for c, t in RELATION_COLUMNS)
-        ).schema
+        rel_schema = DataType.fromDDL(
+            ", ".join(f"{c} {t}" for c, t in RELATION_COLUMNS)
+        )
         prep["rel_schema"] = rel_schema
         seg_dir = os.path.join(scratch, "kind=segment")
         rel_dir = os.path.join(scratch, "kind=relation")

@@ -36,9 +36,9 @@ import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
-from .util import balanced_part_col, zvalue_col
+from .util import balanced_part_col, quote_ident, zvalue_col
 
 _SNAP_DIR = "_snapshots"
 
@@ -312,10 +312,12 @@ class ConstraintViolation(ValueError):
     """A write carried a row failing one of the table's CHECK constraints."""
 
 
-def _schema_of(spark: SparkSession, schema: StructType | str) -> StructType:
+def _schema_of(schema: StructType | str) -> StructType:
+    """``schema`` as a StructType; DDL text is parsed without building a
+    DataFrame (a few py4j round trips instead of a few dozen)."""
     if isinstance(schema, StructType):
         return schema
-    return spark.createDataFrame([], schema).schema
+    return DataType.fromDDL(schema)
 
 
 class LakeTable:
@@ -356,7 +358,7 @@ class LakeTable:
         if t.version() is None:
             t._commit_snapshot(
                 version=0,
-                schema=_schema_of(spark, schema),
+                schema=_schema_of(schema),
                 files=[],
                 operation="create",
                 summary={},
@@ -525,12 +527,7 @@ class LakeTable:
             keep = set(buckets)
             files = [f for f in files if f["bucket"] in keep]
         if not files:
-            # JVM-only empty relation: createDataFrame([], schema) builds a
-            # python-RDD-backed plan whose every downstream write job pays a
-            # measured ~5-8 s python-runner fixed cost in this runtime
-            return self.spark.range(0).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-            )
+            return self.empty(schema)
         paths = [os.path.join(self.path, f["path"]) for f in files]
         return self.spark.read.schema(schema).parquet(*paths)
 
@@ -573,19 +570,36 @@ class LakeTable:
         files = self.files_where(preds, version=version, buckets=buckets)
         residual = _preds_column(preds)
         if not files:
-            return self.spark.range(0).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-            ).filter(residual)
+            return self.empty(schema).filter(residual)
         paths = [os.path.join(self.path, f["path"]) for f in files]
         return self.spark.read.schema(schema).parquet(*paths).filter(residual)
 
-    def bucket_expr(self, df: DataFrame, n_buckets: int | None = None):
+    def empty(self, schema: StructType | None = None) -> DataFrame:
+        """Empty relation of ``schema`` (default: the table's current one).
+        JVM-only: createDataFrame([], schema) builds a python-RDD-backed
+        plan whose every downstream write job pays a measured ~5-8 s
+        python-runner fixed cost in this runtime."""
+        schema = self.schema() if schema is None else schema
+        return self.spark.range(0).selectExpr(*[
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS {quote_ident(f.name)}"
+            for f in schema.fields
+        ])
+
+    def bucket_sql(self, n_buckets: int | None = None) -> str:
+        """The one definition of the file-layout bucket of a row, as
+        Spark-SQL text over the bucket columns: ``pmod(xxhash64(cols), n)``
+        as int (``0`` for a table without bucket columns)."""
         snap = self.snapshot()
         cols = snap.get("bucket_cols", snap["key_cols"])
         if not cols:
-            return F.lit(0)
+            return "0"
         n = snap["n_buckets"] if n_buckets is None else n_buckets
-        return F.pmod(F.xxhash64(*[F.col(k) for k in cols]), F.lit(n)).cast("int")
+        return (
+            f"CAST(pmod(xxhash64({', '.join(map(quote_ident, cols))}), {n}) AS INT)"
+        )
+
+    def bucket_expr(self, df: DataFrame, n_buckets: int | None = None):
+        return F.expr(self.bucket_sql(n_buckets))
 
     def buckets_for(self, df: DataFrame) -> list[int]:
         """Distinct bucket ids of df's rows (df must carry the bucket
@@ -597,13 +611,12 @@ class LakeTable:
     @staticmethod
     def _align_to(df: DataFrame, schema: StructType) -> DataFrame:
         """Project df to ``schema``: cast present columns, NULL-fill absent."""
-        return df.select(
-            *[
-                F.col(f.name).cast(f.dataType) if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
+        present = set(df.columns)
+        return df.selectExpr(*[
+            f"CAST({quote_ident(f.name) if f.name in present else 'NULL'} "
+            f"AS {f.dataType.simpleString()}) AS {quote_ident(f.name)}"
+            for f in schema.fields
+        ])
 
     def _merged_with(self, schema: StructType) -> StructType:
         """Table schema ∪ ``schema``'s new columns (schema evolution)."""
@@ -648,8 +661,8 @@ class LakeTable:
             # and the dynamic-partition writer splits files by _bucket
             # regardless, so file layout is unchanged.
             nb = n_buckets_override or snap["n_buckets"]
-            salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(salt_n))
-            composite = F.col("_bucket") * F.lit(salt_n) + salt
+            salt = f"pmod(xxhash64({', '.join(map(quote_ident, keys))}), {salt_n})"
+            composite = f"_bucket * {salt_n} + {salt}"
             n_parts = min(nb * salt_n, 4096)
             bucketed = bucketed.repartition(
                 n_parts,
@@ -1320,7 +1333,7 @@ class LakeTable:
         # partition writer still emits exactly one file per bucket).
         laid = df.withColumn("_bucket", self.bucket_expr(df)).repartition(
             len(fragmented),
-            balanced_part_col(F.col("_bucket"), snap["n_buckets"], len(fragmented)),
+            balanced_part_col("_bucket", snap["n_buckets"], len(fragmented)),
         )
         new_files = self._write_data(laid, version, write_shuffle=False)
         frag_set = set(fragmented)

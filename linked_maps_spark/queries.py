@@ -27,7 +27,7 @@ def leaf_features(segments: DataFrame, relations: DataFrame) -> DataFrame:
     The engine also maintains an ``is_leaf`` flag incrementally (SURVEY.md
     §4.1 caching row); tests assert the two agree.
     """
-    parents = relations.select(F.col("parent_gid").alias("gid"))
+    parents = relations.selectExpr("parent_gid AS gid")
     return segments.join(parents, on="gid", how="left_anti")
 
 

@@ -4,6 +4,17 @@ Local sandbox runs on ``local[$SPARK_GRAFT_CPUS]``; the same configuration
 (AQE, skew-join handling, Arrow batches, shuffle partitions scaled to cores)
 is what a multi-executor ``spark-submit --py-files`` deployment would use —
 nothing here assumes single-JVM execution.
+
+PySpark's DataFrame-origin capture is off by default here.  With it on,
+every ``functions.*`` call and ``Column`` method also reads the active
+session and a conf value, then sets and clears a JVM-side origin: 13 py4j
+round trips for ``F.col("x")`` instead of 3, which doubled the driver's
+plan-build cost of an ingest epoch and a read.  It only adds the Python
+call site to analysis-error text (the error itself is raised either way);
+to debug with it, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+PySpark reads the setting once per process, at the first such call made
+while a session is active, so set it on the process's first session.
 """
 
 from __future__ import annotations
@@ -49,6 +60,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        # no per-call DataFrame-origin capture: 4 py4j round trips for
+        # F.col("x").alias("y") instead of 24 (see the module docstring;
+        # extra_conf turns it back on)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", shuffle)
         # Arrow transfer for every pandas UDF / applyInPandas boundary
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -17,6 +17,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import MAX_KEY_DF
+from .util import quote_ident
 
 
 def _dot_expr(a: str, b: str) -> str:
@@ -42,8 +43,7 @@ def _as_double_expr(vec: str) -> str:
     """Spark-SQL text of the array column ``vec`` cast element-wise to
     double.  ``vec`` is a column NAME, backtick-quoted here, so names that
     are not plain identifiers resolve as written."""
-    quoted = vec.replace("`", "``")
-    return f"transform(`{quoted}`, _x -> cast(_x as double))"
+    return f"transform({quote_ident(vec)}, _x -> cast(_x as double))"
 
 
 def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:

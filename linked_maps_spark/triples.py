@@ -29,55 +29,58 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 TRIPLE_SCHEMA = "s string, p string, o string, o_dt string"
 
 
-def _feature_uri(gid):
-    return F.concat(F.lit(LMG), gid)
+# The projections below are Spark-SQL text (one py4j round trip each).  The
+# vocabulary constants they embed hold no quote or backslash, so the text
+# parses the same under any spark.sql.parser.escapedStringLiterals setting.
+_NULL_DT = "CAST(NULL AS STRING) AS o_dt"
+_XSD_DATETIME = "'http://www.w3.org/2001/XMLSchema#dateTime' AS o_dt"
 
 
-def _geometry_uri(gid, name):
+def _feature_uri(gid: str) -> str:
+    return f"concat('{LMG}', {gid})"
+
+
+def _geometry_uri(gid: str, name: str) -> str:
     # IRI pattern lmg:<gid>_sc_<name.lower()> — generate_graph.py:41
-    return F.concat(F.lit(LMG), gid, F.lit("_sc_"), F.lower(name))
+    return f"concat('{LMG}', {gid}, '_sc_', lower({name}))"
 
 
-def year_to_datetime(col):
-    """'1962' → '1962-01-01T00:00:00' (generate_graph.py:52-54)."""
-    return F.concat(col, F.lit("-01-01T00:00:00"))
+def year_to_datetime(year: str) -> str:
+    """'1962' → '1962-01-01T00:00:00' (generate_graph.py:52-54), as SQL
+    text over the expression ``year``."""
+    return f"concat({year}, '-01-01T00:00:00')"
 
 
 def segment_triples(segments: DataFrame) -> DataFrame:
     """Per-segment triples (generate_graph.py:33-62)."""
-    feat = _feature_uri(F.col("gid"))
-    geom = _geometry_uri(F.col("gid"), F.col("name"))
+    feat = _feature_uri("gid")
+    geom = _geometry_uri("gid", "name")
     base = segments.select("gid", "name", "wkt", "editions", "commit_created")
 
-    t_feature = base.select(
-        feat.alias("s"), F.lit(RDF_TYPE).alias("p"),
-        F.lit(GEO + "Feature").alias("o"), F.lit(None).cast("string").alias("o_dt"),
+    t_feature = base.selectExpr(
+        f"{feat} AS s", f"'{RDF_TYPE}' AS p", f"'{GEO}Feature' AS o", _NULL_DT,
     )
-    t_geometry = base.select(
-        geom.alias("s"), F.lit(RDF_TYPE).alias("p"),
-        F.lit(GEO + "Geometry").alias("o"), F.lit(None).cast("string").alias("o_dt"),
+    t_geometry = base.selectExpr(
+        f"{geom} AS s", f"'{RDF_TYPE}' AS p", f"'{GEO}Geometry' AS o", _NULL_DT,
     )
-    t_has_geom = base.select(
-        feat.alias("s"), F.lit(GEO + "hasGeometry").alias("p"),
-        geom.alias("o"), F.lit(None).cast("string").alias("o_dt"),
+    t_has_geom = base.selectExpr(
+        f"{feat} AS s", f"'{GEO}hasGeometry' AS p", f"{geom} AS o", _NULL_DT,
     )
     # deterministic created timestamp from the creating commit's year
-    t_created = base.select(
-        feat.alias("s"), F.lit(DCTERMS + "created").alias("p"),
-        year_to_datetime(F.substring("commit_created", 1, 4)).alias("o"),
-        F.lit("http://www.w3.org/2001/XMLSchema#dateTime").alias("o_dt"),
+    t_created = base.selectExpr(
+        f"{feat} AS s", f"'{DCTERMS}created' AS p",
+        f"{year_to_datetime('substring(commit_created, 1, 4)')} AS o",
+        _XSD_DATETIME,
     )
     # one dcterms:date per (transitively inherited) edition year —
     # explode covers generate_graph.py:52-54 AND the creation-ordered
     # propagation of generate_graph.py:73-75 (see fold.py docstring)
-    t_dates = base.select(feat.alias("s"), F.explode("editions").alias("year")).select(
-        "s", F.lit(DCTERMS + "date").alias("p"),
-        year_to_datetime(F.col("year")).alias("o"),
-        F.lit("http://www.w3.org/2001/XMLSchema#dateTime").alias("o_dt"),
+    t_dates = base.selectExpr(f"{feat} AS s", "explode(editions) AS year").selectExpr(
+        "s", f"'{DCTERMS}date' AS p", f"{year_to_datetime('year')} AS o",
+        _XSD_DATETIME,
     )
-    t_wkt = base.select(
-        geom.alias("s"), F.lit(GEO + "asWKT").alias("p"),
-        F.col("wkt").alias("o"), F.lit(GEO + "wktLiteral").alias("o_dt"),
+    t_wkt = base.selectExpr(
+        f"{geom} AS s", f"'{GEO}asWKT' AS p", "wkt AS o", f"'{GEO}wktLiteral' AS o_dt",
     )
     return t_feature.unionByName(t_geometry).unionByName(t_has_geom).unionByName(
         t_created
@@ -86,28 +89,23 @@ def segment_triples(segments: DataFrame) -> DataFrame:
 
 def relation_triples(relations: DataFrame) -> DataFrame:
     """sfContains + symmetric sfWithin (generate_graph.py:70-71)."""
-    contains = relations.select(
-        _feature_uri(F.col("parent_gid")).alias("s"),
-        F.lit(GEO + "sfContains").alias("p"),
-        _feature_uri(F.col("child_gid")).alias("o"),
-        F.lit(None).cast("string").alias("o_dt"),
+    contains = relations.selectExpr(
+        f"{_feature_uri('parent_gid')} AS s", f"'{GEO}sfContains' AS p",
+        f"{_feature_uri('child_gid')} AS o", _NULL_DT,
     )
-    within = relations.select(
-        _feature_uri(F.col("child_gid")).alias("s"),
-        F.lit(GEO + "sfWithin").alias("p"),
-        _feature_uri(F.col("parent_gid")).alias("o"),
-        F.lit(None).cast("string").alias("o_dt"),
+    within = relations.selectExpr(
+        f"{_feature_uri('child_gid')} AS s", f"'{GEO}sfWithin' AS p",
+        f"{_feature_uri('parent_gid')} AS o", _NULL_DT,
     )
     return contains.unionByName(within)
 
 
 def osm_triples(osm_links: DataFrame) -> DataFrame:
     """sfOverlaps per linked OSM URI (generate_graph.py:77-82)."""
-    return osm_links.select(
-        _feature_uri(F.col("gid")).alias("s"),
-        F.lit(GEO + "sfOverlaps").alias("p"),
-        F.explode("osm_uris").alias("o"),
-    ).withColumn("o_dt", F.lit(None).cast("string"))
+    return osm_links.selectExpr(
+        f"{_feature_uri('gid')} AS s", f"'{GEO}sfOverlaps' AS p",
+        "explode(osm_uris) AS o",
+    ).selectExpr("s", "p", "o", _NULL_DT)
 
 
 def build_triples(

@@ -116,12 +116,13 @@ def balanced_probes(n_parts: int) -> list[int]:
     return got
 
 
-def balanced_part_col(value_col, modulus: int, n_parts: int):
-    """Column: probes[value_col % n_parts] (O(1) literal-array lookup per
-    row; the array holds ``n_parts`` longs regardless of ``modulus``, so
-    plan size never grows with bucket count).
+def balanced_part_col(value: str, modulus: int, n_parts: int):
+    """Column: probes[value % n_parts] (O(1) literal-array lookup per row;
+    the array holds ``n_parts`` longs regardless of ``modulus``, so plan
+    size never grows with bucket count).
 
-    ``value_col`` must be integral; repartitioning on the returned column
+    ``value`` is the Spark-SQL text of an integral expression, parsed
+    JVM-side in one py4j round trip; repartitioning on the returned column
     with ``n_parts`` partitions places value ``v`` on partition
     ``v % n_parts`` exactly.  ``modulus`` (the value domain size) is kept
     in the signature for call-site documentation only — the probe table
@@ -129,10 +130,10 @@ def balanced_part_col(value_col, modulus: int, n_parts: int):
     """
     from pyspark.sql import functions as F  # local: util stays import-light
 
-    probes = balanced_probes(n_parts)
-    arr = F.array(*[F.lit(p).cast("long") for p in probes])
-    return F.element_at(
-        arr, F.pmod(value_col.cast("long"), F.lit(n_parts)).cast("int") + F.lit(1)
+    probes = ", ".join(f"CAST({p} AS BIGINT)" for p in balanced_probes(n_parts))
+    return F.expr(
+        f"element_at(array({probes}), "
+        f"CAST(pmod(CAST({value} AS BIGINT), {n_parts}) AS INT) + 1)"
     )
 
 
@@ -158,6 +159,13 @@ def zvalue_col(c1, c2, bits: int = 16):
         return x
 
     return spread_bits(c1).bitwiseOR(F.shiftleft(spread_bits(c2), 1))
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as one Spark-SQL identifier: backtick-quoted, any backtick
+    inside doubled — the one quoting rule for column names spliced into
+    ``F.expr``/``selectExpr`` text."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def make_query_registry():

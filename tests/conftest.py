@@ -19,3 +19,24 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     sp = get_spark("linked-maps-tests", cores=4, shuffle_partitions=4)
     yield sp
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Callable returning the py4j commands the driver has sent since the
+    fixture started.  Releases of garbage-collected JVM proxies are not
+    counted: when they are sent depends on Python's collector."""
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    cls = type(spark.sparkContext._gateway._gateway_client)
+    orig = cls.send_command
+    sent = []  # list.append is atomic: ingest sends from its write threads too
+
+    def send_command(client, command, *a, **kw):
+        if not command.startswith(release):
+            sent.append(1)
+        return orig(client, command, *a, **kw)
+
+    monkeypatch.setattr(cls, "send_command", send_command)
+    return lambda: len(sent)

@@ -19,6 +19,25 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k string, v long")
 
 
+def test_analysis_errors_name_the_missing_column(spark):
+    """The session runs without PySpark's DataFrame-origin capture; that
+    may drop the Python call site from analysis errors, never the error:
+    a missing column still fails analysis, by name, through SQL text
+    quoted with ``quote_ident`` and through a Column ``select``."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    from linked_maps_spark.util import quote_ident
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.range(2).selectExpr("id AS `a.b`", "id AS `c``d`")
+    assert df.selectExpr(quote_ident("a.b"), quote_ident("c`d")).count() == 2
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        df.selectExpr(quote_ident("no_such_col")).schema
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        df.select(F.col("no_such_col")).schema
+
+
 def test_create_and_read_empty(tbl):
     assert tbl.version() == 0
     assert tbl.read().count() == 0

@@ -111,6 +111,31 @@ def test_cdc_read_spark_jobs_pinned(spark, eng):
     assert max(jobs.values()) <= READ_JOBS, jobs
 
 
+#: py4j commands of one read round on this module's warehouse: the tables
+#: read fresh, then build + ``count()`` of q1–q4, ``classify_changes`` and
+#: ``build_triples``.  Driver plan construction may only get cheaper: lower
+#: this bound when a change removes round trips, never raise it.
+READ_ROUND_PY4J = 455
+
+
+def test_cdc_read_py4j_pinned(eng, py4j_calls):
+    y1, y2 = commit_label(0)[:4], commit_label(N_COMMITS - 1)[:4]
+    before = py4j_calls()
+    s, r = eng.current_segments(), eng.relations.read()
+    for df in (
+        q1_edition(s, r, y1),
+        q2_edition_unique(s, r, y2),
+        q3_persisted(s, r, y1, y2),
+        q4_retired(s, r, y1, y2),
+        classify_changes(s, r, y1, y2),
+        build_triples(s, r),
+    ):
+        df.count()
+    calls = py4j_calls() - before
+    print("read round py4j calls:", calls)
+    assert calls <= READ_ROUND_PY4J, calls
+
+
 def test_editions_fixpoint_matches_fold_propagation(tables):
     """J3 iterative join == fold's creation-time propagation."""
     seg, rel = tables
