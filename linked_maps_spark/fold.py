@@ -34,6 +34,10 @@ and embarrassingly parallel *across* keys — all scale-out comes from the key
 dimension (SURVEY.md §7.0).  Tombstone events (``content == ''``,
 FIXTURES.md §1) retire the key: current leaves are flagged ``retired`` and
 the lattice restarts empty on the next add.
+
+Every rule above lives once, in ``_Lattice``: ``fold_key`` runs its edition
+round over the resume leaves, and the salted fold (``saltfold``) runs the
+same leaf split per slice and the same round in its per-key coordinator.
 """
 
 from __future__ import annotations
@@ -116,15 +120,22 @@ class _Node:
     # re-serializing — to_wkt was 33% of fold CPU
     wkt: str | None = None
     sha: str | None = None
+    # creation record: "e"/"i"/"m"/"mu" for a node this fold created ("" for
+    # a resume-state leaf) and, for i/m, the parent leaf's name — what the
+    # salted fold's renumber replays the sequential seq order from
+    kind: str = ""
+    parent: str | None = None
 
 
 class FoldResult:
     """Fold output.  ``segments`` row dicts are built LAZILY from the node
     objects: the Spark hot path (``ingest._make_fold_fn``) reads the nodes
     column-wise and never pays the dict-per-row cost (``node_to_row`` +
-    re-dict in ``_format_rows`` profiled at ~30% of the fold stage), while
-    every dict consumer (tests, oracle, salted coordinator) sees the exact
-    rows it always did on first touch of ``.segments``."""
+    a row-dict path profiled at ~30% of the fold stage), while every dict
+    consumer (tests, oracle) sees the exact rows on first touch of
+    ``.segments``.  The plain fold and the salted fold (``saltfold``, whose
+    coordinator renumbers the slices' nodes) both return one, built by the
+    same ``_Lattice``."""
 
     __slots__ = (
         "_segments", "relations", "n_events", "n_nodes_created", "dead",
@@ -133,30 +144,28 @@ class FoldResult:
 
     def __init__(
         self,
-        segments: "list[dict] | None" = None,
-        relations: "list[dict] | None" = None,
-        n_events: int = 0,
-        n_nodes_created: int = 0,
-        dead: "list[dict] | None" = None,
-        nodes: "list[_Node] | None" = None,
-        repo: str = "",
-        path: str = "",
-        geom_type: str = G.LINE,
+        *,
+        nodes: "list[_Node]",
+        relations: list[dict],
+        repo: str,
+        path: str,
+        geom_type: str,
+        n_events: int,
+        n_nodes_created: int,
+        dead: list[dict],
         n_leaves: int = 0,
     ) -> None:
-        if segments is None and nodes is None:
-            segments = []
-        self._segments = segments
-        self.relations = relations if relations is not None else []
+        self._segments: "list[dict] | None" = None
+        self.nodes = nodes
+        self.relations = relations
+        self.repo = repo
+        self.path = path
+        self.geom_type = geom_type
         self.n_events = n_events
         self.n_nodes_created = n_nodes_created
         # quarantined poison events (on_error="quarantine"): one dict per
         # skipped event with repo/path/commit/error/content
-        self.dead = dead if dead is not None else []
-        self.nodes = nodes
-        self.repo = repo
-        self.path = path
-        self.geom_type = geom_type
+        self.dead = dead
         #: final ``is_leaf & ~retired`` count after the fold — the engine's
         #: Zipf-head (salting) advisory reads this instead of re-scanning
         #: table state per epoch (ingest emits a kind='hot' marker row when
@@ -175,8 +184,6 @@ class FoldResult:
     @property
     def n_segments(self) -> int:
         """Row count without materializing the dicts."""
-        if self._segments is not None:
-            return len(self._segments)
         return len(self.nodes)
 
 
@@ -218,17 +225,9 @@ def serialize_nodes(nodes: "list[_Node]", geom_type: str = G.LINE) -> None:
         n.sha = G.sha256_hex(w)
 
 
-def rows_from_nodes(
-    repo: str, path: str, nodes: "list[_Node]", geom_type: str = G.LINE
-) -> list[dict]:
-    """Emit row dicts for many nodes (serializing first)."""
-    serialize_nodes(nodes, geom_type)
-    return [node_to_row(repo, path, n, geom_type) for n in nodes]
-
-
 def node_to_row(repo: str, path: str, node: "_Node", geom_type: str = G.LINE) -> dict:
-    """Serialize a node to a ``segments`` table row (shared by the
-    sequential fold and the salted sub-folds so emission stays identical).
+    """Serialize a node to a ``segments`` table row (the dict form of
+    :class:`FoldResult`; the Spark fold reads the nodes column-wise).
     State leaves whose geometry is untouched reuse their stored canonical
     wkt/sha (bit-identical: to_wkt is a canonical form)."""
     wkt = node.wkt if node.wkt is not None else G.to_wkt(node.ids, geom_type)
@@ -277,6 +276,193 @@ def dedup_events(events: list[dict]) -> list[dict]:
     return sorted(by_commit.values(), key=lambda e: e["commit"])
 
 
+
+
+_EVENT_KEYS = ("repo", "path", "commit", "content")
+
+
+class _Lattice:
+    """One key's edition lattice — the one implementation of the fold's
+    rules, driven by the plain fold (:func:`fold_key`) and by the salted
+    leaf slices and coordinator (``saltfold``), which differ only in the
+    leaves they start from and the round they run per edition.
+
+    Holds the live ``leaves`` (creation order), ``next_seq``, the
+    ``created`` and ``touched`` nodes, the ``relations`` and the
+    quarantined ``dead`` events."""
+
+    __slots__ = (
+        "repo", "path", "geom_type", "on_error", "leaves", "first_seq",
+        "next_seq", "created", "touched", "relations", "dead", "gid",
+    )
+
+    def __init__(
+        self, repo: str, path: str, leaves_in: list[dict],
+        geom_type: str = G.LINE, on_error: str = "raise",
+    ) -> None:
+        if on_error not in ("raise", "quarantine"):
+            raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
+        self.repo, self.path = repo, path
+        self.geom_type, self.on_error = geom_type, on_error
+        self.leaves: list[_Node] = leaves_from_rows(leaves_in, geom_type)
+        self.first_seq = max((l.seq for l in self.leaves), default=-1) + 1
+        self.next_seq = self.first_seq
+        self.created: list[_Node] = []
+        self.touched: dict[str, _Node] = {}
+        self.relations: list[dict] = []
+        self.dead: list[dict] = []
+        self.gid = gid_factory(repo, path)
+
+    def new(self, kind, name, ids, editions, commit, parent=None, extras=None) -> _Node:
+        node = _Node(
+            seq=self.next_seq,
+            gid=self.gid(name),
+            name=name,
+            ids=ids,
+            editions=editions,
+            commit_created=commit,
+            extras=extras or {},
+            kind=kind,
+            parent=parent,
+        )
+        self.next_seq += 1
+        self.created.append(node)
+        self.touched[node.gid] = node
+        return node
+
+    def link(self, parent: _Node, child: _Node) -> None:
+        self.relations.append(
+            {"repo": self.repo, "path": self.path,
+             "parent_gid": parent.gid, "child_gid": child.gid}
+        )
+        if parent.is_leaf:
+            parent.is_leaf = False
+            parent.dirty = True
+            self.touched[parent.gid] = parent
+
+    def editions(self, events: list[dict]):
+        """Yield ``(commit, ids, extras)`` per edition round, in commit
+        order, after the within-batch commit dedup.  A tombstone retires
+        every live leaf (the lattice restarts empty on the next add); a
+        poison event raises or, under ``on_error="quarantine"``, lands in
+        ``dead`` exactly as if it never appeared.  After each round the
+        next leaf set is rebuilt."""
+        geom_type = self.geom_type
+        for ev in dedup_events(events):
+            n_before = len(self.created)
+            commit = ev["commit"]
+            content = ev.get("content") or ""
+            if content.strip() == "":
+                # tombstone: retire the key; lattice restarts empty (FIXTURES.md §1)
+                for leaf in self.leaves:
+                    leaf.retired = True
+                    leaf.dirty = True
+                    self.touched[leaf.gid] = leaf
+                self.leaves = []
+                continue
+            try:
+                ids = G.parse_wkt(content, geom_type)
+            except G.GeometryError as exc:
+                if self.on_error != "quarantine":
+                    raise
+                self.dead.append({
+                    "repo": self.repo, "path": self.path, "commit": commit,
+                    "error": str(exc), "content": content[:256],
+                })
+                continue
+            yield commit, ids, {k: v for k, v in ev.items() if k not in _EVENT_KEYS}
+            # next round's leaves, in creation (seq) order — main.py:123-131.
+            # Incremental form of the "pool every node ever created, filter,
+            # sort" rebuild (O(nodes) per event): is_leaf/retired transitions
+            # are one-way (True→False / False→True), so a node created in an
+            # earlier round re-enters only via ``leaves`` itself; both parts
+            # are already seq-ordered and every new seq exceeds every old
+            # one, so the concatenation needs no sort.
+            self.leaves = [n for n in self.leaves if n.is_leaf and not n.retired] + [
+                n for n in self.created[n_before:] if n.is_leaf and not n.retired
+            ]
+
+    def split(self, commit: str, e_ids: np.ndarray, e_gid: str, e_editions: tuple):
+        """Split every live leaf L by edition ``commit`` (main.py:94-109):
+        ``I = L ∩ E`` (child of L and of the edition, by ``e_gid``) and
+        ``M = L \\ I`` (child of L).  Returns the sorted union of the
+        round's I ids, or ``None`` when no leaf intersects."""
+        leaves = self.leaves
+        if not leaves or not e_ids.size:
+            return None
+        # Live leaves are pairwise DISJOINT (each round replaces an
+        # intersected leaf with its {i, m} partition; mu ⊆ e avoids the
+        # untouched leaves by construction), so the per-leaf
+        # intersect/difference probes collapse into ONE vectorized
+        # membership test of the concatenated leaf mass against e_ids:
+        # i_k = leaf_k[mask_k] and m_k = leaf_k[~mask_k] are exactly
+        # G.intersect/G.difference's answers (same per-leaf sorted order),
+        # and ∪i = sort(cat[mask]) because the leaves are disjoint.
+        lens = [leaf.ids.size for leaf in leaves]
+        cat = np.concatenate([leaf.ids for leaf in leaves])
+        pos = np.searchsorted(e_ids, cat)
+        pos[pos == e_ids.size] = 0
+        mask = e_ids[pos] == cat
+        if not mask.any():
+            return None
+        # plain slices, not np.split (array_split's per-chunk machinery was
+        # itself a profile line at deep-lattice scale); offsets via
+        # itertools.accumulate — np.cumsum on a tiny python list pays more
+        # in array conversion than the sum itself.  Hot methods are bound
+        # to locals: attribute lookups inside this loop cost measurable CPU.
+        offs = list(accumulate(lens, initial=0))
+        new, link, relations = self.new, self.link, self.relations
+        repo, path = self.repo, self.path
+        for k, leaf in enumerate(leaves):
+            mk = mask[offs[k]:offs[k + 1]]
+            i_ids = leaf.ids[mk]
+            if G.is_multi(i_ids):  # G4 guard
+                i_node = new(
+                    "i", "i_" + md5_hex(f"i_{leaf.name}_{commit}"), i_ids,
+                    tuple(dict.fromkeys(leaf.editions + e_editions)), commit, leaf.name,
+                )
+                link(leaf, i_node)
+                relations.append(
+                    {"repo": repo, "path": path, "parent_gid": e_gid, "child_gid": i_node.gid}
+                )
+                m_ids = leaf.ids[~mk]
+                if G.is_multi(m_ids):
+                    m_name = "m_" + md5_hex(f"m_{leaf.name}_{i_node.name}")
+                    link(leaf, new("m", m_name, m_ids, leaf.editions, commit, leaf.name))
+        return np.sort(cat[mask])
+
+    def edition_round(self, commit: str, e_ids: np.ndarray, extras: dict, ext=None) -> None:
+        """One edition round (main.py:91-118): edition node E, the leaf
+        :meth:`split`, then ``mu = E \\ ∪I`` when any I exists.  ``ext`` is
+        the union of other slices' I ids for this round (salted
+        coordinator); it joins the ``mu`` subtrahend."""
+        e_node = self.new("e", commit, e_ids, tuple(edition_years(commit)), commit, extras=extras)
+        sub = self.split(commit, e_ids, e_node.gid, e_node.editions)
+        if ext is not None:
+            sub = ext if sub is None else G.union_all([sub, ext])
+        if sub is not None:
+            e_node.is_leaf = False  # parent of the round's I nodes
+            r_ids = G.difference(e_ids, sub)
+            if G.is_multi(r_ids):
+                mu_name = "mu_" + md5_hex(f"mu_{commit}_UL")
+                self.link(e_node, self.new("mu", mu_name, r_ids, e_node.editions, commit))
+
+    def result(self, n_events: int) -> FoldResult:
+        nodes = sorted(self.touched.values(), key=lambda n: n.seq)
+        serialize_nodes(nodes, self.geom_type)
+        return FoldResult(
+            nodes=nodes,
+            repo=self.repo,
+            path=self.path,
+            geom_type=self.geom_type,
+            relations=self.relations,
+            n_events=n_events,
+            n_nodes_created=len(self.created),
+            dead=self.dead,
+            n_leaves=len(self.leaves),
+        )
+
+
 def fold_key(
     repo: str,
     path: str,
@@ -303,143 +489,7 @@ def fold_key(
     one under last-writer-wins quarantines the commit (deterministic both
     ways).
     """
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
-    dead: list[dict] = []
-    leaves: list[_Node] = leaves_from_rows(leaves_in, geom_type)
-    next_seq = max((l.seq for l in leaves), default=-1) + 1
-    created: list[_Node] = []
-    touched: dict[str, _Node] = {}
-    relations: list[dict] = []
-    n_created = 0
-
-    _gid = gid_factory(repo, path)
-
-    def _new(name: str, ids: np.ndarray, editions: tuple[str, ...], commit: str, extras=None) -> _Node:
-        nonlocal next_seq, n_created
-        node = _Node(
-            seq=next_seq,
-            gid=_gid(name),
-            name=name,
-            ids=ids,
-            editions=editions,
-            commit_created=commit,
-            extras=extras or {},
-        )
-        next_seq += 1
-        n_created += 1
-        created.append(node)
-        touched[node.gid] = node
-        return node
-
-    def _link(parent: _Node, child: _Node) -> None:
-        relations.append(
-            {"repo": repo, "path": path, "parent_gid": parent.gid, "child_gid": child.gid}
-        )
-        if parent.is_leaf:
-            parent.is_leaf = False
-            parent.dirty = True
-            touched[parent.gid] = parent
-
-    for ev in dedup_events(events):
-        n_created_before = len(created)
-        commit = ev["commit"]
-        content = ev.get("content") or ""
-        extras = {
-            k: v
-            for k, v in ev.items()
-            if k not in ("repo", "path", "commit", "content")
-        }
-        if content.strip() == "":
-            # tombstone: retire the key; lattice restarts empty (FIXTURES.md §1)
-            for leaf in leaves:
-                leaf.retired = True
-                leaf.dirty = True
-                touched[leaf.gid] = leaf
-            leaves = []
-            continue
-
-        try:
-            e_ids = G.parse_wkt(content, geom_type)
-        except G.GeometryError as exc:
-            if on_error != "quarantine":
-                raise
-            dead.append({
-                "repo": repo, "path": path, "commit": commit,
-                "error": str(exc), "content": content[:256],
-            })
-            continue
-        e_node = _new(commit, e_ids, tuple(edition_years(commit)), commit, extras)
-
-        # Live leaves are pairwise DISJOINT (each round replaces an
-        # intersected leaf with its {i, m} partition; mu ⊆ e avoids the
-        # untouched leaves by construction), so the per-leaf
-        # intersect/difference probes collapse into ONE vectorized
-        # membership test of the concatenated leaf mass against e_ids:
-        # i_k = leaf_k[mask_k] and m_k = leaf_k[~mask_k] are exactly
-        # G.intersect/G.difference's answers (same per-leaf sorted order),
-        # and ∪i = sort(cat[mask]) because the leaves are disjoint.
-        round_hit = False
-        if leaves and e_ids.size:
-            lens = [leaf.ids.size for leaf in leaves]
-            cat = np.concatenate([leaf.ids for leaf in leaves])
-            pos = np.searchsorted(e_ids, cat)
-            pos[pos == e_ids.size] = 0
-            mask = e_ids[pos] == cat
-            # plain slices, not np.split (array_split's per-chunk machinery
-            # was itself a profile line at deep-lattice scale); offsets via
-            # itertools.accumulate — np.cumsum on a tiny python list pays
-            # more in array conversion than the sum itself
-            offs = list(accumulate(lens, initial=0))
-            leaf_masks = [mask[offs[i]:offs[i + 1]] for i in range(len(lens))]
-        else:
-            mask = None
-            leaf_masks = [None] * len(leaves)
-        for leaf, mk in zip(leaves, leaf_masks):
-            i_ids = leaf.ids[mk] if mk is not None else np.empty(0, np.int64)
-            if G.is_multi(i_ids):  # G4 guard
-                i_name = "i_" + md5_hex(f"i_{leaf.name}_{e_node.name}")
-                i_node = _new(
-                    i_name, i_ids, tuple(dict.fromkeys(leaf.editions + e_node.editions)), commit
-                )
-                _link(leaf, i_node)
-                _link(e_node, i_node)
-                round_hit = True
-                m_ids = leaf.ids[~mk]
-                if G.is_multi(m_ids):
-                    m_name = "m_" + md5_hex(f"m_{leaf.name}_{i_node.name}")
-                    m_node = _new(m_name, m_ids, leaf.editions, commit)
-                    _link(leaf, m_node)
-
-        if round_hit:
-            r_ids = G.difference(e_ids, np.sort(cat[mask]))
-            if G.is_multi(r_ids):
-                mu_name = "mu_" + md5_hex(f"mu_{e_node.name}_UL")
-                mu_node = _new(mu_name, r_ids, e_node.editions, commit)
-                _link(e_node, mu_node)
-
-        # next round's leaves, in creation (seq) order — main.py:123-131.
-        # Incremental form of the old "pool every node ever created, filter,
-        # sort" rebuild (O(nodes) per event): is_leaf/retired transitions are
-        # one-way (True→False / False→True), so a node created in an earlier
-        # round re-enters only via ``leaves`` itself; both parts are already
-        # seq-ordered and every new seq exceeds every old one, so the
-        # concatenation needs no sort.  Bit-identical (pinned-digest suites).
-        leaves = [n for n in leaves if n.is_leaf and not n.retired] + [
-            n for n in created[n_created_before:] if n.is_leaf and not n.retired
-        ]
-
-    out_nodes = sorted(touched.values(), key=lambda n: n.seq)
-    serialize_nodes(out_nodes, geom_type)
-
-    return FoldResult(
-        nodes=out_nodes,
-        repo=repo,
-        path=path,
-        geom_type=geom_type,
-        relations=relations,
-        n_events=len(events),
-        n_nodes_created=n_created,
-        dead=dead,
-        n_leaves=len(leaves),
-    )
+    lattice = _Lattice(repo, path, leaves_in, geom_type, on_error)
+    for commit, e_ids, extras in lattice.editions(events):
+        lattice.edition_round(commit, e_ids, extras)
+    return lattice.result(len(events))

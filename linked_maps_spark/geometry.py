@@ -346,14 +346,6 @@ def preparse_wkts(wkts, geom_type: str = LINE) -> None:
         _PREPARSED[(geom_type, strs[int(sid_k[lo])])] = arr
 
 
-def preparsed_put(wkt: str, geom_type: str, ids: np.ndarray) -> None:
-    """Re-insert a consume-once entry: a validation pass that parses ahead
-    of the fold (``ingest._split_poison``) puts its result back so the
-    fold's own parse of the same string stays a lookup."""
-    ids.setflags(write=False)
-    _PREPARSED[(geom_type, wkt or "")] = ids
-
-
 def _parse_wkt_impl(wkt: str, geom_type: str = LINE) -> np.ndarray:
     wkt = (wkt or "").strip()
     if not wkt or wkt.upper().endswith("EMPTY"):

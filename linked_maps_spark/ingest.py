@@ -50,7 +50,7 @@ from pyspark.sql.types import DataType
 
 from . import geometry as G
 from .fold import RELATION_COLUMNS, SEGMENT_BASE_COLUMNS, fold_key
-from .lakehouse import LakeTable
+from .lakehouse import LakeTable, bucket_files
 from .util import balanced_part_col, quote_ident
 
 EVENT_CORE_COLS = ("repo", "path", "commit", "content")
@@ -241,30 +241,18 @@ def _fold_output_schema(extras: list[tuple[str, str]]) -> str:
     )
 
 
-def _normalize_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """NaN→None once for a whole Arrow partition frame (arrays in
-    ``editions`` can't go through a frame-wide ``where()``)."""
-    for c in pdf.columns:
-        if c != "editions":
-            s = pdf[c]
-            if s.dtype == object or s.isna().any():
-                s = s.astype(object)
-                pdf[c] = s.where(s.notna(), None)
-    return pdf
-
-
 def _rows_by_key(pdf: "pd.DataFrame", extra_cols: list[str]):
     """Yield ``(repo, path, event_rows, state_rows)`` per key from a unified
     partition frame — the list-based replacement for pandas
     ``groupby``/boolean-slice/``to_dict("records")``, which profiled at ~25%
     of the whole fold stage's CPU (11.6 s vs 0.14 s on the 4k-key bench
     frame, identical output).  Column values are pulled to python lists
-    ONCE (NaN/NA → None, matching :func:`_normalize_pdf`'s contract), keys
-    are bucketed by first appearance (same iteration order as
-    ``groupby(sort=False)``), and row dicts are built straight from the
-    lists.  Group order never affects results — events re-order by commit
-    inside the fold and state rows by seq — but keeping it identical makes
-    old/new outputs byte-comparable."""
+    ONCE (NaN/NA → None), keys are bucketed by first appearance (same
+    iteration order as ``groupby(sort=False)``), and row dicts are built
+    straight from the lists.  Group order never affects results — events
+    re-order by commit inside the fold and state rows by seq — but keeping
+    it identical makes old/new outputs byte-comparable.  The plain fold,
+    the salted slices and the salted coordinator all read rows here."""
     ev_cols = ("repo", "path", "commit", "content", *extra_cols)
     st_cols = ("repo", "path", *_STATE_COLS, *extra_cols)
     na = pd.NA
@@ -318,6 +306,28 @@ _STATE_TYPES = [
 _STATE_COLS = [c for c, _ in _STATE_TYPES]
 
 
+def _preparse(pdf: "pd.DataFrame", geom_type: str) -> None:
+    """One vectorized batch parse primes the memo for every event content
+    and resume leaf of a fold task's frame; the per-key parses become
+    lookups (poison strings stay unprimed and surface their exact error in
+    the fold's own parse)."""
+    m = pdf["_is_event"].astype(bool).to_numpy()
+    G.preparse_wkts(
+        pdf["content"].to_numpy()[m].tolist() + pdf["wkt"].to_numpy()[~m].tolist(),
+        geom_type,
+    )
+
+
+def _timing_row(seg_cols, extra_cols, pid, wall_ms, n_keys, n_segs, n_rels) -> dict:
+    """kind='timing' row: one fold task's wall time and accounting, which
+    the metrics append reads instead of re-aggregating the change set."""
+    row = dict.fromkeys(seg_cols + extra_cols)
+    row.update(kind="timing", _pid=pid, parent_gid=None, child_gid=None,
+               _wall_ms=wall_ms, _n_keys=n_keys, _n_segments=n_segs,
+               _n_relations=n_rels)
+    return row
+
+
 def _make_fold_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str = "raise",
                   hot_threshold: int = 0):
     """Partition-stream fold (``mapInPandas``): the batch's events and the
@@ -346,16 +356,7 @@ def _make_fold_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str =
             return
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
         del chunks
-        # one vectorized batch parse primes the memo for every event content
-        # and cache-missed resume leaf in the partition; the per-key parses
-        # below become lookups (poison strings stay unprimed and surface
-        # their exact error in the per-event parse)
-        m = pdf["_is_event"].astype(bool).to_numpy()
-        G.preparse_wkts(
-            pdf["content"].to_numpy()[m].tolist()
-            + pdf["wkt"].to_numpy()[~m].tolist(),
-            geom_type,
-        )
+        _preparse(pdf, geom_type)
 
         cols: dict[str, list] = {c: [] for c in out_cols}
         n_keys = n_segs = n_rels = 0
@@ -371,25 +372,17 @@ def _make_fold_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str =
             )
             if hot_threshold and res.n_leaves >= hot_threshold:
                 hot_keys.append((repo, path))
-            _append_fold_cols(cols, res, pid, extra_cols)
-            # quarantined poison events ride the unified frame as kind='dead'
-            # (commit in commit_created, error in name, payload in wkt); the
-            # epoch assembly appends them to the dead_letter table
-            for d in res.dead:
-                _append_row(
-                    cols, _dead_changes_row(seg_cols, extra_cols, pid, repo, path, d)
-                )
+            _append_fold_cols(cols, res, pid, seg_cols, extra_cols)
             n_keys += 1
             n_segs += res.n_segments
             n_rels += len(res.relations)
         # per-task fold wall time + accounting (kind='timing'): the metrics
         # append reads these rows directly instead of re-aggregating the
         # whole change set
-        row = dict.fromkeys(seg_cols + extra_cols)
-        row.update(kind="timing", _pid=pid, parent_gid=None, child_gid=None,
-                   _wall_ms=(time.monotonic() - t0) * 1000.0,
-                   _n_keys=n_keys, _n_segments=n_segs, _n_relations=n_rels)
-        _append_row(cols, row)
+        _append_row(cols, _timing_row(
+            seg_cols, extra_cols, pid, (time.monotonic() - t0) * 1000.0,
+            n_keys, n_segs, n_rels,
+        ))
         # kind='hot' advisory markers: keys whose final lattice crossed the
         # salt threshold this epoch.  The engine carries them forward so the
         # next epoch's Zipf-head routing needs NO state scan; the rows never
@@ -437,15 +430,17 @@ def _append_row(cols: dict, row: dict) -> None:
         lst.append(row.get(c))
 
 
-def _append_fold_cols(cols: dict, res, pid: int, extra_cols: list[str]) -> None:
-    """Columnar twin of :func:`_format_rows` reading the fold's node objects
-    directly — no ``node_to_row`` dict, no per-row re-dict, and the final
-    ``pd.DataFrame`` builds from ready column lists instead of inferring
-    from 100k+ row dicts (the dict path profiled at ~50% of the whole fold
-    stage: 1.3 s format + 4.3 s DataFrame-from-dicts vs 5.1 s of actual
-    fold on the 800-key bench frame).  Emission order (segments then
-    relations per key, both in creation order) and every value are
-    byte-identical to the dict path — pinned-digest suites prove it."""
+def _append_fold_cols(cols: dict, res, pid: int, seg_cols: list[str],
+                      extra_cols: list[str]) -> None:
+    """Append one key's :class:`FoldResult` to the changes-frame column
+    lists, reading the fold's node objects directly — no ``node_to_row``
+    dict, and the final ``pd.DataFrame`` builds from ready column lists
+    instead of inferring from 100k+ row dicts (a dict path profiled at ~50%
+    of the whole fold stage: 1.3 s format + 4.3 s DataFrame-from-dicts vs
+    5.1 s of actual fold on the 800-key bench frame).  Emission order:
+    segments then relations, both in creation order, then the key's
+    quarantined events as kind='dead' rows.  The plain fold and the salted
+    coordinator both emit through here."""
     nodes = res.nodes
     rels = res.relations
     n, m = len(nodes), len(rels)
@@ -480,69 +475,19 @@ def _append_fold_cols(cols: dict, res, pid: int, extra_cols: list[str]) -> None:
     nones_t = [None] * total
     for c in ("_wall_ms", "_n_keys", "_n_segments", "_n_relations"):
         cols[c].extend(nones_t)
-
-
-def _format_rows(segments, relations, pid, seg_cols, extra_cols) -> list[dict]:
-    """Fold output → the unified changes-frame rows (kind segment/relation)."""
-    rows: list[dict] = []
-    for seg in segments:
-        row = {c: seg.get(c) for c in seg_cols + extra_cols}
-        row.update(kind="segment", _pid=pid, parent_gid=None, child_gid=None, _wall_ms=None)
-        rows.append(row)
-    for rel in relations:
-        row = dict.fromkeys(seg_cols + extra_cols)
-        row.update(
-            kind="relation",
-            _pid=pid,
-            repo=rel["repo"],
-            path=rel["path"],
-            parent_gid=rel["parent_gid"],
-            child_gid=rel["child_gid"],
-            _wall_ms=None,
-        )
-        rows.append(row)
-    return rows
-
-
-def _split_poison(events: list[dict], geom_type: str, on_error: str):
-    """Deterministic poison split for the salted path: DEDUP FIRST (so a
-    poison replica that out-ranks a clean one under last-writer-wins
-    quarantines the commit, exactly like fold_key's in-loop handling), then
-    validate each survivor's WKT.  Every slice computes the same split from
-    the same strings; only the coordinator emits the dead rows.  The
-    validation parse primes the worker's canonical-parse cache, so the
-    fold's real parse of each clean event is a lookup — near-zero net cost.
-    """
-    from .fold import dedup_events
-
-    if on_error != "quarantine":
-        return events, []
-    clean: list[dict] = []
-    dead: list[dict] = []
-    for ev in dedup_events(events):
-        content = ev.get("content") or ""
-        if content.strip() == "":
-            clean.append(ev)  # tombstone: always valid
-            continue
-        try:
-            ids = G.parse_wkt(content, geom_type)
-            # the parse may have CONSUMED a preparsed entry — put it back so
-            # the fold's own parse of this event stays a lookup
-            G.preparsed_put(content, geom_type, ids)
-            clean.append(ev)
-        except G.GeometryError as exc:
-            dead.append({
-                "repo": ev["repo"], "path": ev["path"], "commit": ev["commit"],
-                "error": str(exc), "content": content[:256],
-            })
-    return clean, dead
+    # quarantined poison events ride the unified frame as kind='dead'
+    # (commit in commit_created, error in name, payload in wkt); the epoch
+    # assembly appends them to the dead_letter table
+    for d in res.dead:
+        _append_row(cols, _dead_changes_row(seg_cols, extra_cols, pid, res.repo, res.path, d))
 
 
 def _make_slice_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str = "raise"):
     """Phase-1 salted sub-fold: one ``(repo, path, salt)`` group = one leaf
     slice folded over the (replicated) epoch events; output is a single
-    pickled payload row carrying the slice's segments/relations, its
-    per-round partial intersection unions, renumber metadata, and wall time."""
+    pickled payload row carrying the slice's ``SliceResult`` (nodes with
+    provisional seqs, relations, per-round partial intersection unions)
+    and its wall time."""
     import pickle
 
     extra_cols = [c for c, _ in extras]
@@ -551,37 +496,12 @@ def _make_slice_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str 
         from .saltfold import fold_slice
 
         t0 = time.monotonic()
-        repo, path, salt = str(key[0]), str(key[1]), int(key[2])
-        pdf = _normalize_pdf(pdf)
-        is_event = pdf["_is_event"].astype(bool)
-        ev = pdf[is_event]
-        st = pdf[~is_event]
-        # batch-prime the slice's event contents + leaf-slice geometries
-        G.preparse_wkts(ev["content"].tolist() + st["wkt"].tolist(), geom_type)
-        clean, _ = _split_poison(
-            ev[["repo", "path", "commit", "content", *extra_cols]].to_dict("records"),
-            geom_type, on_error,
-        )
-        res = fold_slice(
-            repo,
-            path,
-            clean,
-            st[["repo", "path", *_STATE_COLS, *extra_cols]].to_dict("records"),
-            geom_type=geom_type,
-        )
-        payload = pickle.dumps(
-            {
-                "salt": salt,
-                "segments": res.segments,
-                "relations": res.relations,
-                "partials": res.partials,
-                "metas": res.metas,
-                "initial_seqs": res.initial_seqs,
-                "wall_ms": (time.monotonic() - t0) * 1000.0,
-            }
-        )
+        _preparse(pdf, geom_type)
+        ((repo, path, ev_rows, st_rows),) = _rows_by_key(pdf, extra_cols)
+        res = fold_slice(repo, path, ev_rows, st_rows, geom_type, on_error)
+        payload = pickle.dumps((res, (time.monotonic() - t0) * 1000.0))
         return pd.DataFrame(
-            [{"repo": repo, "path": path, "_salt": salt, "payload": payload}]
+            [{"repo": repo, "path": path, "_salt": int(key[2]), "payload": payload}]
         )
 
     return fn
@@ -603,56 +523,32 @@ def _make_coord_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str 
     def fn(key, pdf):
         from pyspark import TaskContext
 
-        from .saltfold import SliceResult, combine, fold_coord, merge_partials
+        from .saltfold import combine, fold_coord, merge_partials
 
         t0 = time.monotonic()
         ctx = TaskContext.get()
         # offset keeps metrics (epoch, partition_id) keys from colliding with
         # the cold fold stage's task ids
         pid = 20000 + (ctx.partitionId() if ctx else 0)
-        repo, path = str(key[0]), str(key[1])
-        pdf = _normalize_pdf(pdf)
-        is_event = pdf["_is_event"].astype(bool)
-        ev = pdf[is_event]
-        payloads = [
-            pickle.loads(bytes(b)) for b in pdf[~is_event]["payload"] if b is not None
-        ]
-        ext = merge_partials([p["partials"] for p in payloads])
-        G.preparse_wkts(ev["content"].tolist(), geom_type)
-        clean, dead = _split_poison(
-            ev[["repo", "path", "commit", "content", *extra_cols]].to_dict("records"),
+        slices = [pickle.loads(bytes(b)) for b in pdf["payload"] if b is not None]
+        _preparse(pdf, geom_type)
+        ((repo, path, ev_rows, _),) = _rows_by_key(pdf, extra_cols)
+        coord = fold_coord(
+            repo, path, ev_rows, merge_partials([sr.partials for sr, _ in slices]),
             geom_type, on_error,
         )
-        coord = fold_coord(
-            repo,
-            path,
-            clean,
-            ext,
-            geom_type=geom_type,
-        )
-        slice_objs = [
-            SliceResult(
-                p["segments"], p["relations"], p["partials"], p["metas"], p["initial_seqs"]
-            )
-            for p in payloads
-        ]
-        segments, relations = combine(slice_objs, coord)
-        rows = _format_rows(segments, relations, pid, seg_cols, extra_cols)
-        # dead rows emitted ONCE per key, by the coordinator (slices drop
-        # the same events silently — deterministic from identical strings)
-        for d in dead:
-            rows.append(_dead_changes_row(seg_cols, extra_cols, pid, repo, path, d))
+        res = combine([sr for sr, _ in slices], coord)
+        cols: dict[str, list] = {c: [] for c in out_cols}
+        # dead rows come from the coordinator alone (slices drop the same
+        # events — deterministic from identical strings)
+        _append_fold_cols(cols, res, pid, seg_cols, extra_cols)
         # timing: the max slice wall (phase 1) and the coordinator wall —
         # what the skew accounting and straggler checks read
-        wall = max(
-            [p["wall_ms"] for p in payloads] + [(time.monotonic() - t0) * 1000.0]
-        )
-        trow = dict.fromkeys(seg_cols + extra_cols)
-        trow.update(kind="timing", _pid=pid, parent_gid=None, child_gid=None,
-                    _wall_ms=wall, _n_keys=1,
-                    _n_segments=len(segments), _n_relations=len(relations))
-        rows.append(trow)
-        return pd.DataFrame(rows, columns=out_cols)
+        wall = max([w for _, w in slices] + [(time.monotonic() - t0) * 1000.0])
+        _append_row(cols, _timing_row(
+            seg_cols, extra_cols, pid, wall, 1, res.n_segments, len(res.relations),
+        ))
+        return pd.DataFrame(cols)
 
     return fn
 
@@ -895,16 +791,9 @@ class CdcEngine:
         engine keeps ``os.path.abspath`` of its warehouse."""
         if self._hot_carry is None:
             return
-        hot_dir = os.path.join(scratch, "kind=hot")
-        if not os.path.isdir(hot_dir):
-            return
-        import glob
-
         import pyarrow.parquet as pq
 
-        for fp in sorted(glob.glob(
-            os.path.join(hot_dir, "**", "*.parquet"), recursive=True
-        )):
+        for fp, _ in bucket_files(os.path.join(scratch, "kind=hot")):
             t = pq.read_table(fp, columns=["repo", "path"])
             self._hot_carry.update(
                 zip(t.column("repo").to_pylist(), t.column("path").to_pylist())
@@ -1646,17 +1535,13 @@ class CdcEngine:
                 # are stamped here (per-epoch driver constants) so the
                 # combined write's projection carries no per-epoch literals
                 # — see the codegen note in _prepare_epoch.
-                import glob
-
                 import pyarrow.parquet as pq
 
                 names = {"_pid": "partition_id", "_n_keys": "n_keys",
                          "_n_segments": "n_segments",
                          "_n_relations": "n_relations", "_wall_ms": "wall_ms"}
                 raw = []
-                for p in sorted(glob.glob(
-                    os.path.join(tim_dir, "**", "*.parquet"), recursive=True
-                )):
+                for p, _ in bucket_files(tim_dir):
                     raw.extend(
                         pq.read_table(p, columns=list(names))
                         .rename_columns(list(names.values())).to_pylist()
@@ -1728,29 +1613,15 @@ class CdcEngine:
         prep["pool"].shutdown(wait=False)
         scratch = prep["scratch"]
 
-        def scan(*dirs) -> list[tuple[str, int]]:
-            out = []
-            for d in dirs:
-                if not os.path.isdir(d):
-                    continue
-                for bdir in sorted(os.listdir(d)):
-                    if not bdir.startswith("_bucket="):
-                        continue
-                    b = int(bdir.split("=", 1)[1])
-                    for p in sorted(os.listdir(os.path.join(d, bdir))):
-                        if p.endswith(".parquet"):
-                            out.append((os.path.join(d, bdir, p), b))
-            return out
-
         summary = {"epoch": prep["epoch"], "end_commit": prep["end_commit"]}
         commit_rel = self.relations.adopt_merge(
-            scan(os.path.join(scratch, "kind=relation"),
-                 os.path.join(scratch, "kept_relations")),
+            bucket_files(os.path.join(scratch, "kind=relation"),
+                         os.path.join(scratch, "kept_relations")),
             prep["rel_schema"], prep["buckets"], summary,
         )
         commit_seg = self.segments.adopt_merge(
-            scan(os.path.join(scratch, "kind=segment"),
-                 os.path.join(scratch, "kept_segments")),
+            bucket_files(os.path.join(scratch, "kind=segment"),
+                         os.path.join(scratch, "kept_segments")),
             prep["seg_schema"], prep["buckets"], summary,
         )
         commit_rel()
@@ -1792,12 +1663,10 @@ class CdcEngine:
         ``(repo, path, salt)`` groups, and a per-key coordinator group folds
         the edition/mu lineage, renumbers, and emits the combined changes."""
         n_salts = self.n_salts
-        ev = shaped.filter(F.col("_is_event"))
-        st = shaped.filter(~F.col("_is_event"))
-        ev_rep = ev.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(s) for s in range(n_salts)]))
-        )
-        st_s = st.withColumn("_salt", F.pmod(F.col("seq"), F.lit(n_salts)).cast("int"))
+        ev = shaped.filter("_is_event")
+        st = shaped.filter("NOT _is_event")
+        ev_rep = ev.selectExpr("*", f"explode(sequence(0, {n_salts - 1})) AS _salt")
+        st_s = st.selectExpr("*", f"CAST(pmod(seq, {n_salts}) AS INT) AS _salt")
         payloads = (
             ev_rep.unionByName(st_s)
             .groupBy("repo", "path", "_salt")
@@ -1806,18 +1675,18 @@ class CdcEngine:
                 "repo string, path string, _salt int, payload binary",
             )
         )
-        pay_side = payloads.select(
+        pay_side = payloads.selectExpr(
             "repo",
             "path",
             *[
-                F.lit(None).cast(f.dataType).alias(f.name)
+                f"CAST(NULL AS {f.dataType.simpleString()}) AS {quote_ident(f.name)}"
                 for f in ev.schema.fields
                 if f.name not in ("repo", "path", "_is_event")
             ],
-            F.lit(False).alias("_is_event"),
+            "false AS _is_event",
             "payload",
         )
-        ev_side = ev.withColumn("payload", F.lit(None).cast("binary"))
+        ev_side = ev.selectExpr("*", "CAST(NULL AS BINARY) AS payload")
         return (
             ev_side.unionByName(pay_side)
             .groupBy("repo", "path")

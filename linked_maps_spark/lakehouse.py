@@ -35,6 +35,7 @@ import os
 import shutil
 from typing import Any
 
+from py4j.java_gateway import java_import
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DataType, StructType
 
@@ -56,6 +57,24 @@ _SNAP_DIR = "_snapshots"
 # written (adopted) files as a maintenance step.
 
 _STATS_MAX_STR = 64  # longer string bounds are truncated (min) or dropped (max)
+
+
+def bucket_files(*dirs: str) -> list[tuple[str, int]]:
+    """``(path, bucket)`` of every parquet file a ``partitionBy("_bucket")``
+    write left under each of ``dirs`` (missing directories are skipped), in
+    directory-listing order: the one lister of dynamic-partition output."""
+    out = []
+    for d in dirs:
+        if not os.path.isdir(d):
+            continue
+        for bdir in sorted(os.listdir(d)):
+            if not bdir.startswith("_bucket="):
+                continue
+            b = int(bdir.split("=", 1)[1])
+            for name in sorted(os.listdir(os.path.join(d, bdir))):
+                if name.endswith(".parquet"):
+                    out.append((os.path.join(d, bdir, name), b))
+    return out
 
 
 def _footer_stats(full_path: str) -> tuple[int | None, dict]:
@@ -526,10 +545,25 @@ class LakeTable:
         if buckets is not None:
             keep = set(buckets)
             files = [f for f in files if f["bucket"] in keep]
+        return self._scan(files, schema)
+
+    def _scan(self, files: list[dict], schema: StructType) -> DataFrame:
+        """Parquet scan of manifest ``files`` with ``schema`` (the empty
+        relation when there are none).  The paths cross to the JVM as ONE
+        NUL-joined string (NUL is the one byte no path can hold) split there
+        into the reader's ``String[]``, so a read's py4j commands do not grow
+        with its file count (``parquet(*paths)`` converts a python list one
+        command per element)."""
         if not files:
             return self.empty(schema)
-        paths = [os.path.join(self.path, f["path"]) for f in files]
-        return self.spark.read.schema(schema).parquet(*paths)
+        reader = self.spark.read.schema(schema)
+        jvm = self.spark._jvm
+        # imported by simple name: a dotted lookup costs a command per part
+        java_import(jvm, "org.apache.commons.lang3.StringUtils")
+        jpaths = jvm.StringUtils.split(
+            "\0".join(os.path.join(self.path, f["path"]) for f in files), "\0"
+        )
+        return reader._df(reader._jreader.parquet(jpaths))
 
     def files_where(
         self, preds: list[tuple], version: int | None = None,
@@ -568,11 +602,7 @@ class LakeTable:
         snap = self.snapshot(version)
         schema = StructType.fromJson(snap["schema"])
         files = self.files_where(preds, version=version, buckets=buckets)
-        residual = _preds_column(preds)
-        if not files:
-            return self.empty(schema).filter(residual)
-        paths = [os.path.join(self.path, f["path"]) for f in files]
-        return self.spark.read.schema(schema).parquet(*paths).filter(residual)
+        return self._scan(files, schema).filter(_preds_column(preds))
 
     def empty(self, schema: StructType | None = None) -> DataFrame:
         """Empty relation of ``schema`` (default: the table's current one).
@@ -672,16 +702,10 @@ class LakeTable:
             # key-less (append-only log) tables: single small file, no shuffle
             bucketed = bucketed.coalesce(1)
         bucketed.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        files = []
-        for bdir in sorted(os.listdir(out_dir)):
-            if not bdir.startswith("_bucket="):
-                continue
-            b = int(bdir.split("=", 1)[1])
-            for part in sorted(os.listdir(os.path.join(out_dir, bdir))):
-                if part.endswith(".parquet"):
-                    files.append(
-                        {"path": os.path.join("data", f"v{version}", bdir, part), "bucket": b}
-                    )
+        files = [
+            {"path": os.path.relpath(p, self.path), "bucket": b}
+            for p, b in bucket_files(out_dir)
+        ]
         for f in files:  # footer metrics → manifest (Iceberg write metrics)
             rows, stats = _footer_stats(os.path.join(self.path, f["path"]))
             if rows is not None:
@@ -1113,13 +1137,8 @@ class LakeTable:
         new_snap = self.snapshot(to_version)
         old_paths = {f["path"] for f in self.snapshot(from_version)["files"]}
         schema = StructType.fromJson(new_snap["schema"])
-        fresh = [f for f in new_snap["files"] if f["path"] not in old_paths]
-        if not fresh:
-            return self.spark.range(0).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-            )
-        return self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f["path"]) for f in fresh]
+        return self._scan(
+            [f for f in new_snap["files"] if f["path"] not in old_paths], schema
         )
 
     def stream_read(self) -> DataFrame:

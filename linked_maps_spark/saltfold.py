@@ -9,53 +9,47 @@ independent without changing a single output bit:
 
 * Within a round, each leaf's ``I = L ∩ E`` / ``M = L \\ I`` pair depends on
   that leaf alone, and the children stay in the same lineage — so the leaf
-  set can be **sliced across salts** and each slice folds the *entire* commit
-  sequence over only its leaves (``fold_slice``).
-* The only cross-slice values per round are (a) the union of all I-geometries
-  (the ``mu`` subtrahend, ``main.py:111-118``) and (b) the "any intersection"
-  bit (edition leaf fate).  Both are unions — associative — so each slice
-  reports a per-round partial and a per-key **coordinator** (``fold_coord``)
-  folds the edition/mu lineage with those partials mixed in.
+  set can be **sliced across salts** and each slice runs the lattice's leaf
+  split over the *entire* commit sequence on only its leaves
+  (``fold_slice``).
+* The only cross-slice value per round is the union of all I-geometries
+  (the ``mu`` subtrahend, ``main.py:111-118``; a non-empty union is also
+  the "any intersection" bit that decides the edition leaf's fate).  Union
+  is associative, so each slice reports a per-round partial and a per-key
+  **coordinator** (``fold_coord``) runs the full edition round over the
+  edition/mu lineage with the merged partials in its subtrahend.
 * ``seq`` is the one output that depends on global creation order.  Names /
   gids / geometry / editions don't (gid = hash of name; names derive from
-  parent names + commit), so a final metadata-only ``renumber`` pass replays
-  the sequential assignment: per round — edition node, then per leaf in
+  parent names + commit), so a final ``renumber`` pass over the nodes'
+  creation records (``kind``, ``parent``, ``commit_created``) replays the
+  sequential assignment: per round — edition node, then per leaf in
   final-seq order its I then M, then mu.
 
-``fold_key_salted`` composes the three phases in-process and is
-property-tested for bit-equality against ``fold_key``; the Spark wiring in
-``ingest`` runs slices as ``(repo, path, salt)`` groups and coordinators as
-``(repo, path)`` groups.
+Slices and coordinator are thin callers of ``fold._Lattice`` — the same
+state, rules, quarantine and vectorized split as the plain fold, so the
+paths cannot drift.  ``fold_key_salted`` composes the three phases
+in-process and is property-tested for bit-equality against ``fold_key``;
+the Spark wiring in ``ingest`` runs slices as ``(repo, path, salt)`` groups
+and coordinators as ``(repo, path)`` groups.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
 from . import geometry as G
-from .fold import (
-    FoldResult,
-    _Node,
-    dedup_events,
-    edition_years,
-    gid_factory,
-    leaves_from_rows,
-    md5_hex,
-    rows_from_nodes,
-)
+from .fold import FoldResult, _Lattice, _Node, edition_years
 
 
 @dataclass
 class SliceResult:
     """Phase-1 output of one leaf slice."""
 
-    segments: list[dict]  # rows with PROVISIONAL seq (patched by renumber)
-    relations: list[dict]
-    partials: list[dict]  # per round: {commit, ids: list[int], any_i: bool}
-    metas: list[dict]  # per created node: {name, kind, commit, parent_name}
-    initial_seqs: dict[str, int]  # leaf name -> real seq of the input state
+    fold: FoldResult  # nodes carry PROVISIONAL seqs (patched by renumber)
+    partials: dict[str, np.ndarray]  # commit -> sorted union of the slice's I ids
+    first_seq: int  # 1 + the slice's highest resume-leaf seq
 
 
 def fold_slice(
@@ -64,276 +58,97 @@ def fold_slice(
     events: list[dict],
     leaves_in: list[dict],
     geom_type: str = G.LINE,
+    on_error: str = "raise",
 ) -> SliceResult:
-    """Fold the full commit sequence over ONE leaf slice.
-
-    Mirrors ``fold_key``'s leaf loop exactly, minus everything the
-    coordinator owns: no edition node is emitted (its gid is derivable for
-    relation wiring), no ``mu`` is computed — instead each round reports the
-    union of this slice's intersection geometries."""
-    leaves = leaves_from_rows(leaves_in, geom_type)
-    initial_seqs = {l.name: l.seq for l in leaves}
-    next_seq = max((l.seq for l in leaves), default=-1) + 1
-    created: list[_Node] = []
-    touched: dict[str, _Node] = {}
-    relations: list[dict] = []
-    partials: list[dict] = []
-    metas: list[dict] = []
-
-    _gid = gid_factory(repo, path)
-
-    def _new(name, ids, editions, commit, parent_name, kind) -> _Node:
-        nonlocal next_seq
-        node = _Node(
-            seq=next_seq, gid=_gid(name), name=name,
-            ids=ids, editions=editions, commit_created=commit,
+    """Fold the full commit sequence over ONE leaf slice: each round runs
+    only the lattice's leaf split, wired to the edition's derived gid (the
+    coordinator emits the edition node and ``mu``), and reports the union
+    of this slice's I ids.  Quarantined events are dropped here; the
+    coordinator, which sees the same events, reports them."""
+    lattice = _Lattice(repo, path, leaves_in, geom_type, on_error)
+    partials: dict[str, np.ndarray] = {}
+    for commit, e_ids, _ in lattice.editions(events):
+        own = lattice.split(
+            commit, e_ids, lattice.gid(commit), tuple(edition_years(commit))
         )
-        next_seq += 1
-        created.append(node)
-        touched[node.gid] = node
-        metas.append({"name": name, "kind": kind, "commit": commit, "parent_name": parent_name})
-        return node
-
-    def _link(parent: _Node, child: _Node) -> None:
-        relations.append(
-            {"repo": repo, "path": path, "parent_gid": parent.gid, "child_gid": child.gid}
-        )
-        if parent.is_leaf:
-            parent.is_leaf = False
-            parent.dirty = True
-            touched[parent.gid] = parent
-
-    for ev in dedup_events(events):
-        n_created_before = len(created)
-        commit = ev["commit"]
-        content = ev.get("content") or ""
-        if content.strip() == "":
-            for leaf in leaves:
-                leaf.retired = True
-                leaf.dirty = True
-                touched[leaf.gid] = leaf
-            leaves = []
-            continue
-
-        e_ids = G.parse_wkt(content, geom_type)
-        e_gid = _gid(commit)  # edition emitted by the coordinator
-        e_editions = tuple(edition_years(commit))
-
-        round_union: np.ndarray | None = None
-        for leaf in leaves:
-            i_ids = G.intersect(leaf.ids, e_ids)
-            if G.is_multi(i_ids):
-                i_name = "i_" + md5_hex(f"i_{leaf.name}_{commit}")
-                i_node = _new(
-                    i_name, i_ids,
-                    tuple(dict.fromkeys(leaf.editions + e_editions)),
-                    commit, leaf.name, "i",
-                )
-                _link(leaf, i_node)
-                relations.append(
-                    {"repo": repo, "path": path, "parent_gid": e_gid, "child_gid": i_node.gid}
-                )
-                round_union = (
-                    i_ids if round_union is None else G.union_all([round_union, i_ids])
-                )
-                m_ids = G.difference(leaf.ids, i_ids)
-                if G.is_multi(m_ids):
-                    m_name = "m_" + md5_hex(f"m_{leaf.name}_{i_node.name}")
-                    m_node = _new(m_name, m_ids, leaf.editions, commit, leaf.name, "m")
-                    _link(leaf, m_node)
-
-        partials.append(
-            {
-                "commit": commit,
-                "ids": [] if round_union is None else [int(x) for x in round_union],
-                "any_i": round_union is not None,
-            }
-        )
-        # incremental next-leaves (same derivation as fold.fold_key: one-way
-        # is_leaf/retired transitions + monotonic seq ⇒ no pool, no sort)
-        leaves = [n for n in leaves if n.is_leaf and not n.retired] + [
-            n for n in created[n_created_before:] if n.is_leaf and not n.retired
-        ]
-
-    segments = rows_from_nodes(
-        repo, path, sorted(touched.values(), key=lambda n: n.seq), geom_type
-    )
-    return SliceResult(segments, relations, partials, metas, initial_seqs)
+        if own is not None:
+            partials[commit] = own
+    return SliceResult(lattice.result(len(events)), partials, lattice.first_seq)
 
 
 def fold_coord(
     repo: str,
     path: str,
     events: list[dict],
-    ext_partials: dict[str, tuple[list[int], bool]],
+    ext_partials: dict[str, np.ndarray],
     geom_type: str = G.LINE,
-) -> SliceResult:
-    """Phase 2: fold the edition / ``mu`` lineage for one key.
-
-    Starts with no leaves (state leaves all live in slices); per round it
-    creates the edition node, intersects its OWN lineage leaves (editions and
-    mu nodes from earlier rounds of this epoch), and computes ``mu`` from the
-    union of its own intersections and every slice's reported partial."""
-    leaves: list[_Node] = []
-    next_seq = 0
-    created: list[_Node] = []
-    touched: dict[str, _Node] = {}
-    relations: list[dict] = []
-    metas: list[dict] = []
-
-    _gid = gid_factory(repo, path)
-
-    def _new(name, ids, editions, commit, parent_name, kind, extras=None) -> _Node:
-        nonlocal next_seq
-        node = _Node(
-            seq=next_seq, gid=_gid(name), name=name,
-            ids=ids, editions=editions, commit_created=commit, extras=extras or {},
-        )
-        next_seq += 1
-        created.append(node)
-        touched[node.gid] = node
-        metas.append({"name": name, "kind": kind, "commit": commit, "parent_name": parent_name})
-        return node
-
-    def _link(parent: _Node, child: _Node) -> None:
-        relations.append(
-            {"repo": repo, "path": path, "parent_gid": parent.gid, "child_gid": child.gid}
-        )
-        if parent.is_leaf:
-            parent.is_leaf = False
-            parent.dirty = True
-            touched[parent.gid] = parent
-
-    for ev in dedup_events(events):
-        n_created_before = len(created)
-        commit = ev["commit"]
-        content = ev.get("content") or ""
-        extras = {
-            k: v for k, v in ev.items() if k not in ("repo", "path", "commit", "content")
-        }
-        if content.strip() == "":
-            for leaf in leaves:
-                leaf.retired = True
-                leaf.dirty = True
-                touched[leaf.gid] = leaf
-            leaves = []
-            continue
-
-        e_ids = G.parse_wkt(content, geom_type)
-        e_node = _new(commit, e_ids, tuple(edition_years(commit)), commit, None, "e", extras)
-
-        own_unions: list[np.ndarray] = []
-        for leaf in leaves:
-            i_ids = G.intersect(leaf.ids, e_ids)
-            if G.is_multi(i_ids):
-                i_name = "i_" + md5_hex(f"i_{leaf.name}_{e_node.name}")
-                i_node = _new(
-                    i_name, i_ids,
-                    tuple(dict.fromkeys(leaf.editions + e_node.editions)),
-                    commit, leaf.name, "i",
-                )
-                _link(leaf, i_node)
-                _link(e_node, i_node)
-                own_unions.append(i_ids)
-                m_ids = G.difference(leaf.ids, i_ids)
-                if G.is_multi(m_ids):
-                    m_name = "m_" + md5_hex(f"m_{leaf.name}_{i_node.name}")
-                    m_node = _new(m_name, m_ids, leaf.editions, commit, leaf.name, "m")
-                    _link(leaf, m_node)
-
-        ext_ids, ext_any = ext_partials.get(commit, ([], False))
-        any_i = bool(own_unions) or ext_any
-        if any_i:
-            if e_node.is_leaf:  # external slices' I nodes are its children too
-                e_node.is_leaf = False
-            subtrahend = G.union_all(
-                own_unions + ([np.asarray(ext_ids, dtype=np.int64)] if len(ext_ids) else [])
-            )
-            r_ids = G.difference(e_ids, subtrahend)
-            if G.is_multi(r_ids):
-                mu_name = "mu_" + md5_hex(f"mu_{e_node.name}_UL")
-                mu_node = _new(mu_name, r_ids, e_node.editions, commit, None, "mu")
-                _link(e_node, mu_node)
-
-        # incremental next-leaves (same derivation as fold.fold_key)
-        leaves = [n for n in leaves if n.is_leaf and not n.retired] + [
-            n for n in created[n_created_before:] if n.is_leaf and not n.retired
-        ]
-
-    segments = rows_from_nodes(
-        repo, path, sorted(touched.values(), key=lambda n: n.seq), geom_type
-    )
-    return SliceResult(segments, relations, [], metas, {})
+    on_error: str = "raise",
+) -> FoldResult:
+    """Phase 2: the edition / ``mu`` lineage of one key — the full edition
+    round over no resume leaves (they all live in slices), with every
+    slice's merged partial joining the ``mu`` subtrahend."""
+    lattice = _Lattice(repo, path, [], geom_type, on_error)
+    for commit, e_ids, extras in lattice.editions(events):
+        lattice.edition_round(commit, e_ids, extras, ext_partials.get(commit))
+    return lattice.result(len(events))
 
 
 _KIND_RANK = {"i": 0, "m": 1}
 
 
-def renumber(initial_seqs: dict[str, int], metas: list[dict]) -> dict[str, int]:
-    """Replay the sequential fold's seq assignment from creation metadata
-    alone: per commit round — edition first, then I/M pairs ordered by their
-    parent leaf's (already final) seq with I before M, then mu."""
-    seqmap = dict(initial_seqs)
-    nxt = max(seqmap.values(), default=-1) + 1
-    by_commit: dict[str, list[dict]] = {}
-    for m in metas:
-        by_commit.setdefault(m["commit"], []).append(m)
+def renumber(nodes: list[_Node], first_seq: int) -> None:
+    """Replay the sequential fold's seq assignment in place from the
+    nodes' creation records alone: per commit round — edition first, then
+    I/M pairs ordered by their parent leaf's (already final) seq with I
+    before M, then mu.  Resume leaves (``kind == ""``) keep their seq."""
+    seqmap = {n.name: n.seq for n in nodes if not n.kind}
+    nxt = first_seq
+    by_commit: dict[str, list[_Node]] = {}
+    for n in nodes:
+        if n.kind:
+            by_commit.setdefault(n.commit_created, []).append(n)
     for commit in sorted(by_commit):
-        ms = by_commit[commit]
-        for m in ms:
-            if m["kind"] == "e":
-                seqmap[m["name"]] = nxt
+        ns = by_commit[commit]
+        ims = sorted(
+            (n for n in ns if n.kind in _KIND_RANK),
+            key=lambda n: (seqmap[n.parent], _KIND_RANK[n.kind]),
+        )
+        for kind_nodes in (
+            [n for n in ns if n.kind == "e"], ims, [n for n in ns if n.kind == "mu"]
+        ):
+            for n in kind_nodes:
+                seqmap[n.name] = n.seq = nxt
                 nxt += 1
-        ims = [m for m in ms if m["kind"] in _KIND_RANK]
-        ims.sort(key=lambda m: (seqmap[m["parent_name"]], _KIND_RANK[m["kind"]]))
-        for m in ims:
-            seqmap[m["name"]] = nxt
-            nxt += 1
-        for m in ms:
-            if m["kind"] == "mu":
-                seqmap[m["name"]] = nxt
-                nxt += 1
-    return seqmap
 
 
-def merge_partials(slice_partials: list[list[dict]]) -> dict[str, tuple[list[int], bool]]:
+def merge_partials(slice_partials: list[dict[str, np.ndarray]]) -> dict[str, np.ndarray]:
     """Union per-round partials across slices (union is associative, so
     slice order is irrelevant)."""
-    merged: dict[str, tuple[list[int], bool]] = {}
+    merged: dict[str, np.ndarray] = {}
     for partials in slice_partials:
-        for p in partials:
-            ids, any_i = merged.get(p["commit"], ([], False))
-            if p["any_i"]:
-                u = G.union_all(
-                    [np.asarray(ids, dtype=np.int64), np.asarray(p["ids"], dtype=np.int64)]
-                )
-                merged[p["commit"]] = ([int(x) for x in u], True)
-            elif p["commit"] not in merged:
-                merged[p["commit"]] = (ids, any_i)
+        for commit, ids in partials.items():
+            cur = merged.get(commit)
+            merged[commit] = ids if cur is None else G.union_all([cur, ids])
     return merged
 
 
-def combine(
-    slice_results: list[SliceResult], coord: SliceResult
-) -> tuple[list[dict], list[dict]]:
-    """Phase 3: patch provisional seqs with the renumber map and concatenate
-    slice + coordinator output."""
-    initial: dict[str, int] = {}
-    metas: list[dict] = []
-    for sr in slice_results:
-        initial.update(sr.initial_seqs)
-        metas.extend(sr.metas)
-    metas.extend(coord.metas)
-    seqmap = renumber(initial, metas)
-    segments: list[dict] = []
-    for sr in [*slice_results, coord]:
-        for row in sr.segments:
-            row = dict(row)
-            row["seq"] = seqmap[row["name"]]
-            segments.append(row)
-    segments.sort(key=lambda r: r["seq"])
-    relations = [r for sr in [*slice_results, coord] for r in sr.relations]
-    return segments, relations
+def combine(slice_results: list[SliceResult], coord: FoldResult) -> FoldResult:
+    """Phase 3: renumber the slice + coordinator nodes and concatenate
+    their output into the key's one ``FoldResult``."""
+    folds = [sr.fold for sr in slice_results] + [coord]
+    nodes = [n for f in folds for n in f.nodes]
+    renumber(nodes, max((sr.first_seq for sr in slice_results), default=0))
+    nodes.sort(key=lambda n: n.seq)
+    return FoldResult(
+        nodes=nodes,
+        repo=coord.repo,
+        path=coord.path,
+        geom_type=coord.geom_type,
+        relations=[r for f in folds for r in f.relations],
+        n_events=coord.n_events,
+        n_nodes_created=sum(f.n_nodes_created for f in folds),
+        dead=coord.dead,
+    )
 
 
 def fold_key_salted(
@@ -343,6 +158,7 @@ def fold_key_salted(
     leaves_in: list[dict],
     n_salts: int = 4,
     geom_type: str = G.LINE,
+    on_error: str = "raise",
 ) -> FoldResult:
     """In-process composition of the three phases — the executable spec the
     Spark wiring follows, property-tested bit-equal to ``fold_key``."""
@@ -350,14 +166,8 @@ def fold_key_salted(
     for r in leaves_in:
         slices[int(r["seq"]) % n_salts].append(r)
     slice_results = [
-        fold_slice(repo, path, events, s, geom_type) for s in slices
+        fold_slice(repo, path, events, s, geom_type, on_error) for s in slices
     ]
     ext = merge_partials([sr.partials for sr in slice_results])
-    coord = fold_coord(repo, path, events, ext, geom_type)
-    segments, relations = combine(slice_results, coord)
-    return FoldResult(
-        segments=segments,
-        relations=relations,
-        n_events=len(events),
-        n_nodes_created=sum(len(sr.metas) for sr in slice_results) + len(coord.metas),
-    )
+    coord = fold_coord(repo, path, events, ext, geom_type, on_error)
+    return combine(slice_results, coord)

@@ -290,7 +290,7 @@ def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
 #: builds, job submissions, schema reads).  Driver plan construction may only
 #: get cheaper: lower this bound when a change removes round trips, never
 #: raise it.
-TWO_EPOCH_INGEST_PY4J = 870
+TWO_EPOCH_INGEST_PY4J = 839
 
 
 def test_two_epoch_ingest_py4j_pinned(spark, tmp_path, py4j_calls):
@@ -744,12 +744,28 @@ def test_fold_key_quarantine_equals_clean_subset():
                       content="Z" + "MULTILINESTRING ((0.00 0.00, 0.02 0.00))")
     res2 = fold_key("r", "p", [good1, poison_big, good2], [], on_error="quarantine")
     assert len(res2.dead) == 1 and res2.dead[0]["commit"] == "1900"
-    # the split helper (salted path) makes the same call
-    from linked_maps_spark.ingest import _split_poison
+    # the salted fold quarantines through the same lattice: same segments,
+    # relations and dead events, fresh and over resume state, including
+    # the rank-shadowing replica
+    from linked_maps_spark.saltfold import fold_key_salted
 
-    clean_ev, dead_ev = _split_poison([good1, poison_big, good2], G.LINE, "quarantine")
-    assert [e["commit"] for e in clean_ev] == ["1920"]  # 1900 quarantined
-    assert len(dead_ev) == 1 and dead_ev[0]["commit"] == "1900"
+    state = [s for s in fold_key("r", "p", [good1], []).segments if s["is_leaf"]]
+    for events, leaves in (
+        ([good1, poison, good2], []),
+        ([good1, poison_big, good2], []),
+        ([poison, good2], state),
+        ([dict(good2, commit="1930"), dict(poison_big, commit="1930"), good2], state),
+    ):
+        plain = fold_key("r", "p", events, leaves, on_error="quarantine")
+        for n_salts in (1, 3):
+            salted = fold_key_salted(
+                "r", "p", events, leaves, n_salts=n_salts, on_error="quarantine"
+            )
+            assert salted.segments == plain.segments
+            assert sorted((r["parent_gid"], r["child_gid"]) for r in salted.relations) \
+                == sorted((r["parent_gid"], r["child_gid"]) for r in plain.relations)
+            assert salted.dead == plain.dead
+    assert [d["commit"] for d in plain.dead] == ["1930"]
 
 
 def test_engine_quarantine_end_to_end(spark, tmp_path, wal_pdf):

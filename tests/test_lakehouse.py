@@ -727,3 +727,32 @@ def test_meta_tables(spark, tbl):
     # expiry drops metadata rows too
     tbl.expire_snapshots(keep_last=1)
     assert {r["version"] for r in tbl.meta_snapshots().collect()} == {2}
+
+
+def test_read_py4j_calls_flat_in_file_count(spark, tmp_path, py4j_calls):
+    """Building a read's plan sends the same py4j commands whatever the
+    table's file count: the data-file paths cross to the JVM at once, not
+    one command per path."""
+    import pyarrow as pa
+
+    tables = {}
+    for n_files in (4, 32):
+        t = LakeTable.create(spark, str(tmp_path / f"f{n_files}"), "k string, v long")
+        for i in range(n_files):
+            t.append_arrow(pa.table({"k": [f"k{i}"], "v": pa.array([i], pa.int64())}))
+        assert len(t.snapshot()["files"]) == n_files
+        tables[n_files] = t
+    preds = [("v", ">=", 0)]
+    # PySpark resolves some JVM classes and methods on first use only
+    tables[4].read(), tables[4].read_where(preds)
+    calls = {}
+    for n_files, t in tables.items():
+        before = py4j_calls()
+        full = t.read()
+        mid = py4j_calls()
+        pruned = t.read_where(preds)
+        calls[n_files] = (mid - before, py4j_calls() - mid)
+        assert full.count() == pruned.count() == n_files
+        assert sorted(r["k"] for r in full.collect()) == sorted(f"k{i}" for i in range(n_files))
+    print("read, read_where py4j calls:", calls)
+    assert calls[4] == calls[32], calls

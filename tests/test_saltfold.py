@@ -35,6 +35,7 @@ def _assert_equal(seq_res, salt_res, key):
         {(r["parent_gid"], r["child_gid"]) for r in salt_res.relations}
         == {(r["parent_gid"], r["child_gid"]) for r in seq_res.relations}
     )
+    assert salt_res.dead == seq_res.dead
 
 
 @pytest.mark.parametrize("n_salts", [1, 2, 3, 8])
@@ -138,7 +139,7 @@ def test_skewed_engine_digest_and_balance(spark, tmp_path):
     for r in leaves:
         slices[int(r["seq"]) % n_salts].append(r)
     work = [
-        len(fold_slice("region_hot", "railroads/hot", events, s).metas)
+        fold_slice("region_hot", "railroads/hot", events, s).fold.n_nodes_created
         for s in slices
     ]
     work = [max(w, 1) for w in work]
@@ -182,11 +183,17 @@ def _wkt_from_cells(cells):
     return G.to_wkt(np.unique(np.array(ids, dtype=np.int64)), G.LINE)
 
 
+#: poison payloads: off the grid, and not WKT at all
+_POISON = {
+    "OFFGRID": "MULTILINESTRING ((0.005 0.00, 0.01 0.00))",
+    "GARBAGE": "garbage ((",
+}
+
 _events_strategy = hst.lists(
     hst.tuples(
         hst.integers(0, 5),  # commit index
         hst.one_of(
-            hst.just("TOMB"),
+            hst.sampled_from(["TOMB", *_POISON]),
             hst.lists(
                 hst.tuples(hst.integers(0, 38), hst.integers(0, 38), hst.integers(0, 3)),
                 min_size=0,
@@ -202,27 +209,35 @@ _events_strategy = hst.lists(
 @settings(max_examples=60, deadline=None)
 @given(_events_strategy, hst.integers(1, 5))
 def test_salted_equals_sequential_fuzzed(raw_events, n_salts):
-    """Any event sequence — duplicate commits, tombstones, empty and
-    overlapping geometries — folds bit-identically salted vs sequential."""
+    """Any event sequence — duplicate commits, tombstones, poison events,
+    empty and overlapping geometries — folds bit-identically salted vs
+    sequential under quarantine, dead events included."""
     events = []
     for ci, payload in raw_events:
-        content = "" if payload == "TOMB" else _wkt_from_cells(payload)
+        if payload == "TOMB":
+            content = ""
+        elif isinstance(payload, str):
+            content = _POISON[payload]
+        else:
+            content = _wkt_from_cells(payload)
         events.append(
             {"repo": "r", "path": "p", "commit": f"{1950 + ci:04d}c",
              "lang": "wkt", "content": content}
         )
-    seq_res = fold_key("r", "p", events, [])
-    salt_res = fold_key_salted("r", "p", events, [], n_salts=n_salts)
+    q = {"on_error": "quarantine"}
+    seq_res = fold_key("r", "p", events, [], **q)
+    salt_res = fold_key_salted("r", "p", events, [], n_salts=n_salts, **q)
     _assert_equal(seq_res, salt_res, ("r", "p"))
-    # and again over the surviving state (steady-state epoch shape)
+    # and again over the surviving state (steady-state epoch shape), with
+    # a poison event shadowing a clean replica of the same commit
     leaves = [r for r in seq_res.segments if r["is_leaf"] and not r["retired"]]
-    more = [
-        {"repo": "r", "path": "p", "commit": "1980c", "lang": "wkt",
-         "content": _wkt_from_cells([(5, 5, 0), (6, 5, 0), (7, 7, 2)])}
-    ]
+    clean = {"repo": "r", "path": "p", "commit": "1980c", "lang": "wkt",
+             "content": _wkt_from_cells([(5, 5, 0), (6, 5, 0), (7, 7, 2)])}
+    more = [clean, dict(clean, commit="1981c"),
+            dict(clean, commit="1981c", content="Z" + _POISON["GARBAGE"])]
     _assert_equal(
-        fold_key("r", "p", more, leaves),
-        fold_key_salted("r", "p", more, leaves, n_salts=n_salts),
+        fold_key("r", "p", more, leaves, **q),
+        fold_key_salted("r", "p", more, leaves, n_salts=n_salts, **q),
         ("r", "p", "epoch2"),
     )
 
@@ -268,3 +283,35 @@ def test_salted_quarantine_equals_plain_quarantine(spark, tmp_path):
         plain.read_dead_letter(), dead_cols
     )
     assert salted.read_dead_letter().count() == 2
+
+
+#: py4j commands of the fixed 2-epoch ingest below with every key on the
+#: salted fold (slices + coordinator).  Driver plan construction may only
+#: get cheaper: lower this bound when a change removes round trips, never
+#: raise it.
+SALTED_TWO_EPOCH_INGEST_PY4J = 1155
+
+
+def test_salted_two_epoch_ingest_py4j_pinned(spark, tmp_path, py4j_calls):
+    """The 2-epoch ingest of ``test_two_epoch_ingest_py4j_pinned`` with every
+    key hot builds its plans in at most ``SALTED_TWO_EPOCH_INGEST_PY4J``
+    py4j round trips."""
+    import threading
+
+    from linked_maps_spark.changelog import to_spark
+    from linked_maps_spark.ingest import CdcEngine
+
+    wal = to_spark(spark, synth_change_log(n_keys=4, n_commits=4, seed=29))
+    eng = CdcEngine(spark, str(tmp_path / "salted"), n_buckets=4, salt_leaf_threshold=1)
+    eng.create_tables(overwrite=True)
+    for t in threading.enumerate():
+        if t.name == "lms-prewarm":
+            t.join()
+    before = py4j_calls()
+    stats = eng.ingest(wal, commits_per_epoch=2)
+    calls = py4j_calls() - before
+    assert len(stats.epochs) == 2
+    # the coordinator stage's offset partition ids: the salted path ran
+    assert eng.metrics.read().filter("partition_id >= 20000").count() > 0
+    print("salted two-epoch ingest py4j calls:", calls)
+    assert calls <= SALTED_TWO_EPOCH_INGEST_PY4J, calls
