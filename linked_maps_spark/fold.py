@@ -108,7 +108,7 @@ class _Node:
     seq: int
     gid: str
     name: str
-    ids: np.ndarray
+    ids: np.ndarray | None  # None on a salted slice's shipped (serialized) node
     editions: tuple[str, ...]
     commit_created: str
     is_leaf: bool = True

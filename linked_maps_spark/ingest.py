@@ -485,9 +485,9 @@ def _append_fold_cols(cols: dict, res, pid: int, seg_cols: list[str],
 def _make_slice_fn(geom_type: str, extras: list[tuple[str, str]], on_error: str = "raise"):
     """Phase-1 salted sub-fold: one ``(repo, path, salt)`` group = one leaf
     slice folded over the (replicated) epoch events; output is a single
-    pickled payload row carrying the slice's ``SliceResult`` (nodes with
-    provisional seqs, relations, per-round partial intersection unions)
-    and its wall time."""
+    pickled payload row carrying the slice's ``SliceResult`` (serialized
+    nodes with provisional seqs and no id arrays, relations, per-round
+    partial intersection unions) and its wall time."""
     import pickle
 
     extra_cols = [c for c, _ in extras]

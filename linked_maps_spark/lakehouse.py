@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import weakref
 from typing import Any
 
 from py4j.java_gateway import java_import
@@ -42,6 +43,20 @@ from pyspark.sql.types import DataType, StructType
 from .util import balanced_part_col, quote_ident, zvalue_col
 
 _SNAP_DIR = "_snapshots"
+
+# JVM view -> commons-lang3 ``StringUtils`` (Spark's own dependency), bound
+# once per view: ``java_import`` edits the view's shared import namespace
+# and each lookup of the class is one more py4j command
+_STRING_UTILS: "weakref.WeakKeyDictionary[Any, Any]" = weakref.WeakKeyDictionary()
+
+
+def _string_utils(jvm: Any) -> Any:
+    cls = _STRING_UTILS.get(jvm)
+    if cls is None:
+        # imported by simple name: a dotted lookup costs a command per part
+        java_import(jvm, "org.apache.commons.lang3.StringUtils")
+        cls = _STRING_UTILS[jvm] = jvm.StringUtils
+    return cls
 
 # file-level column statistics (Iceberg manifest metrics analog) ------------
 #
@@ -553,14 +568,12 @@ class LakeTable:
         NUL-joined string (NUL is the one byte no path can hold) split there
         into the reader's ``String[]``, so a read's py4j commands do not grow
         with its file count (``parquet(*paths)`` converts a python list one
-        command per element)."""
+        command per element).  ``_jreader``/``_df`` are PySpark internals;
+        ``test_read_py4j_calls_flat_in_file_count`` guards them."""
         if not files:
             return self.empty(schema)
         reader = self.spark.read.schema(schema)
-        jvm = self.spark._jvm
-        # imported by simple name: a dotted lookup costs a command per part
-        java_import(jvm, "org.apache.commons.lang3.StringUtils")
-        jpaths = jvm.StringUtils.split(
+        jpaths = _string_utils(self.spark._jvm).split(
             "\0".join(os.path.join(self.path, f["path"]) for f in files), "\0"
         )
         return reader._df(reader._jreader.parquet(jpaths))

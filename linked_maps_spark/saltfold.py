@@ -73,7 +73,13 @@ def fold_slice(
         )
         if own is not None:
             partials[commit] = own
-    return SliceResult(lattice.result(len(events)), partials, lattice.first_seq)
+    fold = lattice.result(len(events))
+    # result() serialized every node's wkt/sha; the coordinator reads only
+    # those and the creation records, so the id arrays stay out of the
+    # pickled payload the slice shuffles to it
+    for n in fold.nodes:
+        n.ids = None
+    return SliceResult(fold, partials, lattice.first_seq)
 
 
 def fold_coord(
@@ -148,6 +154,8 @@ def combine(slice_results: list[SliceResult], coord: FoldResult) -> FoldResult:
         n_events=coord.n_events,
         n_nodes_created=sum(f.n_nodes_created for f in folds),
         dead=coord.dead,
+        # the slices and the coordinator partition the live leaves
+        n_leaves=sum(f.n_leaves for f in folds),
     )
 
 

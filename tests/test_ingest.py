@@ -290,7 +290,7 @@ def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
 #: builds, job submissions, schema reads).  Driver plan construction may only
 #: get cheaper: lower this bound when a change removes round trips, never
 #: raise it.
-TWO_EPOCH_INGEST_PY4J = 839
+TWO_EPOCH_INGEST_PY4J = 829
 
 
 def test_two_epoch_ingest_py4j_pinned(spark, tmp_path, py4j_calls):

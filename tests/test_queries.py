@@ -115,7 +115,7 @@ def test_cdc_read_spark_jobs_pinned(spark, eng):
 #: read fresh, then build + ``count()`` of q1–q4, ``classify_changes`` and
 #: ``build_triples``.  Driver plan construction may only get cheaper: lower
 #: this bound when a change removes round trips, never raise it.
-READ_ROUND_PY4J = 446
+READ_ROUND_PY4J = 442
 
 
 def test_cdc_read_py4j_pinned(eng, py4j_calls):

@@ -36,6 +36,7 @@ def _assert_equal(seq_res, salt_res, key):
         == {(r["parent_gid"], r["child_gid"]) for r in seq_res.relations}
     )
     assert salt_res.dead == seq_res.dead
+    assert salt_res.n_leaves == seq_res.n_leaves
 
 
 @pytest.mark.parametrize("n_salts", [1, 2, 3, 8])
@@ -289,7 +290,7 @@ def test_salted_quarantine_equals_plain_quarantine(spark, tmp_path):
 #: salted fold (slices + coordinator).  Driver plan construction may only
 #: get cheaper: lower this bound when a change removes round trips, never
 #: raise it.
-SALTED_TWO_EPOCH_INGEST_PY4J = 1155
+SALTED_TWO_EPOCH_INGEST_PY4J = 1145
 
 
 def test_salted_two_epoch_ingest_py4j_pinned(spark, tmp_path, py4j_calls):

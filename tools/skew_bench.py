@@ -6,14 +6,19 @@ therefore its per-epoch leaf lattice) dwarfs the uniform keys, so the plain
 fold serializes the stage behind that key's single task while the salted
 fold splits its leaf slices across tasks.
 
-Writes BENCH/skew_latest.md.  Usage: python tools/skew_bench.py
-(env: SKEW_CORES, SKEW_COLD_KEYS, SKEW_COMMITS, SKEW_HOT_WALKS, SKEW_REPEATS).
+Writes BENCH/skew_latest.md.  Usage: python tools/skew_bench.py [BASELINE]
+(env: SKEW_CORES, SKEW_COLD_KEYS, SKEW_COMMITS, SKEW_HOT_WALKS, SKEW_GRID,
+SKEW_CPE, SKEW_REPEATS).  BASELINE is another checkout of this repository
+(e.g. the parent commit, from ``git archive``): every repeat then also runs
+both modes on it, interleaved with this checkout's runs, and the report
+adds a per-mode comparison of the two.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -61,17 +66,49 @@ print(json.dumps({{"n_salts": n_salts, "sec": round(sec, 2),
 
 
 def run(n_salts: int, cores: int, cold_keys: int, commits: int,
-        hot_walks: int, grid: int, cpe: int) -> dict:
-    code = _JOB.format(repo=REPO, cores=cores, cold_keys=cold_keys,
+        hot_walks: int, grid: int, cpe: int, repo: str = REPO) -> dict:
+    code = _JOB.format(repo=repo, cores=cores, cold_keys=cold_keys,
                        commits=commits, hot_walks=hot_walks, n_salts=n_salts,
                        grid=grid, cpe=cpe)
     out = subprocess.run([sys.executable, "-c", code],
-                         capture_output=True, text=True, check=True, cwd=REPO)
+                         capture_output=True, text=True, check=True, cwd=repo)
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 
 
+def _quartiles(xs: list[float]) -> tuple[float, float, float]:
+    qs = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
+    return qs[0], statistics.median(xs), qs[2]
+
+
+def _comparison(samples: dict, repeats: int) -> str:
+    """Per-mode table of the baseline checkout vs this one: wall and
+    slowest fold-task wall as median [q1, q3], pairs this checkout won."""
+    rows = []
+    for mode, n_salts in (("plain", 1), ("salted", 8)):
+        base, this = samples[("baseline", n_salts)], samples[("this", n_salts)]
+        assert len({r["digest"] for r in base + this}) == 1, "checkouts disagree!"
+        for metric, label in (("sec", "wall (s)"),
+                              ("max_task_wall_ms", "slowest fold task (ms)")):
+            b = _quartiles([r[metric] for r in base])
+            t = _quartiles([r[metric] for r in this])
+            wins = sum(y[metric] < x[metric] for x, y in zip(base, this))
+            rows.append(
+                f"| {mode} | {label} | {b[1]:.1f} [{b[0]:.1f}, {b[2]:.1f}] "
+                f"| {t[1]:.1f} [{t[0]:.1f}, {t[2]:.1f}] | {wins}/{repeats} |"
+            )
+    return (
+        "\n## Baseline checkout vs this checkout\n\n"
+        f"{repeats} interleaved pairs per mode (the side that runs first "
+        "alternates per repeat); median [q1, q3]; digests identical across "
+        "both checkouts and modes.\n\n"
+        "| mode | metric | baseline | this checkout | pairs this checkout faster |\n"
+        "|---|---|---|---|---|\n" + "\n".join(rows) + "\n"
+    )
+
+
 def main() -> None:
+    baseline = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else None
     cores = int(os.environ.get("SKEW_CORES", "16"))
     cold_keys = int(os.environ.get("SKEW_COLD_KEYS", "96"))
     commits = int(os.environ.get("SKEW_COMMITS", "24"))
@@ -92,10 +129,17 @@ def main() -> None:
     # legs ALTERNATED (plain, salted, plain, salted, …) so both modes
     # sample the same background-load windows — the bench_scaling lesson:
     # sequential phases let hypervisor load drift bias the ratio
-    plains, salteds = [], []
-    for _ in range(repeats):
-        plains.append(run(1, cores, cold_keys, commits, hot_walks, grid, cpe))
-        salteds.append(run(8, cores, cold_keys, commits, hot_walks, grid, cpe))
+    # With a baseline checkout, its runs interleave with this checkout's
+    # and the side that runs first alternates per repeat.
+    trees = [("this", REPO)] + ([("baseline", baseline)] if baseline else [])
+    samples: dict = {(name, n): [] for name, _ in trees for n in (1, 8)}
+    for i in range(repeats):
+        for n_salts in (1, 8):
+            for name, repo in trees if i % 2 == 0 else trees[::-1]:
+                samples[(name, n_salts)].append(run(
+                    n_salts, cores, cold_keys, commits, hot_walks, grid, cpe, repo
+                ))
+    plains, salteds = samples[("this", 1)], samples[("this", 8)]
     plain = min(plains, key=lambda r: r["sec"])
     salted = min(salteds, key=lambda r: r["sec"])
     assert plain["digest"] == salted["digest"], "salted fold changed the state!"
@@ -133,23 +177,29 @@ exactly why the engine gates salting behind the leaf-count threshold
 instead of salting every key.  Deterministic slice balance (created nodes
 per slice ≤ 2× median) is pinned by tests/test_saltfold.py.
 
-Kernel-speed crossover (measured, interleaved legs): after the round-4
+Kernel-speed crossover (measured on local[16] of a 32-vCPU host,
+interleaved legs): after the round-4
 fold-kernel vectorization the ORIGINAL fixture (4,000 hot walks / 900
 cells) no longer shows a wall win — plain ≈ salted ≈ 23 s, because the
 faster kernel shrank the plain straggler below the stage wall (its task
 is still 2.3× the salted one).  The win reappears exactly where the
 theory says: at 12,000 walks / 1,600 cells the plain straggler walls the
-stage again and salting wins total wall.  Faster kernels RAISE the skew
-threshold where salting pays — which the engine's leaf-count gate encodes.
+stage again and salting wins total wall (1.27× there).  Faster kernels
+RAISE the skew threshold where salting pays — which the engine's leaf-count
+gate encodes.  The win also needs idle cores: on local[4] the eight slices
+queue behind each other and the cold keys' tasks, and the salted leg is
+slower in total wall although its slowest task stays shorter.
 
-Reproduce: `python tools/skew_bench.py`.
-"""
+Reproduce: `python tools/skew_bench.py` (`python tools/skew_bench.py
+BASELINE_CHECKOUT` adds the comparison below).
+""" + (_comparison(samples, repeats) if baseline else "")
     with open(os.path.join(REPO, "BENCH", "skew_latest.md"), "w") as fh:
         fh.write(md)
     print(md)
     print(json.dumps({"plain": plain, "salted": salted,
                       "speedup": round(speedup, 2),
-                      "plain_samples": plains, "salted_samples": salteds}))
+                      "samples": {f"{name}/{n}": v
+                                  for (name, n), v in samples.items()}}))
 
 
 if __name__ == "__main__":
