@@ -155,7 +155,7 @@ def prewarm_workers(spark: SparkSession, block: bool = False) -> None:
 
 def _plan_warm(spark: SparkSession) -> None:
     """Run a 2-key, 1-commit micro ingest into a throwaway warehouse so the
-    session's codegen/class caches hold every epoch plan shape (stats agg,
+    session's codegen/class caches hold every epoch plan shape (WAL census,
     fold + combined dynamic-partition write, manifest adopt, accounting
     appends) before the first real epoch executes them."""
     import tempfile
@@ -164,11 +164,11 @@ def _plan_warm(spark: SparkSession) -> None:
     from .util import scratch_root
 
     wh = tempfile.mkdtemp(prefix="lms_planwarm_", dir=scratch_root())
-    # the micro WAL is CACHED like a production batch feed: the fold job's
-    # input stage then compiles against the same InMemoryTableScan + commit-
-    # range filter shape a real epoch reads through (an uncached local
-    # relation here left that stage's codegen cold — measured ~2 s still
-    # paid by the first real fold)
+    # the micro WAL is CACHED like a persisted batch feed (bench.py's): the
+    # fold job's input stage then compiles against the same InMemoryTableScan
+    # + commit-range filter shape a real epoch reads through (an uncached
+    # local relation here left that stage's codegen cold — measured ~2 s
+    # still paid by the first real fold)
     wal = to_spark(spark, synth_change_log(n_keys=2, n_commits=1, seed=1)).cache()
     try:
         wal.count()
@@ -180,24 +180,29 @@ def _plan_warm(spark: SparkSession) -> None:
         shutil.rmtree(wh, ignore_errors=True)
 
 
-def _collect_commits(df: DataFrame) -> list[str]:
-    """Distinct commit labels of a (pre-filtered) WAL frame, ONE job:
-    ``collect_set`` partial-aggregates map-side into a single final task
-    (a ``.distinct()`` here paid a full shuffle-partition-wide reduce stage
-    for a handful of labels).  ``collect_set`` skips NULLs, which would
-    SILENTLY drop a malformed row's events from every epoch — so NULL
-    commits are counted in the same job and fail loudly instead."""
-    row = df.agg(
-        F.expr("collect_set(commit) AS cs"),
-        F.expr("count(CASE WHEN commit IS NULL THEN 1 END) AS nn"),
-    ).collect()[0]
-    if row["nn"]:
+def _wal_census(df: DataFrame, bucket_sql: str) -> dict[str, tuple[int, set[int]]]:
+    """``commit → (events, table buckets touched)`` of a (pre-filtered) WAL
+    frame, in the ONE pass that also learns the commit labels: every epoch
+    of the call sums its commits' counts and unions their buckets, so no
+    epoch scans the WAL for its own stats.  The groupBy partial-aggregates
+    map-side and ``coalesce(1)`` runs the final merge as a single task (a
+    bare groupBy paid a shuffle-partition-wide reduce stage for a handful
+    of labels).  A NULL commit groups as its own row and fails loudly: it
+    cannot be ordered into any epoch."""
+    rows = (
+        df.groupBy("commit")
+        .agg(F.expr("count(1) AS n"), F.expr(f"collect_set({bucket_sql}) AS bks"))
+        .coalesce(1)
+        .collect()
+    )
+    census = {r["commit"]: (r["n"], set(r["bks"])) for r in rows}
+    if None in census:
         raise ValueError(
-            f"ingest: batch carries {row['nn']} event(s) with a NULL commit "
-            "label — these cannot be ordered into any epoch; fix the WAL "
-            "upstream (every event needs a commit label)"
+            f"ingest: batch carries {census[None][0]} event(s) with a NULL "
+            "commit label — these cannot be ordered into any epoch; fix the "
+            "WAL upstream (every event needs a commit label)"
         )
-    return sorted(row["cs"] or [])
+    return census
 
 
 def _fold_width(
@@ -568,8 +573,8 @@ class IngestStats:
     epochs: list[EpochStats] = field(default_factory=list)
     # unfiltered commit range of the batch handed to this ingest() call
     # (BEFORE the watermark replay-skip) — lets callers that need ordering
-    # evidence (stream_ingest's misorder guard) reuse the pending-commits
-    # job instead of running their own min/max aggregation per micro-batch
+    # evidence (stream_ingest's misorder guard) reuse the call's WAL census
+    # instead of running their own min/max aggregation per micro-batch
     batch_min_commit: str | None = None
     batch_max_commit: str | None = None
 
@@ -652,7 +657,7 @@ class CdcEngine:
         self._validated_n_buckets: int | None = None
         # boot the python-worker pool in the background (once per session)
         # so the first fold stage runs against warm workers — overlaps with
-        # the caller's WAL load and the epoch's stats job
+        # the caller's WAL load and the ingest call's WAL census
         prewarm_workers(spark)
 
     # ---------------------------------------------------------------- tables
@@ -844,18 +849,22 @@ class CdcEngine:
         misorder guard: events at-or-below the watermark are silently
         treated as checkpoint replays, so a delivery order that diverges
         from commit order must fail loudly instead — and the check rides
-        the pending-commits job this method already runs.
+        the WAL census this method already runs.
 
         ``track_batch_range`` (implied by ``guard_min_commit``): report the
         batch's UNfiltered commit lo/hi on the returned stats.  This runs
-        the pending-commits job without the ``commit > watermark`` pushdown
+        the WAL census without the ``commit > watermark`` pushdown
         — right for streaming micro-batches (small, and the guard needs the
         true range), wrong as a default: a batch resume over a deep WAL
         history relies on that pushed filter to prune already-ingested
         files at the parquet-footer level.
 
-        **Pipelined epochs**: epoch k+1's PREPARE (stats, resume-state read,
-        fold, cache materialization) overlaps epoch k's merge WRITES — the
+        **One WAL census per call** (:func:`_wal_census`): a single job
+        learns every pending commit's event count and touched buckets; each
+        epoch sums its chunk of commits, so no epoch runs a stats job.
+
+        **Pipelined epochs**: epoch k+1's PREPARE (resume-state read, fold
+        and combined write) overlaps epoch k's merge WRITES — the
         two halves of consecutive epochs that dominate the wall.  The
         exactly-once COMMIT order is untouched: epoch k's ordered snapshot
         commits (relations, metrics, segments, commit_log) all land before
@@ -885,15 +894,15 @@ class CdcEngine:
                 )
         wm = self.watermark()
         stats = IngestStats()
+        # the buckets are those of the shared layout _share_layout just
+        # settled; nothing rebuckets before maintain() ends the call
+        bucket_sql = self.segments.bucket_sql()
         if guard_min_commit is not None or track_batch_range:
-            # one metadata-sized job over the (micro-)batch: distinct
-            # commits WITHOUT the watermark pushdown, so the batch's true
+            # census WITHOUT the watermark pushdown, so the batch's true
             # lo/hi are known for the misorder guard / stats; the replay
-            # skip applies driver-side instead.  collect_set partial-
-            # aggregates map-side into ONE final task — `.distinct()` here
-            # paid a full shuffle-partition-wide reduce stage (128 tiny
-            # tasks at the session default) for a handful of labels.
-            all_commits = _collect_commits(change_log)
+            # skip applies driver-side instead
+            census = _wal_census(change_log, bucket_sql)
+            all_commits = sorted(census)
             if guard_min_commit is not None and all_commits and (
                 all_commits[0] <= guard_min_commit
             ):
@@ -915,26 +924,27 @@ class CdcEngine:
         else:
             # batch path: keep the commit > watermark predicate IN the scan
             # — on a resume over deep WAL history the pushed filter prunes
-            # already-ingested files at the parquet-footer level.  Same
-            # collect_set shape as above: map-side partial agg, one final
-            # task, no wide distinct stage.
+            # already-ingested files at the parquet-footer level
             pending = (
                 change_log.filter(
                     (F.col("commit") > F.lit(wm)) | F.col("commit").isNull()
                 )
                 if wm is not None else change_log
             )
-            commits = _collect_commits(pending)
+            census = _wal_census(pending, bucket_sql)
+            commits = sorted(census)
         # O(1) epoch numbering: every commit-log append records its epoch in
-        # the snapshot summary, so the next epoch id is a manifest read —
-        # the count() job this replaces cost a full (tiny) Spark job per
-        # ingest call.  Fallback to the count only when no summary carries
-        # an epoch (e.g. right after log compaction + expiry).
+        # the snapshot summary, so the next epoch id is a manifest read.  A
+        # log with no files starts at epoch 0; the count() job runs only
+        # when files exist but no summary carries an epoch (e.g. right after
+        # log compaction + expiry).
         last_epoch = self.commit_log.latest_summary_value("epoch")
-        epoch0 = (
-            int(last_epoch) + 1 if last_epoch is not None
-            else (self.commit_log.read().count() or 0)
-        )
+        if last_epoch is not None:
+            epoch0 = int(last_epoch) + 1
+        elif not self.commit_log.snapshot()["files"]:
+            epoch0 = 0
+        else:
+            epoch0 = self.commit_log.read().count()
         chunks = [
             commits[i : i + commits_per_epoch]
             for i in range(0, len(commits), commits_per_epoch)
@@ -944,8 +954,13 @@ class CdcEngine:
         prev: dict | None = None  # the epoch whose writes are in flight
         try:
             for j, chunk in enumerate(chunks):
+                # a chunk is a contiguous run of the sorted pending commits,
+                # so its census rows are exactly the events the epoch's
+                # commit-range filter selects
                 prep = self._prepare_epoch(
                     epoch0 + j, change_log, chunk[0], chunk[-1],
+                    sum(census[c][0] for c in chunk),
+                    sorted(set().union(*(census[c][1] for c in chunk))),
                     patch_changes=None if prev is None else prev["patch_df"],
                 )
                 if prev is not None:
@@ -1086,15 +1101,21 @@ class CdcEngine:
         change_log: DataFrame,
         start_commit: str,
         end_commit: str,
+        n_events: int,
+        buckets: list[int],
         patch_changes: DataFrame | None = None,
     ) -> dict:
-        """PREPARE phase: batch stats, resume-state read (optionally patched
-        with the previous in-flight epoch's changes), fold, and the epoch's
-        one combined write of its change files into a scratch directory
-        (adopted by the tables at commit).  Returns the epoch context for
-        :meth:`_start_writes` / :meth:`_commit_epoch`, or ``{"skip": True,
-        ...}`` when the exactly-once guard says this epoch's state already
-        landed."""
+        """PREPARE phase: resume-state read (optionally patched with the
+        previous in-flight epoch's changes), fold, and the epoch's one
+        combined write of its change files into a scratch directory (adopted
+        by the tables at commit).  ``n_events`` and ``buckets`` (the table
+        buckets the batch touches; segments and relations share one layout,
+        see :meth:`_share_layout`) come from the call's WAL census, so the
+        epoch runs no stats job of its own.  The batch is not cached: the
+        fold's event side reads it once, and the leaf semi-join only its
+        ``(repo, path)`` columns.  Returns the epoch context for :meth:`_start_writes` / :meth:`_commit_epoch`,
+        or ``{"skip": True, ...}`` when the exactly-once guard says this
+        epoch's state already landed."""
         trace = os.environ.get("LMS_TRACE_INGEST") == "1"
         marks: list[tuple[str, float]] = []
 
@@ -1104,38 +1125,11 @@ class CdcEngine:
 
         t0 = time.monotonic()
         mark("start")
+        # (within-batch duplicate events are collapsed deterministically
+        # inside the fold — no separate window shuffle needed)
         batch = change_log.filter(
             (F.col("commit") >= F.lit(start_commit)) & (F.col("commit") <= F.lit(end_commit))
         )
-        # second-layer cache only when the caller's change_log is NOT
-        # already persisted: re-filtering a cached parent per consumer is
-        # cheaper than materializing another in-memory copy of the batch,
-        # while an uncached WAL (the production parquet tail) must still be
-        # read from storage exactly once per epoch
-        own_cache = not (
-            change_log.storageLevel.useMemory or change_log.storageLevel.useDisk
-        )
-        if own_cache:
-            batch = batch.cache()
-        # (within-batch duplicate events are collapsed deterministically
-        # inside the fold — no separate window shuffle needed)
-
-        # one driver job: event count + the set of table buckets this batch
-        # touches (bucket count is bounded by n_buckets, so the collect
-        # stays driver-light at any scale).  The exact distinct-key count is
-        # NOT computed here: countDistinct planned an extra expand + a full
-        # shuffle-partition-wide dedup stage per epoch, and the fold's own
-        # per-task accounting rows already count each folded key exactly
-        # once — n_keys is summed from them at commit time for free.
-        # (segments and relations share one layout — see _share_layout — so
-        # this bucket set serves both tables)
-        stats = batch.agg(
-            F.expr("count(1) AS n"),
-            F.expr(f"collect_set({self.segments.bucket_sql()}) AS bks"),
-        ).collect()[0]
-        n_events = stats["n"]
-        buckets = sorted(stats["bks"])
-        mark("stats")
 
         # Exactly-once replay guard: the segments merge is the LAST state
         # write of an epoch (relations and metrics precede it and are
@@ -1151,8 +1145,6 @@ class CdcEngine:
             # replay-only path: no fold runs, so the commit-log row's key
             # count comes from a dedicated (rare) job here
             n_keys = batch.select("repo", "path").distinct().count()
-            if own_cache:
-                batch.unpersist()
             return {
                 "skip": True, "epoch": epoch, "start_commit": start_commit,
                 "end_commit": end_commit, "n_events": n_events,
@@ -1391,8 +1383,6 @@ class CdcEngine:
         combined.write.partitionBy("kind", "_bucket").parquet(scratch)
         mark("fold")
         self._absorb_hot_markers(scratch)
-        if own_cache:
-            batch.unpersist()
         seg_dir = os.path.join(scratch, "kind=segment")
         seg_schema = DataType.fromDDL(", ".join(
             f"{quote_ident(c)} {t}" for c, t in SEGMENT_BASE_COLUMNS + extras

@@ -64,7 +64,7 @@ def stream_ingest(
     # Detect the divergence and fail LOUDLY instead: a NEW batch whose
     # minimum commit is ≤ the maximum commit of a previous NEW batch in
     # this drain violates the commit-aligned/append-ordered contract.
-    # The check rides ingest()'s own pending-commits job (guard_min_commit
+    # The check rides ingest()'s own WAL census (guard_min_commit
     # + batch_max_commit on the returned stats) — zero extra Spark jobs
     # per micro-batch.  Replays are exempt two ways: a re-fired batch_id
     # within this call is recognized directly, and a re-drain from a fresh

@@ -250,26 +250,30 @@ def _newest_job_id(spark) -> int:
     return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
 
 
-#: Spark jobs of the fixed 2-epoch ingest below (fold + combined write,
-#: kept rewrites, maintenance).  Spark jobs per epoch may only go down:
-#: lower this bound when a change removes one, never raise it.
-TWO_EPOCH_INGEST_JOBS = 18
+def _join_prewarm() -> None:
+    """The once-per-session worker warm-up runs on a background thread; its
+    jobs must not land inside a counted window."""
+    import threading
+
+    for t in threading.enumerate():
+        if t.name == "lms-prewarm":
+            t.join()
+
+
+#: Spark jobs of the fixed 2-epoch ingest below (WAL census, fold + combined
+#: write, kept rewrites, maintenance).  Spark jobs per epoch may only go
+#: down: lower this bound when a change removes one, never raise it.
+TWO_EPOCH_INGEST_JOBS = 11
 
 
 def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
     """A fixed 2-epoch ingest into already-converged tables runs at most
     ``TWO_EPOCH_INGEST_JOBS`` Spark jobs and makes no ``rebucket`` call."""
-    import threading
-
     from linked_maps_spark.lakehouse import LakeTable
 
     wal = to_spark(spark, synth_change_log(n_keys=4, n_commits=4, seed=29))
     eng = _engine(spark, tmp_path, "jobcount")
-    # the once-per-session worker warm-up runs on a background thread; its
-    # job must not land inside the counted window
-    for t in threading.enumerate():
-        if t.name == "lms-prewarm":
-            t.join()
+    _join_prewarm()
     rebucketed = []
     rebucket = LakeTable.rebucket
 
@@ -283,6 +287,7 @@ def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
     jobs = _newest_job_id(spark) - before
     assert len(stats.epochs) == 2
     assert rebucketed == []
+    print("two-epoch ingest jobs:", jobs)
     assert jobs <= TWO_EPOCH_INGEST_JOBS, jobs
 
 
@@ -290,25 +295,122 @@ def test_two_epoch_ingest_spark_jobs_pinned(spark, tmp_path, monkeypatch):
 #: builds, job submissions, schema reads).  Driver plan construction may only
 #: get cheaper: lower this bound when a change removes round trips, never
 #: raise it.
-TWO_EPOCH_INGEST_PY4J = 829
+TWO_EPOCH_INGEST_PY4J = 738
 
 
 def test_two_epoch_ingest_py4j_pinned(spark, tmp_path, py4j_calls):
     """The same 2-epoch ingest builds its plans in at most
     ``TWO_EPOCH_INGEST_PY4J`` py4j round trips."""
-    import threading
-
     wal = to_spark(spark, synth_change_log(n_keys=4, n_commits=4, seed=29))
     eng = _engine(spark, tmp_path, "py4jcount")
-    for t in threading.enumerate():
-        if t.name == "lms-prewarm":
-            t.join()
+    _join_prewarm()
     before = py4j_calls()
     stats = eng.ingest(wal, commits_per_epoch=2)
     calls = py4j_calls() - before
     assert len(stats.epochs) == 2
     print("two-epoch ingest py4j calls:", calls)
     assert calls <= TWO_EPOCH_INGEST_PY4J, calls
+
+
+#: Spark jobs and py4j commands of one live-tail step: a one-commit
+#: ``track_batch_range`` ingest of an uncached parquet WAL file into a
+#: warehouse that already holds state.  Lower these, never raise them.
+TAIL_INGEST_JOBS = 9
+TAIL_INGEST_PY4J = 456
+
+
+def test_tail_ingest_spark_jobs_and_py4j_pinned(spark, tmp_path, py4j_calls):
+    """The streaming-shaped ingest (one new commit read straight from
+    parquet, resume state on disk) runs at most ``TAIL_INGEST_JOBS`` Spark
+    jobs in at most ``TAIL_INGEST_PY4J`` py4j round trips."""
+    from linked_maps_spark.changelog import CHANGE_LOG_SCHEMA
+
+    pdf = synth_change_log(n_keys=4, n_commits=3, seed=29)
+    last = pdf["commit"].max()
+    eng = _engine(spark, tmp_path, "tail")
+    eng.ingest(to_spark(spark, pdf[pdf["commit"] < last]), commits_per_epoch=2)
+    tail = str(tmp_path / "tail.parquet")
+    pdf[pdf["commit"] == last].to_parquet(tail, index=False)
+    df = spark.read.schema(CHANGE_LOG_SCHEMA).parquet(tail)
+    _join_prewarm()
+    jobs0, calls0 = _newest_job_id(spark), py4j_calls()
+    stats = eng.ingest(df, commits_per_epoch=1, guard_min_commit=eng.watermark(),
+                       track_batch_range=True)
+    calls = py4j_calls() - calls0
+    jobs = _newest_job_id(spark) - jobs0
+    assert [e.end_commit for e in stats.epochs] == [last]
+    assert stats.batch_min_commit == stats.batch_max_commit == last
+    print("tail ingest jobs:", jobs, "py4j calls:", calls)
+    assert jobs <= TAIL_INGEST_JOBS, jobs
+    assert calls <= TAIL_INGEST_PY4J, calls
+
+
+def test_one_wal_census_per_ingest_call(spark, tmp_path, wal_pdf, full, monkeypatch):
+    """A 3-epoch ingest learns its commits, event counts and buckets in one
+    census; no epoch scans the WAL for its own stats."""
+    import linked_maps_spark.ingest as ingest_mod
+
+    census = ingest_mod._wal_census
+    calls = []
+
+    def spy(*a, **k):
+        calls.append(1)
+        return census(*a, **k)
+
+    monkeypatch.setattr(ingest_mod, "_wal_census", spy)
+    eng = _engine(spark, tmp_path, "census_once")
+    stats = eng.ingest(to_spark(spark, wal_pdf), commits_per_epoch=2)
+    assert len(stats.epochs) == 3
+    assert calls == [1]
+    eng_ref, _ = full
+    assert _seg_digest(eng) == _seg_digest(eng_ref)
+
+
+def test_census_equals_per_epoch_filter(spark, tmp_path, monkeypatch):
+    """Each epoch's census-derived event count and bucket set equal what the
+    epoch's own commit-range filter over the WAL gives: on a fresh
+    warehouse, on a watermark-filtered resume, and on a
+    ``track_batch_range`` resume over a longer WAL."""
+    long_pdf = synth_change_log(n_keys=6, n_commits=8, seed=21)
+    commits = sorted(long_pdf["commit"].unique())
+    short_pdf = long_pdf[long_pdf["commit"] <= commits[4]]  # 5 commits
+    eng = _engine(spark, tmp_path, "census_eq")
+    prepared = []
+    prepare = eng._prepare_epoch
+
+    def spy(epoch, change_log, start, end, n_events, buckets, **k):
+        prepared.append((change_log, start, end, n_events, buckets))
+        return prepare(epoch, change_log, start, end, n_events, buckets, **k)
+
+    monkeypatch.setattr(eng, "_prepare_epoch", spy)
+    short, long_ = to_spark(spark, short_pdf), to_spark(spark, long_pdf)
+    eng.ingest(short, commits_per_epoch=2, max_epochs=1)   # no watermark
+    eng.ingest(short, commits_per_epoch=2)                 # commit > watermark
+    eng.ingest(long_, commits_per_epoch=2, track_batch_range=True)
+    assert [p[1:3] for p in prepared] == [
+        (commits[0], commits[1]), (commits[2], commits[3]),
+        (commits[4], commits[4]), (commits[5], commits[6]),
+        (commits[7], commits[7]),
+    ]
+    log = {r["start_commit"]: r for r in eng.commit_log.read().collect()}
+    for wal, start, end, n_events, buckets in prepared:
+        batch = wal.filter(F.col("commit").between(start, end))
+        assert n_events == batch.count() == log[start]["n_events"]
+        assert buckets == sorted(eng.segments.buckets_for(batch))
+
+
+def test_failed_epoch_leaves_nothing_cached(spark, tmp_path, wal_pdf):
+    """An epoch that aborts on a poison event under ``on_error="raise"``
+    leaves no cached batch behind in the session."""
+    poisoned = wal_pdf.copy()
+    poisoned.loc[poisoned.index[7], "content"] = "this is not wkt at all ("
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # another test's cache would hide a leak
+    assert cache.isEmpty()
+    eng = _engine(spark, tmp_path, "poison_raise")
+    with pytest.raises(Exception, match="GeometryError"):
+        eng.ingest(to_spark(spark, poisoned), commits_per_epoch=2)
+    assert cache.isEmpty()
 
 
 def test_metrics_append_io_flat_in_epoch_count(spark, tmp_path, monkeypatch):
@@ -971,8 +1073,12 @@ def test_commit_log_epoch_numbering_summary_path(spark, tmp_path, wal_pdf):
 
 
 def test_null_commit_fails_loudly(spark, tmp_path):
-    """collect_set skips NULLs, which would silently drop a malformed row's
-    events from every epoch — the commit collection must raise instead."""
+    """An event with a NULL commit cannot be ordered into any epoch; silently
+    dropping it would lose its edit.  The WAL census raises instead, on the
+    batch path and on the unfiltered path that ``track_batch_range`` and
+    ``guard_min_commit`` take, before any epoch starts."""
+    import os
+
     eng = _engine(spark, tmp_path, "nullcommit")
     wal = to_spark(spark, synth_change_log(n_keys=2, n_commits=2, seed=3))
     from linked_maps_spark.changelog import commit_label
@@ -983,5 +1089,8 @@ def test_null_commit_fails_loudly(spark, tmp_path):
             F.col("commit")
         ),
     )
-    with pytest.raises(ValueError, match="NULL commit"):
-        eng.ingest(bad, commits_per_epoch=2)
+    for kw in ({}, {"track_batch_range": True}, {"guard_min_commit": "1900c"}):
+        with pytest.raises(ValueError, match="NULL commit"):
+            eng.ingest(bad, commits_per_epoch=2, **kw)
+        assert eng.watermark() is None
+        assert not os.path.exists(os.path.join(eng.warehouse, "_stage"))
