@@ -15,18 +15,21 @@ Exactly-once contract
 * Epoch write path (one for every epoch): the fold output is written ONCE,
   dynamic-partitioned by ``(kind, _bucket)``, into a scratch directory
   (segments and relations share one bucket layout: ingest re-converges a
-  diverged pair before its first epoch); the touched buckets' kept rows
-  are rewritten beside it; then each table adopts its files by hard link.
-  Commit order: relations + metrics (both replay-safe: the same edges
-  re-upsert; metrics rows re-append under a higher ``attempt`` and the read
-  path keeps only each epoch's latest attempt), then **segments**, then the
-  commit-log append.  The fold's resume state comes from segments alone, so
-  a crash anywhere before the segments commit replays the fold over
-  unchanged input and converges; a crash between the segments commit and
-  the commit-log append is caught by the epoch guard (segments' snapshot
-  summary already carries this epoch's ``end_commit``) and the replay skips
-  straight to the bookkeeping — re-folding there would wrongly intersect
-  the edition with its own descendants.
+  diverged pair before its first epoch); segments' kept rows of the
+  touched buckets are rewritten beside it; then each table adopts its
+  files by hard link.  Relations are insert-only (each edge's child is a
+  node the epoch created), so theirs are an append.  Commit order:
+  relations + metrics (both replay-safe: a replay that finds its edges
+  already in the manifest merges them instead; metrics rows re-append
+  under a higher ``attempt`` and the read path keeps only each epoch's
+  latest attempt), then **segments**, then the commit-log append.  The
+  fold's resume state comes from segments alone, so a crash anywhere
+  before the segments commit replays the fold over unchanged input and
+  converges; a crash between the segments commit and the commit-log
+  append is caught by the epoch guard (segments' snapshot summary already
+  carries this epoch's ``end_commit``) and the replay skips straight to
+  the bookkeeping — re-folding there would wrongly intersect the edition
+  with its own descendants.
 * Duplicate / reordered events inside an epoch are collapsed by a
   deterministic last-writer-wins rule per ``(repo, path, commit)`` inside the
   fold (window-dedup semantics without the extra shuffle).
@@ -1003,10 +1006,11 @@ class CdcEngine:
           per epoch; once past ``max_log_files`` they are rewritten into a
           single file (metrics with replay-dedup applied) so the watermark
           read stays O(1) in epochs, not O(K) tiny parquet opens;
-        * **binpack compaction** — buckets the hot-key salted writes or
-          skewed epochs fragmented past ``max_files_per_bucket`` files are
-          coalesced (``LakeTable.compact_files``; O(fragmented buckets), the
-          Iceberg rewrite_data_files binpack analog; ``None`` disables);
+        * **binpack compaction** — buckets that relations' per-epoch
+          appends, the hot-key salted writes or skewed epochs fragmented
+          past ``max_files_per_bucket`` files are coalesced
+          (``LakeTable.compact_files``; O(fragmented buckets), the Iceberg
+          rewrite_data_files binpack analog; ``None`` disables);
         * **snapshot expiry** — drop snapshot metadata beyond the last
           ``keep_snapshots`` versions and GC unreferenced data files, keeping
           COW storage amplification bounded (the Iceberg
@@ -1455,12 +1459,15 @@ class CdcEngine:
     def _start_writes(self, prep: dict) -> None:
         """Submit the epoch's remaining WRITES concurrently; commits stay
         deferred.  The change files already exist (the combined scratch
-        write in prepare), so the data jobs left are the per-table KEPT
-        rewrites (rows of touched buckets the epoch did not update — only
+        write in prepare), so the data jobs left are the segments KEPT
+        rewrite (rows of touched buckets the epoch did not update — only
         when those buckets hold files) plus the metrics append built from
-        the scratch timing files and the dead-letter append.  Must run after
-        the previous epoch's commits (kept rows read the then-current
-        table)."""
+        the scratch timing files and the dead-letter append.  Relations
+        append their edges with no kept rewrite, unless a crash between the
+        relations and segments commits already landed them (a manifest
+        check like the segments epoch guard): then they merge like
+        segments.  Must run after the previous epoch's commits (kept rows
+        and that check read the then-current tables)."""
         from concurrent.futures import ThreadPoolExecutor
 
         durs: dict[str, float] = {}
@@ -1510,11 +1517,18 @@ class CdcEngine:
             "seg_kept", kept_write, self.segments, seg_dir,
             os.path.join(scratch, "kept_segments"), ["gid"], prep["seg_schema"],
         ))
-        prep["f_rel"] = pool.submit(timed(
-            "rel_kept", kept_write, self.relations, rel_dir,
-            os.path.join(scratch, "kept_relations"),
-            ["parent_gid", "child_gid"], rel_schema,
-        ))
+        # relations hold the edges of every commit up to rel_end, which
+        # never goes down: a resume with other epoch sizes still merges
+        # every epoch a crashed attempt covered
+        rel_end = str(self.relations.latest_summary_value("end_commit") or "")
+        prep["rel_replay"] = rel_end >= prep["start_commit"]
+        prep["rel_end"] = max(prep["end_commit"], rel_end)
+        if prep["rel_replay"]:
+            prep["f_rel"] = pool.submit(timed(
+                "rel_kept", kept_write, self.relations, rel_dir,
+                os.path.join(scratch, "kept_relations"),
+                ["parent_gid", "child_gid"], rel_schema,
+            ))
         if os.path.isdir(tim_dir):
 
             def met_from_timing(tim_dir=tim_dir, epoch=epoch, attempt=prep["attempt"]):
@@ -1576,14 +1590,14 @@ class CdcEngine:
 
     def _commit_epoch(self, prep: dict) -> EpochStats:
         """COMMIT order is the exactly-once contract (see module docstring):
-        relations + metrics first (both replay-safe — relations upserts the
-        same edges, metrics re-appends under a higher attempt), the SEGMENTS
-        commit last, because the fold reads its resume state from segments
-        alone.  Any crash before the segments commit replays the fold over
-        unchanged input state; a crash after it is caught by the epoch
-        guard.  Only the atomic snapshot links are sequenced here — the data
-        writes ran concurrently (and, pipelined, under the NEXT epoch's
-        fold)."""
+        relations + metrics first (both replay-safe — relations append, or
+        merge over a crashed attempt's edges; metrics re-append under a
+        higher attempt), the SEGMENTS commit last, because the fold reads
+        its resume state from segments alone.  Any crash before the
+        segments commit replays the fold over unchanged input state; a
+        crash after it is caught by the epoch guard.  Only the atomic
+        snapshot links are sequenced here — the data writes ran
+        concurrently (and, pipelined, under the NEXT epoch's fold)."""
         import sys
 
         marks = prep["marks"]
@@ -1596,8 +1610,10 @@ class CdcEngine:
         # wait for kept writes + metrics append, then ADOPT the combined
         # scratch files + kept files into each table's manifest by hard link
         # (no further data jobs)
+        replay = prep["rel_replay"]
         prep["f_seg"].result()
-        prep["f_rel"].result()
+        if replay:
+            prep["f_rel"].result()
         commit_met = prep["f_met"].result()
         commit_dead = prep["f_dead"].result() if "f_dead" in prep else (lambda: None)
         prep["pool"].shutdown(wait=False)
@@ -1607,7 +1623,9 @@ class CdcEngine:
         commit_rel = self.relations.adopt_merge(
             bucket_files(os.path.join(scratch, "kind=relation"),
                          os.path.join(scratch, "kept_relations")),
-            prep["rel_schema"], prep["buckets"], summary,
+            prep["rel_schema"], prep["buckets"] if replay else [],
+            {**summary, "end_commit": prep["rel_end"]},
+            operation="merge" if replay else "append",
         )
         commit_seg = self.segments.adopt_merge(
             bucket_files(os.path.join(scratch, "kind=segment"),

@@ -925,6 +925,7 @@ class LakeTable:
         schema: StructType,
         touched_buckets: list[int],
         summary: dict[str, Any] | None = None,
+        operation: str = "merge",
     ):
         """MERGE commit from EXTERNALLY-written data files.
 
@@ -934,6 +935,9 @@ class LakeTable:
         hard link (no data copy, no Spark job); old files of touched buckets
         drop from the manifest; the returned zero-argument commit callable
         links the snapshot when the caller sequences it.
+
+        With no touched buckets and ``operation="append"`` it commits an
+        append that :meth:`read_appended` reads across (insert-only tables).
 
         This is how the ingest epoch writes ONE combined
         ``partitionBy(kind, bucket)`` job for all its tables instead of one
@@ -962,6 +966,8 @@ class LakeTable:
                 "adopt_merge bypasses CHECK validation; constrained tables "
                 "must use merge_upsert"
             )
+        if operation == "append" and touched_buckets:  # read_appended's contract
+            raise ValueError("an append adopt drops no buckets")
         merged = self._merged_with(schema)
         version = self.version() + 1
         dest = os.path.join(self.path, "data", f"v{version}")
@@ -983,7 +989,7 @@ class LakeTable:
         ] + manifest
 
         def commit() -> int:
-            self._commit_snapshot(version, merged, files, "merge", summary)
+            self._commit_snapshot(version, merged, files, operation, summary)
             return version
 
         return commit
@@ -1034,7 +1040,9 @@ class LakeTable:
 
         Sound because every write path is copy-on-write at bucket
         granularity: a bucket whose manifest entries are identical carries
-        the exact same immutable files, hence identical rows."""
+        the exact same immutable files, hence identical rows.  An append
+        (CDC relations, except a replayed epoch) changes the buckets it adds
+        files to."""
         if (
             old["n_buckets"] != new["n_buckets"]
             or old.get("bucket_cols", old["key_cols"])
@@ -1162,7 +1170,8 @@ class LakeTable:
         each file is picked up exactly once → exactly-once rows with a
         checkpointed ``writeStream``.  (Keyed/COW tables rewrite whole
         buckets on merge, which a file source would double-count — use
-        :meth:`changes` batch-incrementally for those.)"""
+        :meth:`changes` batch-incrementally for those — CDC relations too:
+        they append, but replayed epochs and compaction rewrite buckets.)"""
         return (
             self.spark.readStream.schema(self.schema())
             .option("pathGlobFilter", "*.parquet")

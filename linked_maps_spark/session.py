@@ -38,7 +38,11 @@ def get_spark(
     with separate heaps — the faithful sandbox analog of an E-executor
     cluster (each executor gets ``cores`` cores), used for the N-vs-4N
     scaling evidence where a shared heap would conflate GC contention with
-    scaling behavior."""
+    scaling behavior.
+
+    A read of more than ``parallelPartitionDiscovery.threshold`` paths (32
+    by default) lists them in a Spark job; lake reads take every path from
+    the manifest, so the threshold is out of reach and no read lists."""
     cores = str(cores or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if executors is not None:
         master = f"local-cluster[{executors},{cores},{executor_mem_mb}]"
@@ -70,6 +74,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # keep scans splittable at target scale
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
     )

@@ -4,7 +4,7 @@ import os
 
 import pytest
 
-from linked_maps_spark.lakehouse import CommitConflict, LakeTable
+from linked_maps_spark.lakehouse import CommitConflict, LakeTable, bucket_files
 from linked_maps_spark.util import table_digest
 
 
@@ -554,6 +554,27 @@ def test_changes_requires_keys_and_ordered_versions(spark, tmp_path, tbl):
         tbl.changes(1, 0)
 
 
+def test_adopt_append_is_read_appended_delta(spark, tbl, tmp_path):
+    """adopt_merge with no dropped buckets and ``operation="append"``
+    commits an append: every old file stays, and ``read_appended`` reads
+    exactly the adopted rows.  An append that drops buckets is refused."""
+    tbl.append(_df(spark, [(f"k{i}", i) for i in range(8)]))
+    before = {f["path"] for f in tbl.snapshot()["files"]}
+    new = _df(spark, [("n0", 100), ("n1", 101)])
+    ext = str(tmp_path / "t" / "ext_append")
+    new.withColumn("_bucket", tbl.bucket_expr(new)).write.partitionBy(
+        "_bucket"
+    ).parquet(ext)
+    files = bucket_files(ext)
+    with pytest.raises(ValueError, match="drops no buckets"):
+        tbl.adopt_merge(files, tbl.schema(), [0], operation="append")
+    v = tbl.adopt_merge(files, tbl.schema(), [], operation="append")()
+    snap = tbl.snapshot()
+    assert snap["operation"] == "append" and before < {f["path"] for f in snap["files"]}
+    assert {r["k"] for r in tbl.read_appended(v - 1, v).collect()} == {"n0", "n1"}
+    assert tbl.read().count() == 10
+
+
 def test_read_appended_incremental(spark, tmp_path):
     log = LakeTable.create(
         spark, str(tmp_path / "l"), "m string, i long", key_cols=[]
@@ -756,3 +777,27 @@ def test_read_py4j_calls_flat_in_file_count(spark, tmp_path, py4j_calls):
         assert sorted(r["k"] for r in full.collect()) == sorted(f"k{i}" for i in range(n_files))
     print("read, read_where py4j calls:", calls)
     assert calls[4] == calls[32], calls
+
+
+def test_read_of_many_files_submits_no_listing_job(spark, tmp_path):
+    """A read hands Spark every file its manifest lists.  Past 32 paths
+    Spark's default lists them with a parallel job when the DataFrame is
+    created; the engine's session lists them on the driver instead, so
+    building the read submits no job before an action."""
+    import pyarrow as pa
+
+    t = LakeTable.create(spark, str(tmp_path / "many"), "k string, v long")
+    for i in range(40):
+        t.append_arrow(pa.table({"k": [f"k{i}"], "v": pa.array([i], pa.int64())}))
+    assert len(t.snapshot()["files"]) >= 33
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest_job() -> int:  # ids are dense; the retained list is capped
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    before = newest_job()
+    df = t.read()
+    assert newest_job() == before
+    assert df.count() == 40

@@ -290,7 +290,7 @@ def test_salted_quarantine_equals_plain_quarantine(spark, tmp_path):
 #: salted fold (slices + coordinator).  Driver plan construction may only
 #: get cheaper: lower this bound when a change removes round trips, never
 #: raise it.
-SALTED_TWO_EPOCH_INGEST_PY4J = 1054
+SALTED_TWO_EPOCH_INGEST_PY4J = 978
 
 
 def test_salted_two_epoch_ingest_py4j_pinned(spark, tmp_path, py4j_calls):
