@@ -188,7 +188,8 @@ class FoldResult:
 
 
 def leaves_from_rows(leaves_in: list[dict], geom_type: str = G.LINE) -> "list[_Node]":
-    """Rehydrate leaf ``_Node``s from ``segments`` table rows (seq order)."""
+    """Rehydrate the live leaf ``_Node``s from ``segments`` table rows (seq
+    order); retired rows are dropped."""
     _base = {c for c, _ in SEGMENT_BASE_COLUMNS} | {"is_leaf", "retired"}
     return [
         _Node(
@@ -205,6 +206,7 @@ def leaves_from_rows(leaves_in: list[dict], geom_type: str = G.LINE) -> "list[_N
             sha=r.get("content_sha256"),
         )
         for r in sorted(leaves_in, key=lambda r: int(r["seq"]))
+        if not r.get("retired")
     ]
 
 
@@ -305,7 +307,10 @@ class _Lattice:
         self.repo, self.path = repo, path
         self.geom_type, self.on_error = geom_type, on_error
         self.leaves: list[_Node] = leaves_from_rows(leaves_in, geom_type)
-        self.first_seq = max((l.seq for l in self.leaves), default=-1) + 1
+        # a key's highest-seq node is always a leaf (a child is created after
+        # its parent), but it may be retired: numbering past the retired rows
+        # too keeps a re-add after a tombstone from reusing their seqs
+        self.first_seq = max((int(r["seq"]) for r in leaves_in), default=-1) + 1
         self.next_seq = self.first_seq
         self.created: list[_Node] = []
         self.touched: dict[str, _Node] = {}
@@ -477,7 +482,8 @@ def fold_key(
     carried through onto the edition node — the schema-evolution path).
     ``leaves_in``: current ``is_leaf`` rows of the ``segments`` table for this
     key (``gid, name, seq, wkt, editions``), i.e. resume state lives in the
-    lake table itself, not in Spark state stores (SURVEY.md §7.3).
+    lake table itself, not in Spark state stores (SURVEY.md §7.3).  Retired
+    rows only advance the seq numbering; their ``wkt`` may be NULL.
 
     ``on_error``: ``"raise"`` (default — a malformed event aborts the fold,
     the exactly-once replay contract) or ``"quarantine"`` — a poison event

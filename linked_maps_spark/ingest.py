@@ -18,18 +18,22 @@ Exactly-once contract
   diverged pair before its first epoch); segments' kept rows of the
   touched buckets are rewritten beside it; then each table adopts its
   files by hard link.  Relations are insert-only (each edge's child is a
-  node the epoch created), so theirs are an append.  Commit order:
-  relations + metrics (both replay-safe: a replay that finds its edges
-  already in the manifest merges them instead; metrics rows re-append
-  under a higher ``attempt`` and the read path keeps only each epoch's
-  latest attempt), then **segments**, then the commit-log append.  The
-  fold's resume state comes from segments alone, so a crash anywhere
-  before the segments commit replays the fold over unchanged input and
-  converges; a crash between the segments commit and the commit-log
-  append is caught by the epoch guard (segments' snapshot summary already
-  carries this epoch's ``end_commit``) and the replay skips straight to
-  the bookkeeping — re-folding there would wrongly intersect the edition
-  with its own descendants.
+  node the epoch created), so theirs are always an append.  Commit order:
+  relations + metrics (metrics rows re-append under a higher ``attempt``
+  on a replay and the read path keeps only each epoch's latest attempt),
+  then **segments**, then the commit-log append.
+* One replay rule: each table's snapshot summary records the
+  ``end_commit`` of the last epoch it committed.  A crash can leave
+  relations, or relations and segments, holding an epoch the commit log
+  lacks.  A resume therefore ends its FIRST epoch at the highest such
+  ``end_commit`` above the watermark, so that epoch re-covers the crashed
+  one (or a prefix of it), and each table whose ``end_commit`` reaches the
+  epoch's already holds its output and skips the write.  Segments that
+  landed skip the whole epoch (re-folding would intersect the edition
+  with its own descendants) and go straight to the commit-log row;
+  relations that landed skip only their adopt.  The fold is deterministic
+  over the same resume state (segments alone), so the skipped output is
+  exactly what a re-write would add.
 * Duplicate / reordered events inside an epoch are collapsed by a
   deterministic last-writer-wins rule per ``(repo, path, commit)`` inside the
   fold (window-dedup semantics without the extra shuffle).
@@ -813,14 +817,16 @@ class CdcEngine:
         buckets: list[int],
         patch_changes: DataFrame | None,
     ) -> DataFrame:
-        """Resume-state leaves for the batch keys: bucket-pruned table read,
-        optionally patched with the in-flight previous epoch's change set
-        (pipelined ingest).  The patch applies exactly the MERGE the table
-        is about to commit — anti-join out updated gids, union the new rows,
-        re-filter leaves — so downstream sees post-merge state.  Opens only
-        the buckets of the keys, which may repeat (semi joins ignore that)."""
+        """Resume-state leaves (live and retired) for the batch keys:
+        bucket-pruned table read, optionally patched with the in-flight
+        previous epoch's change set (pipelined ingest).  The patch applies
+        exactly the MERGE the table is about to commit — anti-join out
+        updated gids, union the new rows, re-filter leaves — so downstream
+        sees post-merge state.  Retired leaves only carry the key's seq
+        high-water mark into the fold.  Opens only the buckets of the keys,
+        which may repeat (semi joins ignore that)."""
         base = (
-            self.segments.read_where(self._LEAF_PREDS, buckets=buckets)
+            self.segments.read_where([("is_leaf", "=", True)], buckets=buckets)
             .join(batch_keys, on=["repo", "path"], how="left_semi")
         )
         if patch_changes is None:
@@ -829,7 +835,7 @@ class CdcEngine:
         kept = base.join(delta.select("gid"), on="gid", how="left_anti")
         return (
             kept.unionByName(delta, allowMissingColumns=True)
-            .filter("is_leaf AND NOT retired")
+            .filter("is_leaf")
         )
 
     # ---------------------------------------------------------------- ingest
@@ -865,6 +871,13 @@ class CdcEngine:
         **One WAL census per call** (:func:`_wal_census`): a single job
         learns every pending commit's event count and touched buckets; each
         epoch sums its chunk of commits, so no epoch runs a stats job.
+
+        **One replay rule** (module docstring): segments' and relations'
+        ``end_commit`` are read once per call.  The first epoch ends at the
+        higher of the two when it lies above the watermark (a crashed
+        attempt landed it); later epochs are cut by ``commits_per_epoch``.
+        A table whose ``end_commit`` reaches an epoch's skips its write:
+        segments the whole epoch, relations their adopt.
 
         **Pipelined epochs**: epoch k+1's PREPARE (resume-state read, fold
         and combined write) overlaps epoch k's merge WRITES — the
@@ -939,8 +952,8 @@ class CdcEngine:
         # O(1) epoch numbering: every commit-log append records its epoch in
         # the snapshot summary, so the next epoch id is a manifest read.  A
         # log with no files starts at epoch 0; the count() job runs only
-        # when files exist but no summary carries an epoch (e.g. right after
-        # log compaction + expiry).
+        # when files exist but no summary carries an epoch (a log whose
+        # compaction predates the summary marks' inheritance).
         last_epoch = self.commit_log.latest_summary_value("epoch")
         if last_epoch is not None:
             epoch0 = int(last_epoch) + 1
@@ -948,9 +961,17 @@ class CdcEngine:
             epoch0 = 0
         else:
             epoch0 = self.commit_log.read().count()
-        chunks = [
-            commits[i : i + commits_per_epoch]
-            for i in range(0, len(commits), commits_per_epoch)
+        # the one replay rule (module docstring): the first epoch ends at the
+        # highest end_commit a crashed attempt landed above the watermark
+        seg_mark, rel_mark = (
+            str(t.latest_summary_value("end_commit") or "")
+            for t in (self.segments, self.relations)
+        )
+        head = [c for c in commits if c <= max(seg_mark, rel_mark)]
+        rest = commits[len(head):]
+        chunks = ([head] if head else []) + [
+            rest[i : i + commits_per_epoch]
+            for i in range(0, len(rest), commits_per_epoch)
         ]
         if max_epochs is not None:
             chunks = chunks[:max_epochs]
@@ -960,25 +981,30 @@ class CdcEngine:
                 # a chunk is a contiguous run of the sorted pending commits,
                 # so its census rows are exactly the events the epoch's
                 # commit-range filter selects
+                n_events = sum(census[c][0] for c in chunk)
+                if seg_mark >= chunk[-1]:
+                    # segments landed (only ever the first chunk, so nothing
+                    # is in flight): no fold runs, and the commit-log row's
+                    # key count comes from a dedicated (rare) job
+                    t0 = time.monotonic()
+                    n_keys = (
+                        change_log.filter(F.col("commit").between(chunk[0], chunk[-1]))
+                        .select("repo", "path").distinct().count()
+                    )
+                    stats.epochs.append(self._finish_epoch(
+                        epoch0 + j, chunk[0], chunk[-1], n_events, n_keys, t0,
+                    ))
+                    continue
                 prep = self._prepare_epoch(
-                    epoch0 + j, change_log, chunk[0], chunk[-1],
-                    sum(census[c][0] for c in chunk),
+                    epoch0 + j, change_log, chunk[0], chunk[-1], n_events,
                     sorted(set().union(*(census[c][1] for c in chunk))),
                     patch_changes=None if prev is None else prev["patch_df"],
                 )
+                prep["rel_landed"] = rel_mark >= chunk[-1]
                 if prev is not None:
                     stats.epochs.append(self._commit_epoch(prev))
-                    prev = None
-                if prep.get("skip"):
-                    stats.epochs.append(
-                        self._finish_epoch(
-                            prep["epoch"], prep["start_commit"], prep["end_commit"],
-                            prep["n_events"], prep["n_keys"], prep["t0"],
-                        )
-                    )
-                else:
-                    prev = prep
-                    self._start_writes(prep)
+                prev = prep
+                self._start_writes(prep)
             if prev is not None:
                 stats.epochs.append(self._commit_epoch(prev))
                 prev = None
@@ -1033,27 +1059,16 @@ class CdcEngine:
         if has_dead:
             log_tables.append((self.dead_letter, self.read_dead_letter))
         for tbl, dedup_read in log_tables:
-            dedup = dedup_read is not None
             if len(tbl.snapshot()["files"]) > max_log_files:
-                df = dedup_read() if dedup else tbl.read()
-                summary = {"reason": "log-compaction"}
-                if dedup:
+                if dedup_read is None:
+                    df = tbl.read()
+                else:
                     # compaction re-bases attempts: deduped rows all become
                     # attempt 0 of the compacted generation (later appends
                     # commit at higher versions, so monotonicity holds)
-                    df = df.withColumn("attempt", F.lit(0).cast("long"))
-                else:
-                    # the O(1) watermark reads the newest snapshot summary's
-                    # end_commit (and the epoch numbering its epoch); the
-                    # compaction overwrite must carry both forward or expiry
-                    # could strand the metadata paths
-                    wm = self.watermark()
-                    if wm is not None:
-                        summary["end_commit"] = wm
-                    ep = self.commit_log.latest_summary_value("epoch")
-                    if ep is not None:
-                        summary["epoch"] = ep
-                tbl.overwrite(df, summary=summary)
+                    df = dedup_read().withColumn("attempt", F.lit(0).cast("long"))
+                # the overwrite inherits the log's epoch / end_commit marks
+                tbl.overwrite(df, summary={"reason": "log-compaction"})
         expire = [self.segments, self.relations, self.commit_log, self.metrics]
         if has_dead:
             expire.append(self.dead_letter)
@@ -1117,9 +1132,8 @@ class CdcEngine:
         see :meth:`_share_layout`) come from the call's WAL census, so the
         epoch runs no stats job of its own.  The batch is not cached: the
         fold's event side reads it once, and the leaf semi-join only its
-        ``(repo, path)`` columns.  Returns the epoch context for :meth:`_start_writes` / :meth:`_commit_epoch`,
-        or ``{"skip": True, ...}`` when the exactly-once guard says this
-        epoch's state already landed."""
+        ``(repo, path)`` columns.  Returns the epoch context for
+        :meth:`_start_writes` / :meth:`_commit_epoch`."""
         trace = os.environ.get("LMS_TRACE_INGEST") == "1"
         marks: list[tuple[str, float]] = []
 
@@ -1134,26 +1148,6 @@ class CdcEngine:
         batch = change_log.filter(
             (F.col("commit") >= F.lit(start_commit)) & (F.col("commit") <= F.lit(end_commit))
         )
-
-        # Exactly-once replay guard: the segments merge is the LAST state
-        # write of an epoch (relations and metrics precede it and are
-        # idempotent re-applied).  If segments already carry this epoch's
-        # end_commit, the crash hit the window between that merge and the
-        # commit-log append — re-folding now would intersect the edition with
-        # its own descendants, so skip straight to the bookkeeping.  (A skip
-        # can only trigger on the first epoch of a call — later epochs'
-        # commits are excluded by the watermark — so it never races the
-        # pipeline's in-flight writes.)
-        seg_applied = self.segments.latest_summary_value("end_commit")
-        if seg_applied is not None and str(seg_applied) >= end_commit:
-            # replay-only path: no fold runs, so the commit-log row's key
-            # count comes from a dedicated (rare) job here
-            n_keys = batch.select("repo", "path").distinct().count()
-            return {
-                "skip": True, "epoch": epoch, "start_commit": start_commit,
-                "end_commit": end_commit, "n_events": n_events,
-                "n_keys": n_keys, "t0": t0,
-            }
 
         # resume state: current leaves of only the keys present in this
         # batch, read from only the buckets those keys hash into.  With the
@@ -1215,7 +1209,12 @@ class CdcEngine:
                 q(c) if c in st_cols else f"CAST(NULL AS {t}) AS {q(c)}"
                 for c, t in extras
             ],
-            *[f"CAST({c} AS {t}) AS {c}" for c, t in _STATE_TYPES],
+            # a retired leaf only carries its seq into the fold: a NULL wkt
+            # keeps the batch parse off it
+            *[
+                f"CAST({'IF(retired, NULL, wkt)' if c == 'wkt' else c} AS {t}) AS {c}"
+                for c, t in _STATE_TYPES
+            ],
             "false AS _is_event",
         )
         n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1463,11 +1462,9 @@ class CdcEngine:
         rewrite (rows of touched buckets the epoch did not update — only
         when those buckets hold files) plus the metrics append built from
         the scratch timing files and the dead-letter append.  Relations
-        append their edges with no kept rewrite, unless a crash between the
-        relations and segments commits already landed them (a manifest
-        check like the segments epoch guard): then they merge like
-        segments.  Must run after the previous epoch's commits (kept rows
-        and that check read the then-current tables)."""
+        need no write here: they adopt their edge files as an append.  Must
+        run after the previous epoch's commits (the kept rows read the
+        then-current table)."""
         from concurrent.futures import ThreadPoolExecutor
 
         durs: dict[str, float] = {}
@@ -1486,49 +1483,26 @@ class CdcEngine:
         prep["durs"] = durs
         prep["pool"] = pool
 
-        def kept_write(table, src_dir, out_dir, key_cols, src_schema):
+        seg_dir = os.path.join(scratch, "kind=segment")
+        tim_dir = os.path.join(scratch, "kind=timing")
+
+        def kept_segments():
+            seg, seg_schema = self.segments, prep["seg_schema"]
             keep = set(buckets)
-            if not any(f["bucket"] in keep for f in table.snapshot()["files"]):
-                return None  # nothing to keep: buckets had no files
+            if not any(f["bucket"] in keep for f in seg.snapshot()["files"]):
+                return  # nothing to keep: buckets had no files
             # align kept rows to table-schema ∪ source-schema (the same
             # evolution the adopting commit records)
-            merged = table._merged_with(src_schema)
-            cur = table._align_to(table.read(buckets=buckets), merged)
-            if os.path.isdir(src_dir):
-                src_keys = (
-                    self.spark.read.schema(src_schema).parquet(src_dir)
-                    .select(*key_cols)
-                )
-                cur = cur.join(src_keys, on=key_cols, how="left_anti")
+            cur = seg._align_to(seg.read(buckets=buckets), seg._merged_with(seg_schema))
+            if os.path.isdir(seg_dir):
+                src_keys = self.spark.read.schema(seg_schema).parquet(seg_dir).select("gid")
+                cur = cur.join(src_keys, on=["gid"], how="left_anti")
             (
-                cur.withColumn("_bucket", table.bucket_expr(cur))
-                .write.partitionBy("_bucket").parquet(out_dir)
+                cur.withColumn("_bucket", seg.bucket_expr(cur))
+                .write.partitionBy("_bucket").parquet(os.path.join(scratch, "kept_segments"))
             )
-            return out_dir
 
-        rel_schema = DataType.fromDDL(
-            ", ".join(f"{c} {t}" for c, t in RELATION_COLUMNS)
-        )
-        prep["rel_schema"] = rel_schema
-        seg_dir = os.path.join(scratch, "kind=segment")
-        rel_dir = os.path.join(scratch, "kind=relation")
-        tim_dir = os.path.join(scratch, "kind=timing")
-        prep["f_seg"] = pool.submit(timed(
-            "seg_kept", kept_write, self.segments, seg_dir,
-            os.path.join(scratch, "kept_segments"), ["gid"], prep["seg_schema"],
-        ))
-        # relations hold the edges of every commit up to rel_end, which
-        # never goes down: a resume with other epoch sizes still merges
-        # every epoch a crashed attempt covered
-        rel_end = str(self.relations.latest_summary_value("end_commit") or "")
-        prep["rel_replay"] = rel_end >= prep["start_commit"]
-        prep["rel_end"] = max(prep["end_commit"], rel_end)
-        if prep["rel_replay"]:
-            prep["f_rel"] = pool.submit(timed(
-                "rel_kept", kept_write, self.relations, rel_dir,
-                os.path.join(scratch, "kept_relations"),
-                ["parent_gid", "child_gid"], rel_schema,
-            ))
+        prep["f_seg"] = pool.submit(timed("seg_kept", kept_segments))
         if os.path.isdir(tim_dir):
 
             def met_from_timing(tim_dir=tim_dir, epoch=epoch, attempt=prep["attempt"]):
@@ -1590,12 +1564,12 @@ class CdcEngine:
 
     def _commit_epoch(self, prep: dict) -> EpochStats:
         """COMMIT order is the exactly-once contract (see module docstring):
-        relations + metrics first (both replay-safe — relations append, or
-        merge over a crashed attempt's edges; metrics re-append under a
-        higher attempt), the SEGMENTS commit last, because the fold reads
-        its resume state from segments alone.  Any crash before the
-        segments commit replays the fold over unchanged input state; a
-        crash after it is caught by the epoch guard.  Only the atomic
+        relations + metrics first (relations append their edges unless the
+        replay rule found them landed; metrics re-append under a higher
+        attempt), the SEGMENTS commit last, because the fold reads its
+        resume state from segments alone.  Any crash before the segments
+        commit replays the fold over unchanged input state; a crash after
+        it is replayed as the commit-log row alone.  Only the atomic
         snapshot links are sequenced here — the data writes ran
         concurrently (and, pipelined, under the NEXT epoch's fold)."""
         import sys
@@ -1610,22 +1584,21 @@ class CdcEngine:
         # wait for kept writes + metrics append, then ADOPT the combined
         # scratch files + kept files into each table's manifest by hard link
         # (no further data jobs)
-        replay = prep["rel_replay"]
         prep["f_seg"].result()
-        if replay:
-            prep["f_rel"].result()
         commit_met = prep["f_met"].result()
         commit_dead = prep["f_dead"].result() if "f_dead" in prep else (lambda: None)
         prep["pool"].shutdown(wait=False)
         scratch = prep["scratch"]
 
         summary = {"epoch": prep["epoch"], "end_commit": prep["end_commit"]}
-        commit_rel = self.relations.adopt_merge(
-            bucket_files(os.path.join(scratch, "kind=relation"),
-                         os.path.join(scratch, "kept_relations")),
-            prep["rel_schema"], prep["buckets"] if replay else [],
-            {**summary, "end_commit": prep["rel_end"]},
-            operation="merge" if replay else "append",
+        # relations that already hold the epoch's edges skip the adopt
+        commit_rel = (
+            (lambda: None) if prep["rel_landed"]
+            else self.relations.adopt_merge(
+                bucket_files(os.path.join(scratch, "kind=relation")),
+                DataType.fromDDL(", ".join(f"{c} {t}" for c, t in RELATION_COLUMNS)),
+                [], summary, operation="append",
+            )
         )
         commit_seg = self.segments.adopt_merge(
             bucket_files(os.path.join(scratch, "kind=segment"),

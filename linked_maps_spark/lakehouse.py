@@ -18,10 +18,10 @@ parquet — same public semantics, same scale design:
   schema; reads project every (older) file to the current schema, absent
   columns as NULL (parquet reader is schema-tolerant).
 * **Time travel** — ``read(version=k)`` reads any retained snapshot.
-* **Exactly-once hooks** — snapshot ``summary`` carries the writer's epoch /
-  offsets; an ingest replay checks the committed epoch before re-applying
-  (MERGE itself is idempotent, so the check is an optimization, not a
-  correctness crutch).
+* **Exactly-once hooks** — snapshot ``summary`` carries the writer's
+  ``epoch`` / ``end_commit`` marks; an ingest replay reads them to skip
+  what already landed.  A commit that sets no mark carries its parent's
+  forward, so maintenance followed by snapshot expiry never loses them.
 
 Skew: writes repartition by ``(bucket, salt)`` where
 ``salt = pmod(xxhash64(keys...), salt_n)`` so a hot bucket's write fans out
@@ -43,6 +43,9 @@ from pyspark.sql.types import DataType, StructType
 from .util import balanced_part_col, quote_ident, zvalue_col
 
 _SNAP_DIR = "_snapshots"
+#: exactly-once summary marks every commit inherits from its parent unless it
+#: sets them itself (see the module docstring)
+_MARKS = ("epoch", "end_commit")
 
 # JVM view -> commons-lang3 ``StringUtils`` (Spark's own dependency), bound
 # once per view: ``java_import`` edits the view's shared import namespace
@@ -515,13 +518,14 @@ class LakeTable:
         key_cols=None, n_buckets=None, bucket_cols=None, constraints=None,
     ):
         prev = None if version == 0 else self.snapshot(version - 1)
+        marks = {k: prev["summary"][k] for k in _MARKS if k in prev["summary"]} if prev else {}
         snap = {
             "version": version,
             "parent": version - 1 if version else None,
             "operation": operation,
             "schema": schema.jsonValue(),
             "files": files,
-            "summary": summary or {},
+            "summary": {**marks, **(summary or {})},
             "key_cols": key_cols if key_cols is not None else prev["key_cols"],
             "n_buckets": n_buckets if n_buckets is not None else prev["n_buckets"],
             "bucket_cols": (
@@ -1041,8 +1045,7 @@ class LakeTable:
         Sound because every write path is copy-on-write at bucket
         granularity: a bucket whose manifest entries are identical carries
         the exact same immutable files, hence identical rows.  An append
-        (CDC relations, except a replayed epoch) changes the buckets it adds
-        files to."""
+        (CDC relations) changes the buckets it adds files to."""
         if (
             old["n_buckets"] != new["n_buckets"]
             or old.get("bucket_cols", old["key_cols"])
@@ -1171,7 +1174,7 @@ class LakeTable:
         checkpointed ``writeStream``.  (Keyed/COW tables rewrite whole
         buckets on merge, which a file source would double-count — use
         :meth:`changes` batch-incrementally for those — CDC relations too:
-        they append, but replayed epochs and compaction rewrite buckets.)"""
+        they append, but compaction rewrites buckets.)"""
         return (
             self.spark.readStream.schema(self.schema())
             .option("pathGlobFilter", "*.parquet")
@@ -1479,7 +1482,10 @@ class LakeTable:
         cutoff = max(0, v - keep_last + 1)
         keep_files: set[str] = set()
         for i in range(cutoff, v + 1):
-            keep_files |= {f["path"] for f in self.snapshot(i)["files"]}
+            try:
+                keep_files |= {f["path"] for f in self.snapshot(i)["files"]}
+            except FileNotFoundError:  # expired by an earlier, smaller keep_last
+                continue
         deleted = 0
         data_root = os.path.join(self.path, "data")
         if os.path.isdir(data_root):

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .changelog import CHANGE_LOG_SCHEMA
@@ -193,151 +192,6 @@ def stream_scd2(
     return q
 
 
-def windowed_event_counts(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_dir: str,
-    query_name: str,
-    window: str = "1 hour",
-    watermark: str = "1 day",
-    schema: str = EVENTS_SCHEMA,
-) -> DataFrame:
-    """§2.11 streaming windowed aggregation with a watermark: per
-    (event-time window, event_type) counts over a file stream.
-
-    The watermark bounds the aggregation state Spark keeps for late data —
-    at 100 TB/day this is what makes the operator's memory finite.  Drains
-    with ``availableNow`` into a memory sink and returns the result frame
-    (tests assert stream ≡ batch)."""
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-        )
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-def user_running_stats(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_dir: str,
-    query_name: str,
-    schema: str = EVENTS_SCHEMA,
-) -> DataFrame:
-    """§2.11 custom stateful streaming operator via
-    ``applyInPandasWithState``: per-user running (event count, value sum) —
-    the arbitrary-state shape Spark's built-in aggregations can't express
-    when the update logic grows beyond algebraic aggregates.
-
-    State lives in the state store keyed by user_id (bounded by #users);
-    each micro-batch's Arrow frames fold into it and the updated row is
-    emitted."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, total double"
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            [{"user_id": key[0], "n_events": n, "total_value": total}]
-        )
-
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    res = stream.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-    q = (
-        res.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_dir: str,
-    query_name: str,
-    gap_seconds: int = 21600,
-    watermark: str = "1 day",
-    schema: str = EVENTS_SCHEMA,
-) -> DataFrame:
-    """§2.11 native session windows: the streaming counterpart of
-    ``relational.event_sessionize`` via ``F.session_window`` — Spark's
-    built-in merging session state, the idiomatic answer where the batch op
-    needs lag + running sum (which streaming can't express: arbitrary
-    windows over event order don't exist on an unbounded stream).
-
-    Gap contract: the batch operator measures inactivity in WHOLE seconds
-    (``unix_timestamp`` floor, oracle-identical to DuckDB's
-    ``date_diff('second')``) and starts a new session strictly ABOVE
-    ``gap_seconds``.  ``session_window`` merges at microsecond precision
-    with a half-open ``diff < gap`` rule, so the stream truncates event
-    time to seconds and windows by ``gap_seconds + 1``: truncated
-    ``diff < gap+1  ⟺  floor-diff ≤ gap``, exactly the batch rule.  The
-    emitted first/last timestamps keep the original precision.
-
-    The watermark bounds session state: a session closes (and its state is
-    dropped) once the watermark passes its window end — at 100 TB/day the
-    state store holds only sessions still inside the lateness horizon,
-    never the history.  Drains with ``availableNow`` into a memory sink
-    (complete mode, so tests see every session without a sentinel flush;
-    a production run would use append mode + a parquet sink and let the
-    watermark emit sessions as they close)."""
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(
-            "user_id",
-            F.session_window(
-                F.date_trunc("second", F.col("ts")), f"{gap_seconds + 1} seconds"
-            ).alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        .select("user_id", "n_events", "first_ts", "last_ts")
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
@@ -400,71 +254,3 @@ def stream_curate(
     )
     q.awaitTermination()
     return spark.read.parquet(out_dir)
-
-
-def stream_attribution_join(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_dir: str,
-    query_name: str,
-    window_minutes: int = 30,
-    watermark: str = "2 hours",
-    schema: str = EVENTS_SCHEMA,
-) -> DataFrame:
-    """§2.11 stream-stream interval join: purchases attributed to every
-    click by the same user within the preceding ``window_minutes`` — the
-    Structured-Streaming counterpart of :func:`linked_maps_spark.temporal.
-    range_join_binned` (which an unbounded stream can't run: the interval
-    side never stops growing).
-
-    Both sides carry a watermark AND the join condition bounds event time
-    on both sides (``click_ts <= p_ts < click_ts + window``), which is
-    exactly what lets Spark expire join state: a click older than
-    ``watermark + window`` can never match a future purchase, so the state
-    store holds only the sliding horizon — bounded at any corpus size.
-    Inner-join results emit as soon as both sides arrive (no watermark
-    wait), so an ``availableNow`` drain over a static backlog reproduces
-    the batch join exactly (tested).
-    """
-    clicks = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"""
-            user_id = p_user
-            AND p_ts >= click_ts
-            AND p_ts < click_ts + INTERVAL {int(window_minutes)} MINUTES
-            """
-        ),
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "p_ts")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)

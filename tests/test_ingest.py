@@ -147,14 +147,14 @@ def test_multi_epoch_ingest_leaves_relations_key_unique(full):
 
 
 @pytest.mark.parametrize("resume_commits_per_epoch", [2, 1, 3])
-def test_relations_replay_after_maintenance_merges_once(
+def test_relations_replay_after_maintenance_skips_landed_edges(
     spark, tmp_path, wal_pdf, full, resume_commits_per_epoch
 ):
     """A crash between the relations and segments commits leaves the
     epoch's edges in the table.  Maintenance (compaction, stats backfill,
-    snapshot expiry) runs before the resume, and the resume may cut its
-    epochs differently; every epoch that the crashed attempt covered merges
-    its edges instead of appending them again, and the result equals the
+    snapshot expiry) runs before the resume, and the resume may ask for
+    other epoch sizes; its first epoch ends at relations' landed
+    ``end_commit``, skips the relations adopt, and the result equals the
     uninterrupted run."""
     eng, _ = full
     part = _engine(spark, tmp_path, f"rel_replay_{resume_commits_per_epoch}")
@@ -173,23 +173,95 @@ def test_relations_replay_after_maintenance_merges_once(
     assert table_digest(resumed.relations.read()) == table_digest(eng.relations.read())
 
 
-def test_relations_change_feed_is_each_epochs_edges(
-    spark, tmp_path, wal_pdf, monkeypatch
+def test_segments_crash_resumed_with_larger_epochs(spark, tmp_path, wal_pdf, full):
+    """A crash between the segments commit and the commit-log append, at 2
+    commits per epoch, resumed at 3: the resume's first epoch ends at
+    segments' landed ``end_commit`` and is skipped whole, so no commit is
+    folded twice and the state equals the uninterrupted run."""
+    eng, _ = full
+    part = _engine(spark, tmp_path, "seg_crash_wider")
+    sdf = to_spark(spark, wal_pdf)
+    part._crash_after = "segments_merge"
+    with pytest.raises(RuntimeError, match="injected crash"):
+        part.ingest(sdf, commits_per_epoch=2)
+    part._crash_after = None
+    stats = part.ingest(sdf, commits_per_epoch=3)
+    c = sorted(set(wal_pdf["commit"]))
+    assert [(e.start_commit, e.end_commit) for e in stats.epochs] == [
+        (c[0], c[1]), (c[2], c[4])
+    ]
+    assert part.current_segments().count() == eng.current_segments().count()
+    assert _seg_digest(part) == _seg_digest(eng)
+    assert table_digest(part.relations.read()) == table_digest(eng.relations.read())
+
+
+@pytest.mark.parametrize("crash_point", ["relations_merge", "segments_merge"])
+def test_crash_then_aggressive_expiry_resumes_exactly_once(
+    spark, tmp_path, wal_pdf, full, crash_point
 ):
-    """A normal epoch commits relations as an append, so ``read_appended``
+    """Maintenance commits (stats backfill, compaction) carry the tables'
+    ``end_commit`` forward, so ``maintain(keep_snapshots=1)`` after a crash
+    still leaves the landed high-water marks readable; a later maintenance
+    with a wider window does not trip over the expired snapshots, and the
+    resume adds no edge twice."""
+    eng, _ = full
+    part = _engine(spark, tmp_path, f"expire_{crash_point}")
+    sdf = to_spark(spark, wal_pdf)
+    part.ingest(sdf, commits_per_epoch=2, max_epochs=1)
+    part._crash_after = crash_point
+    with pytest.raises(RuntimeError, match="injected crash"):
+        part.ingest(sdf, commits_per_epoch=2)
+    part._crash_after = None
+    landed = part.relations.latest_summary_value("end_commit")
+    part.maintain(keep_snapshots=1)
+    part.maintain()
+    assert part.relations.latest_summary_value("end_commit") == landed
+    resumed = CdcEngine(spark, part.warehouse, geom_type=G.LINE, n_buckets=4)
+    resumed.ingest(sdf, commits_per_epoch=2)
+    assert _edge_dups(resumed) == 0
+    assert _seg_digest(resumed) == _seg_digest(eng)
+    assert table_digest(resumed.relations.read()) == table_digest(eng.relations.read())
+
+
+def test_tombstone_readd_epoch_size_invariance(spark, tmp_path):
+    """A key re-added after a tombstone numbers its new nodes past the
+    retired ones whether the re-add shares the tombstone's epoch or not:
+    1, 2 and all commits per epoch give one segments digest and one
+    relations digest, and no key repeats a seq."""
+    wal = synth_change_log(
+        n_keys=N_KEYS, n_commits=N_COMMITS, seed=8, tombstone_every=1
+    )
+    digests = set()
+    for cpe in (1, 2, N_COMMITS):
+        eng = _engine(spark, tmp_path, f"tomb_{cpe}")
+        eng.ingest(to_spark(spark, wal), commits_per_epoch=cpe)
+        segs = eng.current_segments()
+        assert segs.filter("retired").count() > 0
+        seqs = segs.groupBy("repo", "path", "seq").count()
+        assert seqs.filter("count > 1").count() == 0
+        digests.add((_seg_digest(eng), table_digest(eng.relations.read())))
+    assert len(digests) == 1
+
+
+def test_relations_change_feed_is_each_epochs_edges(
+    spark, tmp_path, wal_pdf, full, monkeypatch
+):
+    """Every epoch commits relations as an append, so ``read_appended``
     between consecutive snapshots yields exactly the edges the epoch's fold
-    counted; a replayed epoch whose edges had landed commits a merge, and
-    ``read_appended`` across it refuses."""
+    counted.  A replayed epoch whose edges had landed commits no relations
+    snapshot, so the feed stays append-only across a crash and equals the
+    uninterrupted run's edges."""
+    eng, _ = full
     monkeypatch.setattr(CdcEngine, "maintain", lambda *a, **k: None)
     sdf = to_spark(spark, wal_pdf)
-    eng = _engine(spark, tmp_path, "rel_feed")
-    eng.ingest(sdf, commits_per_epoch=2)
+    fresh = _engine(spark, tmp_path, "rel_feed")
+    fresh.ingest(sdf, commits_per_epoch=2)
     n_rel = {
         r["epoch"]: r["n"] or 0
-        for r in eng.read_metrics().groupBy("epoch")
+        for r in fresh.read_metrics().groupBy("epoch")
         .agg(F.sum("n_relations").alias("n")).collect()
     }
-    rel = eng.relations
+    rel = fresh.relations
     appended = {}
     for v in range(1, rel.version() + 1):
         snap = rel.snapshot(v)
@@ -205,14 +277,13 @@ def test_relations_change_feed_is_each_epochs_edges(
         crashed.ingest(sdf, commits_per_epoch=2)
     crashed._crash_after = None
     v_crash = crashed.relations.version()
-    crashed.ingest(sdf, commits_per_epoch=2)
     crashed_epoch = crashed.relations.snapshot(v_crash)["summary"]["epoch"]
-    replayed = crashed.relations.snapshot(v_crash + 1)
-    assert replayed["operation"] == "merge"
-    assert replayed["summary"]["epoch"] == crashed_epoch
-    with pytest.raises(ValueError, match="non-append"):
-        crashed.relations.read_appended(v_crash, v_crash + 1)
-    assert crashed.relations.snapshot(v_crash + 2)["operation"] == "append"
+    crashed.ingest(sdf, commits_per_epoch=2)
+    rel = crashed.relations
+    after = [rel.snapshot(v) for v in range(v_crash + 1, rel.version() + 1)]
+    assert [s["operation"] for s in after] == ["append"]
+    assert after[0]["summary"]["epoch"] == crashed_epoch + 1
+    assert table_digest(rel.read_appended(0)) == table_digest(eng.relations.read())
     assert _edge_dups(crashed) == 0
 
 

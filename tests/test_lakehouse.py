@@ -144,6 +144,28 @@ def test_expire_snapshots(spark, tbl):
         tbl.snapshot(0)
 
 
+def test_expire_after_smaller_keep_window(spark, tbl):
+    """Expiry with a wider window than an earlier one skips the versions
+    whose metadata that earlier expiry already deleted."""
+    for i in range(3):
+        tbl.append(_df(spark, [(f"k{i}", i)]))
+    tbl.expire_snapshots(keep_last=1)
+    tbl.append(_df(spark, [("k3", 3)]))
+    tbl.expire_snapshots(keep_last=4)
+    assert tbl.read().count() == 4
+
+
+def test_summary_marks_survive_maintenance_and_expiry(spark, tbl):
+    """A commit that sets no ``epoch`` / ``end_commit`` inherits its
+    parent's, so the marks outlive the snapshot that wrote them."""
+    tbl.append(_df(spark, [("a", 1)]), summary={"epoch": 3, "end_commit": "c3"})
+    tbl.rebucket(8)
+    tbl.expire_snapshots(keep_last=1)
+    assert tbl.snapshot()["operation"] == "rebucket"
+    assert tbl.latest_summary_value("epoch") == 3
+    assert tbl.latest_summary_value("end_commit") == "c3"
+
+
 def test_compact_files_binpack_touches_only_fragmented_buckets(spark, tbl):
     # 6 single-row appends land 6 files in whichever buckets the keys hash
     # to; compaction must coalesce ONLY buckets over the threshold and carry

@@ -71,137 +71,6 @@ def test_jsonlines_roundtrip(spark, tmp_path):
         assert wkts[r["gid"]] == r["wkt"]
 
 
-def test_windowed_event_counts_stream_equals_batch(spark, tmp_path):
-    """§2.11 watermarked windowed agg: stream result ≡ batch groupBy over the
-    same files."""
-    import pyspark.sql.functions as F
-
-    from linked_maps_spark.streaming import EVENTS_SCHEMA, windowed_event_counts
-
-    # the streaming file source wants a directory; stage the driver's single
-    # parquet file into one
-    import shutil
-
-    src = str(tmp_path / "events_dir")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src + "/part-0.parquet")
-    got = windowed_event_counts(
-        spark, src, str(tmp_path / "ck_win"), "win_counts_t"
-    )
-    batch = (
-        spark.read.schema(EVENTS_SCHEMA).parquet(src)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    exp = {(r["window_start"], r["event_type"]): r["n"] for r in batch.collect()}
-    res = {(r["window_start"], r["event_type"]): r["n"] for r in got.collect()}
-    assert res == exp and res
-
-
-def test_stream_sessionize_equals_batch(spark, tmp_path):
-    """§2.11 native session windows: streaming session_window sessions ≡ the
-    batch lag+running-sum sessionization aggregated per session — including
-    the strict->gap boundary contract (whole-second inactivity measure)."""
-    import pyspark.sql.functions as F
-
-    from linked_maps_spark import relational
-    from linked_maps_spark.streaming import EVENTS_SCHEMA, stream_sessionize
-
-    import shutil
-
-    src = str(tmp_path / "events_dir")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src + "/part-0.parquet")
-    got = stream_sessionize(spark, src, str(tmp_path / "ck_sess"), "sess_t")
-    res = {
-        (r["user_id"], r["first_ts"], r["last_ts"], r["n_events"])
-        for r in got.collect()
-    }
-    # batch truth: event-level session ids -> per-session aggregates
-    ids = relational.event_sessionize(spark, "/root/testdata/sf0.001")
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(src).select("event_id", "ts")
-    batch = (
-        ids.join(ev, "event_id")
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    exp = {
-        (r["user_id"], r["first_ts"], r["last_ts"], r["n_events"])
-        for r in batch.collect()
-    }
-    assert res == exp and len(res) > 100
-
-
-def test_user_running_stats_stateful_stream(spark, tmp_path):
-    """§2.11 applyInPandasWithState: the custom stateful operator's final
-    per-user state ≡ the batch aggregate."""
-    import pyspark.sql.functions as F
-
-    from linked_maps_spark.streaming import EVENTS_SCHEMA, user_running_stats
-
-    import shutil
-
-    src = str(tmp_path / "events_dir")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src + "/part-0.parquet")
-    got = user_running_stats(spark, src, str(tmp_path / "ck_state"), "user_stats_t")
-    batch = (
-        spark.read.schema(EVENTS_SCHEMA).parquet(src)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-    )
-    exp = {r["user_id"]: (r["n_events"], r["total_value"]) for r in batch.collect()}
-    # availableNow drains in one (or more) micro-batches; the memory sink in
-    # update mode holds the latest row per user
-    res = {}
-    for r in got.collect():
-        res[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert set(res) == set(exp) and res
-    for uid, (n, total) in exp.items():
-        assert res[uid][0] == n
-        assert abs(res[uid][1] - total) < 1e-6 * max(1.0, abs(total))
-
-
-def test_stream_attribution_join_equals_batch(spark, tmp_path):
-    """§2.11 stream-stream interval join: watermarked click→purchase
-    attribution over a drained backlog ≡ the batch range join."""
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from linked_maps_spark.streaming import EVENTS_SCHEMA, stream_attribution_join
-    from linked_maps_spark.temporal import range_join_binned
-
-    src = str(tmp_path / "events_attr")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src + "/part-0.parquet")
-    got = stream_attribution_join(
-        spark, src, str(tmp_path / "ck_attr"), "attr_t", window_minutes=30
-    )
-    res = {(r["click_id"], r["purchase_id"]) for r in got.collect()}
-
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(src)
-    clicks = ev.filter("event_type = 'click'").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("lo"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("hi"),
-    )
-    purchases = ev.filter("event_type = 'purchase'").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
-    batch = range_join_binned(purchases, clicks, "ts", "lo", "hi").filter(
-        "user_id = c_user"
-    )
-    exp = {(r["click_id"], r["purchase_id"]) for r in batch.collect()}
-    assert res == exp and len(res) > 0
-
-
 def test_stream_ingest_microbatched_equals_batch(spark, tmp_path):
     """maxFilesPerTrigger=1 over a commit-aligned landing dir: every commit
     is its own micro-batch → its own ingest call resuming from the previous
