@@ -188,7 +188,7 @@ _MICRO_Y0, _MICRO_AX0, _MICRO_AX1, _MICRO_DK0 = 100, 10, 30, 3
 
 
 def _micro_fmt(i: int) -> str:
-    """geometry._fmt analog: grid index → canonical coordinate string."""
+    """geometry._coord_strs analog: grid index → canonical coordinate string."""
     return f"{i // 100}.{i % 100:02d}"
 
 

@@ -211,9 +211,9 @@ def leaves_from_rows(leaves_in: list[dict], geom_type: str = G.LINE) -> "list[_N
 
 
 def serialize_nodes(nodes: "list[_Node]", geom_type: str = G.LINE) -> None:
-    """Fill ``wkt``/``sha`` for every un-serialized node in ONE vectorized
-    pass (``to_wkt_batch``) — the per-node serializer was the top CPU cost
-    of the fold after parse vectorization."""
+    """Fill ``wkt``/``sha`` for every un-serialized node with ONE
+    ``to_wkt_batch`` call (one packed-key sort over all their ids), priming
+    the parse memo with the final leaves only."""
     need = [n for n in nodes if n.wkt is None]
     wkts = G.to_wkt_batch(
         [n.ids for n in need],

@@ -38,15 +38,26 @@ grid point  ``pid = ix * 2^14 + iy``      (ix, iy = round(coord / PITCH))
 unit edge   ``eid = min(p,q) * 2^28 + max(p,q)``   (LINE mode, fits int64)
 unit cell   ``cid = pid of the SW corner``          (POLYGON mode)
 
-Canonical WKT re-serialization merges collinear unit runs (LINE) or
-row-strips (POLYGON) in sorted-id order, so ``parse → to_wkt`` is a stable
-canonical form: ``content_sha256 = sha256(canonical_wkt)``.
+Codec
+-----
+One batch kernel per direction; the single-string calls are batches of one.
+
+* Parse: :func:`parse_lines` turns N LINE strings into per-string sorted
+  unique edge ids (or that string's :class:`GeometryError`) in one numpy
+  pass; :func:`parse_wkt`'s miss path, :func:`preparse_wkts` and the
+  osm_link chunk parse all call it.  POLYGON strings parse one at a time.
+* Serialize: :func:`to_wkt_batch` merges collinear unit runs (LINE) or
+  row-strips (POLYGON) with one rule — a packed ``(node, group, pos)`` key,
+  one ``argsort``, a run break wherever the key steps by ≠ 1 — and emits
+  runs in ``(sx, sy, ex, ey)`` order; :func:`to_wkt` is a batch of one.
+
+So ``parse → to_wkt`` is a stable canonical form:
+``content_sha256 = sha256(canonical_wkt)``.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 import re
 from collections import OrderedDict
 
@@ -63,16 +74,13 @@ _E = 1 << 28  # edge-id base
 LINE = "MULTILINESTRING"
 POLYGON = "MULTIPOLYGON"
 
-# unit step directions a polyline segment may take (axis-aligned or 45°)
+# unit step directions a polyline segment may take (axis-aligned or 45°);
+# the synthetic change-log walks draw from them
 _DIRS = ((1, 0), (0, 1), (1, 1), (1, -1))
 
 
 def _pid(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
     return ix.astype(np.int64) * _P + iy.astype(np.int64)
-
-
-def _unpid(pid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    return pid // _P, pid % _P
 
 
 class GeometryError(ValueError):
@@ -83,6 +91,8 @@ class GeometryError(ValueError):
 
 
 _RING_RE = re.compile(r"\(([^()]+)\)")
+_OFF_GRID = f"coordinate not on the {PITCH}° grid"
+_OUT_OF_RANGE = "coordinate outside grid range"
 
 
 def split_groups(s: str) -> list[str]:
@@ -105,48 +115,190 @@ def split_groups(s: str) -> list[str]:
     return groups
 
 
-def _snap_arr(vals: np.ndarray) -> np.ndarray:
+def _floats(tokens: list[str]) -> np.ndarray:
+    """Coordinate tokens → float64; a non-numeric token is a GeometryError
+    carrying numpy's own message (it lands in ``dead_letter.error``)."""
+    try:
+        return np.asarray(tokens, dtype=np.float64)
+    except ValueError as exc:
+        raise GeometryError(str(exc)) from None
+
+
+def _snap(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Grid indices of coordinate values plus their two fault masks, in the
+    parse's check order: off the grid (NaN included), outside the range."""
     iv = np.rint(vals * _SCALE).astype(np.int64)
-    if not np.all(np.abs(vals - iv * PITCH) <= 1e-9):
-        raise GeometryError(f"coordinate not on the {PITCH}° grid")
-    if iv.size and (iv.min() < 0 or iv.max() >= _P):
-        raise GeometryError("coordinate outside grid range")
-    return iv
+    return iv, ~(np.abs(vals - iv * PITCH) <= 1e-9), (iv < 0) | (iv >= _P)
 
 
 def _parse_rings(body: str) -> list[np.ndarray]:
     """Split 'MULTI*((..),(..))' body into (n,2) int arrays of snapped
-    grid coords — innermost paren groups, fully vectorized."""
+    grid coords — innermost paren groups (the POLYGON parse)."""
     parts: list[np.ndarray] = []
     for grp in _RING_RE.findall(body):
-        vals = np.asarray(grp.replace(",", " ").split(), dtype=np.float64)
+        vals = _floats(grp.replace(",", " ").split())
         if vals.size % 2:
             raise GeometryError(f"odd coordinate count in ring {grp[:40]!r}")
-        iv = _snap_arr(vals)
+        iv, off_grid, out_of_range = _snap(vals)
+        if off_grid.any():
+            raise GeometryError(_OFF_GRID)
+        if out_of_range.any():
+            raise GeometryError(_OUT_OF_RANGE)
         parts.append(np.stack([iv[0::2], iv[1::2]], axis=1))
     if not parts:
         raise GeometryError("no coordinate rings found in WKT")
     return parts
 
 
-def _parse_rings_flat(body: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """All rings of a WKT body as flat snapped arrays: (xs, ys, ring_id).
+def parse_lines(wkts) -> "list[np.ndarray | GeometryError]":
+    """The LINE parse kernel: N WKT strings → per string its sorted unique
+    unit-edge ids, or the :class:`GeometryError` that string raises.
 
-    One numpy pass for the whole geometry instead of per-ring ops — the
-    canonical WKT of a big lattice node holds hundreds of short runs, and
-    per-ring numpy overhead dominated the fold profile (parse was 52% of
-    fold CPU before this)."""
-    grps = _RING_RE.findall(body)
-    if not grps:
-        raise GeometryError("no coordinate rings found in WKT")
-    joined = " ".join(g.replace(",", " ") for g in grps)
-    vals = np.asarray(joined.split(), dtype=np.float64)
-    n_tokens = np.asarray([g.count(",") + 1 for g in grps], dtype=np.int64) * 2
-    if int(n_tokens.sum()) != vals.size or vals.size % 2:
-        raise GeometryError("odd coordinate count in WKT body")
-    iv = _snap_arr(vals)
-    ring_id = np.repeat(np.arange(len(grps), dtype=np.int64), n_tokens // 2)
-    return iv[0::2], iv[1::2], ring_id
+    Each string is checked in this order, and the first fault is its error:
+    head, rings, float tokens, coordinate count, grid, range, ≥2 points,
+    zero-length segment, 45°.  The text checks run per string; everything
+    numeric — float conversion, grid snap, unit-edge expansion and the
+    per-string sorted-unique — runs once over the whole batch, segmented by
+    a string id, so a fault in one string never costs the others their
+    batch pass.  ``None`` and blank / ``EMPTY`` strings (tombstones) give
+    an empty set.  Returned arrays are slices of one batch array."""
+    wkts = list(wkts)
+    out: list = [np.empty(0, dtype=np.int64)] * len(wkts)
+    acc: list[int] = []  # index of every string that reaches the numeric pass
+    toks: list[str] = []  # their coordinate tokens, batch order
+    n_tok: list[int] = []  # token count per accepted string
+    ring_pts: list[int] = []  # point count per ring, batch order
+    short: list[bool] = []  # per accepted string: a ring with < 2 points
+    for i, w in enumerate(wkts):
+        s = (w or "").strip()
+        if not s or s.upper().endswith("EMPTY"):
+            continue
+        pre = s.split("(", 1)[0]
+        head = pre.strip().upper()
+        if head not in ("MULTILINESTRING", "LINESTRING"):
+            out[i] = GeometryError(f"expected {LINE}, got {head}")
+            continue
+        body = s[len(pre):]
+        grps = _RING_RE.findall("(" + body + ")" if head == "LINESTRING" else body)
+        if not grps:
+            out[i] = GeometryError("no coordinate rings found in WKT")
+            continue
+        t = " ".join(grps).replace(",", " ").split()
+        pts = [g.count(",") + 1 for g in grps]
+        if 2 * sum(pts) != len(t):
+            try:  # a non-numeric token outranks the count
+                _floats(t)
+                out[i] = GeometryError("odd coordinate count in WKT body")
+            except GeometryError as exc:
+                out[i] = exc
+            continue
+        acc.append(i)
+        toks.extend(t)
+        n_tok.append(len(t))
+        ring_pts.extend(pts)
+        short.append(min(pts) < 2)
+    if not acc:
+        return out
+
+    err: list = [None] * len(acc)
+
+    def _flag(bad_sid: np.ndarray, msg: str) -> None:
+        for j in np.unique(bad_sid).tolist():
+            if err[j] is None:
+                err[j] = GeometryError(msg)
+
+    try:
+        vals = _floats(toks)
+    except GeometryError:  # rare: convert per string to blame the right ones
+        vals = np.zeros(len(toks))
+        lo = 0
+        for j, n in enumerate(n_tok):
+            try:
+                vals[lo:lo + n] = _floats(toks[lo:lo + n])
+            except GeometryError as exc:
+                err[j] = exc
+            lo += n
+    tok_sid = np.repeat(np.arange(len(acc), dtype=np.int64), n_tok)
+    iv, off_grid, out_of_range = _snap(vals)
+    _flag(tok_sid[off_grid], _OFF_GRID)
+    _flag(tok_sid[out_of_range], _OUT_OF_RANGE)
+    _flag(np.flatnonzero(short), "linestring needs ≥2 points")
+
+    # vertex pairs within rings (ring ids are batch-global, so neither ring
+    # nor string bounds pair up) of the strings still clean
+    ring_id = np.repeat(np.arange(len(ring_pts), dtype=np.int64), ring_pts)
+    pt_sid = tok_sid[0::2]
+    keep = np.asarray([e is None for e in err])[pt_sid]
+    xs, ys, ring_id, pt_sid = iv[0::2][keep], iv[1::2][keep], ring_id[keep], pt_sid[keep]
+    same = ring_id[:-1] == ring_id[1:]
+    dx, dy = np.diff(xs)[same], np.diff(ys)[same]
+    x0v, y0v, pair_sid = xs[:-1][same], ys[:-1][same], pt_sid[:-1][same]
+    step = np.maximum(np.abs(dx), np.abs(dy))
+    _flag(pair_sid[step == 0], "zero-length segment")
+    step = np.maximum(step, 1)
+    ux, uy = dx // step, dy // step
+    _flag(pair_sid[(ux * step != dx) | (uy * step != dy)], "segment not axis-aligned or 45°")
+
+    # expand each clean vertex pair into its unit steps
+    keep = np.asarray([e is None for e in err])[pair_sid]
+    step, ux, uy = step[keep], ux[keep], uy[keep]
+    x0v, y0v, pair_sid = x0v[keep], y0v[keep], pair_sid[keep]
+    k = np.arange(int(step.sum()), dtype=np.int64) - np.repeat(np.cumsum(step) - step, step)
+    rux, ruy = np.repeat(ux, step), np.repeat(uy, step)
+    x0 = np.repeat(x0v, step) + k * rux
+    y0 = np.repeat(y0v, step) + k * ruy
+    p = _pid(x0, y0)
+    q = _pid(x0 + rux, y0 + ruy)
+    eid = np.minimum(p, q) * _E + np.maximum(p, q)
+    esid = np.repeat(pair_sid, step)
+    # per-string sorted unique: order by (string, id), drop repeats
+    order = np.lexsort((eid, esid))
+    eid, esid = eid[order], esid[order]
+    keep = np.ones(eid.size, dtype=bool)
+    keep[1:] = (eid[1:] != eid[:-1]) | (esid[1:] != esid[:-1])
+    eid, esid = eid[keep], esid[keep]
+    bounds = np.searchsorted(esid, np.arange(len(acc) + 1)).tolist()
+    for j, i in enumerate(acc):
+        out[i] = err[j] if err[j] is not None else eid[bounds[j]:bounds[j + 1]]
+    return out
+
+
+def _parse_polygon(wkt: str, geom_type: str) -> np.ndarray:
+    wkt = (wkt or "").strip()
+    if not wkt or wkt.upper().endswith("EMPTY"):
+        return np.empty(0, dtype=np.int64)
+    if geom_type != POLYGON:
+        raise GeometryError(f"unknown geometry type {geom_type}")
+    head = wkt.split("(", 1)[0].strip().upper()
+    if head not in ("MULTIPOLYGON", "POLYGON"):
+        raise GeometryError(f"expected {geom_type}, got {head}")
+    body = wkt[len(wkt.split("(", 1)[0]):]
+    # hole guard: a polygon body with >1 ring is an interior hole the
+    # grid algebra would silently treat as solid area — reject it here
+    # (the snap-rounding front-end handles holes by even-odd fill)
+    outer = split_groups(body)
+    polys = split_groups(outer[0]) if head == "MULTIPOLYGON" else outer
+    for poly in polys:
+        if len(split_groups(poly)) > 1:
+            raise GeometryError(
+                "polygon holes are not supported by the strict grid "
+                "parser; pre-process with snap.snap_wkt"
+            )
+    cells: list[np.ndarray] = []
+    for arr in _parse_rings(body):
+        if len(arr) >= 2 and (arr[0] == arr[-1]).all():
+            arr = arr[:-1]
+        xs, ys = arr[:, 0], arr[:, 1]
+        x0, x1, y0, y1 = xs.min(), xs.max(), ys.min(), ys.max()
+        if len(arr) != 4 or set(map(tuple, arr.tolist())) != {
+            (x0, y0), (x0, y1), (x1, y0), (x1, y1)
+        }:
+            raise GeometryError("only axis-aligned rectangles supported")
+        gx, gy = np.meshgrid(
+            np.arange(x0, x1, dtype=np.int64), np.arange(y0, y1, dtype=np.int64)
+        )
+        cells.append(_pid(gx.ravel(), gy.ravel()))
+    return np.unique(np.concatenate(cells)) if cells else np.empty(0, np.int64)
 
 
 # -------------------------------------------------- canonical-parse cache
@@ -165,7 +317,7 @@ def _parse_rings_flat(body: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 _PARSE_CACHE: "OrderedDict[tuple[str, str], np.ndarray]" = OrderedDict()
 _PARSE_CACHE_ELEMS = 0
 #: element budget (int64 count, ~8 B each) per worker process
-PARSE_CACHE_MAX_ELEMS = int(os.environ.get("LMS_PARSE_CACHE_ELEMS", "2000000"))
+PARSE_CACHE_MAX_ELEMS = 2_000_000
 
 
 def _parse_cache_put(key: tuple[str, str], ids: np.ndarray) -> None:
@@ -202,9 +354,10 @@ def parse_wkt(wkt: str, geom_type: str = LINE) -> np.ndarray:
     """WKT → sorted unique int64 ids (unit edges for LINE, cells for POLYGON).
 
     Empty / blank input (a tombstone payload) parses to an empty set.
-    Memoized for canonical strings (see the cache note above); the returned
-    array may be read-only — callers copy before mutating (the fold's set
-    algebra never mutates in place).
+    Memoized for canonical strings (see the cache note above); a LINE miss
+    is :func:`parse_lines` on a batch of one.  The returned array may be
+    read-only — callers copy before mutating (the fold's set algebra never
+    mutates in place).
     """
     key = (geom_type, wkt or "")
     hit = _PARSE_CACHE.get(key)
@@ -214,213 +367,47 @@ def parse_wkt(wkt: str, geom_type: str = LINE) -> np.ndarray:
     pre = _PREPARSED.pop(key, None)
     if pre is not None:
         return pre
-    ids = _parse_wkt_impl(wkt, geom_type)
+    if geom_type == LINE:
+        ids = parse_lines([wkt])[0]
+        if isinstance(ids, GeometryError):
+            raise ids
+    else:
+        ids = _parse_polygon(wkt, geom_type)
     if ids.size:
         _parse_cache_put(key, ids)
     return ids
 
 
 def preparse_wkts(wkts, geom_type: str = LINE) -> None:
-    """Vectorized batch parse of MANY LINE WKTs into the parse memo.
+    """Prime the parse memo with one :func:`parse_lines` pass over MANY
+    LINE WKTs (a fold task's event contents and resume leaves).
 
     The fold parses every event content and every cache-missed resume leaf
     one string at a time; at ~15 small numpy calls per string the per-call
-    dispatch dominates (profiled 10.3 s of an 18 s single-core fold for
-    32k events).  This primes the memo for a whole partition in ONE numpy
-    pass — float conversion, grid snap, unit-edge expansion and the
-    per-string sorted-unique all run globally, segmented by a string id —
-    so the fold's subsequent :func:`parse_wkt` calls are cache hits.
-
-    Best-effort by contract: any string that fails validation anywhere in
-    the batch is simply left unprimed (the fold's own per-string parse then
-    raises or quarantines with its exact error — batch priming must never
-    change error semantics).  Validation that is cheap per-string (token
-    counts, ring sizes) skips just that string; grid/alignment failures are
-    only detected globally, so they drop the whole batch to a per-string
-    fallback loop (poison events are rare by definition).  Non-LINE
-    geometries and strings already in the memo are skipped.  Results are
-    bit-identical to :func:`_parse_wkt_impl` (same ops, same order).
+    dispatch dominates.  One batch pass here makes the fold's later
+    :func:`parse_wkt` calls lookups.  Only strings that parse clean are
+    primed: a poison string stays unprimed, so the fold's own parse raises
+    (or quarantines) with that string's exact error, and the batch never
+    changes error semantics.  Non-string entries (Arrow nulls), non-LINE
+    geometries and strings already in the memo are skipped.
     """
     if geom_type != LINE:
         return
     # entries a previous batch never consumed (dropped duplicate events,
     # crashed task) must not accumulate across batches
     _PREPARSED.clear()
-    tok_l: list[str] = []          # every coordinate token, batch order
-    ring_tok: list[int] = []       # token count per ring
-    ring_str: list[int] = []       # owning string index per ring
-    strs: list[str] = []           # accepted (to-prime) original strings
-    for raw in wkts:
-        # arrow/pandas nulls arrive as None or NaN floats — not parseable
-        if not isinstance(raw, str):
-            continue
-        s = raw.strip()
-        if not s or s.upper().endswith("EMPTY"):
-            continue
-        key = (geom_type, raw)
-        if key in _PARSE_CACHE or key in _PREPARSED:
-            continue
-        head = s.split("(", 1)[0].strip().upper()
-        if head not in ("MULTILINESTRING", "LINESTRING"):
-            continue
-        body = s[len(s.split("(", 1)[0]):]
-        if head == "LINESTRING":
-            body = "(" + body + ")"
-        grps = _RING_RE.findall(body)
-        if not grps:
-            continue
-        toks = " ".join(g.replace(",", " ") for g in grps).split()
-        counts = [(g.count(",") + 1) * 2 for g in grps]
-        # exactly _parse_rings_flat's count check, per string: a mismatch
-        # (or a <2-point ring) leaves the string for the per-string parse
-        if sum(counts) != len(toks) or any(c < 4 for c in counts):
-            continue
-        i = len(strs)
-        strs.append(raw)
-        tok_l.extend(toks)
-        ring_tok.extend(counts)
-        ring_str.extend([i] * len(counts))
-    if not strs:
-        return
-
-    def _fallback() -> None:
-        for raw in strs:
-            try:
-                ids = _parse_wkt_impl(raw, geom_type)
-            # ValueError: the impl lets float-conversion errors propagate
-            # raw — the per-string parse will surface the same error
-            except (GeometryError, ValueError):
-                continue
-            if ids.size:
-                ids.setflags(write=False)
-                _PREPARSED[(geom_type, raw)] = ids
-
-    try:
-        vals = np.asarray(tok_l, dtype=np.float64)
-    except ValueError:
-        return _fallback()
-    iv = np.rint(vals * _SCALE).astype(np.int64)
-    if (
-        not np.all(np.abs(vals - iv * PITCH) <= 1e-9)
-        or iv.min() < 0
-        or iv.max() >= _P
-    ):
-        return _fallback()
-    xs, ys = iv[0::2], iv[1::2]
-    n_rings = len(ring_tok)
-    pts = np.asarray(ring_tok, dtype=np.int64) // 2
-    ring_id = np.repeat(np.arange(n_rings, dtype=np.int64), pts)
-    same = ring_id[:-1] == ring_id[1:]
-    dx = (xs[1:] - xs[:-1])[same]
-    dy = (ys[1:] - ys[:-1])[same]
-    x0v, y0v = xs[:-1][same], ys[:-1][same]
-    step = np.maximum(np.abs(dx), np.abs(dy))
-    if (step == 0).any():
-        return _fallback()
-    ux, uy = dx // step, dy // step
-    if ((ux * step != dx) | (uy * step != dy)).any():
-        return _fallback()
-    total = int(step.sum())
-    k = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(step) - step, step)
-    rux, ruy = np.repeat(ux, step), np.repeat(uy, step)
-    x0 = np.repeat(x0v, step) + k * rux
-    y0 = np.repeat(y0v, step) + k * ruy
-    p = _pid(x0, y0)
-    q = _pid(x0 + rux, y0 + ruy)
-    ids = np.minimum(p, q) * _E + np.maximum(p, q)
-    str_of_ring = np.asarray(ring_str, dtype=np.int64)
-    sid = np.repeat(str_of_ring[ring_id[:-1][same]], step)
-    # segmented sorted-unique == np.unique per string (lexsort is ascending)
-    order = np.lexsort((ids, sid))
-    ids_s, sid_s = ids[order], sid[order]
-    keep = np.ones(len(ids_s), dtype=bool)
-    keep[1:] = (ids_s[1:] != ids_s[:-1]) | (sid_s[1:] != sid_s[:-1])
-    ids_k, sid_k = ids_s[keep], sid_s[keep]
-    bounds = np.concatenate(
-        ([0], np.flatnonzero(sid_k[1:] != sid_k[:-1]) + 1, [len(sid_k)])
-    )
-    for j in range(len(bounds) - 1):
-        lo = int(bounds[j])
-        arr = ids_k[lo:int(bounds[j + 1])].copy()
-        arr.setflags(write=False)
-        _PREPARSED[(geom_type, strs[int(sid_k[lo])])] = arr
-
-
-def _parse_wkt_impl(wkt: str, geom_type: str = LINE) -> np.ndarray:
-    wkt = (wkt or "").strip()
-    if not wkt or wkt.upper().endswith("EMPTY"):
-        return np.empty(0, dtype=np.int64)
-    head = wkt.split("(", 1)[0].strip().upper()
-    if geom_type == LINE:
-        if head not in ("MULTILINESTRING", "LINESTRING"):
-            raise GeometryError(f"expected {geom_type}, got {head}")
-        body = wkt[len(wkt.split("(", 1)[0]):]
-        if head == "LINESTRING":
-            body = "(" + body + ")"
-        xs, ys, ring_id = _parse_rings_flat(body)
-        counts = np.bincount(ring_id)
-        if (counts < 2).any():
-            raise GeometryError("linestring needs ≥2 points")
-        # vertex pairs within rings only (mask pairs crossing ring bounds) —
-        # one vectorized pass over every ring of the geometry
-        same = ring_id[:-1] == ring_id[1:]
-        dx = np.diff(xs)[same]
-        dy = np.diff(ys)[same]
-        x0v = xs[:-1][same]
-        y0v = ys[:-1][same]
-        step = np.maximum(np.abs(dx), np.abs(dy))
-        if (step == 0).any():
-            raise GeometryError("zero-length segment")
-        ux, uy = dx // step, dy // step
-        if ((ux * step != dx) | (uy * step != dy)).any():
-            raise GeometryError("segment not axis-aligned or 45°")
-        # expand each vertex-pair into its unit steps, fully vectorized
-        total = int(step.sum())
-        k = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(step) - step, step)
-        rux, ruy = np.repeat(ux, step), np.repeat(uy, step)
-        x0 = np.repeat(x0v, step) + k * rux
-        y0 = np.repeat(y0v, step) + k * ruy
-        p = _pid(x0, y0)
-        q = _pid(x0 + rux, y0 + ruy)
-        return np.unique(np.minimum(p, q) * _E + np.maximum(p, q))
-    elif geom_type == POLYGON:
-        if head not in ("MULTIPOLYGON", "POLYGON"):
-            raise GeometryError(f"expected {geom_type}, got {head}")
-        body = wkt[len(wkt.split("(", 1)[0]):]
-        # hole guard: a polygon body with >1 ring is an interior hole the
-        # grid algebra would silently treat as solid area — reject it here
-        # (the snap-rounding front-end handles holes by even-odd fill)
-        outer = split_groups(body)
-        polys = split_groups(outer[0]) if head == "MULTIPOLYGON" else outer
-        for poly in polys:
-            if len(split_groups(poly)) > 1:
-                raise GeometryError(
-                    "polygon holes are not supported by the strict grid "
-                    "parser; pre-process with snap.snap_wkt"
-                )
-        cells: list[np.ndarray] = []
-        for arr in _parse_rings(body):
-            if len(arr) >= 2 and (arr[0] == arr[-1]).all():
-                arr = arr[:-1]
-            xs, ys = arr[:, 0], arr[:, 1]
-            x0, x1, y0, y1 = xs.min(), xs.max(), ys.min(), ys.max()
-            if len(arr) != 4 or set(map(tuple, arr.tolist())) != {
-                (x0, y0), (x0, y1), (x1, y0), (x1, y1)
-            }:
-                raise GeometryError("only axis-aligned rectangles supported")
-            gx, gy = np.meshgrid(
-                np.arange(x0, x1, dtype=np.int64), np.arange(y0, y1, dtype=np.int64)
-            )
-            cells.append(_pid(gx.ravel(), gy.ravel()))
-        return np.unique(np.concatenate(cells)) if cells else np.empty(0, np.int64)
-    raise GeometryError(f"unknown geometry type {geom_type}")
+    todo = [
+        w for w in dict.fromkeys(w for w in wkts if isinstance(w, str))
+        if (geom_type, w) not in _PARSE_CACHE
+    ]
+    for w, ids in zip(todo, parse_lines(todo)):
+        if not isinstance(ids, GeometryError) and ids.size:
+            ids = ids.copy()
+            ids.setflags(write=False)
+            _PREPARSED[(geom_type, w)] = ids
 
 
 # ---------------------------------------------------------- serialization
-
-
-def _fmt(i: np.int64 | int) -> str:
-    return f"{i * PITCH:.2f}"
 
 
 _COORD_STRS: list[str] | None = None
@@ -439,145 +426,13 @@ def _coord_strs() -> list[str]:
 
 
 def to_wkt(ids: np.ndarray, geom_type: str = LINE) -> str:
-    """Sorted ids → canonical WKT (collinear unit runs merged, stable order).
+    """Ids → canonical WKT: ``to_wkt_batch([ids], geom_type)[0]``.
 
     This is the ``ST_ASTEXT`` analog (reference: postgis_sqls.py:42-43); its
     output is the ``content`` whose sha256 is the per-row replay invariant.
-
-    Serialization PRIMES the parse cache: for a sorted-unique input the
-    round-trip ``parse_wkt(to_wkt(ids)) == ids`` is exact (property-tested),
-    so the fold's next-epoch rehydration of this string is a lookup.
+    Serialization PRIMES the parse cache (see :func:`to_wkt_batch`).
     """
-    ids = np.sort(np.asarray(ids, dtype=np.int64))
-    if ids.size == 0:
-        return f"{geom_type} EMPTY"
-    wkt = _to_wkt_impl(ids, geom_type)
-    if ids.size == 1 or (ids[1:] > ids[:-1]).all():  # sorted unique ⇒ cacheable
-        _parse_cache_put((geom_type, wkt), ids)
-    return wkt
-
-
-def _to_wkt_impl(ids: np.ndarray, geom_type: str) -> str:
-    if geom_type == LINE:
-        p = ids // _E
-        q = ids % _E
-        px, py = _unpid(p)
-        qx, qy = _unpid(q)
-        dx = np.sign(qx - px)
-        dy = np.sign(qy - py)
-        sx_l, sy_l, ex_l, ey_l = [], [], [], []
-        for ux, uy in _DIRS:
-            m = (dx == ux) & (dy == uy)
-            if not m.any():
-                continue
-            # line index: constant along the direction
-            if (ux, uy) == (1, 0):
-                line, pos = py[m], px[m]
-            elif (ux, uy) == (0, 1):
-                line, pos = px[m], py[m]
-            elif (ux, uy) == (1, 1):
-                line, pos = px[m] - py[m], px[m]
-            else:  # (1, -1)
-                line, pos = px[m] + py[m], px[m]
-            order = np.lexsort((pos, line))
-            line, pos = line[order], pos[order]
-            brk = np.flatnonzero((np.diff(line) != 0) | (np.diff(pos) != 1))
-            starts = np.concatenate(([0], brk + 1))
-            ends = np.concatenate((brk, [len(pos) - 1]))
-            sx_l.append(px[m][order][starts])
-            sy_l.append(py[m][order][starts])
-            ex_l.append(qx[m][order][ends])
-            ey_l.append(qy[m][order][ends])
-        sx = np.concatenate(sx_l)
-        sy = np.concatenate(sy_l)
-        ex = np.concatenate(ex_l)
-        ey = np.concatenate(ey_l)
-        o = np.lexsort((ey, ex, sy, sx))  # canonical run order
-        S = _coord_strs()
-        parts = [
-            f"({S[a]} {S[b]}, {S[c]} {S[d]})"
-            for a, b, c, d in zip(
-                sx[o].tolist(), sy[o].tolist(), ex[o].tolist(), ey[o].tolist()
-            )
-        ]
-        return "MULTILINESTRING (" + ", ".join(parts) + ")"
-    elif geom_type == POLYGON:
-        cx, cy = _unpid(ids)
-        order = np.lexsort((cx, cy))  # by row, then column
-        cx, cy = cx[order], cy[order]
-        brk = np.flatnonzero((np.diff(cy) != 0) | (np.diff(cx) != 1))
-        starts = np.concatenate(([0], brk + 1))
-        ends = np.concatenate((brk, [len(cx) - 1]))
-        rx0, ry0 = cx[starts], cy[starts]
-        rx1, ry1 = cx[ends] + 1, cy[ends] + 1
-        o = np.lexsort((ry1, rx1, ry0, rx0))
-
-        f = _coord_strs().__getitem__
-
-        parts = [
-            f"(({f(a)} {f(b)}, {f(c)} {f(b)}, {f(c)} {f(d)}, {f(a)} {f(d)}, {f(a)} {f(b)}))"
-            for a, b, c, d in zip(
-                rx0[o].tolist(), ry0[o].tolist(), rx1[o].tolist(), ry1[o].tolist()
-            )
-        ]
-        return "MULTIPOLYGON (" + ", ".join(parts) + ")"
-    raise GeometryError(f"unknown geometry type {geom_type}")
-
-
-def _line_wkt_strings(node, px, py, qx, qy, n_nodes: int) -> list[str | None]:
-    """Shared run-merging for LINE serialization over (node-tagged) edges;
-    returns per-node WKT bodies (None where a node has no edges)."""
-    dx = np.sign(qx - px)
-    dy = np.sign(qy - py)
-    rn_l, sx_l, sy_l, ex_l, ey_l = [], [], [], [], []
-    for ux, uy in _DIRS:
-        m = (dx == ux) & (dy == uy)
-        if not m.any():
-            continue
-        nn = node[m]
-        if (ux, uy) == (1, 0):
-            line, pos = py[m], px[m]
-        elif (ux, uy) == (0, 1):
-            line, pos = px[m], py[m]
-        elif (ux, uy) == (1, 1):
-            line, pos = px[m] - py[m], px[m]
-        else:  # (1, -1)
-            line, pos = px[m] + py[m], px[m]
-        order = np.lexsort((pos, line, nn))
-        nn_o, line_o, pos_o = nn[order], line[order], pos[order]
-        brk = np.flatnonzero(
-            (np.diff(nn_o) != 0) | (np.diff(line_o) != 0) | (np.diff(pos_o) != 1)
-        )
-        starts = np.concatenate(([0], brk + 1))
-        ends = np.concatenate((brk, [len(pos_o) - 1]))
-        rn_l.append(nn_o[starts])
-        sx_l.append(px[m][order][starts])
-        sy_l.append(py[m][order][starts])
-        ex_l.append(qx[m][order][ends])
-        ey_l.append(qy[m][order][ends])
-    rn = np.concatenate(rn_l)
-    sx = np.concatenate(sx_l)
-    sy = np.concatenate(sy_l)
-    ex = np.concatenate(ex_l)
-    ey = np.concatenate(ey_l)
-    o = np.lexsort((ey, ex, sy, sx, rn))  # canonical run order within node
-    rn, sx, sy, ex, ey = rn[o], sx[o], sy[o], ex[o], ey[o]
-    bounds = np.concatenate(
-        ([0], np.flatnonzero(np.diff(rn) != 0) + 1, [len(rn)])
-    )
-    out: list[str | None] = [None] * n_nodes
-    sx_t, sy_t, ex_t, ey_t = sx.tolist(), sy.tolist(), ex.tolist(), ey.tolist()
-    S = _coord_strs()
-    for i in range(len(bounds) - 1):
-        lo, hi = bounds[i], bounds[i + 1]
-        parts = [
-            f"({S[a]} {S[b]}, {S[c]} {S[d]})"
-            for a, b, c, d in zip(
-                sx_t[lo:hi], sy_t[lo:hi], ex_t[lo:hi], ey_t[lo:hi]
-            )
-        ]
-        out[int(rn[lo])] = "MULTILINESTRING (" + ", ".join(parts) + ")"
-    return out
+    return to_wkt_batch([ids], geom_type)[0]
 
 
 def to_wkt_batch(
@@ -585,16 +440,24 @@ def to_wkt_batch(
     geom_type: str = LINE,
     prime: "list[bool] | None" = None,
 ) -> list[str]:
-    """Serialize MANY id-sets in one vectorized pass — identical strings to
-    per-node :func:`to_wkt` (property-tested), ~2× less per-node numpy
-    overhead; the fold emission path uses this for all created nodes.
+    """Serialize MANY id-sets (in any order) to canonical WKT in one pass.
 
-    ``prime``: per-node flags choosing which canonical strings are written
-    into the parse memo (``None`` = all, the single-node ``to_wkt``
-    behavior).  The fold passes its final-leaf flags: only
-    ``is_leaf & ~retired`` rows are ever rehydrated next epoch, so priming
-    interior nodes spends put-time AND evicts useful leaf entries from the
-    bounded cache."""
+    Run-merge, one rule for both geometry types: each id gets a packed
+    ``(node, group, pos)`` int64 key — LINE group = direction (2 bits) +
+    the line's perpendicular offset (16 bits), POLYGON group = the cell's
+    row; pos is the coordinate along the line / row — and after one
+    ``argsort`` a run ends wherever the key steps by anything but 1.  Runs
+    are ordered within a node by ``(sx, sy, ex, ey)`` through a 2-key
+    lexsort of the packed ``(node, start pid)`` and end pid.
+
+    Priming: for sorted-unique ids the round trip ``parse_wkt(to_wkt(ids))
+    == ids`` is exact (property-tested), so each node's string goes into the
+    parse memo and the fold's next-epoch rehydration of it is a lookup.
+    ``prime`` picks which nodes (``None`` = all, the :func:`to_wkt`
+    behavior); the fold passes its final-leaf flags, since only
+    ``is_leaf & ~retired`` rows are rehydrated and priming interior nodes
+    spends put-time and evicts useful leaf entries from the bounded cache.
+    Nodes whose ids hold duplicates are never primed."""
     n = len(ids_list)
     if n == 0:
         return []
@@ -602,80 +465,61 @@ def to_wkt_batch(
     out = [f"{geom_type} EMPTY"] * n
     if sizes.sum() == 0:
         return out
+    if geom_type not in (LINE, POLYGON):
+        raise GeometryError(f"unknown geometry type {geom_type}")
     # np.repeat with size 0 contributes nothing, so node aligns with concat
     node = np.repeat(np.arange(n, dtype=np.int64), sizes)
     cat = np.concatenate([np.asarray(x, dtype=np.int64) for x in ids_list if len(x)])
-    # The fold's set algebra keeps every id array sorted-unique, so the
-    # common case needs NO sort at all — one vectorized check replaces a
-    # np.sort per node (the per-call numpy dispatch dominated).  The
-    # fallback is a single stable segmented lexsort: ``node`` is already
-    # grouped, so it only permutes within groups — ``ids`` is identical to
-    # the old per-node-sorted concatenation either way.
+    # The primed arrays must be sorted-unique.  The fold's set algebra keeps
+    # every id array sorted-unique, so one vectorized check usually replaces
+    # a sort; otherwise one segmented lexsort (``node`` is already grouped,
+    # so it only permutes within nodes).
     seg_edge = node[1:] != node[:-1]
     if bool(((cat[1:] >= cat[:-1]) | seg_edge).all()):
         ids = cat
     else:
         ids = cat[np.lexsort((cat, node))]
-    offs = np.concatenate(([0], np.cumsum(sizes)))
-    # per-node duplicate detection in one pass: a node's canonical string is
-    # cacheable only when its sorted ids are strictly increasing (unique) —
-    # the exact round-trip precondition of the memo
+    offs = np.concatenate(([0], np.cumsum(sizes))).tolist()
     adj_dup = (ids[1:] == ids[:-1]) & ~seg_edge
-    dup_cnt = (
-        np.bincount(node[1:][adj_dup], minlength=n) if adj_dup.any() else None
-    )
-
-    def _prime(i: int, wkt: str) -> None:
-        if (prime is not None and not prime[i]) or (
-            dup_cnt is not None and dup_cnt[i]
-        ):
-            return
-        _parse_cache_put((geom_type, wkt), ids[offs[i]:offs[i + 1]].copy())
+    dup_cnt = np.bincount(node[1:][adj_dup], minlength=n).tolist() if adj_dup.any() else None
 
     if geom_type == LINE:
-        p = ids // _E
-        q = ids % _E
-        px, py = _unpid(p)
-        qx, qy = _unpid(q)
-        bodies = _line_wkt_strings(node, px, py, qx, qy, n)
-        for i, b in enumerate(bodies):
-            if b is not None:
-                out[i] = b
-                _prime(i, b)
-        return out
-    elif geom_type == POLYGON:
-        cx, cy = _unpid(ids)
-        order = np.lexsort((cx, cy, node))
-        nn, cx_o, cy_o = node[order], cx[order], cy[order]
-        brk = np.flatnonzero(
-            (np.diff(nn) != 0) | (np.diff(cy_o) != 0) | (np.diff(cx_o) != 1)
-        )
-        starts = np.concatenate(([0], brk + 1))
-        ends = np.concatenate((brk, [len(cx_o) - 1]))
-        rn = nn[starts]
-        rx0, ry0 = cx_o[starts], cy_o[starts]
-        rx1, ry1 = cx_o[ends] + 1, cy_o[ends] + 1
-        o = np.lexsort((ry1, rx1, ry0, rx0, rn))
-        rn, rx0, ry0, rx1, ry1 = rn[o], rx0[o], ry0[o], rx1[o], ry1[o]
-        bounds = np.concatenate(
-            ([0], np.flatnonzero(np.diff(rn) != 0) + 1, [len(rn)])
-        )
-
-        f = _coord_strs().__getitem__
-
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            parts = [
-                f"(({f(a)} {f(b)}, {f(c)} {f(b)}, {f(c)} {f(d)}, {f(a)} {f(d)}, {f(a)} {f(b)}))"
-                for a, b, c, d in zip(
-                    rx0[lo:hi].tolist(), ry0[lo:hi].tolist(),
-                    rx1[lo:hi].tolist(), ry1[lo:hi].tolist(),
-                )
-            ]
-            out[int(rn[lo])] = "MULTIPOLYGON (" + ", ".join(parts) + ")"
-            _prime(int(rn[lo]), out[int(rn[lo])])
-        return out
-    raise GeometryError(f"unknown geometry type {geom_type}")
+        s, e = ids >> 28, ids & (_E - 1)  # run start / end pid of each unit edge
+        sx, sy = s >> 14, s & (_P - 1)
+        ux, uy = (e >> 14) - sx, (e & (_P - 1)) - sy  # (0,1) (1,-1) (1,0) (1,1)
+        group = ((3 * ux + uy - 1) << 16) | (ux * sy - uy * sx + _P)
+        pos = sy + ux * (sx - sy)
+    else:  # a run is a row strip of cells: SW corner of the first → NE of the last
+        s, e = ids, ids
+        group, pos = ids & (_P - 1), ids >> 14
+    # 15 pos bits: pos < 2^15 - 1, so a step of exactly 1 never crosses a group
+    key = (((node << 18) | group) << 15) | pos
+    order = np.argsort(key)
+    brk = np.flatnonzero(np.diff(key[order]) != 1)
+    first = order[np.concatenate(([0], brk + 1))]
+    last = order[np.concatenate((brk, [order.size - 1]))]
+    rn, rs, re_ = node[first], s[first], e[last]
+    o = np.lexsort((re_, (rn << 28) | rs))
+    rn, rs, re_ = rn[o], rs[o], re_[o]
+    ex, ey = re_ >> 14, re_ & (_P - 1)
+    if geom_type == POLYGON:
+        ex, ey = ex + 1, ey + 1
+    S = _coord_strs()
+    coords = zip((rs >> 14).tolist(), (rs & (_P - 1)).tolist(), ex.tolist(), ey.tolist())
+    if geom_type == LINE:
+        runs = [f"({S[a]} {S[b]}, {S[c]} {S[d]})" for a, b, c, d in coords]
+    else:
+        runs = [
+            f"(({S[a]} {S[b]}, {S[c]} {S[b]}, {S[c]} {S[d]}, {S[a]} {S[d]}, {S[a]} {S[b]}))"
+            for a, b, c, d in coords
+        ]
+    cuts = np.flatnonzero(np.diff(rn)) + 1
+    for lo, hi in zip([0, *cuts.tolist()], [*cuts.tolist(), len(runs)]):
+        i = int(rn[lo])
+        out[i] = f"{geom_type} (" + ", ".join(runs[lo:hi]) + ")"
+        if (prime is None or prime[i]) and not (dup_cnt and dup_cnt[i]):
+            _parse_cache_put((geom_type, out[i]), ids[offs[i]:offs[i + 1]].copy())
+    return out
 
 
 # ------------------------------------------------------------- set algebra

@@ -51,70 +51,6 @@ def _stable_seed(gid: str) -> int:
     return int.from_bytes(hashlib.md5(gid.encode()).digest()[:4], "big")
 
 
-def _batch_line_ids(wkts) -> list[np.ndarray]:
-    """Per-row sorted-unique unit-edge ids for a whole Arrow chunk in ONE
-    vectorized pass — the ``to_wkt_batch`` pattern (geometry.py:363-421)
-    applied to parsing: all rows' rings concatenate into a single token
-    stream, the DDA unit-step expansion runs once over every vertex pair of
-    the chunk, and per-row uniques split back out.  Bit-identical to
-    ``G.parse_wkt(w)`` per row (tested), without per-row numpy overhead."""
-    groups: list[str] = []
-    ring_rows: list[int] = []
-    empty = np.empty(0, dtype=np.int64)
-    for i, w in enumerate(wkts):
-        w = (w or "").strip()
-        if not w or w.upper().endswith("EMPTY"):
-            continue
-        head = w.split("(", 1)[0].strip().upper()
-        if head not in ("MULTILINESTRING", "LINESTRING"):
-            raise G.GeometryError(f"expected (MULTI)LINESTRING, got {head}")
-        gs = G._RING_RE.findall(w)
-        if not gs:
-            raise G.GeometryError("no coordinate rings found in WKT")
-        groups.extend(gs)
-        ring_rows.extend([i] * len(gs))
-    if not groups:
-        return [empty] * len(wkts)
-    joined = " ".join(g.replace(",", " ") for g in groups)
-    vals = np.asarray(joined.split(), dtype=np.float64)
-    n_tokens = np.asarray([g.count(",") + 1 for g in groups], dtype=np.int64) * 2
-    if int(n_tokens.sum()) != vals.size or vals.size % 2:
-        raise G.GeometryError("odd coordinate count in WKT body")
-    iv = G._snap_arr(vals)
-    xs, ys = iv[0::2], iv[1::2]
-    ring_id = np.repeat(np.arange(len(groups), dtype=np.int64), n_tokens // 2)
-    if (np.bincount(ring_id) < 2).any():
-        raise G.GeometryError("linestring needs ≥2 points")
-    same = ring_id[:-1] == ring_id[1:]  # ring ids are chunk-global: row
-    # boundaries never pair up
-    dx, dy = np.diff(xs)[same], np.diff(ys)[same]
-    x0v, y0v = xs[:-1][same], ys[:-1][same]
-    pair_row = np.asarray(ring_rows, dtype=np.int64)[ring_id[:-1][same]]
-    step = np.maximum(np.abs(dx), np.abs(dy))
-    if (step == 0).any():
-        raise G.GeometryError("zero-length segment")
-    ux, uy = dx // step, dy // step
-    if ((ux * step != dx) | (uy * step != dy)).any():
-        raise G.GeometryError("segment not axis-aligned or 45°")
-    total = int(step.sum())
-    k = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(step) - step, step)
-    rux, ruy = np.repeat(ux, step), np.repeat(uy, step)
-    x0 = np.repeat(x0v, step) + k * rux
-    y0 = np.repeat(y0v, step) + k * ruy
-    p = G._pid(x0, y0)
-    q = G._pid(x0 + rux, y0 + ruy)
-    eid = np.minimum(p, q) * G._E + np.maximum(p, q)
-    erow = np.repeat(pair_row, step)
-    # per-row sorted unique: lexsort by (row, id), drop consecutive dups
-    order = np.lexsort((eid, erow))
-    eid, erow = eid[order], erow[order]
-    keep = np.ones(eid.size, dtype=bool)
-    keep[1:] = (eid[1:] != eid[:-1]) | (erow[1:] != erow[:-1])
-    eid, erow = eid[keep], erow[keep]
-    bounds = np.searchsorted(erow, np.arange(len(wkts) + 1))
-    return [eid[bounds[i]: bounds[i + 1]] for i in range(len(wkts))]
-
-
 def synth_osm_catalog(spark, segments: DataFrame, seed: int = 4, per_seg: int = 3) -> DataFrame:
     """Deterministic stand-in catalog: points seeded near segment vertices so
     bbox hits are predictable (FIXTURES.md §4); ~50% tagged ``railway``."""
@@ -124,7 +60,9 @@ def synth_osm_catalog(spark, segments: DataFrame, seed: int = 4, per_seg: int = 
             rows = []
             # batched parse: one vectorized pass for the whole Arrow chunk;
             # only the (per-gid-seeded, tiny) sampling stays per row
-            for gid, ids in zip(pdf["gid"], _batch_line_ids(pdf["wkt"])):
+            for gid, ids in zip(pdf["gid"], G.parse_lines(pdf["wkt"])):
+                if isinstance(ids, G.GeometryError):
+                    raise ids
                 if ids.size == 0:
                     continue
                 p = ids // G._E
@@ -159,7 +97,9 @@ def segment_boxes(segments: DataFrame, samples: int = DEFAULT_SAMPLES, seed: int
             rows = []
             # batched parse (one numpy pass per chunk); the per-gid-seeded
             # box sampling is the only remaining per-row work
-            for gid, ids in zip(pdf["gid"], _batch_line_ids(pdf["wkt"])):
+            for gid, ids in zip(pdf["gid"], G.parse_lines(pdf["wkt"])):
+                if isinstance(ids, G.GeometryError):
+                    raise ids
                 if ids.size == 0:
                     continue
                 pts = np.concatenate([ids // G._E, ids % G._E])

@@ -11,6 +11,7 @@ other (SURVEY.md §5.2 item 1).
 from __future__ import annotations
 
 import hashlib
+import re
 
 from linked_maps_spark import geometry as G
 
@@ -148,3 +149,86 @@ class OracleGraph:
                     if d not in dates[cn]:
                         dates[cn].append(d)
         return dates
+
+
+# ------------------------------------------------- grid-WKT codec spec
+#
+# A plain-Python statement of the canonical codec (geometry.py's encoding
+# section), written without numpy or run-merge keys, so the batch kernels
+# are checked against a definition instead of against each other.
+
+_STEP = 1 << 14  # grid index → pid base
+_ESTEP = 1 << 28  # pid → edge id base
+
+
+def _edge(a: tuple[int, int], b: tuple[int, int]) -> int:
+    p, q = sorted((a[0] * _STEP + a[1], b[0] * _STEP + b[1]))
+    return p * _ESTEP + q
+
+
+def spec_parse_line(wkt: str) -> list[int]:
+    """Sorted edge ids of a clean grid (MULTI)LINESTRING: each vertex pair
+    walked one unit step at a time into a set."""
+    edges: set[int] = set()
+    for ring in re.findall(r"\(([^()]+)\)", wkt):
+        pts = [tuple(round(float(v) * 100) for v in pt.split()) for pt in ring.split(",")]
+        for (x0, y0), (x1, y1) in zip(pts, pts[1:]):
+            n = max(abs(x1 - x0), abs(y1 - y0))
+            ux, uy = (x1 - x0) // n, (y1 - y0) // n
+            for k in range(n):
+                a = (x0 + k * ux, y0 + k * uy)
+                edges.add(_edge(a, (a[0] + ux, a[1] + uy)))
+    return sorted(edges)
+
+
+def _coord(i: int) -> str:
+    return f"{i / 100:.2f}"
+
+
+def spec_to_wkt(ids, geom_type: str = G.LINE) -> str:
+    """Canonical WKT of an id set: maximal collinear unit runs (LINE) or
+    maximal row strips of cells (POLYGON), sorted by (sx, sy, ex, ey)."""
+    ids = {int(i) for i in ids}
+    if not ids:
+        return f"{geom_type} EMPTY"
+    runs = []
+    if geom_type == G.LINE:
+        for eid in ids:
+            p, q = divmod(eid, _ESTEP)
+            (px, py), (qx, qy) = divmod(p, _STEP), divmod(q, _STEP)
+            u = (qx - px, qy - py)
+            if _edge((px - u[0], py - u[1]), (px, py)) in ids:
+                continue  # not the first edge of its run
+            while _edge((qx, qy), (qx + u[0], qy + u[1])) in ids:
+                qx, qy = qx + u[0], qy + u[1]
+            runs.append((px, py, qx, qy))
+        fmt = "({0} {1}, {2} {3})"
+    else:
+        for cid in ids:
+            x, y = divmod(cid, _STEP)
+            if (x - 1) * _STEP + y in ids:
+                continue
+            x1 = x + 1
+            while x1 * _STEP + y in ids:
+                x1 += 1
+            runs.append((x, y, x1, y + 1))
+        fmt = "(({0} {1}, {2} {1}, {2} {3}, {0} {3}, {0} {1}))"
+    return f"{geom_type} (" + ", ".join(
+        fmt.format(*map(_coord, r)) for r in sorted(runs)
+    ) + ")"
+
+
+#: one poison LINE string per parse check, in the kernel's check order, with
+#: the exact message it raises (the text lands in ``dead_letter.error``)
+LINE_PARSE_ERRORS = [
+    ("POLYGON ((0.00 0.00, 0.01 0.00, 0.01 0.01, 0.00 0.00))",
+     "expected MULTILINESTRING, got POLYGON"),
+    ("MULTILINESTRING ()", "no coordinate rings found in WKT"),
+    ("MULTILINESTRING ((0.00 0.00, abc 0.00))", "could not convert string to float: 'abc'"),
+    ("MULTILINESTRING ((0.00 0.00, 0.01))", "odd coordinate count in WKT body"),
+    ("MULTILINESTRING ((0.005 0.00, 0.01 0.00))", "coordinate not on the 0.01° grid"),
+    ("MULTILINESTRING ((0.00 0.00, 200.00 0.00))", "coordinate outside grid range"),
+    ("MULTILINESTRING ((0.00 0.00, 0.01 0.00), (0.05 0.05))", "linestring needs ≥2 points"),
+    ("MULTILINESTRING ((0.00 0.00, 0.00 0.00))", "zero-length segment"),
+    ("MULTILINESTRING ((0.00 0.00, 0.02 0.01))", "segment not axis-aligned or 45°"),
+]

@@ -3,6 +3,8 @@ import pytest
 
 from linked_maps_spark import geometry as G
 
+from .oracle_ref import LINE_PARSE_ERRORS, spec_parse_line
+
 
 def test_parse_roundtrip_line():
     wkt = "MULTILINESTRING ((0.00 0.00, 0.03 0.00), (0.05 0.05, 0.07 0.07))"
@@ -139,53 +141,81 @@ def test_parse_cache_budget_evicts_lru():
 
 
 def test_preparse_batch_equals_per_string():
-    """preparse_wkts primes the consume-once table with arrays bit-identical
-    to per-string parses, across MULTILINESTRING/LINESTRING forms, shared
+    """preparse_wkts primes the consume-once table with the spec's edge set
+    of every clean string, across MULTILINESTRING/LINESTRING forms, shared
     substrings and duplicate inputs."""
     wkts = [
         "MULTILINESTRING ((0.00 0.00, 0.03 0.00), (0.05 0.05, 0.07 0.07))",
         "LINESTRING (0.01 0.01, 0.01 0.04)",
         "MULTILINESTRING ((0.10 0.10, 0.13 0.13))",
         "MULTILINESTRING ((0.10 0.10, 0.13 0.13))",  # duplicate
+        "MULTILINESTRING ((0.13 0.13, 0.10 0.10, 0.10 0.12))",  # unsorted walk
         "",  # tombstone
         None,  # arrow null
         "MULTILINESTRING EMPTY",
     ]
-    expected = {
-        w: G._parse_wkt_impl(w, G.LINE) for w in wkts if isinstance(w, str) and w
-    }
+    expected = {w: spec_parse_line(w) for w in wkts if isinstance(w, str) and w}
     G.clear_parse_cache()
     G.preparse_wkts(wkts, G.LINE)
     for w, exp in expected.items():
+        if exp:
+            assert (G.LINE, w) in G._PREPARSED, w
         got = G.parse_wkt(w, G.LINE)
-        assert np.array_equal(got, exp), w
+        assert got.tolist() == exp, w
         assert not got.flags.writeable or got.size == 0
     # consume-once: a second parse still answers (slow path), identically
     for w, exp in expected.items():
-        assert np.array_equal(G.parse_wkt(w, G.LINE), exp)
+        assert G.parse_wkt(w, G.LINE).tolist() == exp
 
 
 def test_preparse_poison_left_for_per_string_error():
     """A malformed / off-grid / zero-step string anywhere in the batch must
-    not change error semantics: clean strings still prime (or at worst parse
-    per-string), the poison string raises its exact GeometryError."""
+    not change error semantics: clean strings still prime, the poison
+    string stays unprimed and raises its exact GeometryError."""
     clean = "MULTILINESTRING ((0.00 0.00, 0.02 0.00))"
-    exp = G._parse_wkt_impl(clean, G.LINE)
-    for poison in [
-        "MULTILINESTRING ((0.00 0.00, abc 0.00))",  # float conversion fails
-        "MULTILINESTRING ((0.001 0.00, 0.02 0.00))",  # off the 0.01 grid
-        "MULTILINESTRING ((0.00 0.00, 0.00 0.00))",  # zero-length segment
-        "MULTILINESTRING ((0.00 0.00, 0.03 0.01))",  # not axis-aligned/45
-        "MULTILINESTRING ((0.00 0.00))",  # <2 points
-        "POLYGON ((0.00 0.00, 0.01 0.00, 0.01 0.01, 0.00 0.01, 0.00 0.00))",
-    ]:
+    exp = spec_parse_line(clean)
+    for poison, msg in LINE_PARSE_ERRORS:
         G.clear_parse_cache()
         G.preparse_wkts([clean, poison], G.LINE)
-        assert np.array_equal(G.parse_wkt(clean, G.LINE), exp), poison
-        # float-conversion poison raises ValueError (impl behavior), the
-        # rest GeometryError — batch priming must not change either
-        with pytest.raises((G.GeometryError, ValueError)):
+        assert (G.LINE, clean) in G._PREPARSED, poison
+        assert (G.LINE, poison) not in G._PREPARSED, poison
+        assert G.parse_wkt(clean, G.LINE).tolist() == exp, poison
+        with pytest.raises(G.GeometryError) as exc:
             G.parse_wkt(poison, G.LINE)
+        assert str(exc.value) == msg
+
+
+@pytest.mark.parametrize("wkt,msg", LINE_PARSE_ERRORS, ids=[m for _, m in LINE_PARSE_ERRORS])
+def test_parse_error_messages_pinned(wkt, msg):
+    """Each parse check raises its exact message (these land in
+    ``dead_letter.error``, so they must not drift), alone and from inside a
+    batch that holds clean strings on both sides."""
+    G.clear_parse_cache()
+    with pytest.raises(G.GeometryError) as exc:
+        G.parse_wkt(wkt, G.LINE)
+    assert str(exc.value) == msg
+    clean = "MULTILINESTRING ((0.00 0.00, 0.02 0.00))"
+    got = G.parse_lines([clean, wkt, clean])
+    assert isinstance(got[1], G.GeometryError) and str(got[1]) == msg
+    assert got[0].tolist() == got[2].tolist() == spec_parse_line(clean)
+
+
+def test_parse_error_precedence():
+    """A string with several faults reports the earliest check: an
+    alignment fault beside an off-grid ring is a grid error, a zero-length
+    pair beside a 30° one is a zero-length error."""
+    for wkt, msg in [
+        ("MULTILINESTRING ((0.00 0.00, 0.02 0.01), (0.005 0.00, 0.01 0.00))",
+         "coordinate not on the 0.01° grid"),
+        ("MULTILINESTRING ((0.00 0.00, 0.02 0.01), (0.00 0.00, 0.00 0.00))",
+         "zero-length segment"),
+        ("MULTILINESTRING ((0.00 0.00, abc), (0.00))",
+         "could not convert string to float: 'abc'"),
+    ]:
+        G.clear_parse_cache()
+        with pytest.raises(G.GeometryError) as exc:
+            G.parse_wkt(wkt, G.LINE)
+        assert str(exc.value) == msg
 
 
 def test_preparse_batches_do_not_accumulate():

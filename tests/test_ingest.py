@@ -1005,15 +1005,21 @@ def test_fold_key_quarantine_equals_clean_subset():
               "content": "MULTILINESTRING ((0.005 0.00, 0.01 0.00))"}  # off-grid
     good2 = {"repo": "r", "path": "p", "commit": "1920",
              "content": "MULTILINESTRING ((0.01 0.00, 0.03 0.00))"}
+    # a non-numeric coordinate is a GeometryError too, not a bare ValueError
+    nonnum = {"repo": "r", "path": "p", "commit": "1915",
+              "content": "MULTILINESTRING ((a 0, 0.01 0))"}
     with pytest.raises(G.GeometryError):
         fold_key("r", "p", [good1, poison, good2], [])
-    res = fold_key("r", "p", [good1, poison, good2], [], on_error="quarantine")
+    with pytest.raises(G.GeometryError):
+        fold_key("r", "p", [good1, nonnum, good2], [])
+    res = fold_key("r", "p", [good1, poison, nonnum, good2], [], on_error="quarantine")
     clean = fold_key("r", "p", [good1, good2], [])
     assert [(s["gid"], s["content_sha256"], s["is_leaf"]) for s in res.segments] == \
            [(s["gid"], s["content_sha256"], s["is_leaf"]) for s in clean.segments]
     assert res.relations == clean.relations
-    assert len(res.dead) == 1 and res.dead[0]["commit"] == "1910"
+    assert [d["commit"] for d in res.dead] == ["1910", "1915"]
     assert "grid" in res.dead[0]["error"]
+    assert res.dead[1]["error"] == "could not convert string to float: 'a'"
     # a poison replica that out-ranks a clean one under last-writer-wins
     # quarantines the whole commit (dedup runs before the parse)
     poison_big = dict(poison, commit="1900",
@@ -1027,7 +1033,7 @@ def test_fold_key_quarantine_equals_clean_subset():
 
     state = [s for s in fold_key("r", "p", [good1], []).segments if s["is_leaf"]]
     for events, leaves in (
-        ([good1, poison, good2], []),
+        ([good1, poison, nonnum, good2], []),
         ([good1, poison_big, good2], []),
         ([poison, good2], state),
         ([dict(good2, commit="1930"), dict(poison_big, commit="1930"), good2], state),

@@ -202,22 +202,21 @@ def test_osm_catalog_and_boxes_pinned_digests(spark):
 
 
 def test_batch_line_ids_equals_per_row_parse():
-    """The chunk-vectorized parse behind segment_boxes/synth_osm_catalog is
-    bit-identical to G.parse_wkt row by row (incl. tombstones, EMPTY, and
-    shared edges between rows)."""
-    import numpy as np
-
+    """The chunk parse behind segment_boxes/synth_osm_catalog (one
+    G.parse_lines pass per Arrow chunk) gives every row the spec's edge set
+    (incl. tombstones, EMPTY, and shared edges between rows)."""
     from linked_maps_spark import geometry as G
     from linked_maps_spark.changelog import synth_change_log
-    from linked_maps_spark.osm_link import _batch_line_ids
+
+    from .oracle_ref import spec_parse_line
 
     wal = synth_change_log(n_keys=12, n_commits=3, seed=31, tombstone_every=3)
     wkts = list(wal["content"]) + ["", "MULTILINESTRING EMPTY",
                                    "LINESTRING (0.00 0.00, 0.03 0.00)"]
-    batched = _batch_line_ids(wkts)
+    batched = G.parse_lines(wkts)
     assert len(batched) == len(wkts)
     for w, got in zip(wkts, batched):
-        assert np.array_equal(got, G.parse_wkt(w)), w[:60]
+        assert got.tolist() == (spec_parse_line(w) if w else []), w[:60]
 
 
 def test_osm_link_deterministic_and_q5(spark, tables):
