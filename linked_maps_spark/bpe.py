@@ -6,7 +6,7 @@ parsing is the closest analog).  Spark-first design:
 
 * **Training** operates on the *word-type* table (``word, freq``), exactly like
   classic BPE trainers (GPT-2's ``get_stats`` counts pair frequencies over
-  word types weighted by corpus frequency, not over raw text).  Four
+  word types weighted by corpus frequency, not over raw text).  Three
   execution strategies, ALL bit-identical (same argmax tie-break count DESC,
   left ASC, right ASC; same left-to-right non-overlap application;
   hypothesis-pinned against one imperative reference):
@@ -28,12 +28,9 @@ parsing is the closest analog).  Spark-first design:
     than serial (64 merges in 27 rounds) — the bound binds because created
     pairs ("th"+"e") really do rival the next best pair, which is WHY naive
     top-m batching silently changes the vocabulary.
-  - :func:`train_bpe_sampled`: frequency-capped sample (the GPT-2/HF
-    ``min_frequency`` design) — 3 jobs regardless of k at any corpus
-    size, with the count-error bound documented on the function.
 
   Only metadata-sized results are ever collected (the 1-row argmax, the
-  top-M candidate batch, or the capped type table itself).
+  top-M candidate batch, or the driver-sized type table itself).
 
 * **Merge application** uses a closed form instead of a sequential scan so it
   stays inside whole-stage codegen: merging pair (l, r) left-to-right without
@@ -266,10 +263,8 @@ def train_bpe(
     ``mode``:
 
     * ``"auto"`` (default) — driver-side incremental trainer when the type
-      table fits (≤ ``DRIVER_MAX_TYPES`` rows; the word-type table of even
-      a 100-TB corpus is ~10⁸ rows, so real deployments usually pair this
-      with :func:`train_bpe_sampled`'s frequency cutoff, exactly like
-      GPT-2/HF trainers), else exact guarded batching (``"batched"``).
+      table fits (≤ ``DRIVER_MAX_TYPES`` rows), else exact guarded
+      batching (``"batched"``).
     * ``"serial"`` — the distributed reference trainer: one Spark job per
       merge (global pair argmax, JVM closed-form apply).  The semantics
       every other mode is pinned against.
@@ -553,59 +548,6 @@ def _train_distributed_batched(
         # next round's counting job
         seg = seg.localCheckpoint(eager=False)
     return merges, seg
-
-
-def train_bpe_sampled(
-    documents: DataFrame, k: int = DEFAULT_MERGES, max_types: int = 1_000_000
-) -> "tuple[DataFrame, DataFrame, float]":
-    """Vocab-scale trainer over a frequency-capped type sample — the way
-    production tokenizers are actually trained (GPT-2/HF ``min_frequency``
-    cutoffs).  Job count is INDEPENDENT of k — three eager jobs total:
-
-    1. the type-table aggregation (eager localCheckpoint);
-    2. one combined count+mass aggregation (clamps the limit, reports
-       sample coverage);
-    3. the top-``min(max_types, n_types)`` types by (freq DESC, word ASC)
-       — a TakeOrderedAndProject, never a global sort — collected and
-       trained in-driver with the incremental algorithm.  The FULL corpus
-       re-segmentation (so :func:`encode` covers words outside the
-       sample) is lazy: one Arrow-batched pass riding the caller's next
-       action.
-
-    Returns ``(merges, segmentations, sample_mass)`` where ``sample_mass``
-    is the sampled fraction of corpus word occurrences.  Error bound
-    (documented, not hidden): every reported pair_count is exact over the
-    sampled sub-corpus; vs full-corpus training each count is understated
-    by at most the tail's adjacent-pair mass, i.e. Σ_tail freq·(|word|-1)
-    ≤ (1 - sample_mass) · corpus_words · (max_len - 1) — with a Zipf
-    vocabulary and max_types = 10⁶ the tail mass is ≲0.1%, smaller than
-    the count gaps between consecutive merge ranks.  When ``max_types`` ≥
-    the full type count the sample is the population and the result is
-    BIT-IDENTICAL to every other mode (hypothesis-pinned)."""
-    spark = documents.sparkSession
-    wt = word_types(documents).localCheckpoint(eager=True)
-    # ONE metadata-sized job for both the clamp value and the total mass.
-    # The clamp matters: Spark's takeOrdered preallocates a 2k-element
-    # buffer PER PARTITION, so an effectively unbounded max_types (say
-    # 10^9, "keep everything") would OOM the executors before reading a
-    # single row
-    agg = wt.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("freq").alias("m")
-    ).collect()[0]
-    n_types, total = int(agg["n"]), int(agg["m"] or 0)
-    sample = (
-        wt.orderBy(F.desc("freq"), "word")
-        .limit(min(max_types, n_types))
-        .collect()
-    )
-    mass = sum(int(r["freq"]) for r in sample)
-    types = sorted((r["word"], int(r["freq"])) for r in sample)
-    merges, _ = _train_types(types, k)
-    merges_df = spark.createDataFrame(merges, MERGE_SCHEMA)
-    seg_full = wt.withColumn("syms", _char_split()).withColumn(
-        "syms", _apply_merges_udf([(l, r) for _, l, r, _ in merges])(F.col("syms"))
-    )
-    return merges_df, seg_full, (mass / total if total else 1.0)
 
 
 def encode(documents: DataFrame, seg: DataFrame) -> DataFrame:

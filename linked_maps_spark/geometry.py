@@ -64,7 +64,6 @@ from collections import OrderedDict
 import numpy as np
 
 PITCH = 0.01  # degrees; grid pitch (FIXTURES.md §2)
-BUFFER = 0.0015  # reference buffer, segment.py:60 — documented, not needed numerically
 _SCALE = 1.0 / PITCH
 # 14 bits per axis → pid < 2^28, edge id < 2^56: fits int64 with headroom.
 # Grid range is therefore [0, 163.83°] per axis at 0.01° pitch.

@@ -91,6 +91,13 @@ def _check_extras(columns: list[str]) -> None:
             "([A-Za-z_][A-Za-z0-9_]*) — rename them upstream of ingest"
         )
 
+
+def _mark(marks: list[tuple[str, float]] | None, label: str) -> None:
+    """Record an epoch span boundary for the ``LMS_TRACE_INGEST=1`` stderr
+    line; ``marks`` is None when tracing is off."""
+    if marks is not None:
+        marks.append((label, time.monotonic()))
+
 # Target rows (events + resume-state leaves) per fold task for the adaptive
 # shuffle width: ~2k rows ≈ 0.5–1 s of fold kernel at measured speeds —
 # large enough that per-task python overhead amortizes, small enough that a
@@ -897,6 +904,13 @@ class CdcEngine:
         here, before the first epoch (a snapshot comparison when they
         already match).
         """
+        # checked before any Spark job: range() with a step below 1 yields no
+        # epoch (or raises only after the census), and a negative slice drops
+        # the last epochs
+        if commits_per_epoch < 1:
+            raise ValueError(f"commits_per_epoch must be >= 1, got {commits_per_epoch}")
+        if max_epochs is not None and max_epochs < 1:
+            raise ValueError(f"max_epochs must be None or >= 1, got {max_epochs}")
         _check_extras(change_log.columns)
         self._share_layout()
         if self.on_error == "quarantine":
@@ -1134,15 +1148,9 @@ class CdcEngine:
         fold's event side reads it once, and the leaf semi-join only its
         ``(repo, path)`` columns.  Returns the epoch context for
         :meth:`_start_writes` / :meth:`_commit_epoch`."""
-        trace = os.environ.get("LMS_TRACE_INGEST") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if trace:
-                marks.append((label, time.monotonic()))
-
+        marks = [] if os.environ.get("LMS_TRACE_INGEST") == "1" else None
         t0 = time.monotonic()
-        mark("start")
+        _mark(marks, "start")
         # (within-batch duplicate events are collapsed deterministically
         # inside the fold — no separate window shuffle needed)
         batch = change_log.filter(
@@ -1326,7 +1334,7 @@ class CdcEngine:
                         F.broadcast(hot_df0), ["repo", "path"], "left_semi"
                     ).collect()
                 })
-        mark("hot_detect")
+        _mark(marks, "hot_detect")
         if not hot:
             folded = (
                 shaped
@@ -1384,7 +1392,7 @@ class CdcEngine:
         if os.path.exists(scratch):  # crashed attempt: deterministic redo
             shutil.rmtree(scratch)
         combined.write.partitionBy("kind", "_bucket").parquet(scratch)
-        mark("fold")
+        _mark(marks, "fold")
         self._absorb_hot_markers(scratch)
         seg_dir = os.path.join(scratch, "kind=segment")
         seg_schema = DataType.fromDDL(", ".join(
@@ -1396,7 +1404,7 @@ class CdcEngine:
             # sums the fold's per-task key counts) before _finish_epoch reads
             # it — no dedicated countDistinct job on the epoch critical path
             "n_events": n_events, "t0": t0, "buckets": buckets,
-            "trace": trace, "marks": marks,
+            "marks": marks,
             # ``attempt`` = a metrics snapshot version ≥ the one this append
             # will commit as — monotonic across replays, so read_metrics can
             # keep only the latest attempt
@@ -1575,12 +1583,6 @@ class CdcEngine:
         import sys
 
         marks = prep["marks"]
-        trace = prep["trace"]
-
-        def mark(label: str) -> None:
-            if trace:
-                marks.append((label, time.monotonic()))
-
         # wait for kept writes + metrics append, then ADOPT the combined
         # scratch files + kept files into each table's manifest by hard link
         # (no further data jobs)
@@ -1610,11 +1612,11 @@ class CdcEngine:
         # dead-letter commits with the replay-safe group (re-appends under a
         # higher attempt on replay; read_dead_letter keeps the latest)
         commit_dead()
-        mark("relations+metrics")
+        _mark(marks, "relations+metrics")
         if self._crash_after == "relations_merge":
             raise RuntimeError("injected crash: after relations/metrics, before segments")
         commit_seg()
-        mark("segments_merge")
+        _mark(marks, "segments_merge")
         if self._crash_after == "segments_merge":
             raise RuntimeError("injected crash: after segments merge, before commit log")
         es = self._finish_epoch(
@@ -1625,8 +1627,8 @@ class CdcEngine:
         # needed (the pipelined next epoch consumed its patch during ITS
         # prepare, which completed before this commit ran)
         shutil.rmtree(scratch, ignore_errors=True)
-        if trace:
-            mark("log")
+        if marks is not None:
+            _mark(marks, "log")
             prev = prep["t0"]
             spans = []
             for label, ts in marks[1:]:

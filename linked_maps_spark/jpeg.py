@@ -138,7 +138,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 _ZIGZAG = _zigzag_order()          # zigzag position -> flat natural index
-_UNZIGZAG = np.argsort(_ZIGZAG)    # flat natural index -> zigzag position
 assert list(_ZIGZAG[:10]) == [0, 1, 8, 16, 9, 2, 3, 10, 17, 24]
 
 

@@ -345,10 +345,6 @@ class CommitConflict(RuntimeError):
     pass
 
 
-class ConstraintViolation(ValueError):
-    """A write carried a row failing one of the table's CHECK constraints."""
-
-
 def _schema_of(schema: StructType | str) -> StructType:
     """``schema`` as a StructType; DDL text is parsed without building a
     DataFrame (a few py4j round trips instead of a few dozen)."""
@@ -376,18 +372,11 @@ class LakeTable:
         n_buckets: int = 16,
         overwrite: bool = False,
         bucket_cols: list[str] | None = None,
-        constraints: dict[str, str] | None = None,
     ) -> "LakeTable":
         """``key_cols`` is the MERGE identity; ``bucket_cols`` (default:
         key_cols) chooses the file-layout hash.  Splitting them lets the CDC
         tables bucket by ``(repo, path)`` — the key the ingest loop prunes
-        by — while still upserting on content-hash ``gid``.
-
-        ``constraints`` are named SQL CHECK expressions (Delta constraint
-        analog): every append/merge/overwrite verifies each expression IS
-        TRUE for every incoming row BEFORE any file is written — a
-        violation raises :class:`ConstraintViolation` and leaves the table
-        untouched.  NULL fails (strict)."""
+        by — while still upserting on content-hash ``gid``."""
         t = cls(spark, path)
         if overwrite and os.path.exists(t.path):
             shutil.rmtree(t.path)
@@ -402,7 +391,6 @@ class LakeTable:
                 key_cols=key_cols or [],
                 n_buckets=n_buckets,
                 bucket_cols=bucket_cols if bucket_cols is not None else (key_cols or []),
-                constraints=dict(constraints or {}),
             )
         return t
 
@@ -447,75 +435,9 @@ class LakeTable:
     def schema(self, version: int | None = None) -> StructType:
         return StructType.fromJson(self.snapshot(version)["schema"])
 
-    # -------------------------------------------------------- metadata tables
-
-    def meta_snapshots(self) -> DataFrame:
-        """Iceberg's ``table.snapshots`` analog: one row per retained
-        snapshot (version, parent, operation, summary JSON, file/row
-        counts).  Metadata-sized by construction — built driver-side from
-        the manifests via an Arrow-backed createDataFrame, never a data
-        scan; at 100 TB this reads kilobytes of JSON, not the table."""
-        import pandas as pd
-
-        rows = [
-            {
-                "version": s["version"],
-                "parent": s["parent"],
-                "operation": s["operation"],
-                "summary": json.dumps(s["summary"], sort_keys=True),
-                "n_files": len(s["files"]),
-                "n_rows": sum(f.get("rows") or 0 for f in s["files"]),
-                "n_buckets": s["n_buckets"],
-            }
-            for s in self.history()
-        ]
-        schema = (
-            "version long, parent long, operation string, summary string, "
-            "n_files long, n_rows long, n_buckets long"
-        )
-        if not rows:
-            return self.spark.range(0).selectExpr(
-                "id AS version", "id AS parent", "CAST(NULL AS STRING) AS operation",
-                "CAST(NULL AS STRING) AS summary", "id AS n_files",
-                "id AS n_rows", "id AS n_buckets",
-            )
-        pdf = pd.DataFrame(rows, columns=[
-            "version", "parent", "operation", "summary",
-            "n_files", "n_rows", "n_buckets",
-        ])
-        return self.spark.createDataFrame(pdf, schema)
-
-    def meta_files(self, version: int | None = None) -> DataFrame:
-        """Iceberg's ``table.files`` analog: one row per live data file of a
-        snapshot (path, bucket, row count, per-column min/max stats JSON).
-        The file-skipping story becomes queryable: ``meta_files`` joined on
-        its stats columns is how an operator audits pruning effectiveness
-        without opening a single data file."""
-        import pandas as pd
-
-        snap = self.snapshot(version)
-        rows = [
-            {
-                "path": f["path"],
-                "bucket": f["bucket"],
-                "rows": f.get("rows"),
-                "stats": json.dumps(f.get("stats"), sort_keys=True)
-                if f.get("stats") is not None else None,
-            }
-            for f in snap["files"]
-        ]
-        schema = "path string, bucket int, rows long, stats string"
-        if not rows:
-            return self.spark.range(0).selectExpr(
-                "CAST(NULL AS STRING) AS path", "CAST(id AS INT) AS bucket",
-                "id AS rows", "CAST(NULL AS STRING) AS stats",
-            )
-        pdf = pd.DataFrame(rows, columns=["path", "bucket", "rows", "stats"])
-        return self.spark.createDataFrame(pdf, schema)
-
     def _commit_snapshot(
         self, version, schema, files, operation, summary,
-        key_cols=None, n_buckets=None, bucket_cols=None, constraints=None,
+        key_cols=None, n_buckets=None, bucket_cols=None,
     ):
         prev = None if version == 0 else self.snapshot(version - 1)
         marks = {k: prev["summary"][k] for k in _MARKS if k in prev["summary"]} if prev else {}
@@ -532,11 +454,6 @@ class LakeTable:
                 bucket_cols
                 if bucket_cols is not None
                 else prev.get("bucket_cols", prev["key_cols"]) if prev else key_cols or []
-            ),
-            "constraints": (
-                constraints
-                if constraints is not None
-                else (prev.get("constraints", {}) if prev else {})
             ),
         }
         final = os.path.join(self.path, _SNAP_DIR, f"v{version}.json")
@@ -731,61 +648,6 @@ class LakeTable:
                     f["stats"] = stats
         return files
 
-    def _check_constraints(self, df: DataFrame) -> None:
-        """Raise :class:`ConstraintViolation` if any row fails a CHECK
-        expression (strict: NULL fails).  One delta-sized validation job
-        per constrained write, run BEFORE any file lands; tables without
-        constraints (the CDC hot path) pay nothing."""
-        cons = self.snapshot().get("constraints", {})
-        if not cons:
-            return
-        # ONE job for all constraints: OR of the negated checks, with a
-        # CASE naming the first failing one in the example row
-        checks = {n: F.expr(e).eqNullSafe(F.lit(True)) for n, e in cons.items()}
-        any_bad = None
-        for ok in checks.values():
-            any_bad = ~ok if any_bad is None else any_bad | ~ok
-        which = F.coalesce(
-            *[F.when(~ok, F.lit(n)) for n, ok in checks.items()]
-        )
-        row = df.filter(any_bad).withColumn("__violated", which).limit(1).collect()
-        if row:
-            name = row[0]["__violated"]
-            raise ConstraintViolation(
-                f"constraint {name!r} ({cons[name]}) violated, e.g. by "
-                f"{ {k: v for k, v in row[0].asDict().items() if k != '__violated'} }"
-            )
-
-    def add_constraint(self, name: str, expr: str) -> int:
-        """ALTER TABLE ADD CONSTRAINT: validate the EXISTING rows, then
-        commit a metadata-only snapshot carrying the new CHECK expression
-        (files untouched).  Raises :class:`ConstraintViolation` (and
-        commits nothing) if current data already violates it."""
-        snap = self.snapshot()
-        cons = dict(snap.get("constraints", {}))
-        cons[name] = expr
-        probe = self.read(version=snap["version"]).filter(
-            ~F.expr(expr).eqNullSafe(F.lit(True))
-        ).limit(1)
-        row = probe.collect()
-        if row:
-            raise ConstraintViolation(
-                f"existing rows violate {name!r} ({expr}), e.g. "
-                f"{row[0].asDict()}"
-            )
-        # version pinned BEFORE the (possibly long) validation scan: a
-        # concurrent commit in the meantime makes the os.link below raise
-        # CommitConflict instead of silently dropping that commit's files
-        version = snap["version"] + 1
-        self._commit_snapshot(
-            version, self.schema(), snap["files"], "add-constraint",
-            {"constraint": name},
-            key_cols=snap["key_cols"], n_buckets=snap["n_buckets"],
-            bucket_cols=snap.get("bucket_cols", snap["key_cols"]),
-            constraints=cons,
-        )
-        return version
-
     def append(
         self, df: DataFrame, summary: dict[str, Any] | None = None,
         defer_commit: bool = False,
@@ -800,7 +662,6 @@ class LakeTable:
         version = self.version() + 1
         schema = self._merged_with(df.schema)
         aligned = self._align_to(df, schema)
-        self._check_constraints(aligned)
         new_files = self._write_data(aligned, version)
         files = self.snapshot()["files"] + new_files
 
@@ -824,16 +685,12 @@ class LakeTable:
 
         The arrow schema must match the table schema exactly (names, order,
         arrow-compatible types) — no evolution on this path — and the table
-        must be key-less (append-only accounting) and unconstrained."""
+        must be key-less (append-only accounting)."""
         import pyarrow.parquet as pq
 
         snap = self.snapshot()
         if snap["key_cols"]:
             raise ValueError("append_arrow is for key-less accounting tables")
-        if snap.get("constraints"):
-            raise ValueError(
-                "append_arrow bypasses constraint validation; use append()"
-            )
         expected = [f.name for f in self.schema().fields]
         if list(table.schema.names) != expected:
             raise ValueError(
@@ -870,7 +727,6 @@ class LakeTable:
         version = self.version() + 1
         schema = self._merged_with(df.schema)
         aligned = self._align_to(df, schema)
-        self._check_constraints(aligned)
         files = self._write_data(aligned, version)
         self._commit_snapshot(version, schema, files, "overwrite", summary)
         return version
@@ -910,7 +766,6 @@ class LakeTable:
             # callers whose source is key-unique by construction skip this shuffle
             aligned = aligned.dropDuplicates(keys)
 
-        self._check_constraints(aligned)
         src = aligned.withColumn("_bucket", self.bucket_expr(aligned))
         touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
         current = self._align_to(self.read(buckets=touched), schema)
@@ -962,14 +817,6 @@ class LakeTable:
         must not pay a per-file metadata read); :meth:`analyze` backfills
         them as maintenance, after which reads prune on them like any
         :meth:`_write_data`-produced file."""
-        if self.snapshot().get("constraints"):
-            # adopted files never pass through _check_constraints — refusing
-            # keeps the "validated before any file lands" contract honest
-            # (the CDC tables, the only adopt_merge users, are unconstrained)
-            raise ConstraintViolation(
-                "adopt_merge bypasses CHECK validation; constrained tables "
-                "must use merge_upsert"
-            )
         if operation == "append" and touched_buckets:  # read_appended's contract
             raise ValueError("an append adopt drops no buckets")
         merged = self._merged_with(schema)
@@ -1243,10 +1090,6 @@ class LakeTable:
             key_cols=old["key_cols"],
             n_buckets=old["n_buckets"],
             bucket_cols=old.get("bucket_cols", old["key_cols"]),
-            # metadata reverts WITH the data: inheriting the head's
-            # constraints could record a CHECK the restored rows were
-            # never validated against
-            constraints=old.get("constraints", {}),
         )
         return new_v
 

@@ -40,9 +40,6 @@ from linked_maps_spark import codecs
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, declared_mime string"
 )
-META_SCHEMA = (
-    "media_id long, kind string, n_bytes long, magic string, payload_sha256 string"
-)
 FEATURE_SCHEMA = "media_id long, feature array<float>, feat_dim int"
 
 

@@ -58,39 +58,6 @@ def term_postings(documents: DataFrame) -> DataFrame:
     )
 
 
-DOC_STATS_SCHEMA = "doc_id long, dl long"
-
-
-def doc_stats_table(spark: SparkSession, path: str) -> LakeTable:
-    """The sibling per-document length table of the index at ``path``
-    (BM25's dl/avgdl source), maintained by :func:`build_text_index`."""
-    return LakeTable.load(spark, path + "_docs")
-
-
-def _ensure_doc_stats(
-    spark: SparkSession, index: LakeTable, path: str, n_buckets: int = 16
-) -> LakeTable:
-    """Upgrade path for indexes persisted before the ``_docs`` sibling
-    existed: the postings already carry every (doc_id, tf), so the stats
-    table is backfilled from the index itself (dl = Σ tf per doc, corpus
-    token total in the summary) on first touch — one scan, once, instead
-    of a FileNotFoundError on every incremental build / BM25 query."""
-    t = LakeTable(spark, path + "_docs")
-    if t.exists():
-        return t
-    t = LakeTable.create(
-        spark, path + "_docs", DOC_STATS_SCHEMA,
-        key_cols=["doc_id"], n_buckets=max(1, n_buckets // 2),
-    )
-    stats = index.read().groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    total = stats.agg(F.sum("dl")).collect()[0][0] or 0
-    t.merge_upsert(
-        stats, assume_unique=True,
-        summary={"total_dl": int(total), "op": "doc-stats-backfill"},
-    )
-    return t
-
-
 def build_text_index(
     spark: SparkSession,
     documents: DataFrame,
@@ -103,11 +70,7 @@ def build_text_index(
     the tokenize pass runs over the delta alone and ``merge_upsert``
     rewrites only the term buckets the batch touches.  ``n_docs``
     accumulates in the snapshot summary (one count job per batch —
-    the batch is being scanned anyway).
-
-    A sibling ``<path>_docs`` table (doc_id, dl) is maintained in the same
-    pass with the corpus token total in ITS summary (``total_dl``), so
-    BM25's dl/avgdl need no corpus scan at query time either."""
+    the batch is being scanned anyway)."""
     t = LakeTable(spark, path)
     if overwrite or not t.exists():
         t = LakeTable.create(
@@ -115,33 +78,13 @@ def build_text_index(
             key_cols=["term", "doc_id"], bucket_cols=["term"],
             n_buckets=n_buckets, overwrite=overwrite,
         )
-        LakeTable.create(
-            spark, path + "_docs", DOC_STATS_SCHEMA, key_cols=["doc_id"],
-            n_buckets=max(1, n_buckets // 2), overwrite=overwrite,
-        )
-        prev_n, prev_dl = 0, 0
+        prev_n = 0
     else:
         prev_n = t.latest_summary_value("n_docs") or 0
-        # lazy-create (and backfill) the sibling for pre-_docs indexes
-        prev_dl = (
-            _ensure_doc_stats(spark, t, path, n_buckets)
-            .latest_summary_value("total_dl")
-            or 0
-        )
-    post = term_postings(documents).localCheckpoint(eager=False)
-    stats = post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    n_new, dl_new = (
-        documents.count(),
-        stats.agg(F.sum("dl")).collect()[0][0] or 0,
-    )
+    post = term_postings(documents)
     t.merge_upsert(
         post, assume_unique=True,
-        summary={"n_docs": prev_n + n_new, "op": "text-index-build"},
-    )
-    docs_t = doc_stats_table(spark, path)
-    docs_t.merge_upsert(
-        stats, assume_unique=True,
-        summary={"total_dl": prev_dl + int(dl_new), "op": "text-index-build"},
+        summary={"n_docs": prev_n + documents.count(), "op": "text-index-build"},
     )
     # per-file term blooms: =/IN probes prune files whose min/max term
     # bounds overlap everything (amortized maintenance read)
@@ -171,63 +114,6 @@ def search_topk_indexed(index: LakeTable, terms: list[str], k: int = 10) -> Data
     ).select("doc_id", "term", "tf")
     n_docs = index.spark.range(1).select(F.lit(int(n)).alias("n_docs"))
     return score_topk(tf, n_docs, k)
-
-
-def bm25_topk(
-    index: LakeTable,
-    terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25-ranked top-``k`` from the persisted index — the float scoring
-    users expect, alongside the exact-integer tf·idf whose cross-engine
-    determinism carries the driver oracle.
-
-    ``score = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`` with
-    the non-negative idf ``ln(1 + (N−df+0.5)/(df+0.5))``.  Plan shape is
-    the indexed tf·idf's: bucket+bloom-pruned postings scan, broadcast idf;
-    the ONLY addition is one equi-join from the (already term-filtered)
-    postings to the doc-stats table — candidate docs' lengths, never the
-    corpus.  Scores are rounded to 9 decimals for a stable tie-break
-    (then doc_id asc); value-level correctness is pytest-pinned against an
-    independent python recompute (floats stay out of the DuckDB gate —
-    libm ``ln`` differs in the last ulp across engines)."""
-    n = index.latest_summary_value("n_docs")
-    if n is None:
-        raise ValueError("text index has no n_docs summary — build it first")
-    docs_t = _ensure_doc_stats(index.spark, index, index.path)
-    total_dl = docs_t.latest_summary_value("total_dl")
-    if total_dl is None:
-        raise ValueError("doc-stats table has no total_dl — rebuild the index")
-    avgdl = float(total_dl) / float(n)
-    term_df = index.spark.createDataFrame([(t,) for t in terms], "term string")
-    tf = index.read_where(
-        [("term", "in", list(terms))], buckets=index.buckets_for(term_df)
-    ).select("doc_id", "term", "tf")
-    idf = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .select("term", "idf")
-    )
-    norm = F.col("tf") * (k1 + 1) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl)
-    )
-    return (
-        tf.join(F.broadcast(idf), "term")
-        .join(docs_t.read(), "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum(F.col("idf") * norm), 9).alias("score"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
 
 
 # ------------------------------------------------------------ driver wiring

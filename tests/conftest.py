@@ -17,6 +17,9 @@ def spark():
     # the early tests for cores.  test_ingest covers the warm explicitly.
     os.environ.setdefault("LMS_PLAN_WARM", "0")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # the session default heap (24g) is sized for the bench box; the test
+    # fixtures are small, and the suite passes with this much
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     sp = get_spark("linked-maps-tests", cores=4, shuffle_partitions=4)
     yield sp
 

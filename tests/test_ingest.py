@@ -434,6 +434,26 @@ def _join_prewarm() -> None:
             t.join()
 
 
+@pytest.mark.parametrize(
+    "kwargs, arg",
+    [
+        ({"commits_per_epoch": -1}, "commits_per_epoch"),
+        ({"commits_per_epoch": 0}, "commits_per_epoch"),
+        ({"commits_per_epoch": 2, "max_epochs": -1}, "max_epochs"),
+    ],
+)
+def test_bad_epoch_size_raises_before_any_job(spark, tmp_path, kwargs, arg):
+    """An epoch size below 1 used to ingest nothing (or too little) after a
+    full WAL census; it must raise, naming the argument, before any job."""
+    wal = to_spark(spark, synth_change_log(n_keys=2, n_commits=3, seed=5))
+    eng = _engine(spark, tmp_path, "badsize")
+    before = _newest_job_id(spark)
+    with pytest.raises(ValueError, match=arg):
+        eng.ingest(wal, **kwargs)
+    assert _newest_job_id(spark) == before
+    assert eng.watermark() is None
+
+
 #: Spark jobs of the fixed 2-epoch ingest below (WAL census, fold + combined
 #: write, segments kept rewrite, maintenance).  Spark jobs per epoch may only
 #: go down: lower this bound when a change removes one, never raise it.

@@ -275,40 +275,6 @@ def test_zorder_autoquantizes_wide_domains(spark, tmp_path):
         neg.cluster_files(["a", "b"], zorder=True)
 
 
-def test_check_constraints_enforced_on_every_write_path(spark, tmp_path):
-    """Delta CHECK analog: violations raise BEFORE anything lands (table
-    version and content unchanged); add_constraint validates existing rows
-    and is metadata-only; NULL fails (strict)."""
-    from linked_maps_spark.lakehouse import ConstraintViolation
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "c"), "k string, v long", key_cols=["k"],
-        n_buckets=2, constraints={"v_nonneg": "v >= 0"},
-    )
-    t.append(_df(spark, [("a", 1)]))
-    for op in (t.append, t.merge_upsert, t.overwrite):
-        v = t.version()
-        with pytest.raises(ConstraintViolation, match="v_nonneg"):
-            op(_df(spark, [("b", -5)]))
-        assert t.version() == v  # nothing committed
-    with pytest.raises(ConstraintViolation):  # strict: NULL fails
-        t.append(_df(spark, [("n", None)]))
-    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 1}
-
-    # ALTER ADD CONSTRAINT: rejected while violating data exists …
-    t.append(_df(spark, [("z", 99)]))
-    with pytest.raises(ConstraintViolation, match="v_small"):
-        t.add_constraint("v_small", "v < 50")
-    # … accepted once clean, metadata-only, then enforced
-    t.merge_upsert(_df(spark, [("z", 10)]))
-    files = {f["path"] for f in t.snapshot()["files"]}
-    t.add_constraint("v_small", "v < 50")
-    assert {f["path"] for f in t.snapshot()["files"]} == files
-    with pytest.raises(ConstraintViolation, match="v_small"):
-        t.append(_df(spark, [("w", 60)]))
-    t.append(_df(spark, [("w", 40)]))  # passes both
-
-
 def test_zvalue_col_matches_python_interleave(spark):
     """The JVM shift/mask spreading is bit-exact vs a naive python Morton
     interleave across the full corner/boundary set."""
@@ -687,7 +653,7 @@ def test_append_arrow_driver_side(spark, tmp_path):
     """append_arrow writes accounting rows with zero Spark jobs: read-back
     equals a normal append, time travel and footer stats work, nulls
     round-trip, a crashed version directory is replaced, and the guards
-    (keyed table, constrained table, schema mismatch) all refuse."""
+    (keyed table, schema mismatch) both refuse."""
     import pyarrow as pa
 
     log = LakeTable.create(
@@ -733,43 +699,6 @@ def test_append_arrow_driver_side(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="key-less"):
         keyed.append_arrow(t1)
-    guarded = LakeTable.create(
-        spark, str(tmp_path / "guarded"), "epoch long, n long, note string",
-        key_cols=[], n_buckets=1,
-    )
-    guarded.add_constraint("n_nonneg", "n >= 0")
-    with pytest.raises(ValueError, match="constraint"):
-        guarded.append_arrow(t1)
-
-
-def test_meta_tables(spark, tbl):
-    """meta_snapshots/meta_files expose the manifests as DataFrames (the
-    Iceberg snapshots/files metadata tables): counts track commits, stats
-    JSON round-trips, empty table yields empty typed frames, and expired
-    snapshots drop out."""
-    import json as _json
-
-    empty = tbl.meta_snapshots()
-    assert empty.count() == 1  # the create commit
-    tbl.append(_df(spark, [("a", 1), ("b", 2)]))
-    tbl.merge_upsert(_df(spark, [("a", 9)]))
-    snaps = {r["version"]: r for r in tbl.meta_snapshots().collect()}
-    assert set(snaps) == {0, 1, 2}
-    assert snaps[1]["operation"] == "append"
-    assert snaps[2]["operation"] == "merge" or snaps[2]["operation"]
-    assert snaps[2]["n_rows"] >= 2
-    files = tbl.meta_files().collect()
-    assert {f["bucket"] for f in files} <= set(range(4))
-    assert all(f["rows"] >= 1 for f in files)
-    stats = [_json.loads(f["stats"]) for f in files if f["stats"]]
-    assert stats and any("k" in s for s in stats)  # per-column bounds present
-    # time travel: the v1 file listing differs from head
-    v1_paths = {f["path"] for f in tbl.meta_files(version=1).collect()}
-    head_paths = {f["path"] for f in files}
-    assert v1_paths != head_paths
-    # expiry drops metadata rows too
-    tbl.expire_snapshots(keep_last=1)
-    assert {r["version"] for r in tbl.meta_snapshots().collect()} == {2}
 
 
 def test_read_py4j_calls_flat_in_file_count(spark, tmp_path, py4j_calls):
